@@ -1094,11 +1094,10 @@ object HFileV3 {
         buf = pread(off, want)
         bufOff = off
       }
-      if (off == bufOff && len == buf.length) buf
-      else {
-        val rel = (off - bufOff).toInt
-        java.util.Arrays.copyOfRange(buf, rel, rel + len)
-      }
+      // always a copy, even of the whole window: a caller that writes
+      // into its bytes must not change what later reads are served
+      val rel = (off - bufOff).toInt
+      java.util.Arrays.copyOfRange(buf, rel, rel + len)
     }
   }
 

@@ -178,9 +178,9 @@ object Jobs {
     * reads lose history — the same trade the reference makes
     * (KEEP_DELETED_CELLS=FALSE). Pair with
     * [[graft.write.BucketedStore]] to persist the rewrite in region
-    * layout; at 100 TB the rewrite is one resolve pipeline (broadcast
-    * tombstone masks + one rank window) feeding the range-partitioned
-    * sorted writer — no extra exchange beyond the store's own layout. */
+    * layout; the rewrite plans as one resolve pass, grouped on the
+    * store's own row layout, feeding the range-partitioned sorted
+    * writer. */
   def majorCompact(cells: DataFrame, maxVersions: Int = 1,
       ttlCutoff: Option[Long] = None, minVersions: Int = 0,
       observers: Seq[graft.read.WriteObserver] = Nil): DataFrame = {
@@ -281,9 +281,9 @@ object Jobs {
     *
     * ALL delete markers are retained verbatim (unlike majorCompact):
     * they must keep masking the FULL image at restore — dropping them
-    * would resurrect pre-watermark versions. Scale: one broadcastable
-    * mask subplan (tombstones are a tiny fraction) + one rank window
-    * co-partitioned with the store layout — the same plan as resolve.
+    * would resurrect pre-watermark versions. Scale: the masking and the
+    * version trim are ONE resolve pass (at most one row exchange over
+    * the unioned images) — the same plan as a read.
     *
     * Invariant (CompactionSpec + q91): for any reader maxVersions ≤ the
     * merge `maxVersions`,
@@ -309,17 +309,7 @@ object Jobs {
     import graft.model.CellType
     val all = incrementals.reduce(_ unionByName _)
     val tombs = all.filter(col("type") =!= CellType.Put)
-    val live = graft.read.Resolve.maskTombstones(all)
-    val gated =
-      if (maxVersions == Int.MaxValue) live
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("row"), col("family"), col("qualifier"))
-          .orderBy(col("ts").desc)
-        live.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= maxVersions).drop("__rn")
-      }
-    gated.unionByName(tombs)
+    graft.read.Resolve.latest(all, maxVersions).unionByName(tombs)
   }
 
   /** [[mergeBackupImages]] landed durably — the deployment shape. The
@@ -328,11 +318,10 @@ object Jobs {
     * (MapReduceBackupMergeJob.java:61 ff — the merged HFiles land
     * under the most recent backup id before any restore reads them);
     * a merged image is a durable artifact, not a view. Landing also
-    * severs the lineage: the lazy merge frame is a union + 4-leg
-    * tombstone mask + rank window, and every downstream mask leg of
-    * restore/Resolve would re-evaluate that whole subplan — a
-    * multiplier that grows with input size (the q62/q68/q71
-    * precedent). Returns the read-back of the written store. */
+    * severs the lineage: the lazy merge frame is a union + resolve
+    * pass, and every downstream restore/Resolve would re-evaluate that
+    * whole subplan (the q62/q68/q71 precedent). Returns the read-back
+    * of the written store. */
   def mergeBackupImagesLanded(spark: org.apache.spark.sql.SparkSession,
       incrementals: Seq[DataFrame], table: String, path: String,
       maxVersions: Int = Int.MaxValue, buckets: Int = 8): DataFrame = {
@@ -391,8 +380,8 @@ object Jobs {
     * Returns the marker frame (canonical cell schema) — append it to
     * the store (or feed applySink) and the next resolve hides the
     * matched data; counts come free from the marker frame itself.
-    * Scale: markers are distinct coordinates of matched cells — the
-    * same aggregate shape as the tombstone masks resolve builds.
+    * Scale: markers are distinct coordinates of matched cells, a
+    * small fraction of the store the next resolve pass streams.
     */
   def bulkDelete(cells: DataFrame, scan: graft.read.GScan, deleteType: String,
       timestamp: Option[Long] = None): DataFrame = {

@@ -516,17 +516,10 @@ object CodecQueries {
         // buckets are disjoint ts slices, so one exportRegions pass
         // writes all three files (same paths/contents as the old three
         // single-file export jobs)
-        // bucket predicates mirror the old explicit filters exactly
-        // (advisor r17): ts >= 4 names its bucket instead of riding an
-        // otherwise(3), so a null or out-of-range ts from fixture drift
-        // fails the writer loudly rather than silently landing in b3
         graft.flow.HFiles.exportRegions(
-          cells.select(
-            when(col("ts") <= 2, 1).when(col("ts") === 3, 2)
-              .when(col("ts") >= 4, 3).as("__b"),
+          cells.select(c17Bucket(col("ts")).as("__b"),
             col("row"), col("family"), col("qualifier"), col("ts"),
-            col("type"), col("value"))
-            .filter(col("__b").isNotNull),
+            col("type"), col("value")),
           "__b", out, b => s"b$b/part-00000.hfile")
         Seq("b1", "b2", "b3").map { b =>
           graft.flow.HFilePrint.describe(s, s"$out/$b")
@@ -554,4 +547,12 @@ object CodecQueries {
           |GROUP BY b.bucket ORDER BY b.bucket""".stripMargin))
     )
   )
+
+  /** c17's HFile bucket of a cell ts: 1 for ts <= 2, 2 for ts = 3, 3 for
+    * ts >= 4. The buckets name every non-null ts, so the only unmapped
+    * input is a null ts (fixture drift); it fails the query loudly
+    * instead of leaving a cell out of every file. */
+  private[graft] def c17Bucket(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    coalesce(when(ts <= 2, 1).when(ts === 3, 2).when(ts >= 4, 3),
+      raise_error(lit("c17: a cell with a null ts has no HFile bucket")))
 }

@@ -93,7 +93,7 @@ object ReplayQueries {
       // version trim to the reader's maxVersions, all markers retained),
       // LANDED durably (the reference writes the merged image to the
       // backup filesystem before any restore reads it — and the durable
-      // boundary stops restore's mask legs from re-evaluating the whole
+      // boundary stops restore's resolve from re-evaluating the whole
       // merge subplan), and restore(full, merged) read through Resolve
       // must equal the unmerged point-in-time restore AS OF ts 5 —
       // which is what the oracle computes directly over the unmerged
@@ -1258,8 +1258,8 @@ object ReplayQueries {
         // LAND the marker frame before the read-back resolve (the
         // BulkDeleteEndpoint shape: markers are durable mutations the
         // region applies, not a subplan of the reader). Without the
-        // boundary the final resolve's four mask legs each re-derive
-        // the whole matched-scan subplan (dev/PLANS.md q68 row).
+        // boundary the final resolve re-derives the whole matched-scan
+        // subplan (dev/PLANS.md q68 row).
         val tmp = graft.Queries.scratchDir("bulk_delete_q")
         Jobs.bulkDelete(cells,
           graft.read.GScan(maxVersions = 3,
@@ -1313,8 +1313,8 @@ object ReplayQueries {
           lit(CellType.DeleteColumn).as("type"), lit(null).cast("string").as("value"))
         // LAND the mutation batch before the merge: a RowMutations
         // batch is client-supplied data, not a subplan of the reader —
-        // without the boundary mergeLatest's mask legs each re-derive
-        // the distinct-row seed (dev/PLANS.md q71 row).
+        // without the boundary mergeLatest's resolve re-derives the
+        // distinct-row seed (dev/PLANS.md q71 row).
         val tmp = graft.Queries.scratchDir("row_mutations_q")
         puts.unionByName(dels).write.mode("overwrite").parquet(s"$tmp/batch")
         Mutations.mergeLatest(cells, s.read.parquet(s"$tmp/batch"), maxVersions = 1)

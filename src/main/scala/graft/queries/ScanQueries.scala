@@ -170,8 +170,8 @@ object ScanQueries {
           |ORDER BY row, family, qualifier, ts DESC, type""".stripMargin))
     ),
     QDef(
-      // S2 multi-get (Table.get(List[Get]), Table.java:176): broadcast
-      // semi-join against the key list.
+      // S2 multi-get (Table.get(List[Get]), Table.java:176): the local
+      // key list filters the store as an IN-set.
       "q50_multi_get",
       (s, dir) => {
         import s.implicits._

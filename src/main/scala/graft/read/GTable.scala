@@ -61,13 +61,7 @@ object GTable {
     s.rowPrefix.map(p => col("row").startsWith(p))
   ).flatten
 
-  def scan(cells: DataFrame, s: GScan): DataFrame = scanImpl(cells, s, premasked = false)
-
-  /** `premasked` = the caller already applied [[Resolve.maskedView]]
-    * (scanFiltered does, to feed its filter tree the live view) — the
-    * resolve then skips the redundant mask subplan. */
-  private[graft] def scanImpl(cells: DataFrame, s: GScan,
-      premasked: Boolean): DataFrame = {
+  def scan(cells: DataFrame, s: GScan): DataFrame = {
     val rangePreds: Seq[Column] = rangePredsOf(s)
     // Projection UNIONS family and column selections (addFamily +
     // addColumn build one family→qualifiers map, Scan.java:269,282):
@@ -109,7 +103,7 @@ object GTable {
         Resolve.latest(pruned, s.maxVersions, s.timeRange,
           ttlCutoff = s.ttlCutoff, cellFilter = s.filter,
           cfTimeRanges = s.cfTimeRanges, minVersions = s.minVersions,
-          keepDeleted = s.keepDeleted, premasked = premasked)
+          keepDeleted = s.keepDeleted)
     // Intra-row per-CF pagination (Scan.setMaxResultsPerColumnFamily /
     // setRowOffsetPerColumnFamily, Scan.java:514,523): skip the first
     // `storeOffset` values of each (row, family) store and keep at most
@@ -117,9 +111,9 @@ object GTable {
     // order — the server enforces this per HStore read
     // (StoreScanner's storeLimit/storeOffset), AFTER the version gate
     // and filters, which is exactly where this sits. The rank window
-    // partitions on (row, family) — a prefix of the store layout's
-    // row-hash partitioning, so over the materialized cell store it
-    // plans without a fresh exchange (same reuse as the resolve rank).
+    // partitions on (row, family); the resolve pass's output carries no
+    // known partitioning, so a non-raw paged scan takes one exchange
+    // here.
     val paged =
       if (s.maxResultsPerCf.isEmpty && s.rowOffsetPerCf == 0) resolved
       else {
@@ -153,14 +147,16 @@ object GTable {
   def get(cells: DataFrame, rowKey: String, s: GScan = GScan()): DataFrame =
     scan(cells, pointSpec(rowKey, s))
 
-  /** Multi-get: semi-join against the key list (broadcast on the small
-    * key side), then the SAME resolve path as a single get —
-    * Table.get(List[Get]) (Table.java:176) returns fully-resolved
-    * Results, identical to get() per key; a raw subset would expose
-    * tombstones and shadowed versions the single-get path hides. */
+  /** Multi-get: filter to the key list, then the SAME resolve path as
+    * a single get — Table.get(List[Get]) (Table.java:176) returns
+    * fully-resolved Results, identical to get() per key; a raw subset
+    * would expose tombstones and shadowed versions the single-get path
+    * hides. The key list is client-side (the reference's List[Get]),
+    * so it is collected into an IN-set, which prunes the store's cached
+    * batches and needs no broadcast. */
   def multiGet(cells: DataFrame, keys: DataFrame, s: GScan = GScan()): DataFrame =
-    scan(cells.join(broadcast(keys.select(col(keys.columns.head).as("row"))),
-                    Seq("row"), "left_semi"), s)
+    scan(cells.filter(col("row").isin(keys.select(keys.columns.head).collect()
+      .map(_.get(0)).toSeq: _*)), s)
 
   /** Scan with a [[graft.filter.GFilter]] tree — the Scan.setFilter
     * path. The scan's reversed-ness propagates into the tree before
@@ -173,7 +169,7 @@ object GTable {
     * delete-masked view — a tombstoned value can never satisfy an SCVF
     * — while version counting still runs AFTER the filter (rejected
     * cells must not consume version slots; the downstream [[scan]]
-    * resolve re-masks a marker-free frame, which is a no-op). */
+    * resolve only gates the marker-free frame). */
   def scanFiltered(cells: DataFrame, s: GScan,
       f: graft.filter.GFilter): DataFrame = {
     val tree = graft.filter.FilterCompiler.withReversed(f, s.reversed)
@@ -182,23 +178,30 @@ object GTable {
     // the table), then the filtered set flows through the normal scan
     // (the residual range predicates there are no-ops)
     val ranged = rangePredsOf(s).foldLeft(cells)((df, p) => df.filter(p))
-    // the matcher's ts checks also precede filterCell (on raw scans
-    // too — TimeRange applies in the StoreScanner below raw-ness), so
-    // the tree only sees in-window, unexpired cells — and on non-raw
-    // scans only LIVE ones
-    val visible =
-      if (s.raw)
-        // raw skips masking and TTL (as scan()'s raw branch does) but
-        // not the time range
-        Resolve.timeRangePred(s.timeRange, s.cfTimeRanges)
-          .fold(ranged)(ranged.filter)
-      else
-        Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff,
-            s.minVersions)
-          .foldLeft(Resolve.maskedView(ranged, s.timeRange, s.cfTimeRanges,
-            s.keepDeleted))((df, p) => df.filter(p))
-    scanImpl(graft.filter.FilterCompiler(visible, tree), s,
-      premasked = !s.raw)
+    graft.filter.FilterCompiler.cellPredicate(tree) match {
+      // a per-cell tree neither reads other cells nor touches markers,
+      // so it commutes with delete tracking: it rides the resolve's
+      // cellFilter slot (still before the version gate) and the scan
+      // stays one pass
+      case Some(p) if !s.raw => scan(ranged, s.copy(filter = Some(s.filter.fold(p)(_ && p))))
+      case _ =>
+        // the matcher's ts checks also precede filterCell (on raw scans
+        // too — TimeRange applies in the StoreScanner below raw-ness),
+        // so the tree only sees in-window, unexpired cells — and on
+        // non-raw scans only LIVE ones
+        val visible =
+          if (s.raw)
+            // raw skips masking and TTL (as scan()'s raw branch does)
+            // but not the time range
+            Resolve.timeRangePred(s.timeRange, s.cfTimeRanges)
+              .fold(ranged)(ranged.filter)
+          else
+            Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff,
+                s.minVersions)
+              .foldLeft(Resolve.maskedView(ranged, s.timeRange, s.cfTimeRanges,
+                s.keepDeleted))((df, p) => df.filter(p))
+        scan(graft.filter.FilterCompiler(visible, tree), s)
+    }
   }
 
   /** S8 multi-table scan (MultiTableInputFormatBase.java:229: one job

@@ -1,9 +1,11 @@
 package graft.read
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VisKernel
 import graft.model.CellType
 
 /** Read-time reconciliation of the multi-version cell set: tombstone
@@ -20,11 +22,30 @@ import graft.model.CellType
   * then the scan time range filters surviving cells, then the per-column
   * version gate keeps the newest `maxVersions` (timestamp DESC).
   *
-  * Scale notes: tombstones are a tiny fraction of cells, so every mask
-  * join builds a small (broadcastable) aggregate on the delete side;
-  * Catalyst/AQE picks broadcast-hash for them. The only wide exchange is
-  * the final rank window, which co-partitions with any downstream
-  * per-(row,family,qualifier) operator.
+  * Scale notes: the resolve is ONE partition-local pass, not a plan of
+  * joins. Cells group by row and each row streams through a tracker in
+  * (family, qualifier, ts DESC) order, the order the reference's
+  * StoreScanner feeds ScanQueryMatcher, so state is bounded by one
+  * family's markers, never by the row or the table. The grouping needs
+  * only ClusteredDistribution(row): the materialized cell store is
+  * already hash-partitioned on row, so over it the pass plans with no
+  * exchange and no broadcast; unclustered inputs (replica parquet,
+  * unions) take exactly one row exchange, which
+  * [[Resolve.sizedShufflePartitions]] sizes when the input would
+  * spill. The pass registers no planner strategy and touches no
+  * session state. Its output is the surviving Puts in the input's
+  * schema, with no known partitioning, so a second pass over it (the
+  * filtered scan's gate after its filter tree) clusters again.
+  *
+  * The unit of work is the row: one row's cells are one group in one
+  * task, as a row never spans regions in the reference, so a single
+  * very wide row is not split across tasks. Each cell crosses a Row
+  * encoder and a Scala closure instead of generated code; on
+  * unclustered parquet input (local[4] on 4 cores, 4 shuffle
+  * partitions, ~3% markers) that still costs about half of the
+  * relational mask-join form per cell at 1M to 16M cells. Larger
+  * inputs, and the regime where the spill hedge fires, are
+  * unmeasured.
   */
 object Resolve {
 
@@ -75,49 +96,16 @@ object Resolve {
       cfTimeRanges: Map[String, TimeRange] = Map.empty,
       minVersions: Int = 0,
       keepDeleted: Boolean = false,
-      premasked: Boolean = false,
       visScope: Option[String] = None
   ): DataFrame = {
-    // premasked: the caller already ran maskedView (e.g. scanFiltered,
-    // which must mask BEFORE its filter tree) — skip the redundant
-    // 4-leg mask subplan over an already marker-free frame
-    val masked =
-      if (premasked) cells
-      else maskedView(cells, timeRange, cfTimeRanges, keepDeleted, visScope)
-    val ranged = (preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions)
-      // filterCell runs BEFORE version counting in the matcher
-      // (UserScanQueryMatcher.java:195) — rejected cells must not
-      // consume version slots
-      ++ cellFilter).foldLeft(masked)((df, p) => df.filter(p))
-    val w = Window
-      .partitionBy(col("row"), col("family"), col("qualifier"))
-      .orderBy(col("ts").desc)
-    // spill hedge: the version-gate window is the operator's one wide
-    // exchange, and at a fixed spark.sql.shuffle.partitions its
-    // per-partition share grows linearly with input (the r16 sf10 soak
-    // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
-    // from shuffle/sort spill on local[32]'s fixed memory). When the
-    // INPUT's size estimate says partitions would exceed the scan
-    // target size, pre-repartition on the window's own keys with a
-    // size-derived count — the window then reuses that partitioning
-    // (ClusteredDistribution is satisfied; still exactly one exchange,
-    // just one sized to the data, the same rule the scan side applies
-    // via files.maxPartitionBytes). Small inputs take the plan
-    // unchanged (sizedShufflePartitions = None below the threshold).
-    val pre = sizedShufflePartitions(cells) match {
-      case Some(n) =>
-        ranged.repartition(n, col("row"), col("family"), col("qualifier"))
-      case None => ranged
-    }
-    val gated = pre
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxVersions)
-    val retained = (ttlCutoff, minVersions) match {
-      case (Some(cut), mv) if mv > 0 =>
-        gated.filter(col("ts") >= cut || col("__rn") <= mv)
-      case _ => gated
-    }
-    retained.drop("__rn")
+    val visible = markerCeiling(cells, timeRange, cfTimeRanges, keepDeleted)
+    // filterCell and the ts checks run BEFORE version counting in the
+    // matcher (UserScanQueryMatcher.java:195): rejected Puts must not
+    // consume version slots. Markers pass untouched, so they still mask.
+    val ranged = (preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions) ++ cellFilter)
+      .foldLeft(visible)((df, p) => df.filter(col("type") =!= CellType.Put || p))
+    val retainFrom = if (minVersions > 0) ttlCutoff else None
+    resolvePass(ranged, Pass(maxVersions, retainFrom, minVersions, visScope))
   }
 
   /** Size-derived shuffle-partition count for the resolve exchange:
@@ -129,9 +117,7 @@ object Resolve {
     * estimate is unusable (the no-stats default is effectively
     * infinite; join-inflated estimates hit the same guard). Capped at
     * 4096: past that the bottleneck is executor count, not partition
-    * size. The estimate comes from the PRE-mask input, not the masked
-    * plan, because join estimates multiply while the masked output is
-    * bounded by the input. */
+    * size. */
   private[graft] def sizedShufflePartitions(cells: DataFrame): Option[Int] = {
     val conf = cells.sparkSession.sessionState.conf
     val size = cells.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -226,29 +212,32 @@ object Resolve {
 
   /** The delete-masked (live) view under the scan's visibility knobs —
     * the cell set every LATER stage of the matcher sees (delete
-    * tracking runs first, ScanQueryMatcher.java:252). KEEP_DELETED_
-    * CELLS ceiling is PER FAMILY: a family's as-of point is its own
-    * range max (override) or the scan-global max; families with no
-    * range at all keep full masking. */
+    * tracking runs first, ScanQueryMatcher.java:252). */
   def maskedView(cells: DataFrame, timeRange: Option[TimeRange],
       cfTimeRanges: Map[String, TimeRange], keepDeleted: Boolean,
       visScope: Option[String] = None): DataFrame =
+    maskTombstones(markerCeiling(cells, timeRange, cfTimeRanges, keepDeleted),
+      visScope = visScope)
+
+  /** KEEP_DELETED_CELLS time travel: a marker at/after the as-of point
+    * has not happened yet, so it is dropped before the pass. The
+    * ceiling is PER FAMILY: a family's as-of point is its own range max
+    * (override) or the scan-global max; families with no range at all
+    * keep full masking. */
+  private def markerCeiling(cells: DataFrame, timeRange: Option[TimeRange],
+      cfTimeRanges: Map[String, TimeRange], keepDeleted: Boolean): DataFrame =
     if (keepDeleted && (timeRange.isDefined || cfTimeRanges.nonEmpty)) {
       val base = timeRange.map(tr => lit(tr.max)).getOrElse(lit(Long.MaxValue))
       val ceil = cfTimeRanges.foldLeft(base) {
         case (acc, (f, tr)) => when(col("family") === f, lit(tr.max)).otherwise(acc)
       }
-      maskTombstones(cells, tombVisible = Some(col("ts") < ceil),
-        visScope = visScope)
-    } else maskTombstones(cells, visScope = visScope)
+      cells.filter(col("type") === CellType.Put || col("ts") < ceil)
+    } else cells
 
-  /** Apply the 4 tombstone kinds to the Put cells; returns live puts.
+  /** Apply the 4 tombstone kinds to the Put cells; returns live puts —
+    * the resolve pass with no version gate.
     * `raw` scans (Scan.setRaw, Scan.java:848) skip this entirely.
     *
-    * @param tombVisible KEEP_DELETED_CELLS time-travel visibility
-    *        predicate on the tombstone cells: only markers satisfying
-    *        it mask (a marker at/after the as-of point has not
-    *        happened yet). A `Column` so per-family ceilings compose.
     * @param visScope visibility-scoped delete tracking
     *        (VisibilityScanDeleteTracker.java:43,181 on labeled
     *        stores): the named column carries each cell's visibility
@@ -258,46 +247,112 @@ object Resolve {
     *        .canonical]]; DefaultVisibilityLabelServiceImpl
     *        .matchVisibility:560-604 compares sorted tag lists), with
     *        the null/empty expression matching only untagged cells
-    *        (EMPTY_TAG markers, tracker :49-50). Realized as one extra
-    *        derived join key on every mask leg, so the masks stay
-    *        broadcastable aggregates — per-(expression) tracking like
-    *        the tracker's per-type tag lists, with no extra exchange.
+    *        (EMPTY_TAG markers, tracker :49-50). The canonical form is
+    *        one more key of the tracker's marker sets, like the
+    *        tracker's per-type tag lists.
     */
-  def maskTombstones(cells: DataFrame,
-      tombVisible: Option[org.apache.spark.sql.Column] = None,
-      visScope: Option[String] = None): DataFrame = {
-    val src = visScope.fold(cells)(v => cells.withColumn("__vc",
-      graft.functions.VisibilityFunctions.vis_canonical(col(v))))
-    val vc = if (visScope.isDefined) Seq("__vc") else Nil
-    val puts = src.filter(col("type") === CellType.Put)
-    val tombSrc = tombVisible.fold(src)(src.filter)
+  def maskTombstones(cells: DataFrame, visScope: Option[String] = None): DataFrame =
+    resolvePass(cells, Pass(Int.MaxValue, None, 0, visScope))
 
-    val dFam = tombSrc
-      .filter(col("type") === CellType.DeleteFamily)
-      .groupBy((Seq("row", "family") ++ vc).map(col): _*)
-      .agg(max("ts").as("__dfam_ts"))
-    val dCol = tombSrc
-      .filter(col("type") === CellType.DeleteColumn)
-      .groupBy((Seq("row", "family", "qualifier") ++ vc).map(col): _*)
-      .agg(max("ts").as("__dcol_ts"))
-    val dVer = tombSrc
-      .filter(col("type") === CellType.Delete)
-      .select((Seq("row", "family", "qualifier", "ts") ++ vc).map(col): _*)
-      .distinct()
-    val dFamVer = tombSrc
-      .filter(col("type") === CellType.DeleteFamilyVersion)
-      .select((Seq("row", "family", "ts") ++ vc).map(col): _*)
-      .distinct()
+  /** The knobs the per-row pass applies after masking: the version gate
+    * and TTL retention under MIN_VERSIONS (a version past `retainFrom`
+    * survives only among the newest `minVersions`). */
+  private final case class Pass(maxVersions: Int, retainFrom: Option[Long],
+      minVersions: Int, visScope: Option[String])
 
-    puts
-      .join(dVer, Seq("row", "family", "qualifier", "ts") ++ vc, "left_anti")
-      .join(dFamVer, Seq("row", "family", "ts") ++ vc, "left_anti")
-      .join(dCol, Seq("row", "family", "qualifier") ++ vc, "left")
-      .filter(col("__dcol_ts").isNull || col("ts") > col("__dcol_ts"))
-      .drop("__dcol_ts")
-      .join(dFam, Seq("row", "family") ++ vc, "left")
-      .filter(col("__dfam_ts").isNull || col("ts") > col("__dfam_ts"))
-      .drop("__dfam_ts")
-      .drop(vc: _*)
+  /** The one resolve operator: group the cells by row and walk each row
+    * in (family, family markers first, qualifier, ts DESC, markers
+    * first) order through a [[RowTracker]] — ScanQueryMatcher's single
+    * ordered pass. The grouping's ClusteredDistribution(row) is met by
+    * the cell store's row-hash layout with no exchange; any other input
+    * takes exactly one row exchange, sized by [[sizedShufflePartitions]]
+    * when the default count would spill. Returns the surviving Puts with
+    * `cells`' schema. */
+  private def resolvePass(cells: DataFrame, p: Pass): DataFrame = {
+    val s = cells.schema
+    val rowEnc = Encoders.row(s)
+    val ix = Ix(s.fieldIndex("family"), s.fieldIndex("qualifier"), s.fieldIndex("ts"),
+      s.fieldIndex("type"), p.visScope.fold(-1)(s.fieldIndex))
+    // spill hedge: at a fixed spark.sql.shuffle.partitions the row
+    // exchange's per-partition share grows with input (the r16 sf10 soak
+    // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
+    // from shuffle/sort spill), so a large input is pre-partitioned on
+    // row with a size-derived count that the grouping then reuses
+    val in = sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row")))
+    in.groupBy(col("row")).as[String, Row](Encoders.STRING, rowEnc)
+      .flatMapSortedGroups(col("family"),
+        !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),
+        col("qualifier"), col("ts").desc, col("type") === CellType.Put)(
+        (row: String, rs: Iterator[Row]) => rs.filter(new RowTracker(ix, p, row != null).admit))(
+        rowEnc)
+      .toDF()
+  }
+
+  /** Field positions the tracker reads; `vis` is -1 without visScope. */
+  private final case class Ix(family: Int, qualifier: Int, ts: Int, tpe: Int, vis: Int)
+
+  /** Streaming DeleteTracker + ColumnTracker for ONE row's cells in pass
+    * order; `admit` is called once per cell and keeps exactly the Puts
+    * that survive. Family-scope markers arrive before their family's
+    * columns and every marker before the Puts of its ts, so each Put is
+    * decided on arrival (ScanDeleteTracker.isDeleted:102):
+    *   - Delete               masks the Put at the same (family,qualifier,ts)
+    *   - DeleteColumn         masks Puts of (family,qualifier) with ts <= marker
+    *   - DeleteFamily         masks Puts of (family)           with ts <= marker
+    *   - DeleteFamilyVersion  masks Puts of (family)           with ts == marker
+    * each only within its visibility class. Survivors then count
+    * against `maxVersions` per column, newest first. A null key never
+    * matches a marker (the relational form's equi-join semantics). */
+  private final class RowTracker(ix: Ix, p: Pass, maskable: Boolean) {
+    private var started = false
+    private var family: String = _
+    private var qualifier: String = _
+    private val famDel = mutable.HashMap.empty[String, Long]
+    private val famVerDel = mutable.HashSet.empty[(String, Long)]
+    private val colDel = mutable.HashMap.empty[String, Long]
+    private val verDel = mutable.HashSet.empty[(String, Long)]
+    private var versions = 0
+
+    def admit(r: Row): Boolean = {
+      val f = r.getString(ix.family)
+      val q = r.getString(ix.qualifier)
+      if (!started || f != family) {
+        started = true; family = f; famDel.clear(); famVerDel.clear(); newColumn(q)
+      } else if (q != qualifier) newColumn(q)
+      val tsNull = r.isNullAt(ix.ts)
+      val ts = if (tsNull) 0L else r.getLong(ix.ts)
+      val vc = if (ix.vis < 0) "" else VisKernel.canonical(r.getString(ix.vis))
+      val marker = maskable && !tsNull && f != null
+      r.getString(ix.tpe) match {
+        case CellType.Put =>
+          val masked = below(famDel, vc, ts, tsNull) || below(colDel, vc, ts, tsNull) ||
+            (!tsNull && (famVerDel((vc, ts)) || verDel((vc, ts))))
+          !masked && gate(ts, tsNull)
+        case CellType.DeleteFamily if marker => raise(famDel, vc, ts); false
+        case CellType.DeleteFamilyVersion if marker => famVerDel += ((vc, ts)); false
+        case CellType.DeleteColumn if marker && q != null => raise(colDel, vc, ts); false
+        case CellType.Delete if marker && q != null => verDel += ((vc, ts)); false
+        case _ => false
+      }
+    }
+
+    private def newColumn(q: String): Unit = {
+      qualifier = q; colDel.clear(); verDel.clear(); versions = 0
+    }
+
+    private def raise(m: mutable.HashMap[String, Long], vc: String, ts: Long): Unit =
+      if (m.get(vc).forall(_ < ts)) m(vc) = ts
+
+    // a null-ts Put under a range marker fails the relational form's
+    // `ts > marker` test, so it is masked too
+    private def below(m: mutable.HashMap[String, Long], vc: String, ts: Long,
+        tsNull: Boolean): Boolean =
+      m.get(vc).exists(d => tsNull || ts <= d)
+
+    private def gate(ts: Long, tsNull: Boolean): Boolean = {
+      versions += 1
+      versions <= p.maxVersions && p.retainFrom.forall(cut =>
+        (!tsNull && ts >= cut) || versions <= p.minVersions)
+    }
   }
 }

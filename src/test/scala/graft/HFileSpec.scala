@@ -580,4 +580,22 @@ class HFileSpec extends AnyFunSuite {
     val trailer = HFileV3.readTrailer(bytes)
     assert(trailer.dataIndexCount == cells.size)
   }
+
+  test("bufferedPRead hands out copies: writing into a result never changes a re-read") {
+    val bytes = Array.tabulate[Byte](64)(_.toByte)
+    var reads = 0
+    val pread: HFileV3.PRead = (off, len) => {
+      reads += 1
+      java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
+    }
+    val bp = HFileV3.bufferedPRead(pread, bytes.length, chunk = 16)
+    // a request the size of the whole window, then one inside it
+    for ((off, len) <- Seq((0L, 16), (4L, 4))) {
+      val got = bp(off, len)
+      java.util.Arrays.fill(got, 99.toByte)
+      assert(bp(off, len).toSeq === bytes.slice(off.toInt, off.toInt + len).toSeq,
+        s"re-read of [$off, ${off + len}) saw a caller's write")
+    }
+    assert(reads === 1, "every request was served from the one window")
+  }
 }

@@ -248,4 +248,40 @@ class PlanShapeSpec extends SparkSpec {
       s"global-window set drifted; new: ${(offenders -- AllowedGlobalWindows).toSeq.sorted}, " +
         s"gone: ${(AllowedGlobalWindows -- offenders).toSeq.sorted}")
   }
+
+  test("get, scan and multiGet over the cell store plan one exchange: the final sort") {
+    // the one-pass resolve groups by row, which the store's row-hash
+    // layout already satisfies: no mask broadcasts, no rank window, and
+    // the only shuffle left is the range sort of the cell order
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.read.{GScan, GTable}
+    import spark.implicits._
+    // materialized first, as every reader of the store finds it: the
+    // cached plan's row-hash partitioning is known once it has run
+    val cells = graft.model.Fixtures.cellsOrders(spark, sf0001)
+    cells.count()
+    val cases = Seq(
+      "get" -> GTable.get(cells, "0000000007"),
+      "scan" -> GTable.scan(cells, GScan().withRange("0000000001", "0000000100")),
+      "multiGet" -> GTable.multiGet(cells,
+        Seq("0000000007", "0000000123", "0000000456").toDF("row")))
+    for ((name, df) <- cases) {
+      // the adaptive plan's current plan: exchanges already inserted
+      val phys: SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+        s"$name: no broadcast:\n$phys")
+      assert(phys.collect { case w: WindowExec => w }.isEmpty, s"$name: no window:\n$phys")
+      val shuffles = phys.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1 &&
+        shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning],
+        s"$name: exactly the final range sort:\n$phys")
+    }
+  }
 }

@@ -71,4 +71,15 @@ class PrintToolsSpec extends SparkSpec {
     assert(zstd.getAs[String]("first_row") == plain.getAs[String]("first_row"))
     assert(zstd.getAs[Long]("file_bytes") < plain.getAs[Long]("file_bytes"))
   }
+
+  test("c17 bucketing fails loudly on a null ts instead of dropping the cell") {
+    import spark.implicits._
+    import graft.queries.CodecQueries.c17Bucket
+    val ts = Seq(Some(1L), Some(2L), Some(3L), Some(4L), Some(9L), None).toDF("ts")
+    val named = ts.filter(col("ts").isNotNull).select(c17Bucket(col("ts")))
+      .as[Int].collect().toSeq
+    assert(named === Seq(1, 1, 2, 3, 3))
+    val e = intercept[Exception](ts.select(c17Bucket(col("ts"))).collect())
+    assert(e.getMessage.contains("null ts"), e.getMessage)
+  }
 }

@@ -121,9 +121,9 @@ class ResolveSpec extends SparkSpec {
     assert(Resolve.sizedShufflePartitions(tiny).isEmpty)
     // shrink the scan target so a modest cached frame trips the hedge,
     // then pin: parts sized off the estimate AND the physical plan of
-    // the version-gate window still carries EXACTLY one shuffle (the
-    // explicit repartition satisfies the window's distribution — the
-    // hedge must never add a second exchange)
+    // the resolve pass still carries EXACTLY one shuffle (the explicit
+    // repartition satisfies the pass's row clustering — the hedge must
+    // never add a second exchange)
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
@@ -136,19 +136,18 @@ class ResolveSpec extends SparkSpec {
           .get("spark.sql.shuffle.partitions").toInt),
         s"hedge must fire past the threshold, got $parts")
       val plan = Resolve.latest(big).queryExecution.executedPlan.toString
-      // the version-gate window must consume the SIZED repartition
-      // directly: exactly one REPARTITION_BY_NUM exchange carrying the
-      // sized count, and no planner-inserted (ENSURE_REQUIREMENTS)
-      // exchange between the Window and it — the hedge resizes the
-      // operator's one exchange, never adds a second (the mask side's
-      // own tiny aggregate exchanges are untouched and out of scope)
+      // the resolve pass must consume the SIZED repartition directly:
+      // exactly one REPARTITION_BY_NUM exchange carrying the sized
+      // count, and no planner-inserted (ENSURE_REQUIREMENTS) exchange
+      // between the pass and it — the hedge resizes the operator's one
+      // exchange, never adds a second
       assert(plan.contains(s", ${parts.get}), REPARTITION_BY_NUM"),
         s"sized repartition missing:\n$plan")
-      val widx = plan.indexOf("Window [")
+      val widx = plan.indexOf("MapGroups ")
       val ridx = plan.indexOf("REPARTITION_BY_NUM")
       assert(widx >= 0 && ridx > widx &&
         !plan.substring(widx, ridx).contains("ENSURE_REQUIREMENTS"),
-        s"the window re-exchanged instead of reusing the hedge:\n$plan")
+        s"the resolve pass re-exchanged instead of reusing the hedge:\n$plan")
       big.unpersist()
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }

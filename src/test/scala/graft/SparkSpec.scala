@@ -12,6 +12,9 @@ object TestSession {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // as Bench, Verify and perfbench set it, so plan pins hold under
+      // the config the benchmarks run
+      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
