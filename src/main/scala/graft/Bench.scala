@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: ONE JSON line with per-query wall-clock at
   * the target scale factor — the headline "value" is the sum of
@@ -21,40 +20,37 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the cell store is hash-partitioned on row (a subset of every
-      // cell-coordinate join key); allow subset co-partitioning so those
-      // joins reuse the stored layout instead of re-exchanging
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
+
+    // a harness failure is counted and named (name -> exception class),
+    // never swallowed: a broken load or warmup would read as a fast bench
+    val loadErrors, warmupErrors = scala.collection.concurrent.TrieMap[String, String]()
+    def attempt(errors: collection.mutable.Map[String, String], name: String)(body: => Any) =
+      try { body; () } catch { case e: Throwable => errors(name) = e.getClass.getSimpleName }
 
     val warmupDir = sys.env.get("SPARK_GRAFT_WARMUP_DIR")
       .orElse(Some("/root/testdata/sf0.001").filter(d =>
         d != sfDir && new java.io.File(d).isDirectory))
     // Warmup runs CONCURRENTLY (wall-clock only — it precedes the timed
     // region): queries are independent (per-query scratch dirs/tables,
-    // CellStore.materialize is putIfAbsent-safe), failures stay silent
-    // exactly as in the serial form, and the timed pass below remains
-    // strictly serial. A straggler-heavy serial warmup otherwise adds
-    // ~60-90 s of wall time and inflates rep-1 totals.
+    // CellStore.materialize is putIfAbsent-safe), and the timed pass
+    // below remains strictly serial. A straggler-heavy serial warmup
+    // otherwise adds ~60-90 s of wall time and inflates rep-1 totals.
     warmupDir.foreach { d =>
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
       SparkEntry.queries.toSeq
-        .map { case (_, fn) =>
+        .map { case (name, fn) =>
           pool.submit(new Runnable {
-            def run(): Unit =
-              try { fn(spark, d).count(); () }
-              catch { case _: Throwable => () }
+            def run(): Unit = attempt(warmupErrors, name)(fn(spark, d).count())
           })
         }
-        .foreach(f => try f.get() catch { case _: Throwable => () })
+        .foreach(_.get())
       pool.shutdown()
     }
+    // the session conf the timed pass plans under: a warmup query that
+    // leaked a conf write would show here
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     // Per-query parallelism evidence for the scaling contract: a
     // listener tracks the max number of CONCURRENTLY RUNNING tasks
@@ -86,17 +82,17 @@ object Bench {
     // likewise serves reads from an already-written MemStore/HFiles).
     // Reported separately as load_sec for transparency.
     val l0 = System.nanoTime()
-    try {
-      model.Fixtures.cellsOrders(spark, sfDir).count()
-      model.Fixtures.cellsEventsV(spark, sfDir).count()
-      model.Fixtures.cellsOrdersMut(spark, sfDir).count()
-      model.Fixtures.events(spark, sfDir).count()
-      model.Fixtures.chain(spark).count()
+    val loads: Seq[(String, () => Any)] = Seq(
+      "cells_orders" -> (() => model.Fixtures.cellsOrders(spark, sfDir).count()),
+      "cells_events_v" -> (() => model.Fixtures.cellsEventsV(spark, sfDir).count()),
+      "cells_orders_mut" -> (() => model.Fixtures.cellsOrdersMut(spark, sfDir).count()),
+      "events" -> (() => model.Fixtures.events(spark, sfDir).count()),
+      "chain" -> (() => model.Fixtures.chain(spark).count())) ++
       // ANN index builds (IVF centroids, PQ codebooks) are likewise
       // load-time jobs — the trained index is the durable artifact
-      SparkEntry.queries.get("e13_ann_ivf").foreach(f => f(spark, sfDir).count())
-      SparkEntry.queries.get("e48_ann_pq").foreach(f => f(spark, sfDir).count())
-    } catch { case _: Throwable => () }
+      Seq("e13_ann_ivf", "e48_ann_pq").flatMap(q =>
+        SparkEntry.queries.get(q).map(f => q -> (() => f(spark, sfDir).count())))
+    loads.foreach { case (name, load) => attempt(loadErrors, name)(load()) }
     val loadS = (System.nanoTime() - l0) / 1e9
 
     // iteration aids: SPARK_GRAFT_BENCH_ONLY=q1,q2 times a subset;
@@ -171,6 +167,14 @@ object Bench {
     // the full minima map and every raw per-rep map go to the
     // sidecar file for audits.
     val repsJson = (0 until reps).map(r => jmap(repResults(r))).mkString("[", ",", "]")
+    def errJson(key: String, errors: collection.Map[String, String], order: Seq[String]) = {
+      val first = order.find(errors.contains).fold("")(n => s"$n:${errors(n)}")
+      s""""${key}_errors":${errors.size},"${key}_error_first":"$first""""
+    }
+    val harness = Seq(
+      errJson("load", loadErrors, loads.map(_._1)),
+      errJson("warmup", warmupErrors, SparkEntry.queries.keys.toSeq),
+      s""""shuffle_partitions":$shufflePartitions""").mkString(",")
     try {
       val sidecar = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_RAW", "dev/bench_raw_last.json"))
@@ -178,7 +182,7 @@ object Bench {
       val parJson = parMax
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       java.nio.file.Files.write(sidecar,
-        s"""{"sf":"$sfDir","cpus":$cpus,"n_reps":$reps,"n_queries":${names.size},"load_sec":${f3(loadS)},"rep_totals":$repTotals,"query_min":${jmap(minQ)},"par_max":$parJson,"reps":$repsJson}"""
+        s"""{"sf":"$sfDir","cpus":$cpus,"n_reps":$reps,"n_queries":${names.size},"load_sec":${f3(loadS)},$harness,"rep_totals":$repTotals,"query_min":${jmap(minQ)},"par_max":$parJson,"reps":$repsJson}"""
           .getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     val topN = minQ.sortBy(-_._2).take(15)
@@ -188,9 +192,9 @@ object Bench {
     // paths without the sidecar
     val parTop = topN.map { case (n, _) => "\"" + n + "\":" + parMax.getOrElse(n, 0) }
       .mkString("{", ",", "}")
-    val halfCores = math.max(2, cpus.toInt / 2)
+    val halfCores = math.max(2, cpus / 2)
     val parGeHalf = names.count(n => parMax.getOrElse(n, 0) >= halfCores)
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","agg":"per_query_min","n_reps":$reps,"n_queries":${names.size},"load_sec":${f3(loadS)},"n_errors":${hardFail.size},"errors":$es,"flaky":$fl,"queries":${jmap(topN)},"queries_note":"top15_by_min_of_${names.size}; full map in dev/bench_raw_last.json","par_top":$parTop,"par_note":"max_concurrent_tasks_at_cpus=$cpus; ge_half_cores=$parGeHalf/${names.size}","rep_totals":$repTotals,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","agg":"per_query_min","n_reps":$reps,"n_queries":${names.size},"load_sec":${f3(loadS)},$harness,"n_errors":${hardFail.size},"errors":$es,"flaky":$fl,"queries":${jmap(topN)},"queries_note":"top15_by_min_of_${names.size}; full map in dev/bench_raw_last.json","par_top":$parTop,"par_note":"max_concurrent_tasks_at_cpus=$cpus; ge_half_cores=$parGeHalf/${names.size}","rep_totals":$repTotals,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

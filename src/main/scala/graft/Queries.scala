@@ -21,14 +21,16 @@ object Queries {
   def scratchDir(name: String): String = {
     val root = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-q", name)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-      finally walk.close() // the stream holds open DirectoryStreams
-    }
+    if (java.nio.file.Files.exists(root)) deleteTree(root)
     java.nio.file.Files.createDirectories(root).toString
+  }
+
+  /** Delete `root` and everything under it, children first. */
+  def deleteTree(root: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally walk.close() // the stream holds open DirectoryStreams
   }
 
   /** Populated by the per-module registries; SparkEntry exposes it. */

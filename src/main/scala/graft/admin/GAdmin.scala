@@ -1,6 +1,7 @@
 package graft.admin
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.command.DDLUtils
 
 import graft.model.CellSchema
 import graft.write.BucketedStore
@@ -924,21 +925,36 @@ object GAdmin {
     * twin (r18-opt): one catalog read + one alterTable, skipping the
     * SQL parse/analyze round-trip the admin hot paths (enable/disable,
     * quotas, post-rewrite props restore) otherwise pay per call. Same
-    * merge semantics as AlterTableSetPropertiesCommand. */
-  private def setProps(spark: SparkSession, name: String,
+    * merge semantics and the same checks as the SQL path: a VIEW entry
+    * is rejected (`ALTER TABLE` on a view), and so are the keys the SQL
+    * parser reserves ([[alterableMeta]]). */
+  private[graft] def setProps(spark: SparkSession, name: String,
       kv: Seq[(String, String)]): Unit = {
-    val m = tableMeta(spark, name)
+    val m = alterableMeta(spark, name, kv.map(_._1))
     spark.sessionState.catalog.alterTable(
       m.copy(properties = m.properties ++ kv))
   }
 
   /** Direct-catalog UNSET TBLPROPERTIES IF EXISTS (absent keys are
-    * ignored, like the IF EXISTS form). */
-  private def unsetProps(spark: SparkSession, name: String,
+    * ignored, like the IF EXISTS form); checked like [[setProps]]. */
+  private[graft] def unsetProps(spark: SparkSession, name: String,
       keys: Seq[String]): Unit = {
-    val m = tableMeta(spark, name)
+    val m = alterableMeta(spark, name, keys)
     spark.sessionState.catalog.alterTable(
       m.copy(properties = m.properties -- keys))
+  }
+
+  /** `name`'s catalog entry, for a write of `keys`: refuses a VIEW and
+    * the keys `ALTER TABLE … SET/UNSET TBLPROPERTIES` refuses to parse
+    * (case-sensitively; `comment` it accepts and handles itself). */
+  private def alterableMeta(spark: SparkSession, name: String, keys: Seq[String]) = {
+    import org.apache.spark.sql.connector.catalog.TableCatalog._
+    keys.find(Set(PROP_PROVIDER, PROP_LOCATION, PROP_OWNER, PROP_EXTERNAL,
+        PROP_IS_MANAGED_LOCATION)).foreach(k =>
+      throw new IllegalArgumentException(s"table property '$k' is reserved"))
+    val m = tableMeta(spark, name)
+    DDLUtils.verifyAlterTableType(spark.sessionState.catalog, m, isView = false)
+    m
   }
 
   /** (location, bucket count) of a graft table's store, from the

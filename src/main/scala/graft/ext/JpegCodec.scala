@@ -38,10 +38,9 @@ object JpegCodec {
   // (FileCacheImage{Input,Output}Stream): decoding an in-memory blob
   // paid a disk create/write/delete round-trip per frame, which at
   // ~10^5 frames per video query both dominated the cost and made it
-  // erratic (filesystem contention). The sources here are always
-  // in-memory byte arrays — cache in memory. Process-wide, set once
-  // per JVM at class init on driver and executors alike.
-  javax.imageio.ImageIO.setUseCache(false)
+  // erratic (filesystem contention). Each call hands ImageIO an
+  // in-memory stream instead; the JVM-wide `ImageIO.setUseCache` is
+  // left as the host application set it.
 
   def decode(jpeg: Array[Byte]): Option[PngCodec.Pixels] = {
     if (jpeg == null || jpeg.length < 4) return None
@@ -49,8 +48,11 @@ object JpegCodec {
     if ((jpeg(0) & 0xff) != 0xff || (jpeg(1) & 0xff) != 0xd8 ||
         (jpeg(2) & 0xff) != 0xff) return None
     try {
-      val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(jpeg))
-      if (img == null) return None
+      val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+        new ByteArrayInputStream(jpeg))
+      // read closes the stream itself unless it finds no reader
+      val img = javax.imageio.ImageIO.read(in)
+      if (img == null) { in.close(); return None }
       val w = img.getWidth
       val h = img.getHeight
       if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return None

@@ -31,12 +31,8 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  // In-memory ImageIO streams (see JpegCodec's note): the default
-  // file-backed stream cache costs a temp-file round-trip per encoded
-  // frame — ruinous for the synthetic-media fixtures that encode 8
-  // frames per doc. Set here too so encode-only tasks that never load
-  // JpegCodec still get it.
-  javax.imageio.ImageIO.setUseCache(false)
+  // ImageIO gets in-memory streams per call (see JpegCodec's note): its
+  // default file-backed cache costs a temp-file round-trip per frame.
 
   final case class MediaRow(doc_id: Long, blob: Array[Byte],
       width: Int, height: Int, modality: String)
@@ -335,7 +331,8 @@ object Multimodal {
       y += 1
     }
     val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, "png", ios) finally ios.close()
     bos.toByteArray
   }
 
@@ -375,20 +372,22 @@ object Multimodal {
       }
       y += 1
     }
+    encodeJpeg(img)
+  }
+
+  /** `img` through the real imageio JPEG encoder at quality 1.0. */
+  private def encodeJpeg(img: java.awt.image.RenderedImage): Array[Byte] = {
     val writer = javax.imageio.ImageIO
       .getImageWritersByFormatName("jpeg").next()
     val param = writer.getDefaultWriteParam
     param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
     param.setCompressionQuality(1.0f)
     val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
     try {
       writer.setOutput(ios)
       writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
-    } finally {
-      writer.dispose()
-      ios.close()
-    }
+    } finally { writer.dispose(); ios.close() }
     bos.toByteArray
   }
 
@@ -939,21 +938,7 @@ object Multimodal {
       }
       y += 1
     }
-    val writer = javax.imageio.ImageIO
-      .getImageWritersByFormatName("jpeg").next()
-    val param = writer.getDefaultWriteParam
-    param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-    param.setCompressionQuality(1.0f)
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    try {
-      writer.setOutput(ios)
-      writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
-    } finally {
-      writer.dispose()
-      ios.close()
-    }
-    bos.toByteArray
+    encodeJpeg(img)
   }
 
   /** Hand-built RIFF/AVI container around real imageio MJPEG frames:

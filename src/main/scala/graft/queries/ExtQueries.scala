@@ -19,8 +19,6 @@ object ExtQueries {
 
   // ---- shared oracle fragments ---------------------------------------------
 
-  private val sinkId = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** e77's landed retrieval lists, one per (session, sf) — see the
     * query's comment. Sessions are tagged with a UUID held in a weak
     * identity map (not identityHashCode, which can collide or be
@@ -638,8 +636,7 @@ object ExtQueries {
           .schema("doc_id BIGINT, text STRING").parquet(s"$tmp/arrivals")
         val matches = graft.ext.DedupIndex.streamQuery(
           s, "e33_stream_dedup_tbl", stream, k = 16, bands = 4, threshold = 0.8)
-        graft.stream.WalStream.runAvailableNow(matches,
-            s"e33_sink_${sinkId.incrementAndGet()}", mode = "append")
+        graft.stream.WalStream.runAvailableNow(matches, "e33_sink", mode = "append")
           .groupBy("i", "j").agg(min(col("jaccard")).as("jaccard"))
           .orderBy("i", "j")
       },

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,15 +16,13 @@ import graft.stream.WalStream
   */
 object StreamQueries {
 
-  private val sinkId = new AtomicInteger(0)
-
   val defs: Seq[QDef] = Seq(
     QDef(
       "q34_stream_window",
       (s, dir) => {
         val stream = WalStream.sourceNs(s, s"$dir/events.parquet", Fixtures.eventsSchema)
         val agg    = WalStream.tumblingCounts(stream, "1 hour")
-        val out    = WalStream.runAvailableNow(agg, s"q34_sink_${sinkId.incrementAndGet()}")
+        val out    = WalStream.runAvailableNow(agg, "q34_sink")
         out.select(
             date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
             col("event_type"),
@@ -77,7 +73,7 @@ object StreamQueries {
         // stores per partition, and the bounded run's store lifecycle
         // dwarfs its 46-row match volume (dev/PLANS.md q60 row) — a
         // perpetual stream sizes this to throughput at stream start
-        WalStream.runAvailableNow(joined, s"q60_sink_${sinkId.incrementAndGet()}",
+        WalStream.runAvailableNow(joined, "q60_sink",
             mode = "append", statePartitions = 4)
           .orderBy("user_id", "click_id", "purchase_id")
       },

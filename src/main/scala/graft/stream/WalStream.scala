@@ -1,6 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -202,50 +203,71 @@ object WalStream {
   /** Run a streaming aggregation to completion over the current log
     * contents (Trigger.AvailableNow + in-memory sink) and return the
     * materialized result — the batch-equivalence harness for Q34.
-    * `mode` is "complete" for aggregations, "append" for joins. */
+    * `mode` is "complete" for aggregations, "append" for joins.
+    *
+    * Stateful operators instantiate one state store per shuffle
+    * partition per store kind (a stream-stream join keeps FOUR per
+    * partition), and every micro-batch commits each store — for a
+    * bounded harness run that fixed cost dwarfs the data (32 -> 4
+    * partitions is 6x wall-clock on q60). So the stream runs in a child
+    * session pinned to `statePartitions`, never touching the caller's
+    * conf, and its result is bound back to the caller's session, where
+    * anything stacked on it plans at the caller's count. A perpetual
+    * stream instead sizes this to throughput at stream START (the first
+    * checkpoint fixes state partitioning). */
   def runAvailableNow(agg: DataFrame, queryName: String,
       mode: String = "complete", statePartitions: Int = 8): DataFrame = {
-    val spark = agg.sparkSession
+    val child = streamSession(agg.sparkSession, statePartitions)
+    val run = runName(queryName)
+    // the sink's temp view goes: the returned plan holds the rows itself
+    try {
+      runBounded(run)(ck => shim.ofRows(child, agg.queryExecution.analyzed)
+        .writeStream.format("memory").queryName(run)
+        .option("checkpointLocation", ck).outputMode(mode))
+      shim.ofRows(agg.sparkSession, child.table(run).queryExecution.analyzed)
+    } finally { child.catalog.dropTempView(run); () }
+  }
+
+  /** One child session per (caller, state partitions), reused: every
+    * session that starts a stream keeps a listener on the SparkContext. */
+  private val streamSessions =
+    new java.util.WeakHashMap[SparkSession, Map[Int, SparkSession]]()
+
+  private[graft] def streamSession(spark: SparkSession, statePartitions: Int)
+      : SparkSession = streamSessions.synchronized {
+    val byCount = streamSessions.getOrDefault(spark, Map.empty)
+    byCount.getOrElse(statePartitions, {
+      // own SQL conf and temp views over the caller's SparkContext
+      val child = spark.newSession()
+      child.sessionState.conf.setConfString(
+        "spark.sql.shuffle.partitions", statePartitions.toString)
+      streamSessions.put(spark, byCount + (statePartitions -> child))
+      child
+    })
+  }
+
+  /** Unique per run: concurrent runs share no query name, view or
+    * checkpoint. */
+  private def runName(queryName: String): String =
+    s"${queryName}_${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** Run the stream `writer` builds around a checkpoint dir until the
+    * AvailableNow trigger drains it; however it ends, stop the query
+    * and delete the checkpoint. */
+  private def runBounded(run: String)(writer: String => DataStreamWriter[_]): Unit = {
     // offset/commit logs on tmpfs when available: the bounded
     // availableNow run needs durability only for the run itself, and
     // checkpoint fsyncs are a fifth of its wall-clock on disk
     val ckBase = if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
       else sys.props("java.io.tmpdir")
-    val ckDir = s"$ckBase/graft-ck/$queryName-${java.util.UUID.randomUUID().toString.take(8)}"
-    // Stateful operators instantiate one state store per shuffle
-    // partition per store kind (a stream-stream join keeps FOUR per
-    // partition), and every micro-batch commits each store — for a
-    // bounded harness run that fixed cost dwarfs the data (32 -> 4
-    // partitions is 6x wall-clock on q60). Pin a small state-partition
-    // count for the run and restore the session default after; a
-    // perpetual production stream instead sizes this to throughput at
-    // stream START (state partitioning is fixed by the first
-    // checkpoint, so the knob matters once, up front).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    val ckDir = java.nio.file.Paths.get(s"$ckBase/graft-ck/$run")
     try {
-      // conf restored only AFTER awaitTermination: the stream's
-      // execution thread snapshots shuffle partitions into the first
-      // checkpointed OffsetSeqMetadata asynchronously after start()
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", ckDir)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // bounded run is over — reclaim the tmpfs-backed offset/commit log
-    try {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val root = Paths.get(ckDir)
-      if (Files.exists(root))
-        Files.walk(root).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => Files.deleteIfExists(p))
-    } catch { case _: Exception => () }
-    spark.table(queryName)
+      val q = writer(ckDir.toString).trigger(Trigger.AvailableNow()).start()
+      // stopping a finished query would log a cancel warning for its jobs
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+    } finally // best-effort: never fail a good run or mask a failed one's error
+      try graft.Queries.deleteTree(ckDir)
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
   }
 
   /** Streaming incremental-backup sink: every micro-batch of the WAL
@@ -261,34 +283,20 @@ object WalStream {
     * (WALEdit.METAFAMILY contract), exactly like applyBatch.
     * Runs the bounded AvailableNow form, like [[runAvailableNow]]. */
   def hfileBackupSink(cells: DataFrame, outDir: String, numRegions: Int,
-      queryName: String, encoding: Int = 0, compression: Int = 2): Unit = {
-    val spark = cells.sparkSession
-    val ckBase = if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-      else sys.props("java.io.tmpdir")
-    val ckDir = s"$ckBase/graft-ck/$queryName-${java.util.UUID.randomUUID().toString.take(8)}"
-    val q = cells.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val dir = s"$outDir/epoch=$epochId"
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-        graft.flow.HFiles.export(WalMeta.dataOnly(batch), numRegions, dir,
-          encoding = encoding, compression = compression)
-      }
-      .option("checkpointLocation", ckDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    try {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val root = Paths.get(ckDir)
-      if (Files.exists(root))
-        Files.walk(root).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => Files.deleteIfExists(p))
-    } catch { case _: Exception => () }
-  }
+      queryName: String, encoding: Int = 0, compression: Int = 2): Unit =
+    runBounded(runName(queryName)) { ck =>
+      cells.writeStream
+        .foreachBatch { (batch: DataFrame, epochId: Long) =>
+          val dir = s"$outDir/epoch=$epochId"
+          val p = new org.apache.hadoop.fs.Path(dir)
+          val fs = p.getFileSystem(
+            batch.sparkSession.sparkContext.hadoopConfiguration)
+          if (fs.exists(p)) fs.delete(p, true)
+          graft.flow.HFiles.export(WalMeta.dataOnly(batch), numRegions, dir,
+            encoding = encoding, compression = compression)
+        }
+        .option("checkpointLocation", ck)
+    }
 
   /** Same-coordinate conflict resolution of the sink, batch form: the
     * entry with the highest WAL sequence id wins (the reference's

@@ -616,4 +616,26 @@ class AdminSpec extends SparkSpec {
     assert(GAdmin.recoverInterruptedDdl(spark, tmp, failsafes).isEmpty)
     GAdmin.deleteTable(spark, "rs1")
   }
+
+  test("property writes reject a VIEW entry and the reserved keys ALTER TABLE rejects") {
+    spark.sql("CREATE OR REPLACE VIEW graft_propview AS SELECT 1 AS x")
+    try intercept[org.apache.spark.sql.AnalysisException](GAdmin.disableTable(spark, "propview"))
+    finally spark.sql("DROP VIEW IF EXISTS graft_propview")
+    GAdmin.createTable(spark, "propres",
+      java.nio.file.Files.createTempDirectory("adminprops").toString, Seq("d"), buckets = 1)
+    // each key is refused by the direct path exactly when ALTER TABLE refuses it
+    def refused(f: => Any): Boolean = scala.util.Try(f).isFailure
+    val keys = Seq("provider", "location", "owner", "external",
+      "is_managed_location", "Location", "comment", "graft.note")
+    try {
+      val direct = keys.map(k => (refused(GAdmin.setProps(spark, "propres", Seq(k -> "x"))),
+        refused(GAdmin.unsetProps(spark, "propres", Seq(k)))))
+      assert(direct === keys.map(k => (
+        refused(spark.sql(s"ALTER TABLE graft_propres SET TBLPROPERTIES ('$k'='x')")),
+        refused(spark.sql(s"ALTER TABLE graft_propres UNSET TBLPROPERTIES IF EXISTS ('$k')")))))
+      assert(direct.take(5).forall(_ == (true, true)))
+      GAdmin.disableTable(spark, "propres") // graft's own keys still write
+      assert(!GAdmin.isEnabled(spark, "propres"))
+    } finally GAdmin.deleteTable(spark, "propres")
+  }
 }

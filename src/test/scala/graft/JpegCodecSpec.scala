@@ -118,4 +118,12 @@ class JpegCodecSpec extends AnyFunSuite {
     val b = PngCodec.decode(png).get
     assert(java.util.Arrays.equals(a.data, b.data))
   }
+
+  test("decode and encode leave ImageIO's JVM-wide cache setting alone") {
+    // the JVM default; graft hands ImageIO memory-cached streams per call
+    assert(javax.imageio.ImageIO.getUseCache)
+    assert(JpegCodec.decode(Multimodal.syntheticJpeg(7L)).isDefined)
+    assert(Multimodal.syntheticPng(7L).nonEmpty)
+    assert(javax.imageio.ImageIO.getUseCache)
+  }
 }

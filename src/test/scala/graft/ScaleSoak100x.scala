@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-11 100× scale soak (the round-9/10 carried task): run the
   * three flagship shapes — q36 chain verify, Dedup.minHashNearDups,
   * TextAnalysis.bm25TopK — at 1×/10×/100× of the sf0.1 fixtures under
-  * local[32] and record PER-STAGE shuffle bytes, so the "plans you'd
-  * want at 100 TB" claim is measured, not argued. A stage whose
+  * `GraftSession.local()` and record PER-STAGE shuffle bytes, so the
+  * "plans you'd want at 100 TB" claim is measured, not argued. A stage whose
   * shuffle grows super-linearly in the input is the scale hazard this
   * hunts (candidate-pair blow-ups, single-partition windows).
   *
@@ -37,13 +37,7 @@ object ScaleSoak100x {
   private def mb(b: Long): String = f"${b / 1048576.0}%9.1f"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val meter = new StageMeter
     spark.sparkContext.addSparkListener(meter)
     val dir = "/root/testdata/sf0.1"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.flow.{Compactions, HFiles, PWalFiles, StripeStore}
@@ -31,12 +31,7 @@ object ScaleSoakR12 {
   private def mb(b: Long): String = f"${b / 1048576.0}%9.1f"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
     val meter = new ScaleSoak100x.StageMeter
     spark.sparkContext.addSparkListener(meter)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.flow.{HFiles, RegionRefs}
@@ -24,12 +23,7 @@ object ScaleSoakR14 {
     else fs.getContentSummary(p).getLength
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val sf = "/root/testdata/sf0.01"
 
     println("== metadata-only split vs materializing split ==")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, DedupIndex, TextAnalysis}
@@ -23,12 +22,7 @@ import graft.ext.{Dedup, DedupIndex, TextAnalysis}
 object ScaleSoakR16b {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val docs = graft.model.Tables.load(
         spark, "/root/testdata/sf0.1/documents.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Pipeline, TokenizerStore}
@@ -20,13 +19,7 @@ import graft.ext.{Pipeline, TokenizerStore}
 object ScaleSoakR17b {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val sf = "/root/testdata/sf0.1"
 
     val docs = graft.model.Tables.load(spark, s"$sf/documents.parquet")

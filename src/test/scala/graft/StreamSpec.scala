@@ -1,11 +1,31 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
 import graft.stream.WalStream
 
 class StreamSpec extends SparkSpec {
+
+  /** Checkpoint dirs, and sink views on the caller and `children`,
+    * that bounded runs named `name` left. */
+  private def leftovers(name: String, children: SparkSession*): Seq[String] = {
+    val ck = new java.io.File(if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
+      else sys.props("java.io.tmpdir"), "graft-ck")
+    (Option(ck.list()).toSeq.flatten ++ (spark +: children)
+      .flatMap(_.catalog.listTables().collect().map(_.name))).filter(_.startsWith(name))
+  }
+
+  /** The cached child session that bounded runs at `statePartitions` stream in. */
+  private def child(statePartitions: Int = 8) = WalStream.streamSession(spark, statePartitions)
+
+  /** Partition counts of the shuffles `df` plans (AQE's initial plan). */
+  private def exchangePartitions(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.queryExecution.executedPlan
+      .asInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec].executedPlan
+      .collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.outputPartitioning.numPartitions }
 
   test("streaming tumbling window equals batch computation") {
     val stream = WalStream.sourceNs(spark, s"$sf0001/events.parquet", Fixtures.eventsSchema)
@@ -19,6 +39,30 @@ class StreamSpec extends SparkSpec {
     val diff = out.select("window.start", "event_type", "n")
       .exceptAll(batch.select("window.start", "event_type", "n"))
     assert(diff.isEmpty)
+    assert(leftovers("streamspec_tumble", child()).isEmpty)
+  }
+
+  test("a bounded run plans its state at statePartitions and its result at the caller's count") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val stateParts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o => stateParts.add(o.numShufflePartitions))
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = done.countDown()
+    }
+    child(3).streams.addListener(listener) // 3 state partitions under a caller at 4
+    try {
+      val stream = WalStream.sourceNs(spark, s"$sf0001/events.parquet", Fixtures.eventsSchema)
+      val out = WalStream.runAvailableNow(
+        WalStream.tumblingCounts(stream), "streamspec_parts", statePartitions = 3)
+      assert(done.await(1, java.util.concurrent.TimeUnit.MINUTES) && !stateParts.isEmpty)
+      stateParts.forEach(n => assert(n === 3L))
+      assert(exchangePartitions(out.groupBy("event_type").count()) === Seq(4))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    } finally child(3).streams.removeListener(listener)
   }
 
   test("streaming session_window groups events by 30-min gaps") {
@@ -690,6 +734,7 @@ class StreamSpec extends SparkSpec {
       s"$out/bk", numRegions = 2, queryName = "hfsink_t2")
     assert(graft.flow.HFiles.importCells(spark, s"$out/bk",
       glob = "epoch=*/part-*.hfile").count() === 3)
+    assert(leftovers("hfsink_t").isEmpty)
   }
 
   test("WAL log cleaner compares parsed segment indices, not raw names") {
@@ -810,5 +855,35 @@ class StreamSpec extends SparkSpec {
       extraRefs = refs).isEmpty)
     assert(graft.flow.SnapshotShip.cleanupArchive(spark, dir, 1, future) ==
       Seq("part-00000.hfile"))
+  }
+
+  test("overlapping q34/q60 runs never write the session conf: batch plans keep its partition count") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // (conf value, shuffle partitions a batch groupBy plans at) right now
+    def observe(): (String, Int) = spark.conf.get("spark.sql.shuffle.partitions") ->
+      exchangePartitions(spark.range(64).groupBy(col("id") % 5).count()).head
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val seen = scala.collection.mutable.Set[(String, Int)]()
+    try {
+      val q34 = Future(SparkEntry.queries("q34_stream_window")(spark, sf0001).count())
+      Thread.sleep(200) // staggered, overlapping starts
+      val q60 = Future(SparkEntry.queries("q60_stream_stream_join")(spark, sf0001).count())
+      while (!(q34.isCompleted && q60.isCompleted)) { seen += observe(); Thread.sleep(5) }
+      assert(Await.result(q34, 5.minutes) > 0 && Await.result(q60, 5.minutes) > 0)
+    } finally pool.shutdown()
+    assert(seen.nonEmpty)
+    assert((seen += observe()) === Set("4" -> 4))
+  }
+
+  test("a failed bounded run leaves no checkpoint dir or sink view") {
+    val events = WalStream.sourceNs(spark, s"$sf0001/events.parquet", Fixtures.eventsSchema)
+    // both fail in their first micro-batch (events carry no cell columns)
+    intercept[Exception](WalStream.runAvailableNow(
+      events.withColumn("boom", assert_true(col("ts") < 0)), "leak_fail", mode = "append"))
+    intercept[Exception](WalStream.hfileBackupSink(events,
+      graft.Queries.scratchDir("leak_bk"), numRegions = 1, queryName = "leak_bk_fail"))
+    for (n <- Seq("leak_fail", "leak_bk_fail")) assert(leftovers(n, child()).isEmpty, n)
   }
 }
