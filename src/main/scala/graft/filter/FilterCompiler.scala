@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.read.Resolve
+
 /** Compiles the [[GFilter]] AST against a canonical CellSet DataFrame.
   *
   * Cell-level filters become one fused `Column` predicate (→ Catalyst
@@ -11,6 +13,8 @@ import org.apache.spark.sql.functions._
   * server-side `filterCell` fast path plus its seek-hint skipping,
   * SURVEY §4 O3). Row-level filters become semi/anti-join or window
   * rewrites, chosen so the build side is the small one (broadcastable).
+  * A scan's SCVF trees skip those rewrites: [[rowGate]] hands them to
+  * the resolve pass, which decides the verdict at row end.
   */
 object FilterCompiler {
 
@@ -279,18 +283,17 @@ object FilterCompiler {
       throw new IllegalArgumentException(s"unsupported filter $other")
   }
 
-  /** Row-level semantics of SCVF (SingleColumnValueFilter.java:65-74).
+  /** The per-row verdict aggregate shared by [[scvf]] and
+    * [[admittedRows]]: (row, __m) for every row HAVING the column.
     *
-    * ONE partial+final aggregate over the tested column decides every
-    * row's verdict — no window, no distinct/anti-join cascade. For
-    * `latestVersionOnly` the tested value is the newest version's
+    * Row-level semantics of SCVF (SingleColumnValueFilter.java:65-74):
+    * for `latestVersionOnly` the tested value is the newest version's
     * (max by ts; ties break on value, deterministically); otherwise any
     * version matching passes. A null predicate result (unparseable
     * value under a numeric comparator) is a no-match, so the verdict is
-    * compared null-safely.
+    * compared null-safely. [[rowGate]] decides the same verdict inside
+    * the resolve pass.
     */
-  /** The per-row verdict aggregate shared by [[scvf]] and
-    * [[admittedRows]]: (row, __m) for every row HAVING the column. */
   private def scvfVerdict(cells: DataFrame, fam: String, q: String,
       op: CompareOp, c: GComparator, latestVersionOnly: Boolean): DataFrame = {
     val colCells = cells.filter(col("family") === fam && col("qualifier") === q)
@@ -309,6 +312,38 @@ object FilterCompiler {
     } else
       colCells.groupBy("row")
         .agg((max(when(c.test(col("value"), op), 1).otherwise(0)) === 1).as("__m"))
+  }
+
+  /** The SCVF verdicts of a scan's filter tree as a row gate for the
+    * resolve pass: a SingleColumnValue(Exclude)Filter alone, or an AND
+    * list (nested ANDs flattened) of such filters and per-cell filters.
+    * None for any other tree. List order is kept, as the sequential
+    * AND rewrite keeps it: a per-cell filter ahead of an SCVF limits
+    * what the SCVF reads, one after it only what is emitted, and an
+    * Exclude filter's column is gone for everything after it. The
+    * verdicts equal [[scvf]]'s over the same masked view; no join,
+    * window or exchange is planned for them. */
+  def rowGate(f: GFilter): Option[Resolve.RowGate] = {
+    def steps(g: GFilter): Seq[GFilter] = g match {
+      case FilterList(FilterList.MustPassAll, fs) => fs.flatMap(steps)
+      case other => Seq(other)
+    }
+    def tested(fam: String, q: String) = col("family") === fam && col("qualifier") === q
+    val start = Option((lit(true), Vector.empty[Resolve.ColumnTest]))
+    steps(f).foldLeft(start) {
+      case (Some((admitted, tests)), step) => step match {
+        case SingleColumnValueFilter(fam, q, op, c, ifMissing, latestOnly) =>
+          Some((admitted,
+            tests :+ Resolve.ColumnTest(fam, q, admitted, c.test(col("value"), op),
+              ifMissing, latestOnly)))
+        case SingleColumnValueExcludeFilter(fam, q, op, c, ifMissing, latestOnly) =>
+          Some((admitted && !tested(fam, q),
+            tests :+ Resolve.ColumnTest(fam, q, admitted, c.test(col("value"), op),
+              ifMissing, latestOnly)))
+        case other => cellPredicate(other).map(p => (admitted && p, tests))
+      }
+      case (None, _) => None
+    }.collect { case (emit, tests) if tests.nonEmpty => Resolve.RowGate(tests, emit) }
   }
 
   private def scvf(cells: DataFrame, fam: String, q: String, op: CompareOp,

@@ -47,10 +47,6 @@ object GTable {
     Seq(row, col("family").asc, col("qualifier").asc, col("ts").desc)
   }
 
-  /** Plan a scan over a canonical CellSet DataFrame. Returns cells in
-    * total cell order. All predicates are plain `Column`s → Catalyst
-    * pushes them into the source scan before the (optional) resolve.
-    */
   /** The scan's row-range predicates alone — shared with
     * [[scanFiltered]], which must range-prune BEFORE the filter tree
     * runs (stateful filters like PageFilter count rows INSIDE the scan
@@ -61,7 +57,15 @@ object GTable {
     s.rowPrefix.map(p => col("row").startsWith(p))
   ).flatten
 
-  def scan(cells: DataFrame, s: GScan): DataFrame = {
+  /** Plan a scan over a canonical CellSet DataFrame. Returns cells in
+    * total cell order. All predicates are plain `Column`s → Catalyst
+    * pushes them into the source scan before the (optional) resolve.
+    */
+  def scan(cells: DataFrame, s: GScan): DataFrame = scan(cells, s, None)
+
+  /** [[scan]] with an optional row gate decided inside the resolve pass
+    * (non-raw scans only). */
+  private def scan(cells: DataFrame, s: GScan, gate: Option[Resolve.RowGate]): DataFrame = {
     val rangePreds: Seq[Column] = rangePredsOf(s)
     // Projection UNIONS family and column selections (addFamily +
     // addColumn build one family→qualifiers map, Scan.java:269,282):
@@ -75,15 +79,18 @@ object GTable {
     // markers are visible to delete tracking even when only one
     // qualifier is selected (ScanQueryMatcher columns-tracking runs
     // AFTER the delete tracker). Markers never surface in the resolve
-    // output (only Puts do), so no post-filter is needed.
+    // output (only Puts do), so no post-filter is needed. A row gate's
+    // verdicts read their tested columns whatever the projection (the
+    // filter tree runs before it), so those stay and the projection
+    // limits only what the gate emits.
     val projFams = (s.families ++ s.columns.map(_._1)).distinct
     val keepFamilyMarkers: Column =
       col("type") =!= graft.model.CellType.Put &&
         col("qualifier") === "" && col("family").isin(projFams: _*)
-    val projPreds: Seq[Column] =
-      if (projParts.isEmpty) Nil
-      else if (s.raw) Seq(projParts.reduce(_ || _))
-      else Seq(projParts.reduce(_ || _) || keepFamilyMarkers)
+    val projection = projParts.reduceOption(_ || _)
+    val projPreds: Seq[Column] = projection.toSeq.map(p =>
+      if (s.raw) p else (Seq(p, keepFamilyMarkers) ++ gate.map(_.reads)).reduce(_ || _))
+    val rowGate = gate.map(g => projection.fold(g)(p => g.copy(emit = g.emit && p)))
 
     // Row-range + projection predicates apply to raw cells (they prune
     // the scan); resolve runs after, as on the server
@@ -93,41 +100,36 @@ object GTable {
     // StoreScanner below raw-ness). The filter runs BEFORE the version
     // gate (filterCell precedes version counting in the matcher), so a
     // rejected newest version does not consume a version slot.
+    // Intra-row per-CF pagination (Scan.setMaxResultsPerColumnFamily /
+    // setRowOffsetPerColumnFamily, Scan.java:514,523) skips the first
+    // `storeOffset` values of each (row, family) store and keeps at most
+    // `storeLimit` after it, counting VALUES (versions too) in cell
+    // order — the server enforces this per HStore read (StoreScanner's
+    // storeLimit/storeOffset), AFTER the version gate and filters, so
+    // the resolve pass counts it too.
+    val paged = s.maxResultsPerCf.isDefined || s.rowOffsetPerCf != 0
     val pruned = (rangePreds ++ projPreds).foldLeft(cells)((df, p) => df.filter(p))
     val resolved =
       if (s.raw) {
         val ranged = Resolve.timeRangePred(s.timeRange, s.cfTimeRanges)
           .fold(pruned)(pruned.filter)
-        s.filter.fold(ranged)(ranged.filter)
+        val filtered = s.filter.fold(ranged)(ranged.filter)
+        if (paged) Resolve.pageRaw(filtered, s.rowOffsetPerCf, s.maxResultsPerCf)
+        else filtered
       } else
         Resolve.latest(pruned, s.maxVersions, s.timeRange,
           ttlCutoff = s.ttlCutoff, cellFilter = s.filter,
           cfTimeRanges = s.cfTimeRanges, minVersions = s.minVersions,
-          keepDeleted = s.keepDeleted)
-    // Intra-row per-CF pagination (Scan.setMaxResultsPerColumnFamily /
-    // setRowOffsetPerColumnFamily, Scan.java:514,523): skip the first
-    // `storeOffset` values of each (row, family) store and keep at most
-    // `storeLimit` after it, counting VALUES (versions too) in cell
-    // order — the server enforces this per HStore read
-    // (StoreScanner's storeLimit/storeOffset), AFTER the version gate
-    // and filters, which is exactly where this sits. The rank window
-    // partitions on (row, family); the resolve pass's output carries no
-    // known partitioning, so a non-raw paged scan takes one exchange
-    // here.
-    val paged =
-      if (s.maxResultsPerCf.isEmpty && s.rowOffsetPerCf == 0) resolved
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("row"), col("family"))
-          .orderBy(col("qualifier").asc, col("ts").desc)
-        val lo = s.rowOffsetPerCf
-        val hi = s.maxResultsPerCf
-          .map(m => col("__cfpos") <= lo + m).getOrElse(lit(true))
-        resolved.withColumn("__cfpos", row_number().over(w))
-          .filter(col("__cfpos") > lo && hi)
-          .drop("__cfpos")
-      }
-    val ordered = paged.orderBy(cellOrder(s.reversed): _*)
+          keepDeleted = s.keepDeleted, rowGate = rowGate,
+          cfOffset = s.rowOffsetPerCf, cfLimit = s.maxResultsPerCf)
+    // A Get's one row leaves the pass in one partition (the pass
+    // clusters on row), so a local sort gives the total order and the
+    // read plans no range-sort exchange.
+    val point = !s.raw && s.limit.isEmpty && s.startRow.isDefined &&
+      s.startRow == s.stopRow && s.startInclusive && s.stopInclusive
+    val ordered =
+      if (point) resolved.sortWithinPartitions(cellOrder(s.reversed): _*)
+      else resolved.orderBy(cellOrder(s.reversed): _*)
     // limit counts table ROWS (Scan.setLimit, Scan.java:958), not cells
     s.limit.fold(ordered) { n =>
       val keep = ordered.select("row").distinct()
@@ -168,8 +170,18 @@ object GTable {
     * filterCell, so on a non-raw scan the tree evaluates over the
     * delete-masked view — a tombstoned value can never satisfy an SCVF
     * — while version counting still runs AFTER the filter (rejected
-    * cells must not consume version slots; the downstream [[scan]]
-    * resolve only gates the marker-free frame). */
+    * cells must not consume version slots).
+    *
+    * Three plans, by tree:
+    *   - per-cell trees ride the resolve's cellFilter slot;
+    *   - SCVF and SCVF-Exclude trees, alone or in an AND list with
+    *     per-cell filters, become a [[Resolve.RowGate]] that the resolve
+    *     pass decides at row end ([[graft.filter.FilterCompiler.rowGate]]);
+    *   - raw scans and every other row-level tree (Page, WhileMatch, Skip,
+    *     DependentColumn, ColumnCount/Pagination, FirstKeyOnly, OR lists
+    *     with row-level children) run mask → tree → gate: the tree over
+    *     the masked view, then the [[scan]] resolve over its output,
+    *     which clusters again. */
   def scanFiltered(cells: DataFrame, s: GScan,
       f: graft.filter.GFilter): DataFrame = {
     val tree = graft.filter.FilterCompiler.withReversed(f, s.reversed)
@@ -178,12 +190,14 @@ object GTable {
     // the table), then the filtered set flows through the normal scan
     // (the residual range predicates there are no-ops)
     val ranged = rangePredsOf(s).foldLeft(cells)((df, p) => df.filter(p))
+    lazy val gate = graft.filter.FilterCompiler.rowGate(tree)
     graft.filter.FilterCompiler.cellPredicate(tree) match {
       // a per-cell tree neither reads other cells nor touches markers,
       // so it commutes with delete tracking: it rides the resolve's
       // cellFilter slot (still before the version gate) and the scan
       // stays one pass
       case Some(p) if !s.raw => scan(ranged, s.copy(filter = Some(s.filter.fold(p)(_ && p))))
+      case None if !s.raw && gate.isDefined => scan(ranged, s, gate)
       case _ =>
         // the matcher's ts checks also precede filterCell (on raw scans
         // too — TimeRange applies in the StoreScanner below raw-ness),

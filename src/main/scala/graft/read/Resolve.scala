@@ -2,7 +2,7 @@ package graft.read
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VisKernel
@@ -24,9 +24,10 @@ import graft.model.CellType
   *
   * Scale notes: the resolve is ONE partition-local pass, not a plan of
   * joins. Cells group by row and each row streams through a tracker in
-  * (family, qualifier, ts DESC) order, the order the reference's
-  * StoreScanner feeds ScanQueryMatcher, so state is bounded by one
-  * family's markers, never by the row or the table. The grouping needs
+  * (family, qualifier, ts DESC, value DESC) order, the order the
+  * reference's StoreScanner feeds ScanQueryMatcher, so state is bounded
+  * by one family's markers (and, under a row gate, by the row's admitted
+  * cells it holds back), never by the table. The grouping needs
   * only ClusteredDistribution(row): the materialized cell store is
   * already hash-partitioned on row, so over it the pass plans with no
   * exchange and no broadcast; unclustered inputs (replica parquet,
@@ -34,8 +35,10 @@ import graft.model.CellType
   * [[Resolve.sizedShufflePartitions]] sizes when the input would
   * spill. The pass registers no planner strategy and touches no
   * session state. Its output is the surviving Puts in the input's
-  * schema, with no known partitioning, so a second pass over it (the
-  * filtered scan's gate after its filter tree) clusters again.
+  * schema, each row's cells in one partition. The same pass also
+  * decides row-level SCVF verdicts ([[RowGate]], the reference's
+  * `filterRow` on the assembled row) and per-family pagination, so a
+  * filtered or paged scan clusters once.
   *
   * The unit of work is the row: one row's cells are one group in one
   * task, as a row never spans regions in the reference, so a single
@@ -86,6 +89,12 @@ object Resolve {
     *                     NEW_VERSION_BEHAVIOR tracker is out of scope —
     *                     graft has no mvcc dimension; documented
     *                     boundary.)
+    * @param rowGate      row-level SCVF verdicts decided in the pass;
+    *                     `cellFilter` then limits only what is emitted
+    * @param cfOffset     per-family values to skip in each row
+    *                     (Scan.setRowOffsetPerColumnFamily, Scan.java:523)
+    * @param cfLimit      per-family values to keep after the offset
+    *                     (Scan.setMaxResultsPerColumnFamily, Scan.java:514)
     */
   def latest(
       cells: DataFrame,
@@ -96,16 +105,77 @@ object Resolve {
       cfTimeRanges: Map[String, TimeRange] = Map.empty,
       minVersions: Int = 0,
       keepDeleted: Boolean = false,
-      visScope: Option[String] = None
+      visScope: Option[String] = None,
+      rowGate: Option[RowGate] = None,
+      cfOffset: Int = 0,
+      cfLimit: Option[Int] = None
   ): DataFrame = {
     val visible = markerCeiling(cells, timeRange, cfTimeRanges, keepDeleted)
     // filterCell and the ts checks run BEFORE version counting in the
     // matcher (UserScanQueryMatcher.java:195): rejected Puts must not
     // consume version slots. Markers pass untouched, so they still mask.
-    val ranged = (preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions) ++ cellFilter)
-      .foldLeft(visible)((df, p) => df.filter(col("type") =!= CellType.Put || p))
+    // Under a row gate the verdicts still read Puts `cellFilter` rejects,
+    // so it becomes the gate's emit column instead of a pre-filter.
+    val preFilters = preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions) ++
+      (if (rowGate.isEmpty) cellFilter else None)
+    val ranged =
+      preFilters.foldLeft(visible)((df, p) => df.filter(col("type") =!= CellType.Put || p))
     val retainFrom = if (minVersions > 0) ttlCutoff else None
-    resolvePass(ranged, Pass(maxVersions, retainFrom, minVersions, visScope))
+    val pass = Pass(maxVersions, retainFrom, minVersions, visScope, cfOffset = cfOffset,
+      cfLimit = cfLimit.getOrElse(Int.MaxValue))
+    rowGate.fold(resolvePass(ranged, pass)) { g =>
+      val gated = resolvePass(g.flagged(ranged, cellFilter),
+        pass.copy(verdicts = g.tests.map(t => Verdict(t.filterIfMissing, t.latestOnly))))
+      gated.drop(gated.columns.filter(_.startsWith(RowGate.Prefix)).toIndexedSeq: _*)
+    }
+  }
+
+  /** One SCVF test of a [[RowGate]] (SingleColumnValueFilter.java:65):
+    * `before` is what the filters ahead of it in its list admit, and
+    * `matches` the comparison on the value; a null result of either is
+    * a no. */
+  final case class ColumnTest(family: String, qualifier: String, before: Column,
+      matches: Column, filterIfMissing: Boolean, latestOnly: Boolean)
+
+  /** Row-level verdicts the pass decides at row end, the reference's
+    * `filterRow` on the assembled row. A test reads the row's live,
+    * in-window Puts of its column that `before` admits: the newest one
+    * (ts DESC, then value DESC) when `latestOnly`, any one otherwise. A
+    * row lacking such a Put passes unless `filterIfMissing`. A row
+    * passing every test emits its Puts that `emit` admits; the others
+    * consume no version slot and no page position. The predicates stay
+    * Catalyst columns: [[flagged]] evaluates them before the pass, which
+    * only keeps the books. */
+  final case class RowGate(tests: Seq[ColumnTest], emit: Column) {
+
+    /** The cells the verdicts read: each tested column and its family's
+      * family-scope markers. A projected scan keeps these beside its
+      * projection. */
+    def reads: Column = tests.map { t =>
+      col("family") === t.family && (col("qualifier") === t.qualifier ||
+        col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion))
+    }.reduce(_ || _)
+
+    /** `cells` plus the boolean columns the tracker reads, less the Puts
+      * that no test reads and nothing emits. */
+    private[Resolve] def flagged(cells: DataFrame, cellFilter: Option[Column]): DataFrame = {
+      val flags = (RowGate.Emit -> (cellFilter.fold(emit)(_ && emit) <=> true)) +:
+        tests.zipWithIndex.flatMap { case (t, i) =>
+          Seq(RowGate.sees(i) -> ((t.before && col("family") === t.family &&
+            col("qualifier") === t.qualifier) <=> true),
+            RowGate.matches(i) -> (t.matches <=> true))
+        }
+      cells.select(col("*") +: flags.map { case (n, c) => c.as(n) }: _*)
+        .filter(col("type") =!= CellType.Put || col(RowGate.Emit) ||
+          tests.indices.map(i => col(RowGate.sees(i))).reduce(_ || _))
+    }
+  }
+
+  object RowGate {
+    private[Resolve] val Prefix = "__gate_"
+    private[Resolve] val Emit = Prefix + "emit"
+    private[Resolve] def sees(i: Int): String = s"${Prefix}sees$i"
+    private[Resolve] def matches(i: Int): String = s"${Prefix}match$i"
   }
 
   /** Size-derived shuffle-partition count for the resolve exchange:
@@ -254,25 +324,44 @@ object Resolve {
   def maskTombstones(cells: DataFrame, visScope: Option[String] = None): DataFrame =
     resolvePass(cells, Pass(Int.MaxValue, None, 0, visScope))
 
-  /** The knobs the per-row pass applies after masking: the version gate
-    * and TTL retention under MIN_VERSIONS (a version past `retainFrom`
-    * survives only among the newest `minVersions`). */
+  /** The knobs the per-row pass applies after masking: the version gate,
+    * TTL retention under MIN_VERSIONS (a version past `retainFrom`
+    * survives only among the newest `minVersions`), the row gate's
+    * verdicts and per-family pagination. `raw` skips masking and the
+    * version gate and admits markers, so only pagination applies. */
   private final case class Pass(maxVersions: Int, retainFrom: Option[Long],
-      minVersions: Int, visScope: Option[String])
+      minVersions: Int, visScope: Option[String], verdicts: Seq[Verdict] = Nil,
+      cfOffset: Int = 0, cfLimit: Int = Int.MaxValue, raw: Boolean = false)
+
+  /** The flags of one [[ColumnTest]] the tracker needs. */
+  private final case class Verdict(filterIfMissing: Boolean, latestOnly: Boolean)
+
+  /** Per-family pagination of a raw scan (markers count as values, as
+    * every cell a raw StoreScanner returns does): the pass with masking
+    * and the version gate off. */
+  private[read] def pageRaw(cells: DataFrame, cfOffset: Int, cfLimit: Option[Int]): DataFrame =
+    resolvePass(cells, Pass(Int.MaxValue, None, 0, None, cfOffset = cfOffset,
+      cfLimit = cfLimit.getOrElse(Int.MaxValue), raw = true))
 
   /** The one resolve operator: group the cells by row and walk each row
     * in (family, family markers first, qualifier, ts DESC, markers
-    * first) order through a [[RowTracker]] — ScanQueryMatcher's single
-    * ordered pass. The grouping's ClusteredDistribution(row) is met by
-    * the cell store's row-hash layout with no exchange; any other input
-    * takes exactly one row exchange, sized by [[sizedShufflePartitions]]
-    * when the default count would spill. Returns the surviving Puts with
-    * `cells`' schema. */
+    * first, value DESC) order through a [[RowTracker]] —
+    * ScanQueryMatcher's single ordered pass. The last key makes the
+    * pass deterministic: of two Puts with one (column, ts), the version
+    * gate keeps the larger value, as the WAL sink's duplicate collapse
+    * and the SCVF verdict do. The grouping's ClusteredDistribution(row)
+    * is met by the cell store's row-hash layout with no exchange; any
+    * other input takes exactly one row exchange, sized by
+    * [[sizedShufflePartitions]] when the default count would spill.
+    * Returns the surviving cells with `cells`' schema. */
   private def resolvePass(cells: DataFrame, p: Pass): DataFrame = {
     val s = cells.schema
     val rowEnc = Encoders.row(s)
     val ix = Ix(s.fieldIndex("family"), s.fieldIndex("qualifier"), s.fieldIndex("ts"),
-      s.fieldIndex("type"), p.visScope.fold(-1)(s.fieldIndex))
+      s.fieldIndex("type"), p.visScope.fold(-1)(s.fieldIndex),
+      if (p.verdicts.isEmpty) -1 else s.fieldIndex(RowGate.Emit),
+      p.verdicts.indices.map(i => s.fieldIndex(RowGate.sees(i))).toArray,
+      p.verdicts.indices.map(i => s.fieldIndex(RowGate.matches(i))).toArray)
     // spill hedge: at a fixed spark.sql.shuffle.partitions the row
     // exchange's per-partition share grows with input (the r16 sf10 soak
     // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
@@ -282,14 +371,16 @@ object Resolve {
     in.groupBy(col("row")).as[String, Row](Encoders.STRING, rowEnc)
       .flatMapSortedGroups(col("family"),
         !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),
-        col("qualifier"), col("ts").desc, col("type") === CellType.Put)(
-        (row: String, rs: Iterator[Row]) => rs.filter(new RowTracker(ix, p, row != null).admit))(
+        col("qualifier"), col("ts").desc, col("type") === CellType.Put, col("value").desc)(
+        (row: String, rs: Iterator[Row]) => new RowTracker(ix, p, row != null).run(rs))(
         rowEnc)
       .toDF()
   }
 
-  /** Field positions the tracker reads; `vis` is -1 without visScope. */
-  private final case class Ix(family: Int, qualifier: Int, ts: Int, tpe: Int, vis: Int)
+  /** Field positions the tracker reads; `vis` and `emit` are -1 without
+    * visScope and a row gate, `sees`/`matches` hold one per verdict. */
+  private final case class Ix(family: Int, qualifier: Int, ts: Int, tpe: Int, vis: Int,
+      emit: Int, sees: Array[Int], matches: Array[Int])
 
   /** Streaming DeleteTracker + ColumnTracker for ONE row's cells in pass
     * order; `admit` is called once per cell and keeps exactly the Puts
@@ -300,10 +391,13 @@ object Resolve {
     *   - DeleteColumn         masks Puts of (family,qualifier) with ts <= marker
     *   - DeleteFamily         masks Puts of (family)           with ts <= marker
     *   - DeleteFamilyVersion  masks Puts of (family)           with ts == marker
-    * each only within its visibility class. Survivors then count
-    * against `maxVersions` per column, newest first. A null key never
-    * matches a marker (the relational form's equi-join semantics). */
-  private final class RowTracker(ix: Ix, p: Pass, maskable: Boolean) {
+    * each only within its visibility class. Every live Put feeds the row
+    * gate's verdicts; the ones it may emit then count against
+    * `maxVersions` per column, newest first, and against the page per
+    * family. A null key never matches a marker (the relational form's
+    * equi-join semantics), and a null row lacks every tested column (the
+    * relational SCVF's row join never matches it). */
+  private final class RowTracker(ix: Ix, p: Pass, keyed: Boolean) {
     private var started = false
     private var family: String = _
     private var qualifier: String = _
@@ -312,22 +406,37 @@ object Resolve {
     private val colDel = mutable.HashMap.empty[String, Long]
     private val verDel = mutable.HashSet.empty[(String, Long)]
     private var versions = 0
+    private var familyValues = 0L
+    private val seen = new Array[Boolean](p.verdicts.size)
+    private val matched = new Array[Boolean](p.verdicts.size)
 
-    def admit(r: Row): Boolean = {
+    /** The row's surviving cells: streamed through, or, under a row gate,
+      * held until the verdicts are in. */
+    def run(rs: Iterator[Row]): Iterator[Row] =
+      if (p.verdicts.isEmpty) rs.filter(admit)
+      else {
+        val kept = rs.filter(admit).toArray
+        if (passes) kept.iterator else Iterator.empty
+      }
+
+    private def admit(r: Row): Boolean = {
       val f = r.getString(ix.family)
       val q = r.getString(ix.qualifier)
       if (!started || f != family) {
-        started = true; family = f; famDel.clear(); famVerDel.clear(); newColumn(q)
+        started = true; family = f; famDel.clear(); famVerDel.clear(); familyValues = 0
+        newColumn(q)
       } else if (q != qualifier) newColumn(q)
+      if (p.raw) return page()
       val tsNull = r.isNullAt(ix.ts)
       val ts = if (tsNull) 0L else r.getLong(ix.ts)
       val vc = if (ix.vis < 0) "" else VisKernel.canonical(r.getString(ix.vis))
-      val marker = maskable && !tsNull && f != null
+      val marker = keyed && !tsNull && f != null
       r.getString(ix.tpe) match {
         case CellType.Put =>
           val masked = below(famDel, vc, ts, tsNull) || below(colDel, vc, ts, tsNull) ||
             (!tsNull && (famVerDel((vc, ts)) || verDel((vc, ts))))
-          !masked && gate(ts, tsNull)
+          if (!masked) observe(r)
+          !masked && (ix.emit < 0 || r.getBoolean(ix.emit)) && keepVersion(ts, tsNull) && page()
         case CellType.DeleteFamily if marker => raise(famDel, vc, ts); false
         case CellType.DeleteFamilyVersion if marker => famVerDel += ((vc, ts)); false
         case CellType.DeleteColumn if marker && q != null => raise(colDel, vc, ts); false
@@ -349,10 +458,33 @@ object Resolve {
         tsNull: Boolean): Boolean =
       m.get(vc).exists(d => tsNull || ts <= d)
 
-    private def gate(ts: Long, tsNull: Boolean): Boolean = {
+    private def keepVersion(ts: Long, tsNull: Boolean): Boolean = {
       versions += 1
       versions <= p.maxVersions && p.retainFrom.forall(cut =>
         (!tsNull && ts >= cut) || versions <= p.minVersions)
+    }
+
+    private def page(): Boolean = {
+      familyValues += 1
+      familyValues > p.cfOffset && familyValues - p.cfOffset <= p.cfLimit
+    }
+
+    // a tested column's Puts arrive newest first, so a latest-only test
+    // reads the first one it sees
+    private def observe(r: Row): Unit = {
+      var i = 0
+      while (i < seen.length) {
+        if (r.getBoolean(ix.sees(i))) {
+          if (!seen(i) || !p.verdicts(i).latestOnly)
+            matched(i) ||= r.getBoolean(ix.matches(i))
+          seen(i) = true
+        }
+        i += 1
+      }
+    }
+
+    private def passes: Boolean = p.verdicts.indices.forall { i =>
+      if (keyed && seen(i)) matched(i) else !p.verdicts(i).filterIfMissing
     }
   }
 }

@@ -249,39 +249,126 @@ class PlanShapeSpec extends SparkSpec {
         s"gone: ${(AllowedGlobalWindows -- offenders).toSeq.sorted}")
   }
 
-  test("get, scan and multiGet over the cell store plan one exchange: the final sort") {
+  // the adaptive plan's current plan: exchanges already inserted
+  private def physical(df: DataFrame): org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  // materialized first, as every reader of the store finds it: the
+  // cached plan's row-hash partitioning is known once it has run
+  private lazy val store = {
+    val cells = graft.model.Fixtures.cellsOrders(spark, sf0001)
+    cells.count()
+    cells
+  }
+
+  test("get plans no exchange, scan and multiGet one range sort over the cell store") {
     // the one-pass resolve groups by row, which the store's row-hash
-    // layout already satisfies: no mask broadcasts, no rank window, and
-    // the only shuffle left is the range sort of the cell order
+    // layout already satisfies: no mask broadcasts, no rank window. A
+    // Get's one row then sits in one partition and sorts locally; the
+    // only shuffle left in a scan is the range sort of the cell order
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.window.WindowExec
     import graft.read.{GScan, GTable}
     import spark.implicits._
-    // materialized first, as every reader of the store finds it: the
-    // cached plan's row-hash partitioning is known once it has run
-    val cells = graft.model.Fixtures.cellsOrders(spark, sf0001)
-    cells.count()
     val cases = Seq(
-      "get" -> GTable.get(cells, "0000000007"),
-      "scan" -> GTable.scan(cells, GScan().withRange("0000000001", "0000000100")),
-      "multiGet" -> GTable.multiGet(cells,
+      "get" -> GTable.get(store, "0000000007"),
+      "paged get" -> GTable.get(store, "0000000007", GScan(maxResultsPerCf = Some(2))),
+      "scan" -> GTable.scan(store, GScan().withRange("0000000001", "0000000100")),
+      "multiGet" -> GTable.multiGet(store,
         Seq("0000000007", "0000000123", "0000000456").toDF("row")))
     for ((name, df) <- cases) {
-      // the adaptive plan's current plan: exchanges already inserted
-      val phys: SparkPlan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
+      val phys = physical(df)
       assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty,
         s"$name: no broadcast:\n$phys")
       assert(phys.collect { case w: WindowExec => w }.isEmpty, s"$name: no window:\n$phys")
       val shuffles = phys.collect { case e: ShuffleExchangeExec => e }
-      assert(shuffles.size === 1 &&
+      if (name.endsWith("get")) assert(shuffles.isEmpty, s"$name: no exchange:\n$phys")
+      else assert(shuffles.size === 1 &&
         shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning],
         s"$name: exactly the final range sort:\n$phys")
     }
+  }
+
+  test("a Get over unclustered parquet plans exactly one row exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val root = java.nio.file.Files.createTempDirectory("get_plan")
+    try {
+      val dir = root.resolve("cells").toString
+      store.write.parquet(dir)
+      val phys = physical(graft.read.GTable.get(spark.read.parquet(dir), "0000000007"))
+      val shuffles = phys.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(shuffles.size === 1 && (shuffles.head match {
+        case h: HashPartitioning => h.expressions.map(_.sql) == Seq("row")
+        case _ => false
+      }), s"one hashpartitioning(row) exchange:\n$phys")
+    } finally Queries.deleteTree(root)
+  }
+
+  test("an SCVF filtered scan over the cell store decides its filter in the pass") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.MapGroupsExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.filter.ParseFilter
+    import graft.read.{GScan, GTable}
+    for (f <- Seq("SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')",
+        "SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F') AND " +
+          "ValueFilter(=, 'substring:URGENT')")) {
+      val phys = physical(GTable.scanFiltered(store,
+        GScan().withRange("0000000001", "0000000500"), ParseFilter.parse(f)))
+      assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"one pass:\n$phys")
+      assert(phys.collect { case w: WindowExec => w }.isEmpty, s"no window:\n$phys")
+      assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"no broadcast:\n$phys")
+      val shuffles = phys.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1 &&
+        shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning],
+        s"exactly the final range sort:\n$phys")
+    }
+  }
+
+  test("a Get over the cell store runs one job, an SCVF filtered scan at most three") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import graft.filter.ParseFilter
+    import graft.read.{GScan, GTable}
+    val Tag = "graft.test.op"
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Tag)))
+          .foreach(started.put(e.jobId, _))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val sc = spark.sparkContext
+    // jobs an action ran, once the listener has seen a later marker job
+    // end (the bus delivers one listener's events in order)
+    def jobs(op: String)(action: => Unit): Int = {
+      sc.setLocalProperty(Tag, op)
+      try action finally sc.setLocalProperty(Tag, "drain")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty(Tag, null)
+      val deadline = System.nanoTime() + 30000000000L
+      def drained = started.asScala.exists { case (id, t) => t == "drain" && ended.contains(id) }
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not drain")
+      val n = started.asScala.count(_._2 == op)
+      started.clear()
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      store
+      assert(jobs("get")(GTable.get(store, "0000000007").collect()) === 1)
+      val scvf = ParseFilter.parse("SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')")
+      val n = jobs("scvf")(GTable.scanFiltered(store,
+        GScan().withRange("0000000001", "0000000500"), scvf).collect())
+      assert(n >= 1 && n <= 3, s"$n jobs")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -160,15 +160,17 @@ class ResolvePropertySpec extends SparkSpec {
   /** A wider random cell set for the old ≡ new checks: six rows, two
     * visibility-tagged families, pass-through `seq`/`batch_id` columns,
     * markers at the same ts as Puts, family markers that sometimes carry
-    * a qualifier, and null values. Puts are unique per coordinate (a
-    * rank tie between two Puts is undefined in both forms). */
-  private def genWide(rnd: Random): DataFrame = {
+    * a qualifier, and null values. Puts are unique per coordinate unless
+    * `dupPuts`, which keeps Puts of one coordinate that differ in value
+    * (the pass and the reference both keep the larger value first).
+    * Half the cells are markers; `putWeight` above 4 makes fewer. */
+  private def genWide(rnd: Random, dupPuts: Boolean = false, putWeight: Int = 4): DataFrame = {
     val vis = Seq(null, "a", "a&b", "b&a", "b|a")
     val n = 20 + rnd.nextInt(60)
     val cells = (0 until n).map { i =>
       val r = s"r${rnd.nextInt(6)}"
       val f = fams(rnd.nextInt(fams.size))
-      val t = rnd.nextInt(8) match {
+      val t = rnd.nextInt(4 + putWeight) match {
         case 0 => CellType.Delete
         case 1 => CellType.DeleteColumn
         case 2 => CellType.DeleteFamily
@@ -182,7 +184,9 @@ class ResolvePropertySpec extends SparkSpec {
         s"b${rnd.nextInt(3)}")
     }
     val unique = cells.groupBy(c => (c._1, c._2, c._3, c._4, c._5 == CellType.Put))
-      .flatMap { case ((_, _, _, _, put), cs) => if (put) cs.take(1) else cs }.toSeq
+      .flatMap { case ((_, _, _, _, put), cs) =>
+        if (!put) cs else if (dupPuts) cs.distinctBy(_._6) else cs.take(1)
+      }.toSeq
     unique.toDF("row", "family", "qualifier", "ts", "type", "value", "vis", "seq", "batch_id")
   }
 
@@ -228,34 +232,169 @@ class ResolvePropertySpec extends SparkSpec {
     }
   }
 
+  /** Per-family pagination as a rank window over (row, family), in the
+    * pass's order: family markers first, qualifier, ts DESC, markers
+    * first, value DESC. */
+  private def pageRef(df: DataFrame, s: GScan): DataFrame =
+    if (s.maxResultsPerCf.isEmpty && s.rowOffsetPerCf == 0) df
+    else {
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("row"), col("family"))
+        .orderBy(col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion).desc,
+          col("qualifier").asc, col("ts").desc, (col("type") === CellType.Put).asc,
+          col("value").desc)
+      val lo = s.rowOffsetPerCf
+      df.withColumn("__cfpos", row_number().over(w))
+        .filter(col("__cfpos") > lo &&
+          s.maxResultsPerCf.fold(lit(true))(m => col("__cfpos") <= lo + m))
+        .drop("__cfpos")
+    }
+
+  /** The cells in the order `scan` returns them, as the cell order's
+    * keys: non-decreasing (row DESC when reversed). */
+  private def assertCellOrder(got: DataFrame, reversed: Boolean, clue: => String): Unit = {
+    val keys = got.select("row", "family", "qualifier", "ts").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    keys.sliding(2).foreach {
+      case Seq(a, b) =>
+        val byRow = if (reversed) b._1.compareTo(a._1) else a._1.compareTo(b._1)
+        val rest =
+          Ordering[(String, String, Long)].compare((a._2, a._3, -a._4), (b._2, b._3, -b._4))
+        assert(byRow < 0 || (byRow == 0 && rest <= 0), s"out of cell order: $a, $b\n$clue")
+      case _ =>
+    }
+  }
+
   test("filtered scans (mask, tree, gate) equal the relational form") {
+    import graft.filter._
     val rnd = new Random(9091)
-    // cell-level trees take the fused one-pass path; SCVF trees take
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+    // three rows and a quarter markers, so tested columns hold several
+    // live versions; values v0, v1, 7, 12 (a long comparator meets
+    // unparseable values) and nulls
+    def dense(df: DataFrame) = df
+      .withColumn("row", concat(lit("r"), (substring(col("row"), 2, 1).cast("int") % 3)
+        .cast("string")))
+      .withColumn("value", when(col("value") === "v2", "7").when(col("value") === "v3", "12")
+        .otherwise(col("value")))
+    def scvf(): GFilter = {
+      val (fam, q) = pick(("d", "a"), ("e", "b"))
+      val (op, c) = pick[(CompareOp, GComparator)]((CompareOp.Equal, BinaryComparator("v1")),
+        (CompareOp.NotEqual, BinaryComparator("v0")), (CompareOp.Greater, LongComparator(8)))
+      val (ifMissing, latestOnly) = (rnd.nextBoolean(), rnd.nextBoolean())
+      if (rnd.nextBoolean()) SingleColumnValueFilter(fam, q, op, c, ifMissing, latestOnly)
+      else SingleColumnValueExcludeFilter(fam, q, op, c, ifMissing, latestOnly)
+    }
+    def perCell(): GFilter = pick(ValueFilter(CompareOp.NotEqual, BinaryComparator("v0")),
+      QualifierFilter(CompareOp.NotEqual, BinaryComparator("b")),
+      ValueFilter(CompareOp.Equal, SubstringComparator("1")),
+      FamilyFilter(CompareOp.Equal, BinaryComparator("d")))
+    // SCVF trees take the row gate inside the pass; per-cell trees the
+    // fused one-pass path; OR lists with an SCVF and raw scans stay on
     // mask → filter tree → gate
-    val filters = Seq(
-      "ValueFilter(=, 'binary:v1')",
-      "SingleColumnValueFilter('d', 'a', =, 'binary:v2')",
-      "SingleColumnValueFilter('e', 'b', !=, 'binary:v0') AND ValueFilter(=, 'substring:1')",
-      "QualifierFilter(=, 'binary:b') OR ValueFilter(=, 'binary:v3')")
-    (1 to 24).foreach { i =>
-      val cells = genWide(rnd).drop("vis", "seq", "batch_id")
+    def tree(): GFilter = rnd.nextInt(9) match {
+      case 0 | 1 => scvf()
+      case 2 => FilterList.and(scvf(), perCell())
+      case 3 => FilterList.and(perCell(), scvf())
+      case 4 => FilterList.and(perCell(), scvf(), perCell())
+      case 5 => FilterList.and(perCell(), FilterList.and(scvf(), scvf()))
+      case 6 => FilterList.and(perCell(), perCell())
+      case 7 => FilterList.or(scvf(), perCell())
+      case _ => FilterList.and(scvf(), SkipFilter(ValueFilter(CompareOp.NotEqual,
+        BinaryComparator("v3"))))
+    }
+    var hiddenNewest = 0
+    var gated = 0
+    (1 to 64).foreach { i =>
+      val cells = dense(genWide(rnd, dupPuts = rnd.nextBoolean(), putWeight = 12)
+        .drop("vis", "seq", "batch_id"))
       def tr() = { val lo = 1L + rnd.nextInt(3); Resolve.TimeRange(lo, lo + 1 + rnd.nextInt(4)) }
+      val paged = rnd.nextInt(4) == 0
       val s = GScan(maxVersions = 1 + rnd.nextInt(3),
         timeRange = if (rnd.nextBoolean()) Some(tr()) else None,
         cfTimeRanges = if (rnd.nextBoolean()) Map("d" -> tr()) else Map.empty,
         ttlCutoff = if (rnd.nextBoolean()) Some(1L + rnd.nextInt(5)) else None,
         minVersions = rnd.nextInt(2), keepDeleted = rnd.nextBoolean(),
-        filter = if (rnd.nextBoolean()) Some(col("value") =!= "v2") else None)
-      val f = ParseFilter.parse(filters(i % filters.size))
-      val visible = Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff,
-          s.minVersions)
-        .foldLeft(ResolveReference.maskedView(cells, s.timeRange, s.cfTimeRanges,
-          s.keepDeleted))((df, p) => df.filter(p))
-      val want = ResolveReference.latest(FilterCompiler(visible, f), s.maxVersions,
-        s.timeRange, s.ttlCutoff, s.filter, s.cfTimeRanges, s.minVersions,
-        s.keepDeleted, premasked = true)
-      assertSame(GTable.scanFiltered(cells, s, f), want,
-        s"case $i scan=$s filter=$f\n${rowsOf(cells).mkString("\n")}")
+        filter = if (rnd.nextBoolean()) Some(col("value") =!= "7") else None,
+        reversed = rnd.nextInt(3) == 0, raw = rnd.nextInt(6) == 0,
+        families = if (rnd.nextInt(4) == 0) Seq(pick("d", "e")) else Nil,
+        maxResultsPerCf = if (paged) Some(1 + rnd.nextInt(3)) else None,
+        rowOffsetPerCf = if (paged) rnd.nextInt(2) else 0)
+      val f = tree()
+      if (!s.raw && FilterCompiler.cellPredicate(f).isEmpty && FilterCompiler.rowGate(f).isDefined)
+        gated += 1
+      val visible =
+        if (s.raw) Resolve.timeRangePred(s.timeRange, s.cfTimeRanges).fold(cells)(cells.filter)
+        else Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff, s.minVersions)
+          .foldLeft(ResolveReference.maskedView(cells, s.timeRange, s.cfTimeRanges,
+            s.keepDeleted))((df, p) => df.filter(p))
+      val tested = FilterCompiler(visible, f)
+      val projected =
+        if (s.families.isEmpty) tested else tested.filter(col("family").isin(s.families: _*))
+      val resolved =
+        if (s.raw) s.filter.fold(projected)(projected.filter)
+        else ResolveReference.latest(projected, s.maxVersions, s.timeRange, s.ttlCutoff,
+          s.filter, s.cfTimeRanges, s.minVersions, s.keepDeleted, premasked = true)
+      val got = GTable.scanFiltered(cells, s, f)
+      val clue = s"case $i scan=$s filter=$f\n${rowsOf(cells).mkString("\n")}"
+      assertSame(got, pageRef(resolved, s), clue)
+      assertCellOrder(got, s.reversed, clue)
+      // the newest raw Put of a tested column is tombstoned, or outside
+      // the time range or TTL, for some row
+      def newest(df: DataFrame) = df.filter(col("type") === CellType.Put &&
+          col("family") === "d" && col("qualifier") === "a")
+        .groupBy("row").agg(max(struct(col("ts"), col("value"))).as("n"))
+      if (!s.raw && newest(cells).join(newest(visible), Seq("row", "n"), "left_anti").count() > 0)
+        hiddenNewest += 1
     }
+    info(s"$gated cases took the row gate, $hiddenNewest hid a newest tested version")
+    assert(gated >= 30, s"only $gated cases took the row gate")
+    assert(hiddenNewest >= 20, s"only $hiddenNewest cases hid a newest tested version")
+  }
+
+  test("paged scans equal the per-family rank window over the resolved cells") {
+    val rnd = new Random(5150)
+    (1 to 24).foreach { i =>
+      val cells = genWide(rnd, dupPuts = rnd.nextBoolean()).drop("vis", "seq", "batch_id")
+      def tr() = { val lo = 1L + rnd.nextInt(3); Resolve.TimeRange(lo, lo + 1 + rnd.nextInt(4)) }
+      val s = GScan(maxVersions = 1 + rnd.nextInt(3),
+        timeRange = if (rnd.nextBoolean()) Some(tr()) else None,
+        ttlCutoff = if (rnd.nextBoolean()) Some(1L + rnd.nextInt(5)) else None,
+        minVersions = rnd.nextInt(2), raw = rnd.nextInt(4) == 0,
+        filter = if (rnd.nextBoolean()) Some(col("value") =!= "v2") else None,
+        maxResultsPerCf = if (rnd.nextInt(4) > 0) Some(1 + rnd.nextInt(3)) else None,
+        rowOffsetPerCf = rnd.nextInt(3))
+      val resolved =
+        if (s.raw)
+          (Resolve.timeRangePred(s.timeRange, s.cfTimeRanges).toSeq ++ s.filter)
+            .foldLeft(cells)((df, p) => df.filter(p))
+        else ResolveReference.latest(cells, s.maxVersions, s.timeRange, s.ttlCutoff,
+          s.filter, minVersions = s.minVersions)
+      val got = GTable.scan(cells, s)
+      val clue = s"case $i scan=$s\n${rowsOf(cells).mkString("\n")}"
+      assertSame(got, pageRef(resolved, s), clue)
+      assertCellOrder(got, s.reversed, clue)
+      // a paged Get is one row: same cells as the paged scan's share
+      if (i % 6 == 0)
+        assertSame(GTable.get(cells, "r1", s), pageRef(resolved, s).filter(col("row") === "r1"),
+          s"get $clue")
+    }
+  }
+
+  test("equal-ts Puts resolve to the larger value under any input partitioning") {
+    // each column holds Puts that tie on ts and differ in value; the two
+    // frames feed them in opposite orders and partitionings
+    val cells = for {
+      r <- 0 until 40; q <- Seq("a", "b"); v <- Seq("v1", "v3", "v2")
+    } yield GCell(s"r$r", "d", q, 5L + r % 2, CellType.Put, s"$v-$r")
+    val asc = cells.sortBy(_.value).toDF()
+    val desc = cells.sortBy(_.value).reverse.toDF().repartition(3)
+    val want = cells.groupBy(c => (c.row, c.qualifier)).values.map(_.maxBy(_.value))
+      .map(c => s"${c.row}|d|${c.qualifier}|${c.ts}|Put|${c.value}").toSeq.sorted
+    for ((name, df) <- Seq("asc" -> asc, "desc" -> desc)) {
+      assert(rowsOf(Resolve.latest(df, 1)) === want, name)
+      assert(rowsOf(GTable.scan(df, GScan())) === want, s"scan $name")
+    }
+    // two versions: both tied values, larger first in the cell order
+    assert(rowsOf(Resolve.latest(asc, 2)) === rowsOf(Resolve.latest(desc, 2)))
   }
 }

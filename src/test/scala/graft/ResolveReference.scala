@@ -15,7 +15,8 @@ import graft.read.Resolve.TimeRange
   * a `row_number` rank window as the version gate. Same signatures and
   * knob semantics as the engine's `latest`, `maskedView` and
   * `maskTombstones`; slower, but built from plain operators whose
-  * meaning is easy to check by eye.
+  * meaning is easy to check by eye. Puts tied on ts rank by value,
+  * larger first, as in the pass.
   */
 object ResolveReference {
 
@@ -38,7 +39,7 @@ object ResolveReference {
       ++ cellFilter).foldLeft(masked)((df, p) => df.filter(p))
     val w = Window
       .partitionBy(col("row"), col("family"), col("qualifier"))
-      .orderBy(col("ts").desc)
+      .orderBy(col("ts").desc, col("value").desc)
     val gated = ranged
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= maxVersions)

@@ -185,4 +185,37 @@ class ScanSpec extends SparkSpec {
     assert(out.filter(col("ts") > 3).count() === 0)
     assert(out.count() > 0)
   }
+
+  test("scanFiltered's SCVF reads the newest live version under both flags") {
+    import graft.filter._
+    import graft.model.{CellType, GCell}
+    import spark.implicits._
+    // r1: newest 'no', older 'yes'; r2: 'yes' deleted, live 'no';
+    // r3: no tested column; r4: 'yes' and 'no' tie on ts, larger first
+    val cells = Seq(
+      GCell("r1", "d", "a", 3, CellType.Put, "no"),
+      GCell("r1", "d", "a", 2, CellType.Put, "yes"),
+      GCell("r2", "d", "a", 3, CellType.Put, "yes"),
+      GCell("r2", "d", "a", 3, CellType.Delete, null),
+      GCell("r2", "d", "a", 2, CellType.Put, "no"),
+      GCell("r4", "d", "a", 5, CellType.Put, "no"),
+      GCell("r4", "d", "a", 5, CellType.Put, "yes")
+    ) ++ Seq("r1", "r2", "r3", "r4").map(r => GCell(r, "d", "b", 1, CellType.Put, "x"))
+    val df = cells.toDF()
+    val want = Map(
+      (false, true) -> Set("r3", "r4"), (false, false) -> Set("r1", "r3", "r4"),
+      (true, true) -> Set("r4"), (true, false) -> Set("r1", "r4"))
+    for (((ifMissing, latestOnly), rows) <- want; exclude <- Seq(false, true)) {
+      val f =
+        if (exclude) SingleColumnValueExcludeFilter("d", "a", CompareOp.Equal,
+          BinaryComparator("yes"), ifMissing, latestOnly)
+        else SingleColumnValueFilter("d", "a", CompareOp.Equal,
+          BinaryComparator("yes"), ifMissing, latestOnly)
+      val out = GTable.scanFiltered(df, GScan(), f)
+        .select("row", "qualifier").collect().map(r => (r.getString(0), r.getString(1))).toSet
+      val clue = s"ifMissing=$ifMissing latestOnly=$latestOnly exclude=$exclude"
+      assert(out.map(_._1) === rows, clue)
+      assert(out.exists(_._2 == "a") === !exclude, clue)
+    }
+  }
 }
