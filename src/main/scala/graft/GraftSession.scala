@@ -26,6 +26,11 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the audited global windows (PlanShapeSpec pins the set) each log
+    // "No Partition Defined" on every run, which floods the bench's
+    // stdout tail; only that logger is raised, the root stays at WARN
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
     s
   }
 }

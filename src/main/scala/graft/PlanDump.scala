@@ -3,7 +3,7 @@ package graft
 /** Diagnostic: print the formatted physical plan of selected declared
   * queries (args = query names; default = the scale-sensitive set).
   * Used to audit plan shapes — no BroadcastNestedLoopJoin in the
-  * near-dup paths, digest-only sync/verify, single-aggregate SCVF.
+  * near-dup paths, digest-only sync/verify, one-pass SCVF.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -1,20 +1,23 @@
 package graft.filter
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.read.Resolve
+import graft.read.{Resolve, RowProgram}, RowProgram._
 
 /** Compiles the [[GFilter]] AST against a canonical CellSet DataFrame.
   *
   * Cell-level filters become one fused `Column` predicate (→ Catalyst
   * pushdown, whole-stage codegen — the analogue of the reference's
   * server-side `filterCell` fast path plus its seek-hint skipping,
-  * SURVEY §4 O3). Row-level filters become semi/anti-join or window
-  * rewrites, chosen so the build side is the small one (broadcastable).
-  * A scan's SCVF trees skip those rewrites: [[rowGate]] hands them to
-  * the resolve pass, which decides the verdict at row end.
+  * SURVEY §4 O3). Every other tree without a PageFilter or
+  * WhileMatchFilter becomes a [[program]] that the resolve pass runs on
+  * each row's cells, the reference's per-row Filter visitor: no join,
+  * window or exchange is planned for it. Page and WhileMatch read other
+  * rows, so they, and the lists holding them, stay a small relational
+  * step over the outputs of such passes; so does a list in which a
+  * filter reads the values a KeyOnlyFilter rewrote, since a program
+  * rewrites values only at its end.
   */
 object FilterCompiler {
 
@@ -107,126 +110,143 @@ object FilterCompiler {
     case other                      => other
   }
 
-  /** Apply a filter to a CellSet DataFrame. */
-  def apply(cells: DataFrame, f: GFilter): DataFrame = cellPredicate(f) match {
-    case Some(p) => cells.filter(p)
-    case None    => rewrite(cells, f)
+  /** Apply a filter to a CellSet DataFrame: every cell, markers too, is
+    * one the filter sees. */
+  def apply(cells: DataFrame, f: GFilter): DataFrame = (cellPredicate(f), f) match {
+    case (Some(p), _) => cells.filter(p)
+    // a lone transform needs no row: one projection
+    case (None, KeyOnlyFilter(lenAsVal)) => cells.withColumn("value", keyOnly(lenAsVal, col("value")))
+    case (None, _) if rowLocal(f) => Resolve.rawPass(cells, Some(program(f)))
+    case _ => relational(cells, f)
   }
 
-  /** Rows with at least one admitted cell — the row-membership view of
-    * [[apply]] (what a CAS guard needs). OR-lists union row sets
-    * directly instead of materializing + deduping admitted cells, and
-    * the SCVF pass-case reads its verdict aggregate without the
-    * cells-side semi-join at all. */
-  def admittedRows(cells: DataFrame, f: GFilter): DataFrame = f match {
-    // OR of column-value guards: ONE verdict-matrix pass instead of a
-    // union of per-filter subplans. All tested columns rank in one
-    // window (per-column latest), then one grouped aggregate computes
-    // every child's verdict as an int column — a single exchange on
-    // row-hash, where the union form ran a sort+aggregate+exchange
-    // PER child and then a distinct over the union.
-    case FilterList(FilterList.MustPassOne, fs)
-        if fs.size > 1 && fs.forall {
-          case SingleColumnValueFilter(_, _, _, _, true, _) => true
-          case _ => false
-        } =>
-      val svs = fs.collect { case s: SingleColumnValueFilter => s }
-      val colCells = cells.filter(
-        svs.map(s => col("family") === s.family && col("qualifier") === s.qualifier)
-          .reduce(_ || _))
-      // per-column newest version (same (ts, value) ordering as the
-      // single-SCVF verdict); non-latest-only children ignore the rank
-      val w = Window.partitionBy(col("row"), col("family"), col("qualifier"))
-        .orderBy(col("ts").desc, col("value").desc)
-      val ranked = colCells.withColumn("__rn", row_number().over(w))
-      val verdicts = svs.zipWithIndex.map { case (s, i) =>
-        val colMatch = col("family") === s.family && col("qualifier") === s.qualifier
-        val scope = if (s.latestVersionOnly) colMatch && col("__rn") === 1 else colMatch
-        max(when(scope && (s.cmp.test(col("value"), s.op) <=> lit(true)), 1)
-          .otherwise(0)).as(s"__v$i")
+  // LEN_AS_VAL is the value's BYTE length (KeyOnlyFilter.java:53 stores
+  // Bytes.toBytes(value.length) of the serialized value), so
+  // octet_length, not character length
+  private def keyOnly(lenAsVal: Boolean, value: Column): Column =
+    if (lenAsVal) octet_length(value).cast("string") else lit(null).cast("string")
+
+  /** Rows with at least one admitted LIVE cell in `timeRange`: the
+    * check read a CAS guard needs, one masking pass emitting row keys
+    * for a row-local tree, else the tree over the masked view. */
+  def admittedRows(cells: DataFrame, f: GFilter,
+      timeRange: Option[Resolve.TimeRange] = None): DataFrame =
+    if (rowLocal(f)) Resolve.rowVerdicts(cells, program(f), raw = false, admitted = true, timeRange)
+    else {
+      val live = Resolve.maskedView(cells, None, Map.empty, keepDeleted = false)
+      apply(Resolve.timeRangePred(timeRange, Map.empty).fold(live)(live.filter), f).select("row").distinct()
+    }
+
+  /** True for a tree that compiles to a [[program]]: it holds no
+    * PageFilter or WhileMatchFilter, the two filters that read other
+    * rows, and no KeyOnlyFilter whose values a later filter reads. */
+  def rowLocal(f: GFilter): Boolean = staged(f).isDefined
+
+  /** True for a tree whose KeyOnlyFilters rewrite its output's values. */
+  def transforms(f: GFilter): Boolean = staged(f).exists(_._2.nonEmpty)
+
+  /** A [[rowLocal]] tree as its gate (None: every cell) and then the
+    * KeyOnly transforms of its output; None for any other tree. An OR
+    * list with a KeyOnly child keeps every cell (FilterList.transformCell
+    * delegates to each child); an AND list transforms only at its end. */
+  private def staged(f: GFilter): Option[(Option[GFilter], Seq[KeyOnlyFilter])] = f match {
+    case _: PageFilter | _: WhileMatchFilter => None
+    case k: KeyOnlyFilter => Some((None, Seq(k)))
+    case FilterList(FilterList.MustPassOne, fs) => fs.collect { case k: KeyOnlyFilter => k } match {
+      case Nil => Option.when(fs.forall(g => staged(g).exists(_._2.isEmpty)))((Some(f), Nil))
+      case ks => Some((None, ks))
+    }
+    case FilterList(FilterList.MustPassAll, fs) =>
+      fs.foldLeft(Option((Seq.empty[GFilter], Seq.empty[KeyOnlyFilter]))) { (acc, g) =>
+        for ((gates, ts) <- acc; (gate, more) <- staged(g) if ts.isEmpty || gate.isEmpty)
+          yield (gates ++ gate, ts ++ more)
+      }.map { case (gates, ts) => (Option.when(gates.nonEmpty)(FilterList.and(gates: _*)), ts) }
+    case _ => Some((Some(f), Nil))
+  }
+
+  /** The per-row program of a [[rowLocal]] tree, `last` (a per-cell
+    * predicate: a scan's projection and filter) applied to its output
+    * ahead of the tree's KeyOnly transforms. Every cell-level leaf
+    * becomes one boolean column. */
+  def program(f: GFilter, last: Option[Column] = None): RowProgram = {
+    val (gate, ts) = staged(f).getOrElse(throw new IllegalArgumentException(s"not a row-local filter: $f"))
+    val b = new RowProgram.Builder
+    def tested(fam: String, q: String) = col("family") === fam && col("qualifier") === q
+    // a node, and the cells that can change its output (`reads`) and
+    // that can be in it (`keeps`)
+    final case class Compiled(node: Node, reads: Column, keeps: Column)
+    def whole(node: Node) = Compiled(node, lit(true), lit(true))
+    def test(p: Column) = { val t = b.flag(p); Compiled(Test(t), lit(false), b.ref(t)) }
+    def columnValue(fam: String, q: String, op: CompareOp, c: GComparator, exclude: Boolean,
+        ifMissing: Boolean, latestOnly: Boolean) = {
+      val n = b.columnValue(tested(fam, q), c.test(col("value"), op), exclude, ifMissing, latestOnly)
+      Compiled(n, b.ref(n.sees), n.keep.fold(lit(true))(b.ref))
+    }
+    def compile(g: GFilter): Compiled = cellPredicate(g) match {
+      case Some(p) => test(p)
+      case None => g match {
+        case SingleColumnValueFilter(fam, q, op, c, ifMissing, latestOnly) =>
+          columnValue(fam, q, op, c, exclude = false, ifMissing, latestOnly)
+        case SingleColumnValueExcludeFilter(fam, q, op, c, ifMissing, latestOnly) =>
+          columnValue(fam, q, op, c, exclude = true, ifMissing, latestOnly)
+        case DependentColumnFilter(fam, q, dropRef, valueCmp) =>
+          val ref = b.flag(valueCmp.foldLeft(tested(fam, q)) { case (t, (op, c)) =>
+            t && c.test(col("value"), op) })
+          val keep = Option.when(dropRef)(b.flag(!tested(fam, q)))
+          Compiled(Dependent(ref, keep), b.ref(ref), keep.fold(lit(true))(b.ref))
+        case ColumnCountGetFilter(n) => whole(Columns(0, n))
+        case ColumnPaginationFilter(limit, offset) => whole(Columns(offset, limit))
+        case FirstKeyOnlyFilter() => whole(FirstKey)
+        case SkipFilter(inner) =>
+          val pass = b.flag(cellPredicate(inner).getOrElse(
+            throw new IllegalArgumentException("SkipFilter requires a cell-level inner filter")))
+          Compiled(Skip(pass), lit(true), b.ref(pass))
+        case FilterList(FilterList.MustPassAll, fs) =>
+          val steps = fs.scanLeft(Compiled(And(Nil), lit(false), lit(true))) { (acc, g) =>
+            val c = compile(g)
+            // a later step reads only what the earlier ones keep
+            Compiled(c.node, acc.reads || (acc.keeps && c.reads), acc.keeps && c.keeps)
+          }
+          steps.last.copy(node = And(steps.tail.map(_.node)))
+        case FilterList(FilterList.MustPassOne, fs) =>
+          val gs = fs.map(compile)
+          Compiled(Or(gs.map(_.node)), gs.map(_.reads).foldLeft(lit(false))(_ || _),
+            gs.map(_.keeps).reduce(_ || _))
+        case other =>
+          throw new IllegalArgumentException(s"not a row-local filter: $other")
       }
-      ranked.groupBy("row").agg(verdicts.head, verdicts.tail: _*)
-        .filter(svs.indices.map(i => col(s"__v$i") === 1).reduce(_ || _))
-        .select("row")
-    case FilterList(FilterList.MustPassOne, fs) if fs.nonEmpty =>
-      fs.map(admittedRows(cells, _)).reduce(_ unionByName _).distinct()
-    case SingleColumnValueFilter(fam, q, op, c, true, latestOnly) =>
-      scvfVerdict(cells, fam, q, op, c, latestOnly)
-        .filter(col("__m") <=> lit(true)).select("row")
-    case _ => apply(cells, f).select("row").distinct()
+    }
+    val tree = gate.fold(Compiled(And(Nil), lit(false), lit(true)))(compile)
+    val all = last.fold(tree) { p =>
+      val t = test(p)
+      Compiled(And(Seq(tree.node, t.node)), tree.reads, tree.keeps && t.keeps)
+    }
+    b.build(all.node, all.reads || all.keeps,
+      Option.when(ts.nonEmpty)(ts.foldLeft(col("value"))((v, k) => keyOnly(k.lenAsVal, v))))
   }
 
-  private val colOrder = Seq(col("family").asc, col("qualifier").asc, col("ts").desc)
-
-  private def rewrite(cells: DataFrame, f: GFilter): DataFrame = f match {
-
-    case SingleColumnValueFilter(fam, q, op, c, ifMissing, latestOnly) =>
-      scvf(cells, fam, q, op, c, ifMissing, latestOnly)
-
-    case SingleColumnValueExcludeFilter(fam, q, op, c, ifMissing, latestOnly) =>
-      scvf(cells, fam, q, op, c, ifMissing, latestOnly)
-        .filter(!(col("family") === fam && col("qualifier") === q))
-
-    case DependentColumnFilter(fam, q, drop, valueCmp) =>
-      // intra-row ts-join against the reference column's ts set
-      // (DependentColumnFilter.java:46) — the reference's only join.
-      val ref0 = cells.filter(col("family") === fam && col("qualifier") === q)
-      val ref = valueCmp.fold(ref0) { case (op, c) => ref0.filter(c.test(col("value"), op)) }
-      // no distinct on the reference side: a semi-join ignores duplicate
-      // build rows anyway, and the distinct's (row, ts) aggregate
-      // exchange would break the cell store's hash(row) co-partitioning
-      // (subset co-partitioning keeps the semi-join exchange-free).
-      val joined = cells.join(ref.select("row", "ts"), Seq("row", "ts"), "left_semi")
-      if (drop) joined.filter(!(col("family") === fam && col("qualifier") === q)) else joined
-
+  /** The relational step of a tree holding a PageFilter or
+    * WhileMatchFilter; its row-local subtrees run through [[apply]]. */
+  private def relational(cells: DataFrame, f: GFilter): DataFrame = f match {
     case PageFilter(n) =>
       // exact global limit: first n rows in row order, all their cells
       val firstRows = cells.select("row").distinct().orderBy("row").limit(n)
       cells.join(broadcast(firstRows), Seq("row"), "left_semi")
 
-    case ColumnCountGetFilter(n) =>
-      withColRank(cells).filter(col("__crank") <= n).drop("__crank")
-
-    case ColumnPaginationFilter(limit, offset) =>
-      withColRank(cells)
-        .filter(col("__crank") > offset && col("__crank") <= offset + limit)
-        .drop("__crank")
-
-    case SkipFilter(inner) =>
-      val p = cellPredicate(inner).getOrElse(
-        throw new IllegalArgumentException("SkipFilter requires a cell-level inner filter"))
-      // any failing cell vetoes the whole row (SkipFilter.java:49);
-      // a null predicate (e.g. unparseable numeric value) is a reject,
-      // so compare null-safely against true
-      val vetoed = cells.filter(!(p <=> lit(true))).select("row").distinct()
-      cells.join(vetoed, Seq("row"), "left_anti")
-
     case WhileMatchFilter(inner, reversed) =>
-      // keep the prefix of the stream before the first rejected row
+      // the strict prefix before the first rejected row
       // (WhileMatchFilter.java:39): scalar min(row) (max for reversed
-      // scans) over rejects, then the strict prefix before it. One tiny
-      // agg (broadcast) + one filter. Declared capability boundary
-      // (SURVEY §7 watch list): the rewrite is ROW-granular — the
-      // reference's cell-granular mid-row stop is not reproduced.
-      val rejects = (cellPredicate(inner), inner) match {
-        case (Some(p), _) => cells.filter(!(p <=> lit(true))).select("row")
-        case (None, SingleColumnValueFilter(fam, q, op, c, ifMissing, latestOnly)) =>
-          // fast path: rejected rows read straight off the shared
-          // verdict aggregate (one guard-column aggregate, no
-          // admitted-cells materialization + anti-join)
-          val v = scvfVerdict(cells, fam, q, op, c, latestOnly)
-          val falseRows = v.filter(!(col("__m") <=> lit(true))).select("row")
-          if (!ifMissing) falseRows
-          else falseRows.unionByName(
-            cells.select("row").distinct()
-              .join(v.select("row"), Seq("row"), "left_anti"))
-        case (None, _) =>
-          // ROW-level inner: a row is rejected iff the inner filter
-          // admits none of its cells — the same row granularity as the
-          // cell-predicate branch
+      // scans) over rejects, one tiny agg (broadcast) + one filter. A
+      // cell-level inner rejects a row with any failing cell, any other
+      // a row it admits none of the cells of. Declared boundary (SURVEY
+      // §7 watch list): the reference's mid-row stop is not reproduced.
+      val rejects = cellPredicate(inner) match {
+        case Some(p) => cells.filter(!(p <=> lit(true))).select("row")
+        case None if rowLocal(inner) =>
+          Resolve.rowVerdicts(cells, program(inner), raw = true, admitted = false)
+        case None =>
           cells.select("row")
-            .join(apply(cells, inner).select("row").distinct(),
-              Seq("row"), "left_anti")
+            .join(apply(cells, inner).select("row").distinct(), Seq("row"), "left_anti")
       }
       val firstReject = rejects
         .agg((if (reversed) max(col("row")) else min(col("row"))).as("__stop"))
@@ -235,133 +255,21 @@ object FilterCompiler {
           (if (reversed) col("row") > col("__stop") else col("row") < col("__stop")))
         .drop("__stop")
 
-    case KeyOnlyFilter(lenAsVal) =>
-      // LEN_AS_VAL is the value's BYTE length (KeyOnlyFilter.java:53
-      // stores Bytes.toBytes(value.length) of the serialized value),
-      // so octet_length, not character length
-      if (lenAsVal) cells.withColumn("value", octet_length(col("value")).cast("string"))
-      else cells.withColumn("value", lit(null).cast("string"))
-
-    case FirstKeyOnlyFilter() =>
-      val w = Window.partitionBy(col("row")).orderBy(colOrder: _*)
-      cells.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-
     case FilterList(FilterList.MustPassAll, fs) =>
-      // AND of mixed cell/row-level: sequential application (intersection)
+      // AND: sequential application (intersection)
       fs.foldLeft(cells)((df, g) => apply(df, g))
 
     case FilterList(FilterList.MustPassOne, fs) =>
-      // OR of mixed cell/row-level children (FilterListWithOR.java:34):
-      // a cell passes if ANY child admits it. Transform-only children
-      // (KeyOnly — filterCell always INCLUDEs, transformCell rewrites)
-      // follow the reference exactly: they admit EVERY cell, and their
-      // transform applies to the whole list's output (FilterList
-      // .transformCell delegates to every child), so the union is
-      // computed over untransformed gates first — no duplicate
-      // coordinates with diverging values can arise — and transforms
-      // run once at the end.
-      val (transformers, gates) = fs.partition {
-        case KeyOnlyFilter(_) => true
-        case _                => false
-      }
+      // KeyOnly children keep every cell and transform the whole output
+      // (FilterList.transformCell delegates to every child); otherwise
+      // the set union, as in the program's Or node
+      val (transforms, gates) = fs.partition(_.isInstanceOf[KeyOnlyFilter])
       val admitted =
-        if (transformers.nonEmpty || gates.isEmpty) cells
-        else {
-          val (cellKids, rowKids) = gates.partition(cellPredicate(_).isDefined)
-          val cellPart =
-            if (cellKids.isEmpty) Nil
-            else Seq(cells.filter(cellKids.flatMap(cellPredicate).reduce(_ || _)))
-          val parts = cellPart ++ rowKids.map(rewrite(cells, _))
-          // cell sets are coordinate-unique and untransformed, so the
-          // dedup only collapses the same cell admitted by >1 child
-          parts.reduce(_ unionByName _).dropDuplicates(cells.columns.toIndexedSeq)
-        }
-      transformers.foldLeft(admitted)((df, t) => rewrite(df, t))
+        if (transforms.nonEmpty || gates.isEmpty) cells
+        else gates.map(apply(cells, _)).reduce(_ unionByName _).dropDuplicates(cells.columns.toIndexedSeq)
+      transforms.foldLeft(admitted)((df, t) => apply(df, t))
 
     case other =>
       throw new IllegalArgumentException(s"unsupported filter $other")
-  }
-
-  /** The per-row verdict aggregate shared by [[scvf]] and
-    * [[admittedRows]]: (row, __m) for every row HAVING the column.
-    *
-    * Row-level semantics of SCVF (SingleColumnValueFilter.java:65-74):
-    * for `latestVersionOnly` the tested value is the newest version's
-    * (max by ts; ties break on value, deterministically); otherwise any
-    * version matching passes. A null predicate result (unparseable
-    * value under a numeric comparator) is a no-match, so the verdict is
-    * compared null-safely. [[rowGate]] decides the same verdict inside
-    * the resolve pass.
-    */
-  private def scvfVerdict(cells: DataFrame, fam: String, q: String,
-      op: CompareOp, c: GComparator, latestVersionOnly: Boolean): DataFrame = {
-    val colCells = cells.filter(col("family") === fam && col("qualifier") === q)
-    if (latestVersionOnly) {
-      // the check reads the column's newest version (ts ties broken by
-      // value, the exact ordering of max(struct(ts, value))) — realized
-      // as a rank window, NOT a struct max: a struct-with-string agg
-      // buffer is not hash-aggregable, so the max form planned
-      // SortAggregate pairs (two full sorts per verdict) everywhere a
-      // latest-only SCVF appeared (q42's guard paid it four times)
-      val w = Window.partitionBy(col("row"))
-        .orderBy(col("ts").desc, col("value").desc)
-      colCells.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("row"), c.test(col("value"), op).as("__m"))
-    } else
-      colCells.groupBy("row")
-        .agg((max(when(c.test(col("value"), op), 1).otherwise(0)) === 1).as("__m"))
-  }
-
-  /** The SCVF verdicts of a scan's filter tree as a row gate for the
-    * resolve pass: a SingleColumnValue(Exclude)Filter alone, or an AND
-    * list (nested ANDs flattened) of such filters and per-cell filters.
-    * None for any other tree. List order is kept, as the sequential
-    * AND rewrite keeps it: a per-cell filter ahead of an SCVF limits
-    * what the SCVF reads, one after it only what is emitted, and an
-    * Exclude filter's column is gone for everything after it. The
-    * verdicts equal [[scvf]]'s over the same masked view; no join,
-    * window or exchange is planned for them. */
-  def rowGate(f: GFilter): Option[Resolve.RowGate] = {
-    def steps(g: GFilter): Seq[GFilter] = g match {
-      case FilterList(FilterList.MustPassAll, fs) => fs.flatMap(steps)
-      case other => Seq(other)
-    }
-    def tested(fam: String, q: String) = col("family") === fam && col("qualifier") === q
-    val start = Option((lit(true), Vector.empty[Resolve.ColumnTest]))
-    steps(f).foldLeft(start) {
-      case (Some((admitted, tests)), step) => step match {
-        case SingleColumnValueFilter(fam, q, op, c, ifMissing, latestOnly) =>
-          Some((admitted,
-            tests :+ Resolve.ColumnTest(fam, q, admitted, c.test(col("value"), op),
-              ifMissing, latestOnly)))
-        case SingleColumnValueExcludeFilter(fam, q, op, c, ifMissing, latestOnly) =>
-          Some((admitted && !tested(fam, q),
-            tests :+ Resolve.ColumnTest(fam, q, admitted, c.test(col("value"), op),
-              ifMissing, latestOnly)))
-        case other => cellPredicate(other).map(p => (admitted && p, tests))
-      }
-      case (None, _) => None
-    }.collect { case (emit, tests) if tests.nonEmpty => Resolve.RowGate(tests, emit) }
-  }
-
-  private def scvf(cells: DataFrame, fam: String, q: String, op: CompareOp,
-      c: GComparator, filterIfMissing: Boolean, latestVersionOnly: Boolean): DataFrame = {
-    val verdict = scvfVerdict(cells, fam, q, op, c, latestVersionOnly)
-    if (filterIfMissing)
-      cells.join(verdict.filter(col("__m") <=> lit(true)).select("row"),
-        Seq("row"), "left_semi")
-    else
-      // rows lacking the column pass; rows having it must match
-      cells.join(verdict.filter(!(col("__m") <=> lit(true))).select("row"),
-        Seq("row"), "left_anti")
-  }
-
-  /** Per-row column rank by (family,qualifier); versions of the same
-    * column share a rank (dense_rank over the column coordinates). */
-  private def withColRank(cells: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("row")).orderBy(col("family").asc, col("qualifier").asc)
-    cells.withColumn("__crank", dense_rank().over(w))
   }
 }

@@ -7,9 +7,11 @@ package graft.filter
   *  - **cell-level** filters are pure predicates over one cell's
   *    (row,family,qualifier,ts,value) → compile to a Catalyst `Column`
   *    (whole-stage-codegen'd, pushdown-eligible);
-  *  - **row-level / stateful** filters (SCVF, Skip, WhileMatch, Page,
-  *    ColumnPagination, DependentColumn) veto whole rows or depend on
-  *    scan order → compile to join/window rewrites over the CellSet.
+  *  - **row-level / stateful** filters (SCVF, Skip, DependentColumn,
+  *    ColumnCount/Pagination, FirstKeyOnly, the KeyOnly transform) read
+  *    the whole row → compile to a per-row program the resolve pass
+  *    runs on each row's cells; Page and WhileMatch depend on scan
+  *    order across rows → a small relational step over pass outputs.
   *
   * [[FilterCompiler]] performs both compilations.
   */

@@ -1123,6 +1123,9 @@ object ReplayQueries {
       // census, both plan decisions, the giant's median-cell split
       // row (one-cell blocks make the mid key exact), and the
       // daughter/merged cell counts; read-back identity closes it.
+      // The rows are every ninth user plus the first twelve, so the
+      // chain holds at every fixture scale (sf0.001 has 15 users: every
+      // ninth alone left two rows and an empty region 0, and no plan).
       "q101_region_admin",
       (s, dir) => {
         import graft.admin.GAdmin
@@ -1131,7 +1134,7 @@ object ReplayQueries {
         import org.apache.spark.sql.expressions.Window
         val puts = Fixtures.cellsEventsV(s, dir)
           .filter(col("type") === "Put" && col("value").isNotNull &&
-            col("row").cast("long") % 9 === 1)
+            (col("row").cast("long") % 9 === 1 || col("row").cast("long") < 12))
         val rows = puts.select("row").distinct()
         val n = rows.count()
         val idxed = rows.withColumn("idx",
@@ -1155,8 +1158,7 @@ object ReplayQueries {
         require(splits.size == 1 && merges.size == 1,
           s"fixture drift: $plans")
         val splitRow = GAdmin.splitRegionStore(s,
-          s"$base/r${splits.head.region}", s"$base/bot", s"$base/top",
-          prefixLength = 9)
+          s"$base/r${splits.head.region}", s"$base/bot", s"$base/top")
           .getOrElse(sys.error("degenerate split point"))
         GAdmin.mergeRegionStores(s,
           merges.head.regions.map(i => s"$base/r$i"), s"$base/merged")
@@ -1184,7 +1186,7 @@ object ReplayQueries {
         Seq((puts.count(), splits.head.region.toLong, splitRow,
           merges.head.regions.size.toLong, mergedCells,
           bottomCells, topCells, mismatches))
-          .toDF("n_cells", "split_region", "split_prefix",
+          .toDF("n_cells", "split_region", "split_row",
             "merge_members", "merged_cells", "bottom_cells",
             "top_cells", "mismatches")
       },
@@ -1192,7 +1194,7 @@ object ReplayQueries {
         """__u_puts AS (
           |  SELECT * FROM cells_events_v
           |  WHERE type = 'Put' AND value IS NOT NULL
-          |    AND CAST(row AS BIGINT) % 9 = 1
+          |    AND (CAST(row AS BIGINT) % 9 = 1 OR CAST(row AS BIGINT) < 12)
           |), __u_rows AS (
           |  SELECT row, ROW_NUMBER() OVER (ORDER BY row) AS idx,
           |         COUNT(*) OVER () AS n
@@ -1221,14 +1223,14 @@ object ReplayQueries {
           |  FROM __u_puts p JOIN __u_assign a USING (row)
           |  WHERE a.region = 2
           |), __u_mid AS (
-          |  SELECT substr(row, 1, 9) AS split_prefix
+          |  SELECT row AS split_row
           |  FROM __u_g WHERE rn = (n2 - 1) // 2 + 1
           |)""".stripMargin)(
         """SELECT
           |  (SELECT CAST(COUNT(*) AS BIGINT) FROM __u_puts) AS n_cells,
           |  (SELECT CAST(MIN(i) AS BIGINT) FROM __u_sz, __u_avg
           |   WHERE sz > 2 * avg_d) AS split_region,
-          |  m.split_prefix,
+          |  m.split_row,
           |  (SELECT CAST(CASE WHEN s0.sz + s1.sz <= a.avg_l
           |                    THEN 2 ELSE 0 END AS BIGINT)
           |   FROM __u_sz s0, __u_sz s1, __u_avg a
@@ -1237,10 +1239,10 @@ object ReplayQueries {
           |   JOIN __u_assign a USING (row) WHERE a.region < 2) AS merged_cells,
           |  (SELECT CAST(COUNT(*) AS BIGINT) FROM __u_puts p
           |   JOIN __u_assign a USING (row)
-          |   WHERE a.region = 2 AND p.row < m.split_prefix) AS bottom_cells,
+          |   WHERE a.region = 2 AND p.row < m.split_row) AS bottom_cells,
           |  (SELECT CAST(COUNT(*) AS BIGINT) FROM __u_puts p
           |   JOIN __u_assign a USING (row)
-          |   WHERE a.region = 2 AND p.row >= m.split_prefix) AS top_cells,
+          |   WHERE a.region = 2 AND p.row >= m.split_row) AS top_cells,
           |  CAST(0 AS BIGINT) AS mismatches
           |FROM __u_mid m""".stripMargin))
     ),

@@ -3,6 +3,7 @@ package graft.read
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.filter.{FilterCompiler, GFilter}
 import graft.read.Resolve.TimeRange
 
 /** Declarative Scan specification — the graft twin of the reference's
@@ -63,9 +64,9 @@ object GTable {
     */
   def scan(cells: DataFrame, s: GScan): DataFrame = scan(cells, s, None)
 
-  /** [[scan]] with an optional row gate decided inside the resolve pass
-    * (non-raw scans only). */
-  private def scan(cells: DataFrame, s: GScan, gate: Option[Resolve.RowGate]): DataFrame = {
+  /** [[scan]] with a row-local filter tree decided inside the pass
+    * ([[graft.filter.FilterCompiler.program]]). */
+  private def scan(cells: DataFrame, s: GScan, tree: Option[GFilter]): DataFrame = {
     val rangePreds: Seq[Column] = rangePredsOf(s)
     // Projection UNIONS family and column selections (addFamily +
     // addColumn build one family→qualifiers map, Scan.java:269,282):
@@ -73,24 +74,23 @@ object GTable {
     val projParts: Seq[Column] =
       (if (s.families.nonEmpty) Seq(col("family").isin(s.families: _*)) else Nil) ++
         s.columns.map { case (f, q) => col("family") === f && col("qualifier") === q }
+    val projection = projParts.reduceOption(_ || _)
+    // A filter tree sees the unprojected row (the server runs it before
+    // the column tracker): the projection and the scan's filter then
+    // limit only what the program emits, and it prunes what it neither
+    // reads nor emits.
+    val program = tree.map(t => FilterCompiler.program(t, (projection ++ s.filter).reduceOption(_ && _)))
     // Non-raw qualifier projections must NOT drop family-scoped
     // tombstones (DeleteFamily/DeleteFamilyVersion carry qualifier ""):
-    // the server reads the selected family's whole store, so its
-    // markers are visible to delete tracking even when only one
-    // qualifier is selected (ScanQueryMatcher columns-tracking runs
-    // AFTER the delete tracker). Markers never surface in the resolve
-    // output (only Puts do), so no post-filter is needed. A row gate's
-    // verdicts read their tested columns whatever the projection (the
-    // filter tree runs before it), so those stay and the projection
-    // limits only what the gate emits.
-    val projFams = (s.families ++ s.columns.map(_._1)).distinct
-    val keepFamilyMarkers: Column =
-      col("type") =!= graft.model.CellType.Put &&
-        col("qualifier") === "" && col("family").isin(projFams: _*)
-    val projection = projParts.reduceOption(_ || _)
-    val projPreds: Seq[Column] = projection.toSeq.map(p =>
-      if (s.raw) p else (Seq(p, keepFamilyMarkers) ++ gate.map(_.reads)).reduce(_ || _))
-    val rowGate = gate.map(g => projection.fold(g)(p => g.copy(emit = g.emit && p)))
+    // the server's delete tracker sees the selected family's whole store
+    // (ScanQueryMatcher columns-tracking runs AFTER it). Markers never
+    // surface in the resolve output, so no post-filter is needed.
+    val keepFamilyMarkers: Column = col("type") =!= graft.model.CellType.Put &&
+      col("qualifier") === "" && col("family").isin(s.families ++ s.columns.map(_._1): _*)
+    val projPreds: Seq[Column] =
+      if (program.isDefined) Nil
+      else projection.toSeq.map(p => if (s.raw) p else p || keepFamilyMarkers)
+    val cellFilter = if (program.isDefined) None else s.filter
 
     // Row-range + projection predicates apply to raw cells (they prune
     // the scan); resolve runs after, as on the server
@@ -111,16 +111,16 @@ object GTable {
     val pruned = (rangePreds ++ projPreds).foldLeft(cells)((df, p) => df.filter(p))
     val resolved =
       if (s.raw) {
-        val ranged = Resolve.timeRangePred(s.timeRange, s.cfTimeRanges)
-          .fold(pruned)(pruned.filter)
-        val filtered = s.filter.fold(ranged)(ranged.filter)
-        if (paged) Resolve.pageRaw(filtered, s.rowOffsetPerCf, s.maxResultsPerCf)
-        else filtered
+        val ranged = (Resolve.timeRangePred(s.timeRange, s.cfTimeRanges) ++ cellFilter)
+          .foldLeft(pruned)((df, p) => df.filter(p))
+        if (paged || program.isDefined)
+          Resolve.rawPass(ranged, program, s.rowOffsetPerCf, s.maxResultsPerCf)
+        else ranged
       } else
         Resolve.latest(pruned, s.maxVersions, s.timeRange,
-          ttlCutoff = s.ttlCutoff, cellFilter = s.filter,
+          ttlCutoff = s.ttlCutoff, cellFilter = cellFilter,
           cfTimeRanges = s.cfTimeRanges, minVersions = s.minVersions,
-          keepDeleted = s.keepDeleted, rowGate = rowGate,
+          keepDeleted = s.keepDeleted, program = program,
           cfOffset = s.rowOffsetPerCf, cfLimit = s.maxResultsPerCf)
     // A Get's one row leaves the pass in one partition (the pass
     // clusters on row), so a local sort gives the total order and the
@@ -166,55 +166,45 @@ object GTable {
     * on scanner open, HRegion — without this, a WHILE/InclusiveStop
     * filter inside a reversed scan computes the complement prefix).
     * Matcher ordering (ScanQueryMatcher.java:252 →
-    * UserScanQueryMatcher.java:195): delete tracking runs BEFORE
-    * filterCell, so on a non-raw scan the tree evaluates over the
-    * delete-masked view — a tombstoned value can never satisfy an SCVF
-    * — while version counting still runs AFTER the filter (rejected
-    * cells must not consume version slots).
+    * UserScanQueryMatcher.java:195): delete tracking and the ts checks
+    * run BEFORE the filter, so on a non-raw scan the tree sees only
+    * live, in-window cells — a tombstoned value can never satisfy an
+    * SCVF — while version counting still runs AFTER it (rejected cells
+    * must not consume version slots).
     *
-    * Three plans, by tree:
-    *   - per-cell trees ride the resolve's cellFilter slot;
-    *   - SCVF and SCVF-Exclude trees, alone or in an AND list with
-    *     per-cell filters, become a [[Resolve.RowGate]] that the resolve
-    *     pass decides at row end ([[graft.filter.FilterCompiler.rowGate]]);
-    *   - raw scans and every other row-level tree (Page, WhileMatch, Skip,
-    *     DependentColumn, ColumnCount/Pagination, FirstKeyOnly, OR lists
-    *     with row-level children) run mask → tree → gate: the tree over
-    *     the masked view, then the [[scan]] resolve over its output,
-    *     which clusters again. */
-  def scanFiltered(cells: DataFrame, s: GScan,
-      f: graft.filter.GFilter): DataFrame = {
-    val tree = graft.filter.FilterCompiler.withReversed(f, s.reversed)
+    * Per-cell trees ride the resolve's cellFilter slot; every other tree
+    * without Page or WhileMatch becomes a
+    * [[graft.filter.FilterCompiler.program]] the one pass runs on each
+    * row's live cells, between masking and the version gate, raw or
+    * not. Trees holding a PageFilter or WhileMatchFilter, which read
+    * other rows, run mask → tree → resolve, which clusters again. */
+  def scanFiltered(cells: DataFrame, s: GScan, f: GFilter): DataFrame = {
+    val tree = FilterCompiler.withReversed(f, s.reversed)
     // range-prune FIRST: the server's filters see only cells inside the
     // scan boundaries (a PageFilter counts rows within the range, not
     // the table), then the filtered set flows through the normal scan
     // (the residual range predicates there are no-ops)
     val ranged = rangePredsOf(s).foldLeft(cells)((df, p) => df.filter(p))
-    lazy val gate = graft.filter.FilterCompiler.rowGate(tree)
-    graft.filter.FilterCompiler.cellPredicate(tree) match {
+    FilterCompiler.cellPredicate(tree) match {
       // a per-cell tree neither reads other cells nor touches markers,
       // so it commutes with delete tracking: it rides the resolve's
       // cellFilter slot (still before the version gate) and the scan
       // stays one pass
-      case Some(p) if !s.raw => scan(ranged, s.copy(filter = Some(s.filter.fold(p)(_ && p))))
-      case None if !s.raw && gate.isDefined => scan(ranged, s, gate)
-      case _ =>
-        // the matcher's ts checks also precede filterCell (on raw scans
-        // too — TimeRange applies in the StoreScanner below raw-ness),
-        // so the tree only sees in-window, unexpired cells — and on
-        // non-raw scans only LIVE ones
+      case Some(p) => scan(ranged, s.copy(filter = Some(s.filter.fold(p)(_ && p))))
+      // a scan filter must see the values the tree's KeyOnly rewrote
+      case None if FilterCompiler.rowLocal(tree) && (s.filter.isEmpty || !FilterCompiler.transforms(tree)) =>
+        scan(ranged, s, Some(tree))
+      case None =>
+        // raw skips masking and TTL (as scan()'s raw branch does) but
+        // not the time range
         val visible =
           if (s.raw)
-            // raw skips masking and TTL (as scan()'s raw branch does)
-            // but not the time range
-            Resolve.timeRangePred(s.timeRange, s.cfTimeRanges)
-              .fold(ranged)(ranged.filter)
+            Resolve.timeRangePred(s.timeRange, s.cfTimeRanges).fold(ranged)(ranged.filter)
           else
-            Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff,
-                s.minVersions)
+            Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff, s.minVersions)
               .foldLeft(Resolve.maskedView(ranged, s.timeRange, s.cfTimeRanges,
                 s.keepDeleted))((df, p) => df.filter(p))
-        scan(graft.filter.FilterCompiler(visible, tree), s)
+        scan(FilterCompiler(visible, tree), s)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.read
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VisKernel
@@ -26,8 +26,8 @@ import graft.model.CellType
   * joins. Cells group by row and each row streams through a tracker in
   * (family, qualifier, ts DESC, value DESC) order, the order the
   * reference's StoreScanner feeds ScanQueryMatcher, so state is bounded
-  * by one family's markers (and, under a row gate, by the row's admitted
-  * cells it holds back), never by the table. The grouping needs
+  * by one family's markers (and, under a filter program, by the row's
+  * live cells it holds back), never by the table. The grouping needs
   * only ClusteredDistribution(row): the materialized cell store is
   * already hash-partitioned on row, so over it the pass plans with no
   * exchange and no broadcast; unclustered inputs (replica parquet,
@@ -35,10 +35,11 @@ import graft.model.CellType
   * [[Resolve.sizedShufflePartitions]] sizes when the input would
   * spill. The pass registers no planner strategy and touches no
   * session state. Its output is the surviving Puts in the input's
-  * schema, each row's cells in one partition. The same pass also
-  * decides row-level SCVF verdicts ([[RowGate]], the reference's
-  * `filterRow` on the assembled row) and per-family pagination, so a
-  * filtered or paged scan clusters once.
+  * schema, each row's cells in one partition. The same pass also runs
+  * a row-local filter tree ([[RowProgram]]: the reference's per-row
+  * Filter visitor, `filterRow` on the assembled row included) between
+  * masking and the version gate, and per-family pagination after it, so
+  * a filtered or paged scan clusters once.
   *
   * The unit of work is the row: one row's cells are one group in one
   * task, as a row never spans regions in the reference, so a single
@@ -89,8 +90,9 @@ object Resolve {
     *                     NEW_VERSION_BEHAVIOR tracker is out of scope —
     *                     graft has no mvcc dimension; documented
     *                     boundary.)
-    * @param rowGate      row-level SCVF verdicts decided in the pass;
-    *                     `cellFilter` then limits only what is emitted
+    * @param program      a row-local filter decided in the pass, after
+    *                     masking and the ts checks and before the version
+    *                     gate ([[RowProgram]]; `cellFilter` runs ahead of it)
     * @param cfOffset     per-family values to skip in each row
     *                     (Scan.setRowOffsetPerColumnFamily, Scan.java:523)
     * @param cfLimit      per-family values to keep after the offset
@@ -106,76 +108,47 @@ object Resolve {
       minVersions: Int = 0,
       keepDeleted: Boolean = false,
       visScope: Option[String] = None,
-      rowGate: Option[RowGate] = None,
+      program: Option[RowProgram] = None,
       cfOffset: Int = 0,
       cfLimit: Option[Int] = None
   ): DataFrame = {
-    val visible = markerCeiling(cells, timeRange, cfTimeRanges, keepDeleted)
-    // filterCell and the ts checks run BEFORE version counting in the
-    // matcher (UserScanQueryMatcher.java:195): rejected Puts must not
-    // consume version slots. Markers pass untouched, so they still mask.
-    // Under a row gate the verdicts still read Puts `cellFilter` rejects,
-    // so it becomes the gate's emit column instead of a pre-filter.
-    val preFilters = preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions) ++
-      (if (rowGate.isEmpty) cellFilter else None)
-    val ranged =
-      preFilters.foldLeft(visible)((df, p) => df.filter(col("type") =!= CellType.Put || p))
     val retainFrom = if (minVersions > 0) ttlCutoff else None
     val pass = Pass(maxVersions, retainFrom, minVersions, visScope, cfOffset = cfOffset,
       cfLimit = cfLimit.getOrElse(Int.MaxValue))
-    rowGate.fold(resolvePass(ranged, pass)) { g =>
-      val gated = resolvePass(g.flagged(ranged, cellFilter),
-        pass.copy(verdicts = g.tests.map(t => Verdict(t.filterIfMissing, t.latestOnly))))
-      gated.drop(gated.columns.filter(_.startsWith(RowGate.Prefix)).toIndexedSeq: _*)
-    }
+    withProgram(checked(cells, timeRange, ttlCutoff, cellFilter, cfTimeRanges, minVersions,
+      keepDeleted), program, pass)
   }
 
-  /** One SCVF test of a [[RowGate]] (SingleColumnValueFilter.java:65):
-    * `before` is what the filters ahead of it in its list admit, and
-    * `matches` the comparison on the value; a null result of either is
-    * a no. */
-  final case class ColumnTest(family: String, qualifier: String, before: Column,
-      matches: Column, filterIfMissing: Boolean, latestOnly: Boolean)
+  /** The cells the tracker sees: time-travel markers dropped, then the
+    * ts checks and `cellFilter` on the Puts (they run BEFORE version
+    * counting in the matcher, UserScanQueryMatcher.java:195). Markers
+    * pass untouched, so they still mask. */
+  private def checked(cells: DataFrame, timeRange: Option[TimeRange], ttlCutoff: Option[Long],
+      cellFilter: Option[Column], cfTimeRanges: Map[String, TimeRange], minVersions: Int,
+      keepDeleted: Boolean): DataFrame =
+    (preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions) ++ cellFilter)
+      .foldLeft(markerCeiling(cells, timeRange, cfTimeRanges, keepDeleted))((df, p) =>
+        df.filter(col("type") =!= CellType.Put || p))
 
-  /** Row-level verdicts the pass decides at row end, the reference's
-    * `filterRow` on the assembled row. A test reads the row's live,
-    * in-window Puts of its column that `before` admits: the newest one
-    * (ts DESC, then value DESC) when `latestOnly`, any one otherwise. A
-    * row lacking such a Put passes unless `filterIfMissing`. A row
-    * passing every test emits its Puts that `emit` admits; the others
-    * consume no version slot and no page position. The predicates stay
-    * Catalyst columns: [[flagged]] evaluates them before the pass, which
-    * only keeps the books. */
-  final case class RowGate(tests: Seq[ColumnTest], emit: Column) {
-
-    /** The cells the verdicts read: each tested column and its family's
-      * family-scope markers. A projected scan keeps these beside its
-      * projection. */
-    def reads: Column = tests.map { t =>
-      col("family") === t.family && (col("qualifier") === t.qualifier ||
-        col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion))
-    }.reduce(_ || _)
-
-    /** `cells` plus the boolean columns the tracker reads, less the Puts
-      * that no test reads and nothing emits. */
-    private[Resolve] def flagged(cells: DataFrame, cellFilter: Option[Column]): DataFrame = {
-      val flags = (RowGate.Emit -> (cellFilter.fold(emit)(_ && emit) <=> true)) +:
-        tests.zipWithIndex.flatMap { case (t, i) =>
-          Seq(RowGate.sees(i) -> ((t.before && col("family") === t.family &&
-            col("qualifier") === t.qualifier) <=> true),
-            RowGate.matches(i) -> (t.matches <=> true))
-        }
-      cells.select(col("*") +: flags.map { case (n, c) => c.as(n) }: _*)
-        .filter(col("type") =!= CellType.Put || col(RowGate.Emit) ||
-          tests.indices.map(i => col(RowGate.sees(i))).reduce(_ || _))
+  /** The pass over `cells` under `program`, if any, in `cells`' schema. */
+  private def withProgram(cells: DataFrame, program: Option[RowProgram], p: Pass): DataFrame =
+    program.fold(resolvePass(cells, p)) { prog =>
+      resolvePass(prog.flagged(cells, pruned = true, p.raw), p.copy(program = Some(prog.code)))
+        .drop(prog.columns.indices.map(RowProgram.name): _*)
     }
-  }
 
-  object RowGate {
-    private[Resolve] val Prefix = "__gate_"
-    private[Resolve] val Emit = Prefix + "emit"
-    private[Resolve] def sees(i: Int): String = s"${Prefix}sees$i"
-    private[Resolve] def matches(i: Int): String = s"${Prefix}match$i"
+  /** The keys of the rows `program` admits any (`admitted`) or none of
+    * the live cells in `timeRange` of (when `raw`, of all cells): the
+    * row-membership view of a CAS guard and a WhileMatch stop, with no
+    * version gate. Only an admitted search prunes: a rejected row may
+    * hold no cell the program reads or emits. */
+  def rowVerdicts(cells: DataFrame, program: RowProgram, raw: Boolean, admitted: Boolean,
+      timeRange: Option[TimeRange] = None): DataFrame = {
+    val in = if (raw) cells else checked(cells, timeRange, None, None, Map.empty, 0, false)
+    perRow(program.flagged(in, pruned = admitted, raw),
+      Pass(Int.MaxValue, None, 0, None, program = Some(program.code), raw = raw))(
+      (t, rs) => Iterator(t.row).filter(_ => t.run(rs).hasNext == admitted))(Encoders.STRING)
+      .toDF("row")
   }
 
   /** Size-derived shuffle-partition count for the resolve exchange:
@@ -324,23 +297,22 @@ object Resolve {
   def maskTombstones(cells: DataFrame, visScope: Option[String] = None): DataFrame =
     resolvePass(cells, Pass(Int.MaxValue, None, 0, visScope))
 
-  /** The knobs the per-row pass applies after masking: the version gate,
-    * TTL retention under MIN_VERSIONS (a version past `retainFrom`
-    * survives only among the newest `minVersions`), the row gate's
-    * verdicts and per-family pagination. `raw` skips masking and the
-    * version gate and admits markers, so only pagination applies. */
+  /** The knobs the per-row pass applies after masking: the row-local
+    * filter program, the version gate, TTL retention under MIN_VERSIONS
+    * (a version past `retainFrom` survives only among the newest
+    * `minVersions`) and per-family pagination. `raw` skips masking and
+    * the version gate and admits markers, so only the program and
+    * pagination apply. */
   private final case class Pass(maxVersions: Int, retainFrom: Option[Long],
-      minVersions: Int, visScope: Option[String], verdicts: Seq[Verdict] = Nil,
+      minVersions: Int, visScope: Option[String], program: Option[RowProgram.Code] = None,
       cfOffset: Int = 0, cfLimit: Int = Int.MaxValue, raw: Boolean = false)
 
-  /** The flags of one [[ColumnTest]] the tracker needs. */
-  private final case class Verdict(filterIfMissing: Boolean, latestOnly: Boolean)
-
-  /** Per-family pagination of a raw scan (markers count as values, as
-    * every cell a raw StoreScanner returns does): the pass with masking
-    * and the version gate off. */
-  private[read] def pageRaw(cells: DataFrame, cfOffset: Int, cfLimit: Option[Int]): DataFrame =
-    resolvePass(cells, Pass(Int.MaxValue, None, 0, None, cfOffset = cfOffset,
+  /** The pass with masking and the version gate off: `program` over
+    * every cell, markers too (a raw StoreScanner returns them), then
+    * per-family pagination. */
+  def rawPass(cells: DataFrame, program: Option[RowProgram], cfOffset: Int = 0,
+      cfLimit: Option[Int] = None): DataFrame =
+    withProgram(cells, program, Pass(Int.MaxValue, None, 0, None, cfOffset = cfOffset,
       cfLimit = cfLimit.getOrElse(Int.MaxValue), raw = true))
 
   /** The one resolve operator: group the cells by row and walk each row
@@ -354,89 +326,81 @@ object Resolve {
     * other input takes exactly one row exchange, sized by
     * [[sizedShufflePartitions]] when the default count would spill.
     * Returns the surviving cells with `cells`' schema. */
-  private def resolvePass(cells: DataFrame, p: Pass): DataFrame = {
+  private def resolvePass(cells: DataFrame, p: Pass): DataFrame =
+    perRow(cells, p)((t, rs) => t.run(rs))(Encoders.row(cells.schema)).toDF()
+
+  private def perRow[U](cells: DataFrame, p: Pass)(f: (RowTracker, Iterator[Row]) => Iterator[U])(
+      enc: Encoder[U]): Dataset[U] = {
     val s = cells.schema
-    val rowEnc = Encoders.row(s)
     val ix = Ix(s.fieldIndex("family"), s.fieldIndex("qualifier"), s.fieldIndex("ts"),
-      s.fieldIndex("type"), p.visScope.fold(-1)(s.fieldIndex),
-      if (p.verdicts.isEmpty) -1 else s.fieldIndex(RowGate.Emit),
-      p.verdicts.indices.map(i => s.fieldIndex(RowGate.sees(i))).toArray,
-      p.verdicts.indices.map(i => s.fieldIndex(RowGate.matches(i))).toArray)
+      s.fieldIndex("type"), s.fieldIndex("value"), p.visScope.fold(-1)(s.fieldIndex),
+      p.program.fold(-1)(s.length - _.columns))
     // spill hedge: at a fixed spark.sql.shuffle.partitions the row
     // exchange's per-partition share grows with input (the r16 sf10 soak
     // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
     // from shuffle/sort spill), so a large input is pre-partitioned on
     // row with a size-derived count that the grouping then reuses
     val in = sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row")))
-    in.groupBy(col("row")).as[String, Row](Encoders.STRING, rowEnc)
+    in.groupBy(col("row")).as[String, Row](Encoders.STRING, Encoders.row(s))
       .flatMapSortedGroups(col("family"),
         !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),
         col("qualifier"), col("ts").desc, col("type") === CellType.Put, col("value").desc)(
-        (row: String, rs: Iterator[Row]) => new RowTracker(ix, p, row != null).run(rs))(
-        rowEnc)
-      .toDF()
+        (row: String, rs: Iterator[Row]) => f(new RowTracker(ix, p, row), rs))(enc)
   }
 
-  /** Field positions the tracker reads; `vis` and `emit` are -1 without
-    * visScope and a row gate, `sees`/`matches` hold one per verdict. */
-  private final case class Ix(family: Int, qualifier: Int, ts: Int, tpe: Int, vis: Int,
-      emit: Int, sees: Array[Int], matches: Array[Int])
+  /** Field positions the tracker reads; `vis` is -1 without visScope,
+    * `base` (the first program column, after the input's fields) -1
+    * without a program. */
+  private final case class Ix(family: Int, qualifier: Int, ts: Int, tpe: Int, value: Int,
+      vis: Int, base: Int)
 
   /** Streaming DeleteTracker + ColumnTracker for ONE row's cells in pass
-    * order; `admit` is called once per cell and keeps exactly the Puts
-    * that survive. Family-scope markers arrive before their family's
-    * columns and every marker before the Puts of its ts, so each Put is
-    * decided on arrival (ScanDeleteTracker.isDeleted:102):
+    * order. Family-scope markers arrive before their family's columns
+    * and every marker before the Puts of its ts, so each Put is decided
+    * on arrival (ScanDeleteTracker.isDeleted:102):
     *   - Delete               masks the Put at the same (family,qualifier,ts)
     *   - DeleteColumn         masks Puts of (family,qualifier) with ts <= marker
     *   - DeleteFamily         masks Puts of (family)           with ts <= marker
     *   - DeleteFamilyVersion  masks Puts of (family)           with ts == marker
-    * each only within its visibility class. Every live Put feeds the row
-    * gate's verdicts; the ones it may emit then count against
-    * `maxVersions` per column, newest first, and against the page per
-    * family. A null key never matches a marker (the relational form's
-    * equi-join semantics), and a null row lacks every tested column (the
-    * relational SCVF's row join never matches it). */
-  private final class RowTracker(ix: Ix, p: Pass, keyed: Boolean) {
-    private var started = false
-    private var family: String = _
-    private var qualifier: String = _
+    * each only within its visibility class. The live Puts then reach
+    * the version gate (`maxVersions` per column, newest first) and the
+    * per-family page; under a program only those it admits, once it has
+    * run on the held row. A null key never matches a marker (the
+    * relational form's equi-join semantics), nor, as a row, a program's
+    * row joins. */
+  private final class RowTracker(ix: Ix, p: Pass, val row: String) {
+    private var tracked: Row = _ // the last cell delete tracking saw
     private val famDel = mutable.HashMap.empty[String, Long]
     private val famVerDel = mutable.HashSet.empty[(String, Long)]
     private val colDel = mutable.HashMap.empty[String, Long]
     private val verDel = mutable.HashSet.empty[(String, Long)]
+    private var gated: Row = _ // the last cell the gate saw
     private var versions = 0
     private var familyValues = 0L
-    private val seen = new Array[Boolean](p.verdicts.size)
-    private val matched = new Array[Boolean](p.verdicts.size)
 
-    /** The row's surviving cells: streamed through, or, under a row gate,
-      * held until the verdicts are in. */
-    def run(rs: Iterator[Row]): Iterator[Row] =
-      if (p.verdicts.isEmpty) rs.filter(admit)
-      else {
-        val kept = rs.filter(admit).toArray
-        if (passes) kept.iterator else Iterator.empty
-      }
+    /** The row's surviving cells. */
+    def run(rs: Iterator[Row]): Iterator[Row] = p.program match {
+      case None => rs.filter(r => live(r) && keep(r))
+      case Some(code) =>
+        new RowProgram.Eval(code, rs.filter(live).toArray, ix.family, ix.qualifier, ix.ts,
+          ix.tpe, ix.value, ix.base, row != null).admitted.filter(keep)
+    }
 
-    private def admit(r: Row): Boolean = {
-      val f = r.getString(ix.family)
-      val q = r.getString(ix.qualifier)
-      if (!started || f != family) {
-        started = true; family = f; famDel.clear(); famVerDel.clear(); familyValues = 0
-        newColumn(q)
-      } else if (q != qualifier) newColumn(q)
-      if (p.raw) return page()
+    /** Delete tracking: true for a Put no marker masks (every cell when raw). */
+    private def live(r: Row): Boolean = p.raw || {
+      val (f, q) = (r.getString(ix.family), r.getString(ix.qualifier))
+      val newFamily = tracked == null || f != tracked.getString(ix.family)
+      if (newFamily) { famDel.clear(); famVerDel.clear() }
+      if (newFamily || q != tracked.getString(ix.qualifier)) { colDel.clear(); verDel.clear() }
+      tracked = r
       val tsNull = r.isNullAt(ix.ts)
       val ts = if (tsNull) 0L else r.getLong(ix.ts)
       val vc = if (ix.vis < 0) "" else VisKernel.canonical(r.getString(ix.vis))
-      val marker = keyed && !tsNull && f != null
+      val marker = row != null && !tsNull && f != null
       r.getString(ix.tpe) match {
         case CellType.Put =>
-          val masked = below(famDel, vc, ts, tsNull) || below(colDel, vc, ts, tsNull) ||
-            (!tsNull && (famVerDel((vc, ts)) || verDel((vc, ts))))
-          if (!masked) observe(r)
-          !masked && (ix.emit < 0 || r.getBoolean(ix.emit)) && keepVersion(ts, tsNull) && page()
+          !(below(famDel, vc, ts, tsNull) || below(colDel, vc, ts, tsNull) ||
+            (!tsNull && (famVerDel((vc, ts)) || verDel((vc, ts)))))
         case CellType.DeleteFamily if marker => raise(famDel, vc, ts); false
         case CellType.DeleteFamilyVersion if marker => famVerDel += ((vc, ts)); false
         case CellType.DeleteColumn if marker && q != null => raise(colDel, vc, ts); false
@@ -445,8 +409,13 @@ object Resolve {
       }
     }
 
-    private def newColumn(q: String): Unit = {
-      qualifier = q; colDel.clear(); verDel.clear(); versions = 0
+    /** The version gate (not on raw passes) and the per-family page. */
+    private def keep(r: Row): Boolean = {
+      def moved(i: Int) = gated == null || r.getString(i) != gated.getString(i)
+      if (moved(ix.family)) { familyValues = 0; versions = 0 }
+      else if (moved(ix.qualifier)) versions = 0
+      gated = r
+      (p.raw || keepVersion(r)) && page()
     }
 
     private def raise(m: mutable.HashMap[String, Long], vc: String, ts: Long): Unit =
@@ -458,33 +427,15 @@ object Resolve {
         tsNull: Boolean): Boolean =
       m.get(vc).exists(d => tsNull || ts <= d)
 
-    private def keepVersion(ts: Long, tsNull: Boolean): Boolean = {
+    private def keepVersion(r: Row): Boolean = {
       versions += 1
       versions <= p.maxVersions && p.retainFrom.forall(cut =>
-        (!tsNull && ts >= cut) || versions <= p.minVersions)
+        (!r.isNullAt(ix.ts) && r.getLong(ix.ts) >= cut) || versions <= p.minVersions)
     }
 
     private def page(): Boolean = {
       familyValues += 1
       familyValues > p.cfOffset && familyValues - p.cfOffset <= p.cfLimit
-    }
-
-    // a tested column's Puts arrive newest first, so a latest-only test
-    // reads the first one it sees
-    private def observe(r: Row): Unit = {
-      var i = 0
-      while (i < seen.length) {
-        if (r.getBoolean(ix.sees(i))) {
-          if (!seen(i) || !p.verdicts(i).latestOnly)
-            matched(i) ||= r.getBoolean(ix.matches(i))
-          seen(i) = true
-        }
-        i += 1
-      }
-    }
-
-    private def passes: Boolean = p.verdicts.indices.forall { i =>
-      if (keyed && seen(i)) matched(i) else !p.verdicts(i).filterIfMissing
     }
   }
 }

@@ -113,17 +113,17 @@ object Mutations {
 
   /** M5 CheckAndMutate (HRegion.checkAndMutate:5130): batch CAS.
     * Rows whose guard cell matches get `mutation` applied; all other
-    * cells pass through unchanged. The guard evaluation is one
-    * aggregate on the guard column + a semi-join (AQE broadcasts the
-    * matching-row list when it is small) — the batch analogue of the
-    * server's read-check-apply under lock.
+    * cells pass through unchanged. The guard evaluation is one pass
+    * over the guard family + a join (AQE broadcasts the matching-row
+    * list when it is small) — the batch analogue of the server's
+    * read-check-apply under lock.
     *
     * `mutation` maps the cells of a matching row to their new state
     * (e.g. set one qualifier's value). */
   def checkAndMutate(cells: DataFrame, guard: Guard,
       mutation: DataFrame => DataFrame): DataFrame = {
-    val matching = guardCheckRead(cells, guard.family, guard.qualifier,
-      guard.timeRange).filter(guard.valuePred).select("row")
+    val matching = guardCheckRead(cells, guard.family, guard.qualifier, guard.valuePred,
+      guard.timeRange)
     applyWithVerdict(cells, matching, mutation)
   }
 
@@ -159,15 +159,15 @@ object Mutations {
     * filter runs in the matcher), optionally restricted to `timeRange`
     * — the filter itself then sees every live in-window version, which
     * is when the server runs filterCell (before version counting), so
-    * SCVF's own latestVersionOnly knob keeps its meaning. */
+    * SCVF's own latestVersionOnly knob keeps its meaning. A guard
+    * without Page or WhileMatch is decided by ONE masking pass that
+    * emits the admitted row keys
+    * ([[graft.filter.FilterCompiler.admittedRows]]). */
   def checkAndMutate(cells: DataFrame, guard: graft.filter.GFilter,
       mutation: DataFrame => DataFrame,
       timeRange: Option[(Long, Long)] = None): DataFrame = {
-    val live = graft.read.Resolve.maskTombstones(cells)
-    val checkView = timeRange.fold(live) { case (lo, hi) =>
-      live.filter(col("ts") >= lo && col("ts") < hi)
-    }
-    val matching = graft.filter.FilterCompiler.admittedRows(checkView, guard)
+    val matching = graft.filter.FilterCompiler.admittedRows(cells, guard,
+      timeRange.map { case (lo, hi) => graft.read.Resolve.TimeRange(lo, hi) })
     applyWithVerdict(cells, matching, mutation)
   }
 
@@ -179,58 +179,24 @@ object Mutations {
   def checkAndMutateIfNotExists(cells: DataFrame, family: String,
       qualifier: String, mutation: DataFrame => DataFrame,
       timeRange: Option[(Long, Long)] = None): DataFrame = {
-    val present = guardCheckRead(cells, family, qualifier, timeRange)
-      .select("row")
+    val present = guardCheckRead(cells, family, qualifier, lit(true), timeRange)
     applyWithVerdict(cells, present, mutation, invert = true)
   }
 
-  /** The check READ behind the cell guards: per row, the latest LIVE
-    * version of the guard column within the optional time window —
-    * what the server's check Get returns (HRegion.checkAndMutate:
-    * delete-masked, THEN window-filtered, newest-1). ONE partial+final
-    * aggregate over the guard family decides every row (the same
-    * shape as FilterCompiler's SCVF verdict): tombstone thresholds and
-    * the in-window put versions collect in a single groupBy(row) —
-    * which co-partitions with the store layout — and the live-latest
-    * pick is a per-row array fold, so no mask broadcast joins and no
-    * rank window. Returns the checked CELL (row, family, qualifier,
-    * ts, type, value) for rows whose check read found a live version;
-    * rows with none are absent. Masking
-    * is NOT window-restricted (a marker at any ts kills its targets;
-    * the window then filters surviving puts — Resolve.latest order). */
-  private def guardCheckRead(cells: DataFrame, family: String,
-      qualifier: String, timeRange: Option[(Long, Long)]): DataFrame = {
-    val isQ = col("qualifier") === qualifier
-    val win = timeRange.fold(lit(true)) { case (lo, hi) =>
-      col("ts") >= lo && col("ts") < hi
-    }
-    val agg = cells.filter(col("family") === family).groupBy("row").agg(
-      max(when(col("type") === CellType.DeleteFamily, col("ts"))).as("__dfam"),
-      collect_set(when(col("type") === CellType.DeleteFamilyVersion,
-        col("ts"))).as("__dfamv"),
-      max(when(col("type") === CellType.DeleteColumn && isQ,
-        col("ts"))).as("__dcol"),
-      collect_set(when(col("type") === CellType.Delete && isQ,
-        col("ts"))).as("__dver"),
-      collect_list(when(col("type") === CellType.Put && isQ && win,
-        struct(col("ts"), col("value")))).as("__puts"))
-    val live = filter(col("__puts"), p =>
-      (col("__dfam").isNull || p.getField("ts") > col("__dfam")) &&
-        (col("__dcol").isNull || p.getField("ts") > col("__dcol")) &&
-        !array_contains(col("__dfamv"), p.getField("ts")) &&
-        !array_contains(col("__dver"), p.getField("ts")))
-    // struct max orders by (ts, value): newest version, ties on value —
-    // the same deterministic tie-break as the SCVF verdict aggregate.
-    // Presence = a live version EXISTS (size, not value non-nullness: a
-    // live null-valued Put is present, and must fail ifNotExists). The
-    // full cell coordinate is projected so valuePreds over ts (or
-    // family/qualifier) keep resolving.
-    agg.filter(size(live) > 0)
-      .select(col("row"), lit(family).as("family"),
-        lit(qualifier).as("qualifier"),
-        array_max(live).getField("ts").as("ts"),
-        lit(CellType.Put).as("type"),
-        array_max(live).getField("value").as("value"))
+  /** The check READ behind the cell guards: the rows whose latest LIVE
+    * guard-column version in the optional window (the server's check
+    * Get, HRegion.checkAndMutate: delete-masked, THEN window-filtered,
+    * newest-1) satisfies `matches`, any predicate on that cell: a
+    * [[graft.read.RowProgram.latestMatch]] run in one masking pass over
+    * the guard family (co-partitioned with the store: no joins, no
+    * window).
+    * Masking is NOT window-restricted, as in Resolve.latest. */
+  private def guardCheckRead(cells: DataFrame, family: String, qualifier: String,
+      matches: Column, timeRange: Option[(Long, Long)]): DataFrame = {
+    import graft.read.{Resolve, RowProgram}
+    Resolve.rowVerdicts(cells.filter(col("family") === family),
+      RowProgram.latestMatch(col("qualifier") === qualifier, matches), raw = false, admitted = true,
+      timeRange.map { case (lo, hi) => Resolve.TimeRange(lo, hi) })
   }
 
   /** M6 RowMutations / latest-view MERGE: collapse the mutation log

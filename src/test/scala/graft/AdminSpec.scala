@@ -638,4 +638,14 @@ class AdminSpec extends SparkSpec {
       assert(!GAdmin.isEnabled(spark, "propres"))
     } finally GAdmin.deleteTable(spark, "propres")
   }
+
+  test("q101 plans one merge and one split on the sf0.001 fixture") {
+    // the [small, small, giant] chain must hold at every fixture scale
+    val r = SparkEntry.queries("q101_region_admin")(spark, sf0001).collect().head
+    val get = (n: String) => r.getAs[Long](n)
+    assert(get("merge_members") === 2 && get("split_region") === 2, r)
+    assert(get("bottom_cells") > 0 && get("top_cells") > 0 && get("merged_cells") > 0, r)
+    assert(get("bottom_cells") + get("top_cells") + get("merged_cells") === get("n_cells"), r)
+    assert(get("mismatches") === 0, r)
+  }
 }

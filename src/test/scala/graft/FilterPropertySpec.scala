@@ -35,6 +35,21 @@ class FilterPropertySpec extends SparkSpec {
     }.groupBy(c => (c.row, c.family, c.qualifier, c.ts)).map(_._2.head).toSeq
   }
 
+  /** [[genCells]] plus what a raw cell set also holds: markers (cells
+    * like any other to a filter), null values, and a few cells that
+    * appear twice. */
+  private def genRawCells(rnd: Random): Seq[GCell] = {
+    val cells = genCells(rnd).map { c =>
+      rnd.nextInt(10) match {
+        case 0 => c.copy(`type` = CellType.DeleteColumn, value = null)
+        case 1 => c.copy(`type` = CellType.DeleteFamily, qualifier = "", value = null)
+        case 2 => c.copy(value = null)
+        case _ => c
+      }
+    }
+    cells ++ cells.filter(_ => rnd.nextInt(8) == 0)
+  }
+
   // ---- naive comparator / predicate mirrors -------------------------------
 
   private def cmpOrd(op: CompareOp, c: Int): Boolean = op match {
@@ -49,7 +64,7 @@ class FilterPropertySpec extends SparkSpec {
   /** Three-valued → two-valued: a null predicate result never matches
     * (the compiled side's `<=> lit(true)` handling). */
   private def cmpTest(cmp: GComparator, subject: String, op: CompareOp): Boolean =
-    cmp match {
+    subject != null && (cmp match {
       case BinaryComparator(v)       => cmpOrd(op, subject.compareTo(v))
       case BinaryPrefixComparator(p) => cmpOrd(op, subject.take(p.length).compareTo(p))
       case SubstringComparator(s) =>
@@ -63,7 +78,7 @@ class FilterPropertySpec extends SparkSpec {
       case LongComparator(v) =>
         subject.toLongOption.exists(l => cmpOrd(op, java.lang.Long.compare(l, v)))
       case other => sys.error(s"naive mirror lacks $other")
-    }
+    })
 
   private def cellPred(f: GFilter, c: GCell): Boolean = f match {
     case RowFilter(op, cmp)       => cmpTest(cmp, c.row, op)
@@ -117,6 +132,9 @@ class FilterPropertySpec extends SparkSpec {
       rc.map(c => c -> (ranks((c.family, c.qualifier)) + 1))
     }.toMap
 
+  // null values sort below every value, as in Catalyst's DESC NULLS LAST
+  private val valueOrd: Ordering[String] = Ordering.Option[String].on(Option(_))
+
   private def naive(cells: Seq[GCell], f: GFilter): Seq[GCell] = f match {
     case g if isCellLevel(g) => cells.filter(cellPred(g, _))
 
@@ -150,18 +168,25 @@ class FilterPropertySpec extends SparkSpec {
       cells.filterNot(c => vetoed.contains(c.row))
 
     case WhileMatchFilter(inner, rev) =>
-      val rejects = cells.filter(!cellPred(inner, _)).map(_.row)
+      // a cell-level inner rejects a row with any failing cell; a
+      // row-level one (q20's SCVF) a row it admits none of the cells of
+      val rejects =
+        if (isCellLevel(inner)) cells.filter(!cellPred(inner, _)).map(_.row)
+        else { val kept = naive(cells, inner).map(_.row).toSet; cells.map(_.row).filterNot(kept) }
       if (rejects.isEmpty) cells
       else if (rev) { val stop = rejects.max; cells.filter(_.row > stop) }
       else { val stop = rejects.min; cells.filter(_.row < stop) }
 
     case KeyOnlyFilter(lenAsVal) =>
       cells.map(c => c.copy(value =
-        if (lenAsVal) c.value.getBytes("UTF-8").length.toString else null))
+        if (lenAsVal && c.value != null) c.value.getBytes("UTF-8").length.toString else null))
 
     case FirstKeyOnlyFilter() =>
-      cells.groupBy(_.row).values
-        .map(_.minBy(c => (c.family, c.qualifier, -c.ts))).toSeq
+      // cell order; ties: markers first, then the larger value
+      cells.groupBy(_.row).values.map(_.minBy(c => (c.family, c.qualifier, -c.ts,
+        c.`type` == CellType.Put, Option(c.value)))(Ordering.Tuple5(Ordering.String,
+        Ordering.String, Ordering.Long, Ordering.Boolean, Ordering.Option(valueOrd.reverse))))
+        .toSeq
 
     case FilterList(FilterList.MustPassAll, fs) =>
       fs.foldLeft(cells)(naive)
@@ -185,7 +210,9 @@ class FilterPropertySpec extends SparkSpec {
       .filter(c => c.family == fam && c.qualifier == q)
       .groupBy(_.row)
       .map { case (r, cs) =>
-        r -> (if (latestOnly) cmpTest(cmp, cs.maxBy(c => (c.ts, c.value)).value, op)
+        r -> (if (latestOnly)
+                cmpTest(cmp, cs.maxBy(c => (c.ts, c.value))(Ordering.Tuple2(Ordering.Long,
+                  valueOrd)).value, op)
               else cs.exists(c => cmpTest(cmp, c.value, op)))
       }
     if (ifMissing) cells.filter(c => verdict.getOrElse(c.row, false))
@@ -247,7 +274,8 @@ class FilterPropertySpec extends SparkSpec {
     case 4 => if (rnd.nextBoolean()) ColumnCountGetFilter(1 + rnd.nextInt(3))
       else ColumnPaginationFilter(1 + rnd.nextInt(2), rnd.nextInt(3))
     case 5 => SkipFilter(genCellLeaf(rnd))
-    case 6 => WhileMatchFilter(genCellLeaf(rnd), rnd.nextBoolean())
+    case 6 => WhileMatchFilter(
+      if (rnd.nextBoolean()) genCellLeaf(rnd) else genRowLeaf(rnd), rnd.nextBoolean())
     case _ => if (rnd.nextBoolean()) KeyOnlyFilter(rnd.nextBoolean())
       else FirstKeyOnlyFilter()
   }
@@ -257,8 +285,14 @@ class FilterPropertySpec extends SparkSpec {
       if (rnd.nextBoolean()) genCellLeaf(rnd) else genRowLeaf(rnd)
     } else {
       val kids = (0 to 1 + rnd.nextInt(2)).map(_ => genFilter(rnd, depth - 1))
+      // a Page or WhileMatch among the children of one list in four
+      val stateful =
+        if (rnd.nextInt(4) > 0) Nil
+        else Seq(if (rnd.nextBoolean()) PageFilter(1 + rnd.nextInt(5))
+                 else WhileMatchFilter(genRowLeaf(rnd), rnd.nextBoolean()))
       FilterList(if (rnd.nextBoolean()) FilterList.MustPassAll
-                 else FilterList.MustPassOne, kids)
+                 else FilterList.MustPassOne,
+        new Random(rnd.nextLong()).shuffle(kids ++ stateful))
     }
 
   // ---- the property -------------------------------------------------------
@@ -267,20 +301,19 @@ class FilterPropertySpec extends SparkSpec {
     cells.map(c => (c.row, c.family, c.qualifier, c.ts,
       Option(c.value).getOrElse(" null"))).toSet
 
+  private def asMultiset(cells: Seq[GCell]): Seq[(String, String, String, Long, String, String)] =
+    cells.map(c => (c.row, c.family, c.qualifier, c.ts, c.`type`,
+      Option(c.value).getOrElse(" null"))).sorted
+
   test("compiled filters equal the naive evaluator on 80 random trees") {
+    // raw cell sets: markers, null values and duplicate cells, compared
+    // as multisets
     val rnd = new Random(20260812)
     (1 to 80).foreach { i =>
-      val cells = genCells(rnd)
+      val cells = genRawCells(rnd)
       val f     = genFilter(rnd, depth = 2)
-      val df    = cells.toDF()
-      val got = FilterCompiler(df, f)
-        .collect()
-        .map(r => (r.getAs[String]("row"), r.getAs[String]("family"),
-          r.getAs[String]("qualifier"), r.getAs[Long]("ts"),
-          Option(r.getAs[String]("value")).getOrElse(" null")))
-        .toSet
-      val want = asTuples(naive(cells, f))
-      assert(got === want, s"case $i filter=$f cells=$cells")
+      val got = FilterCompiler(cells.toDF(), f).as[GCell].collect().toSeq
+      assert(asMultiset(got) === asMultiset(naive(cells, f)), s"case $i filter=$f cells=$cells")
     }
   }
 

@@ -111,19 +111,74 @@ class FilterSpec extends SparkSpec {
     assert(rows(FilterList.or(pfx, page)) === rows(pfx))
   }
 
+  test("an OR list is a set union in the pass and in its relational step alike") {
+    import spark.implicits._
+    val c = graft.model.GCell("r1", "d", "a", 1L, graft.model.CellType.Put, "x")
+    val cells = Seq(c, c, c.copy(qualifier = "b")).toDF()
+    val scvf = SingleColumnValueFilter("d", "a", CompareOp.Equal, BinaryComparator("x"))
+    for (f <- Seq(FilterList.or(scvf, ValueFilter(CompareOp.Equal, BinaryComparator("x"))),
+        FilterList.or(scvf, PageFilter(1))))
+      assert(FilterCompiler(cells, f).count() === 2, f)
+  }
+
+  test("an OR list of filters reading no value keeps distinct cells with equal values") {
+    import spark.implicits._
+    import graft.read.{GScan, GTable}
+    val c = graft.model.GCell("r1", "d", "a", 1L, graft.model.CellType.Put, "x")
+    val cells = Seq(c, c.copy(qualifier = "b")).toDF()
+    for (f <- Seq(FilterList.or(FirstKeyOnlyFilter(), ColumnCountGetFilter(2)),
+        FilterList.or(ColumnPaginationFilter(1, 0), ColumnPaginationFilter(1, 1)))) {
+      assert(FilterCompiler(cells, f).count() === 2, f)
+      for (raw <- Seq(false, true))
+        assert(GTable.scanFiltered(cells, GScan(raw = raw), f).count() === 2, s"$f raw=$raw")
+    }
+  }
+
+  test("a KeyOnly transform ahead of a value test feeds it the transformed value") {
+    import spark.implicits._
+    import graft.read.{GScan, GTable}
+    val c = graft.model.GCell("r1", "d", "a", 1L, graft.model.CellType.Put, "x")
+    val cells = Seq(c, c.copy(qualifier = "b", value = "yy")).toDF()
+    def cellsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("qualifier", "value").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val lenIs2 = FilterList.and(KeyOnlyFilter(lenAsVal = true),
+      ValueFilter(CompareOp.Equal, BinaryComparator("2")))
+    val mixed = FilterList.or(
+      FilterList.and(ValueFilter(CompareOp.Equal, BinaryComparator("x")), KeyOnlyFilter(lenAsVal = true)),
+      QualifierFilter(CompareOp.Equal, BinaryComparator("b")))
+    for ((f, want) <- Seq(lenIs2 -> Set(("b", "2")), mixed -> Set(("a", "1"), ("b", "yy")))) {
+      assert(!FilterCompiler.rowLocal(f), f)
+      assert(cellsOf(FilterCompiler(cells, f)) === want, f)
+      for (raw <- Seq(false, true))
+        assert(cellsOf(GTable.scanFiltered(cells, GScan(raw = raw), f)) === want, s"$f raw=$raw")
+    }
+  }
+
+  test("row-level filters keep the input's column order") {
+    for (f <- Seq(DependentColumnFilter("d", "o_orderstatus"), PageFilter(2),
+        FilterList.and(SkipFilter(ValueFilter(CompareOp.NotEqual, BinaryComparator("0"))),
+          WhileMatchFilter(PrefixFilter("0000000"))))) {
+      assert(FilterCompiler(co, f).columns.toSeq === co.columns.toSeq, f)
+    }
+  }
+
   test("checkAndMutate with an arbitrary Filter guard") {
     import graft.write.Mutations
     val guard = FilterList.or(
       SingleColumnValueFilter("d", "o_orderstatus", CompareOp.Equal,
         BinaryComparator("P"), filterIfMissing = true),
       RowFilter(CompareOp.Equal, RegexStringComparator("^000000000[0-4]$")))
-    val out = Mutations.checkAndMutate(co, guard,
-      hit => hit.withColumn("value", lit("HIT")))
-    val hitRows = out.filter(col("value") === "HIT")
-      .select("row").distinct().collect().map(_.getString(0)).toSet
-    assert(hitRows === rows(guard))
-    // unmatched rows flow through untouched
-    assert(out.count() === co.count())
+    // the second guard holds a PageFilter, so it takes the relational step
+    for (g <- Seq(guard, FilterList.or(guard, FilterList.and(PageFilter(12), SkipFilter(
+        ValueFilter(CompareOp.NotEqual, BinaryComparator("0"))))))) {
+      val out = Mutations.checkAndMutate(co, g,
+        hit => hit.withColumn("value", lit("HIT")))
+      val hitRows = out.filter(col("value") === "HIT")
+        .select("row").distinct().collect().map(_.getString(0)).toSet
+      assert(hitRows === rows(g))
+      // unmatched rows flow through untouched
+      assert(out.count() === co.count())
+    }
   }
 
   test("checkAndMutate timeRange restricts the check read, not the mutation") {

@@ -331,6 +331,38 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("a Page/WhileMatch-free filter tree of each kind is one pass over the cell store") {
+    import org.apache.spark.sql.execution.MapGroupsExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.filter._
+    import graft.read.{GScan, GTable}
+    val scvf = SingleColumnValueFilter("d", "o_orderstatus", CompareOp.Equal, BinaryComparator("F"))
+    val value = ValueFilter(CompareOp.Equal, SubstringComparator("URGENT"))
+    val trees = Seq(scvf,
+      SingleColumnValueExcludeFilter("d", "o_orderstatus", CompareOp.Equal, BinaryComparator("F")),
+      DependentColumnFilter("d", "o_orderstatus"), ColumnCountGetFilter(3),
+      ColumnPaginationFilter(2, 1), SkipFilter(value), KeyOnlyFilter(lenAsVal = true),
+      FirstKeyOnlyFilter(), FilterList.and(scvf, SkipFilter(value), KeyOnlyFilter()),
+      FilterList.or(scvf, FirstKeyOnlyFilter(), FilterList.and(value, ColumnCountGetFilter(1))))
+    for (f <- trees) {
+      val plans = Seq(
+        "scanFiltered" -> GTable.scanFiltered(store, GScan().withRange("0000000001", "0000000500"), f),
+        "raw scanFiltered" -> GTable.scanFiltered(store,
+          GScan(raw = true).withRange("0000000001", "0000000500"), f),
+        "admittedRows" -> FilterCompiler.admittedRows(store, f))
+      for ((name, df) <- plans) {
+        val phys = physical(df)
+        val clue = s"$name $f:\n$phys"
+        assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"one pass: $clue")
+        assert(phys.collect { case w: WindowExec => w }.isEmpty, s"no window: $clue")
+        assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"no broadcast: $clue")
+        assert(phys.collect { case j: BaseJoinExec => j }.isEmpty, s"no join: $clue")
+      }
+    }
+  }
+
   test("a Get over the cell store runs one job, an SCVF filtered scan at most three") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}

@@ -288,23 +288,50 @@ class ResolvePropertySpec extends SparkSpec {
       QualifierFilter(CompareOp.NotEqual, BinaryComparator("b")),
       ValueFilter(CompareOp.Equal, SubstringComparator("1")),
       FamilyFilter(CompareOp.Equal, BinaryComparator("d")))
-    // SCVF trees take the row gate inside the pass; per-cell trees the
-    // fused one-pass path; OR lists with an SCVF and raw scans stay on
-    // mask → filter tree → gate
-    def tree(): GFilter = rnd.nextInt(9) match {
-      case 0 | 1 => scvf()
-      case 2 => FilterList.and(scvf(), perCell())
-      case 3 => FilterList.and(perCell(), scvf())
-      case 4 => FilterList.and(perCell(), scvf(), perCell())
-      case 5 => FilterList.and(perCell(), FilterList.and(scvf(), scvf()))
-      case 6 => FilterList.and(perCell(), perCell())
-      case 7 => FilterList.or(scvf(), perCell())
-      case _ => FilterList.and(scvf(), SkipFilter(ValueFilter(CompareOp.NotEqual,
-        BinaryComparator("v3"))))
+    def rowLeaf(kind: Int = rnd.nextInt(11)): GFilter = kind match {
+      case 0 => scvf()
+      case 1 => DependentColumnFilter(pick("d", "e"), pick("a", "b"), rnd.nextBoolean(),
+        if (rnd.nextBoolean()) None else Some((CompareOp.NotEqual, BinaryComparator("v0"))))
+      case 2 => ColumnCountGetFilter(1 + rnd.nextInt(3))
+      case 3 => ColumnPaginationFilter(1 + rnd.nextInt(2), rnd.nextInt(2))
+      case 4 => SkipFilter(perCell())
+      case 5 => KeyOnlyFilter(rnd.nextBoolean())
+      case 6 => FirstKeyOnlyFilter()
+      case 7 => PageFilter(1 + rnd.nextInt(2))
+      case 8 => WhileMatchFilter(perCell())
+      case 9 => WhileMatchFilter(scvf())
+      case _ => FilterList.and(scvf(), rowLeaf(rnd.nextInt(10)))
+    }
+    def list(depth: Int): GFilter = {
+      val kids = (0 to rnd.nextInt(3)).map { _ =>
+        if (depth > 0 && rnd.nextInt(4) == 0) list(depth - 1)
+        else if (rnd.nextBoolean()) perCell() else rowLeaf()
+      }
+      if (rnd.nextBoolean()) FilterList.and(kids: _*) else FilterList.or(kids: _*)
+    }
+    // every kind alone and in AND/OR lists; trees without Page or
+    // WhileMatch take the program inside the pass, per-cell trees the
+    // fused cellFilter path, the others mask → filter tree → resolve
+    def tree(): GFilter = rnd.nextInt(12) match {
+      case 0 => scvf()
+      case 1 => FilterList.and(scvf(), perCell())
+      case 2 => FilterList.and(perCell(), scvf(), perCell())
+      case 3 => FilterList.and(perCell(), FilterList.and(scvf(), scvf()))
+      case 4 => FilterList.and(perCell(), perCell())
+      case 5 => FilterList.or(scvf(), perCell())
+      case 6 | 7 | 8 => rowLeaf()
+      case _ => list(1)
     }
     var hiddenNewest = 0
-    var gated = 0
-    (1 to 64).foreach { i =>
+    var programs = 0
+    val kinds = scala.collection.mutable.Set.empty[String]
+    def kindsOf(g: GFilter): Seq[String] = g match {
+      case FilterList(op, fs) => op.toString +: fs.flatMap(kindsOf)
+      case SkipFilter(inner) => "SkipFilter" +: kindsOf(inner)
+      case WhileMatchFilter(inner, _) => "WhileMatchFilter" +: kindsOf(inner)
+      case other => Seq(other.getClass.getSimpleName)
+    }
+    (1 to 112).foreach { i =>
       val cells = dense(genWide(rnd, dupPuts = rnd.nextBoolean(), putWeight = 12)
         .drop("vis", "seq", "batch_id"))
       def tr() = { val lo = 1L + rnd.nextInt(3); Resolve.TimeRange(lo, lo + 1 + rnd.nextInt(4)) }
@@ -315,19 +342,20 @@ class ResolvePropertySpec extends SparkSpec {
         ttlCutoff = if (rnd.nextBoolean()) Some(1L + rnd.nextInt(5)) else None,
         minVersions = rnd.nextInt(2), keepDeleted = rnd.nextBoolean(),
         filter = if (rnd.nextBoolean()) Some(col("value") =!= "7") else None,
-        reversed = rnd.nextInt(3) == 0, raw = rnd.nextInt(6) == 0,
+        reversed = rnd.nextInt(3) == 0, raw = if (i <= 22) i > 11 else rnd.nextInt(3) == 0,
         families = if (rnd.nextInt(4) == 0) Seq(pick("d", "e")) else Nil,
         maxResultsPerCf = if (paged) Some(1 + rnd.nextInt(3)) else None,
         rowOffsetPerCf = if (paged) rnd.nextInt(2) else 0)
-      val f = tree()
-      if (!s.raw && FilterCompiler.cellPredicate(f).isEmpty && FilterCompiler.rowGate(f).isDefined)
-        gated += 1
+      // the first 22 cases take each row-level kind once, raw and not
+      val f = if (i <= 22) rowLeaf((i - 1) % 11) else tree()
+      kinds ++= kindsOf(f).map(k => s"$k${if (s.raw) " raw" else ""}")
+      if (FilterCompiler.cellPredicate(f).isEmpty && FilterCompiler.rowLocal(f)) programs += 1
       val visible =
         if (s.raw) Resolve.timeRangePred(s.timeRange, s.cfTimeRanges).fold(cells)(cells.filter)
         else Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff, s.minVersions)
           .foldLeft(ResolveReference.maskedView(cells, s.timeRange, s.cfTimeRanges,
             s.keepDeleted))((df, p) => df.filter(p))
-      val tested = FilterCompiler(visible, f)
+      val tested = FilterReference(visible, FilterCompiler.withReversed(f, s.reversed))
       val projected =
         if (s.families.isEmpty) tested else tested.filter(col("family").isin(s.families: _*))
       val resolved =
@@ -346,8 +374,14 @@ class ResolvePropertySpec extends SparkSpec {
       if (!s.raw && newest(cells).join(newest(visible), Seq("row", "n"), "left_anti").count() > 0)
         hiddenNewest += 1
     }
-    info(s"$gated cases took the row gate, $hiddenNewest hid a newest tested version")
-    assert(gated >= 30, s"only $gated cases took the row gate")
+    info(s"$programs cases took the program, $hiddenNewest hid a newest tested version")
+    val every = Seq("SingleColumnValueFilter", "SingleColumnValueExcludeFilter",
+      "DependentColumnFilter", "ColumnCountGetFilter", "ColumnPaginationFilter", "SkipFilter",
+      "KeyOnlyFilter", "FirstKeyOnlyFilter", "PageFilter", "WhileMatchFilter", "MustPassAll",
+      "MustPassOne")
+    val missing = for (k <- every; raw <- Seq("", " raw") if !kinds(k + raw)) yield k + raw
+    assert(missing.isEmpty, s"no case of $missing")
+    assert(programs >= 50, s"only $programs cases took the program")
     assert(hiddenNewest >= 20, s"only $hiddenNewest cases hid a newest tested version")
   }
 

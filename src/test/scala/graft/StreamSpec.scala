@@ -857,24 +857,38 @@ class StreamSpec extends SparkSpec {
       Seq("part-00000.hfile"))
   }
 
-  test("overlapping q34/q60 runs never write the session conf: batch plans keep its partition count") {
+  /** Runs the declared bounded-stream queries `names` at once, with
+    * staggered starts, and checks the session conf (and the partition
+    * count a batch groupBy plans at) on a loop until they are done. */
+  private def assertOverlappingRunsKeepConf(names: Seq[String]): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     // (conf value, shuffle partitions a batch groupBy plans at) right now
     def observe(): (String, Int) = spark.conf.get("spark.sql.shuffle.partitions") ->
       exchangePartitions(spark.range(64).groupBy(col("id") % 5).count()).head
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val seen = scala.collection.mutable.Set[(String, Int)]()
     try {
-      val q34 = Future(SparkEntry.queries("q34_stream_window")(spark, sf0001).count())
-      Thread.sleep(200) // staggered, overlapping starts
-      val q60 = Future(SparkEntry.queries("q60_stream_stream_join")(spark, sf0001).count())
-      while (!(q34.isCompleted && q60.isCompleted)) { seen += observe(); Thread.sleep(5) }
-      assert(Await.result(q34, 5.minutes) > 0 && Await.result(q60, 5.minutes) > 0)
+      val runs = names.map { n =>
+        val run = Future(SparkEntry.queries(n)(spark, sf0001).count())
+        Thread.sleep(200) // staggered, overlapping starts
+        n -> run
+      }
+      while (!runs.forall(_._2.isCompleted)) { seen += observe(); Thread.sleep(5) }
+      for ((n, run) <- runs) assert(Await.result(run, 5.minutes) > 0, n)
     } finally pool.shutdown()
     assert(seen.nonEmpty)
     assert((seen += observe()) === Set("4" -> 4))
+  }
+
+  test("overlapping q34/q60 runs never write the session conf: batch plans keep its partition count") {
+    assertOverlappingRunsKeepConf(Seq("q34_stream_window", "q60_stream_stream_join"))
+  }
+
+  test("overlapping e33/q84/q88 runs, beside q34, never write the session conf either") {
+    assertOverlappingRunsKeepConf(
+      Seq("e33_stream_dedup", "q84_stream_backup", "q88_pwal_stream", "q34_stream_window"))
   }
 
   test("a failed bounded run leaves no checkpoint dir or sink view") {
