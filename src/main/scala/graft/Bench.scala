@@ -29,6 +29,20 @@ object Bench {
     def attempt(errors: collection.mutable.Map[String, String], name: String)(body: => Any) =
       try { body; () } catch { case e: Throwable => errors(name) = e.getClass.getSimpleName }
 
+    // iteration aids: SPARK_GRAFT_BENCH_ONLY=q1,q2 times (and warms) a
+    // subset; SPARK_GRAFT_BENCH_REPS=n overrides the repeat count.
+    //
+    // REPS defaults to 3 and the record is SELF-DEFENDING: "queries"
+    // and "value" report per-query MINIMA across reps (the contention
+    // control — a one-off noisy pass on a contended box cannot
+    // masquerade as plan drift), while "reps" carries every raw
+    // per-rep map so the noise itself stays auditable in one line.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
+    val bench = only.fold(SparkEntry.queries)(names =>
+      SparkEntry.queries.filter { case (n, _) => names(n) })
+
     val warmupDir = sys.env.get("SPARK_GRAFT_WARMUP_DIR")
       .orElse(Some("/root/testdata/sf0.001").filter(d =>
         d != sfDir && new java.io.File(d).isDirectory))
@@ -39,7 +53,7 @@ object Bench {
     // otherwise adds ~60-90 s of wall time and inflates rep-1 totals.
     warmupDir.foreach { d =>
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      SparkEntry.queries.toSeq
+      bench.toSeq
         .map { case (name, fn) =>
           pool.submit(new Runnable {
             def run(): Unit = attempt(warmupErrors, name)(fn(spark, d).count())
@@ -95,19 +109,6 @@ object Bench {
     loads.foreach { case (name, load) => attempt(loadErrors, name)(load()) }
     val loadS = (System.nanoTime() - l0) / 1e9
 
-    // iteration aids: SPARK_GRAFT_BENCH_ONLY=q1,q2 times a subset;
-    // SPARK_GRAFT_BENCH_REPS=n overrides the repeat count.
-    //
-    // REPS defaults to 3 and the record is SELF-DEFENDING: "queries"
-    // and "value" report per-query MINIMA across reps (the contention
-    // control — a one-off noisy pass on a contended box cannot
-    // masquerade as plan drift), while "reps" carries every raw
-    // per-rep map so the noise itself stays auditable in one line.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
-    val bench = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) })
 
     // a failing query must be VISIBLE in the bench record (it would
     // otherwise read as a fast time): timing stays numeric for the
@@ -173,7 +174,7 @@ object Bench {
     }
     val harness = Seq(
       errJson("load", loadErrors, loads.map(_._1)),
-      errJson("warmup", warmupErrors, SparkEntry.queries.keys.toSeq),
+      errJson("warmup", warmupErrors, bench.keys.toSeq),
       s""""shuffle_partitions":$shufflePartitions""").mkString(",")
     try {
       val sidecar = java.nio.file.Paths.get(

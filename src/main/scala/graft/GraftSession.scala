@@ -18,9 +18,10 @@ object GraftSession {
       .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      // the cell store is hash-partitioned on row (a subset of every
-      // cell-coordinate join key); allow subset co-partitioning so those
-      // joins reuse the stored layout instead of re-exchanging
+      // the cell stores are partitioned on row (a subset of every
+      // cell-coordinate join key); allow subset co-partitioning so the
+      // joins of two hash-laid-out stores reuse the stored layout
+      // instead of re-exchanging
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

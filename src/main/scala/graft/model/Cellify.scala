@@ -152,28 +152,44 @@ object CellStore {
 object Fixtures {
   import Cellify._
 
-  /** The orders five-qualifier cell mapping — ONE definition shared by
-    * cells_orders and the mutated replica fixture, so a qualifier
-    * change cannot desynchronize them and surface as phantom Q29/Q30
-    * diff classes. */
+  /** The orders five-qualifier cell mapping, in qualifier order — ONE
+    * definition shared by cells_orders and the mutated replica fixture,
+    * so a qualifier change cannot desynchronize them and surface as
+    * phantom Q29/Q30 diff classes. */
   private def ordersQuals: Seq[(String, org.apache.spark.sql.Column)] = Seq(
     "o_custkey"       -> col("o_custkey"),
-    "o_orderstatus"   -> col("o_orderstatus"),
-    "o_totalprice"    -> money(col("o_totalprice")),
     "o_orderdate"     -> tsStr(col("o_orderdate")),
-    "o_orderpriority" -> col("o_orderpriority")
+    "o_orderpriority" -> col("o_orderpriority"),
+    "o_orderstatus"   -> col("o_orderstatus"),
+    "o_totalprice"    -> money(col("o_totalprice"))
   )
 
-  /** Region-style storage layout for a materialized cell table:
-    * hash-partitioned on the row key and sorted within partitions on
-    * the cell coordinate — the HBase region/HFile layout. Downstream
-    * row-keyed joins, windows, and groupBys then satisfy their
+  /** Hash layout for a materialized cell table: hash-partitioned on
+    * the row key and sorted within partitions on the cell coordinate.
+    * Row-keyed joins, windows and groupBys satisfy their
     * ClusteredDistribution from the cache (partitioning on a SUBSET of
-    * the keys clusters the superset), so q06-style resolves and the
-    * sync/verify diffs plan with zero extra exchanges. */
-  private def regionLayout(df: DataFrame, key: Column, sort: Column*): DataFrame =
+    * the keys clusters the superset), and two tables hashed on the same
+    * key into the same count are co-partitioned, so a join between them
+    * (the sync/verify diffs) plans with no exchange. */
+  private def hashLayout(df: DataFrame, key: Column, sort: Column*): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
       .sortWithinPartitions(sort: _*)
+
+  /** Region layout for a cell table built from a narrow source, the
+    * HBase layout: each partition holds one contiguous range of row keys
+    * (a region) in cell order (an HFile). The source rows are
+    * range-partitioned and sorted on their row key BEFORE they explode
+    * into cells, so the split-point sampling and the sort read one
+    * narrow row per table row, and `cellify` then emits each row's
+    * cells in qualifier order. Row-keyed groupBys, windows and the
+    * resolve pass satisfy their ClusteredDistribution(row) from the
+    * cache, and forward scans over it sort locally
+    * ([[graft.read.Resolve.rowRanged]]). Spark never co-partitions two
+    * range layouts, so a join of this table with another re-exchanges
+    * one side. */
+  private def rangeLayout(df: DataFrame, key: String): DataFrame =
+    df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, col(key))
+      .sortWithinPartitions(key)
 
   def orders(spark: SparkSession, sfDir: String): DataFrame =
     Tables.load(spark, s"$sfDir/orders.parquet")
@@ -266,20 +282,25 @@ object Fixtures {
 
   def events(spark: SparkSession, sfDir: String): DataFrame =
     CellStore.materialize(spark, "events", sfDir)(
-      regionLayout(
+      hashLayout(
         eventsRaw(spark, sfDir),
         col("user_id"), col("user_id"), col("ts"), col("event_id")))
 
-  /** cells_orders — single-version cell view of `orders`. */
+  /** cells_orders — single-version cell view of `orders`, in the
+    * region layout ([[rangeLayout]]): the store the read path serves. */
   def cellsOrders(spark: SparkSession, sfDir: String): DataFrame =
     CellStore.materialize(spark, "cells_orders", sfDir) {
-    val o = orders(spark, sfDir)
-    regionLayout(cellify(
-      o,
-      rowKey = padKey(col("o_orderkey")),
+    // the one parquet scan feeds the range exchange directly: the
+    // exchange spreads the cellify work, so `Tables.load`'s parallelism
+    // repair would only add a shuffle
+    val narrow = spark.read.parquet(s"$sfDir/orders.parquet").select(
+      padKey(col("o_orderkey")).as("row") +: ordersQuals.map { case (q, v) => v.as(q) }: _*)
+    cellify(
+      rangeLayout(narrow, "row"),
+      rowKey = col("row"),
       family = "d",
-      quals = ordersQuals
-    ), col("row"), col("row"), col("family"), col("qualifier"))
+      quals = ordersQuals.map { case (q, _) => q -> col(q) }
+    )
   }
 
   /** cells_events_v — multi-version + tombstone fixture from `events`.
@@ -330,7 +351,7 @@ object Fixtures {
         col("t.type").as("type"),
         lit(null).cast(StringType).as("value")
       )
-    regionLayout(puts.unionByName(tombs),
+    hashLayout(puts.unionByName(tombs),
       col("row"), col("row"), col("family"), col("qualifier"), col("ts").desc)
   }
 
@@ -357,7 +378,7 @@ object Fixtures {
       family = "d",
       quals = ordersQuals
     )
-    regionLayout(base.unionByName(extra),
+    hashLayout(base.unionByName(extra),
       col("row"), col("row"), col("family"), col("qualifier"))
   }
 

@@ -62,11 +62,15 @@ object GTable {
     * total cell order. All predicates are plain `Column`s → Catalyst
     * pushes them into the source scan before the (optional) resolve.
     */
-  def scan(cells: DataFrame, s: GScan): DataFrame = scan(cells, s, None)
+  def scan(cells: DataFrame, s: GScan): DataFrame = scan(cells, s, None, Resolve.rowRanged(cells))
 
   /** [[scan]] with a row-local filter tree decided inside the pass
-    * ([[graft.filter.FilterCompiler.program]]). */
-  private def scan(cells: DataFrame, s: GScan, tree: Option[GFilter]): DataFrame = {
+    * ([[graft.filter.FilterCompiler.program]]), over `cells` that keep a
+    * row-ranged store's layout ([[Resolve.rowRanged]]) when `ranged`.
+    * Callers check the frame they were given, whose cache lookup the
+    * Dataset keeps, rather than a per-call frame derived from it. */
+  private def scan(cells: DataFrame, s: GScan, tree: Option[GFilter],
+      ranged: Boolean): DataFrame = {
     val rangePreds: Seq[Column] = rangePredsOf(s)
     // Projection UNIONS family and column selections (addFamily +
     // addColumn build one family→qualifiers map, Scan.java:269,282):
@@ -111,11 +115,11 @@ object GTable {
     val pruned = (rangePreds ++ projPreds).foldLeft(cells)((df, p) => df.filter(p))
     val resolved =
       if (s.raw) {
-        val ranged = (Resolve.timeRangePred(s.timeRange, s.cfTimeRanges) ++ cellFilter)
+        val timed = (Resolve.timeRangePred(s.timeRange, s.cfTimeRanges) ++ cellFilter)
           .foldLeft(pruned)((df, p) => df.filter(p))
         if (paged || program.isDefined)
-          Resolve.rawPass(ranged, program, s.rowOffsetPerCf, s.maxResultsPerCf)
-        else ranged
+          Resolve.rawPass(timed, program, s.rowOffsetPerCf, s.maxResultsPerCf)
+        else timed
       } else
         Resolve.latest(pruned, s.maxVersions, s.timeRange,
           ttlCutoff = s.ttlCutoff, cellFilter = cellFilter,
@@ -123,19 +127,23 @@ object GTable {
           keepDeleted = s.keepDeleted, program = program,
           cfOffset = s.rowOffsetPerCf, cfLimit = s.maxResultsPerCf)
     // A Get's one row leaves the pass in one partition (the pass
-    // clusters on row), so a local sort gives the total order and the
-    // read plans no range-sort exchange.
+    // clusters on row). Over a row-ranged store the cells stay in the
+    // store's partitions, whose index order is key order. Either way a
+    // local sort gives the total order and the read plans no range-sort
+    // exchange. A reversed scan would need the partitions in the
+    // opposite order, so it keeps the range sort.
     val point = !s.raw && s.limit.isEmpty && s.startRow.isDefined &&
       s.startRow == s.stopRow && s.startInclusive && s.stopInclusive
-    val ordered =
-      if (point) resolved.sortWithinPartitions(cellOrder(s.reversed): _*)
-      else resolved.orderBy(cellOrder(s.reversed): _*)
-    // limit counts table ROWS (Scan.setLimit, Scan.java:958), not cells
+    def sorted(df: DataFrame): DataFrame =
+      if (point || (ranged && !s.reversed)) df.sortWithinPartitions(cellOrder(s.reversed): _*)
+      else df.orderBy(cellOrder(s.reversed): _*)
+    val ordered = sorted(resolved)
+    // limit counts table ROWS (Scan.setLimit, Scan.java:958), not cells;
+    // the broadcast semi-join keeps the streamed side's partitions
     s.limit.fold(ordered) { n =>
       val keep = ordered.select("row").distinct()
         .orderBy(if (s.reversed) col("row").desc else col("row").asc).limit(n)
-      ordered.join(broadcast(keep), Seq("row"), "left_semi")
-        .orderBy(cellOrder(s.reversed): _*)
+      sorted(ordered.join(broadcast(keep), Seq("row"), "left_semi"))
     }
   }
 
@@ -158,7 +166,7 @@ object GTable {
     * batches and needs no broadcast. */
   def multiGet(cells: DataFrame, keys: DataFrame, s: GScan = GScan()): DataFrame =
     scan(cells.filter(col("row").isin(keys.select(keys.columns.head).collect()
-      .map(_.get(0)).toSeq: _*)), s)
+      .map(_.get(0)).toSeq: _*)), s, None, Resolve.rowRanged(cells))
 
   /** Scan with a [[graft.filter.GFilter]] tree — the Scan.setFilter
     * path. The scan's reversed-ness propagates into the tree before
@@ -184,27 +192,28 @@ object GTable {
     // scan boundaries (a PageFilter counts rows within the range, not
     // the table), then the filtered set flows through the normal scan
     // (the residual range predicates there are no-ops)
-    val ranged = rangePredsOf(s).foldLeft(cells)((df, p) => df.filter(p))
+    val inRange = rangePredsOf(s).foldLeft(cells)((df, p) => df.filter(p))
     FilterCompiler.cellPredicate(tree) match {
       // a per-cell tree neither reads other cells nor touches markers,
       // so it commutes with delete tracking: it rides the resolve's
       // cellFilter slot (still before the version gate) and the scan
       // stays one pass
-      case Some(p) => scan(ranged, s.copy(filter = Some(s.filter.fold(p)(_ && p))))
+      case Some(p) =>
+        scan(inRange, s.copy(filter = Some(s.filter.fold(p)(_ && p))), None, Resolve.rowRanged(cells))
       // a scan filter must see the values the tree's KeyOnly rewrote
       case None if FilterCompiler.rowLocal(tree) && (s.filter.isEmpty || !FilterCompiler.transforms(tree)) =>
-        scan(ranged, s, Some(tree))
+        scan(inRange, s, Some(tree), Resolve.rowRanged(cells))
       case None =>
         // raw skips masking and TTL (as scan()'s raw branch does) but
         // not the time range
         val visible =
           if (s.raw)
-            Resolve.timeRangePred(s.timeRange, s.cfTimeRanges).fold(ranged)(ranged.filter)
+            Resolve.timeRangePred(s.timeRange, s.cfTimeRanges).fold(inRange)(inRange.filter)
           else
             Resolve.preGatePreds(s.timeRange, s.cfTimeRanges, s.ttlCutoff, s.minVersions)
-              .foldLeft(Resolve.maskedView(ranged, s.timeRange, s.cfTimeRanges,
+              .foldLeft(Resolve.maskedView(inRange, s.timeRange, s.cfTimeRanges,
                 s.keepDeleted))((df, p) => df.filter(p))
-        scan(FilterCompiler(visible, tree), s)
+        scan(FilterCompiler(visible, tree), s, None, ranged = false)
     }
   }
 

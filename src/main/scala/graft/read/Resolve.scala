@@ -3,6 +3,10 @@ package graft.read
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VisKernel
@@ -28,14 +32,16 @@ import graft.model.CellType
   * reference's StoreScanner feeds ScanQueryMatcher, so state is bounded
   * by one family's markers (and, under a filter program, by the row's
   * live cells it holds back), never by the table. The grouping needs
-  * only ClusteredDistribution(row): the materialized cell store is
-  * already hash-partitioned on row, so over it the pass plans with no
-  * exchange and no broadcast; unclustered inputs (replica parquet,
-  * unions) take exactly one row exchange, which
+  * only ClusteredDistribution(row): the materialized cell stores are
+  * already partitioned on row (by range or by hash), so over them the
+  * pass plans with no exchange and no broadcast; unclustered inputs
+  * (replica parquet, unions) take exactly one row exchange, which
   * [[Resolve.sizedShufflePartitions]] sizes when the input would
-  * spill. The pass registers no planner strategy and touches no
-  * session state. Its output is the surviving Puts in the input's
-  * schema, each row's cells in one partition. The same pass also runs
+  * spill. Over a row-ranged store ([[rowRanged]]) the pass keeps the
+  * store's partitions, so its output is in key order by partition.
+  * The pass registers no planner strategy and touches no session
+  * state. Its output is the surviving Puts in the input's schema, each
+  * row's cells in one partition. The same pass also runs
   * a row-local filter tree ([[RowProgram]]: the reference's per-row
   * Filter visitor, `filterRow` on the assembled row included) between
   * masking and the version gate, and per-family pagination after it, so
@@ -175,6 +181,36 @@ object Resolve {
       // need it
       val n = ((size + target - 1) / target).min(4096).toInt
       if (n > conf.numShufflePartitions) Some(n) else None
+    }
+  }
+
+  /** Whether `cells` reads, through filters and projections alone, a
+    * materialized store range-partitioned on `row` ascending and on
+    * nothing else. The pass keeps that layout (range partitioning meets
+    * its ClusteredDistribution(row)), so each partition holds one key
+    * range, partition index order is key order, and a local sort gives
+    * the total cell order. The layout is read off the scan node the
+    * planner puts over the cached relation: the adaptive root of the
+    * read reports no partitioning, and neither does a store whose
+    * cached plan has not run yet, nor any other input. The check finds
+    * cached data the way planning does, with no optimizer pass. */
+  private[graft] def rowRanged(cells: DataFrame): Boolean = {
+    val plan = cells.queryExecution.withCachedData
+    @scala.annotation.tailrec
+    def store(p: LogicalPlan): Option[InMemoryRelation] = p match {
+      case r: InMemoryRelation => Some(r)
+      case f: Filter => store(f.child)
+      case pr: Project => store(pr.child)
+      case _ => None
+    }
+    (plan.output.find(_.name == "row"), store(plan)) match {
+      case (Some(row), Some(r)) =>
+        InMemoryTableScanExec(r.output, Nil, r).outputPartitioning match {
+          case RangePartitioning(Seq(SortOrder(a: Attribute, Ascending, _, _)), _) =>
+            a.exprId == row.exprId
+          case _ => false
+        }
+      case _ => false
     }
   }
 
@@ -322,7 +358,7 @@ object Resolve {
     * pass deterministic: of two Puts with one (column, ts), the version
     * gate keeps the larger value, as the WAL sink's duplicate collapse
     * and the SCVF verdict do. The grouping's ClusteredDistribution(row)
-    * is met by the cell store's row-hash layout with no exchange; any
+    * is met by the cell stores' row layouts with no exchange; any
     * other input takes exactly one row exchange, sized by
     * [[sizedShufflePartitions]] when the default count would spill.
     * Returns the surviving cells with `cells`' schema. */
@@ -339,8 +375,12 @@ object Resolve {
     // exchange's per-partition share grows with input (the r16 sf10 soak
     // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
     // from shuffle/sort spill), so a large input is pre-partitioned on
-    // row with a size-derived count that the grouping then reuses
-    val in = sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row")))
+    // row with a size-derived count that the grouping then reuses. A
+    // row-ranged store needs no exchange, and one would lose its key
+    // order across partitions, which the scans' local sort relies on.
+    val in =
+      if (rowRanged(cells)) cells
+      else sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row")))
     in.groupBy(col("row")).as[String, Row](Encoders.STRING, Encoders.row(s))
       .flatMapSortedGroups(col("family"),
         !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),

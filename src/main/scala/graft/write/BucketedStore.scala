@@ -5,14 +5,22 @@ import org.apache.spark.sql.functions._
 
 /** The at-scale persistence of the canonical cell store: bucketed
   * parquet, hashed on the row key and sorted on the cell coordinate —
-  * the durable twin of the in-session `CellStore` layout and of the
-  * reference's region/HFile organization (regions partition the key
-  * space; HFiles are coordinate-sorted). Readers of a bucketed table
-  * get the partitioning from metadata, so cell-coordinate joins
-  * (SyncTable/VerifyReplication diffs), per-row groupBys, and resolve
-  * windows plan with NO exchange over the store — at 100 TB that is
-  * the difference between a region-aligned merge and re-shuffling the
-  * whole table per query.
+  * the reference's region/HFile organization as far as Spark bucketing
+  * reaches (regions partition the key space; HFiles are
+  * coordinate-sorted). Readers of a bucketed table get the
+  * partitioning from metadata, so cell-coordinate joins
+  * (SyncTable/VerifyReplication diffs), per-row groupBys, and the
+  * resolve pass plan with NO exchange over the store — at 100 TB that
+  * is the difference between a bucket-aligned merge and re-shuffling
+  * the whole table per query.
+  *
+  * It differs from the in-session `cells_orders` store, which holds
+  * one contiguous key RANGE per partition (`Fixtures.cellsOrders`).
+  * Spark bucketing is hash-only, so a bucket holds scattered keys and
+  * bucket order is not key order: a scan over this table still takes
+  * the range-sort exchange for its total order. In exchange, two tables
+  * bucketed alike are co-partitioned, which two range layouts never
+  * are.
   */
 object BucketedStore {
 

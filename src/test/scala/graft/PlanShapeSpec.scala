@@ -257,40 +257,105 @@ class PlanShapeSpec extends SparkSpec {
     }
 
   // materialized first, as every reader of the store finds it: the
-  // cached plan's row-hash partitioning is known once it has run
+  // cached plan's row-range partitioning is known once it has run
   private lazy val store = {
     val cells = graft.model.Fixtures.cellsOrders(spark, sf0001)
     cells.count()
     cells
   }
 
-  test("get plans no exchange, scan and multiGet one range sort over the cell store") {
-    // the one-pass resolve groups by row, which the store's row-hash
-    // layout already satisfies: no mask broadcasts, no rank window. A
-    // Get's one row then sits in one partition and sorts locally; the
-    // only shuffle left in a scan is the range sort of the cell order
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+  private def shuffles(phys: org.apache.spark.sql.execution.SparkPlan) =
+    phys.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+
+  // no mask broadcast, no rank window and no exchange of any kind
+  private def assertNoExchange(name: String, df: DataFrame) = {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
-    import graft.read.{GScan, GTable}
+    val phys = physical(df)
+    assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"$name: no broadcast:\n$phys")
+    assert(phys.collect { case w: WindowExec => w }.isEmpty, s"$name: no window:\n$phys")
+    assert(shuffles(phys).isEmpty, s"$name: no exchange:\n$phys")
+    phys
+  }
+
+  test("get, scan, raw scan and multiGet plan no exchange over the cell store") {
+    // the one-pass resolve groups by row, which the store's row-range
+    // layout already satisfies: no mask broadcasts, no rank window. The
+    // pass keeps the store's partitions, whose index order is key
+    // order, so every forward read sorts locally
+    import graft.read.{GScan, GTable, Resolve}
     import spark.implicits._
-    val cases = Seq(
-      "get" -> GTable.get(store, "0000000007"),
-      "paged get" -> GTable.get(store, "0000000007", GScan(maxResultsPerCf = Some(2))),
-      "scan" -> GTable.scan(store, GScan().withRange("0000000001", "0000000100")),
-      "multiGet" -> GTable.multiGet(store,
-        Seq("0000000007", "0000000123", "0000000456").toDF("row")))
-    for ((name, df) <- cases) {
-      val phys = physical(df)
-      assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty,
-        s"$name: no broadcast:\n$phys")
-      assert(phys.collect { case w: WindowExec => w }.isEmpty, s"$name: no window:\n$phys")
-      val shuffles = phys.collect { case e: ShuffleExchangeExec => e }
-      if (name.endsWith("get")) assert(shuffles.isEmpty, s"$name: no exchange:\n$phys")
-      else assert(shuffles.size === 1 &&
-        shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning],
-        s"$name: exactly the final range sort:\n$phys")
+    assert(Resolve.rowRanged(store) && Resolve.rowRanged(store.filter(col("row") > "0")))
+    val range = GScan().withRange("0000000001", "0000000500")
+    for ((name, df) <- Seq(
+        "get" -> GTable.get(store, "0000000007"),
+        "paged get" -> GTable.get(store, "0000000007", GScan(maxResultsPerCf = Some(2))),
+        "scan" -> GTable.scan(store, range),
+        "raw scan" -> GTable.scan(store, range.copy(raw = true)),
+        "multiGet" -> GTable.multiGet(store,
+          Seq("0000000007", "0000000123", "0000000456").toDF("row"))))
+      assertNoExchange(name, df)
+  }
+
+  test("an SCVF filtered scan over the cell store decides its filter in the pass") {
+    // the row filter runs as a per-row program inside the one resolve
+    // pass: one MapGroupsExec, and the store's layout spares every exchange
+    import org.apache.spark.sql.execution.MapGroupsExec
+    import graft.filter.ParseFilter
+    import graft.read.{GScan, GTable}
+    val range = GScan().withRange("0000000001", "0000000500")
+    val scvf = "SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')"
+    for ((name, f) <- Seq(
+        "SCVF scan" -> scvf,
+        "SCVF and per-cell scan" -> s"$scvf AND ValueFilter(=, 'substring:URGENT')",
+        "per-cell scan" -> "ValueFilter(=, 'substring:URGENT')")) {
+      val phys = assertNoExchange(name, GTable.scanFiltered(store, range, ParseFilter.parse(f)))
+      if (name.startsWith("SCVF"))
+        assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"$name: one pass:\n$phys")
     }
+  }
+
+  test("a reversed scan, or one over a hash-laid-out or unmaterialized copy, plans one range sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import graft.read.{GScan, GTable, Resolve}
+    val range = GScan().withRange("0000000001", "0000000500")
+    val hashed = store.repartition(4, col("row")).persist()
+    val unrun = store.repartitionByRange(4, col("row")).persist()
+    try {
+      hashed.count()
+      assert(!Resolve.rowRanged(hashed) && !Resolve.rowRanged(unrun))
+      for ((name, df) <- Seq(
+          "reversed" -> GTable.scan(store, range.copy(reversed = true)),
+          "hash-laid-out" -> GTable.scan(hashed, range),
+          "unmaterialized" -> GTable.scan(unrun, range))) {
+        val phys = physical(df)
+        val ranges = shuffles(phys).filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+        assert(ranges.size === 1, s"$name: exactly the final range sort:\n$phys")
+        // the unmaterialized copy reports no layout yet, so the pass
+        // takes its one row exchange too
+        assert(shuffles(phys).size === (if (name == "unmaterialized") 2 else 1),
+          s"$name:\n$phys")
+      }
+    } finally { hashed.unpersist(); unrun.unpersist() }
+  }
+
+  test("sync and verify diffs re-exchange only the row-ranged side on row") {
+    // cells_orders_mut stays hash-laid-out: Spark co-partitions no range
+    // layout with another child, so each row join re-exchanges its
+    // row-ranged side into the hashed side's layout — the digest join
+    // the ranged per-row summaries, the sync's divergent-row semi-join
+    // the ranged cells. Two ranged sides would re-exchange both.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import graft.flow.Jobs
+    val mut = graft.model.Fixtures.cellsOrdersMut(spark, sf0001)
+    mut.count()
+    def rowExchanges(df: DataFrame) = shuffles(physical(df)).count(_.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map(_.sql) == Seq("row")
+      case _ => false
+    })
+    assert(rowExchanges(Jobs.verifyReplication(store, mut)) === 1)
+    assert(rowExchanges(Jobs.syncDiffCounts(store, mut)) === 2)
   }
 
   test("a Get over unclustered parquet plans exactly one row exchange") {
@@ -307,28 +372,6 @@ class PlanShapeSpec extends SparkSpec {
         case _ => false
       }), s"one hashpartitioning(row) exchange:\n$phys")
     } finally Queries.deleteTree(root)
-  }
-
-  test("an SCVF filtered scan over the cell store decides its filter in the pass") {
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.MapGroupsExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.window.WindowExec
-    import graft.filter.ParseFilter
-    import graft.read.{GScan, GTable}
-    for (f <- Seq("SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')",
-        "SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F') AND " +
-          "ValueFilter(=, 'substring:URGENT')")) {
-      val phys = physical(GTable.scanFiltered(store,
-        GScan().withRange("0000000001", "0000000500"), ParseFilter.parse(f)))
-      assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"one pass:\n$phys")
-      assert(phys.collect { case w: WindowExec => w }.isEmpty, s"no window:\n$phys")
-      assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"no broadcast:\n$phys")
-      val shuffles = phys.collect { case e: ShuffleExchangeExec => e }
-      assert(shuffles.size === 1 &&
-        shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning],
-        s"exactly the final range sort:\n$phys")
-    }
   }
 
   test("a Page/WhileMatch-free filter tree of each kind is one pass over the cell store") {
@@ -363,7 +406,7 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("a Get over the cell store runs one job, an SCVF filtered scan at most three") {
+  test("a Get, scan, multiGet and filtered scan over the cell store each run one job") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     import graft.filter.ParseFilter
@@ -393,14 +436,20 @@ class PlanShapeSpec extends SparkSpec {
       started.clear()
       n
     }
+    import spark.implicits._
     sc.addSparkListener(listener)
     try {
       store
-      assert(jobs("get")(GTable.get(store, "0000000007").collect()) === 1)
-      val scvf = ParseFilter.parse("SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')")
-      val n = jobs("scvf")(GTable.scanFiltered(store,
-        GScan().withRange("0000000001", "0000000500"), scvf).collect())
-      assert(n >= 1 && n <= 3, s"$n jobs")
+      val range = GScan().withRange("0000000001", "0000000500")
+      val keys = Seq("0000000007", "0000000123", "0000000456").toDF("row")
+      def filtered(f: String) = GTable.scanFiltered(store, range, ParseFilter.parse(f))
+      for ((op, df) <- Seq(
+          "get" -> GTable.get(store, "0000000007"),
+          "scan" -> GTable.scan(store, range),
+          "multiGet" -> GTable.multiGet(store, keys),
+          "scvf" -> filtered("SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')"),
+          "per-cell" -> filtered("ValueFilter(=, 'substring:URGENT')")))
+        assert(jobs(op)(df.collect()) === 1, op)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.filter.{FilterCompiler, ParseFilter}
@@ -413,6 +414,87 @@ class ResolvePropertySpec extends SparkSpec {
           s"get $clue")
     }
   }
+
+  test("reads over a row-ranged store equal the same cells hash-laid-out, cell order included") {
+    import graft.filter._
+    val rnd = new Random(3131)
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+    // thirty rows over four partitions, one cell per coordinate (so the
+    // cell order is total), a quarter markers and a few null values
+    val keys = (0 until 30).map(i => f"r$i%02d")
+    val cells = (for {
+      r <- keys; f <- fams; q <- quals :+ ""; ts <- 1L to 3L if rnd.nextInt(3) > 0
+    } yield {
+      val t = if (q == "") pick(CellType.DeleteFamily, CellType.DeleteFamilyVersion)
+        else if (rnd.nextInt(6) == 0) pick(CellType.Delete, CellType.DeleteColumn)
+        else CellType.Put
+      GCell(r, f, q, ts, t, if (rnd.nextInt(12) == 0) null else s"v${rnd.nextInt(4)}")
+    }).filter(c => c.qualifier != "" || rnd.nextInt(8) == 0).toDF()
+    val order = GTable.cellOrder()
+    val ranged = cells.repartitionByRange(4, col("row")).sortWithinPartitions(order: _*).persist()
+    val hashed = cells.repartition(4, col("row")).sortWithinPartitions(order: _*).persist()
+    try {
+      ranged.count(); hashed.count()
+      assert(Resolve.rowRanged(ranged) && !Resolve.rowRanged(hashed))
+      assert(ranged.rdd.getNumPartitions === 4)
+      def perCell(): GFilter = pick(ValueFilter(CompareOp.NotEqual, BinaryComparator("v0")),
+        QualifierFilter(CompareOp.NotEqual, BinaryComparator("b")),
+        ValueFilter(CompareOp.Equal, SubstringComparator("1")), PrefixFilter(s"r${rnd.nextInt(3)}"))
+      def rowLeaf(): GFilter = pick(
+        SingleColumnValueFilter("d", pick("a", "b"), CompareOp.Equal, BinaryComparator("v1"),
+          rnd.nextBoolean(), rnd.nextBoolean()),
+        SingleColumnValueExcludeFilter("e", "a", CompareOp.NotEqual, BinaryComparator("v0")),
+        ColumnCountGetFilter(1 + rnd.nextInt(3)), ColumnPaginationFilter(2, rnd.nextInt(2)),
+        FirstKeyOnlyFilter(), KeyOnlyFilter(rnd.nextBoolean()), SkipFilter(perCell()),
+        PageFilter(1 + rnd.nextInt(4)), WhileMatchFilter(perCell()))
+      def tree(): GFilter = rnd.nextInt(4) match {
+        case 0 => perCell()
+        case 1 => rowLeaf()
+        case _ => (if (rnd.nextBoolean()) FilterList.and _ else FilterList.or _)(
+          Seq.fill(2 + rnd.nextInt(2))(if (rnd.nextBoolean()) perCell() else rowLeaf()))
+      }
+      def key() = keys(rnd.nextInt(keys.size))
+      var local = 0
+      (1 to 60).foreach { i =>
+        val paged = rnd.nextInt(4) == 0
+        val (lo, hi) = Seq(key(), key()).sorted match { case Seq(a, b) => (a, b) }
+        val s = GScan(
+          startRow = if (rnd.nextInt(4) > 0) Some(lo) else None,
+          stopRow = if (rnd.nextInt(4) > 0) Some(hi) else None,
+          startInclusive = rnd.nextInt(4) > 0, stopInclusive = rnd.nextBoolean(),
+          rowPrefix = if (rnd.nextInt(6) == 0) Some(s"r${rnd.nextInt(3)}") else None,
+          reversed = rnd.nextInt(4) == 0, raw = rnd.nextInt(4) == 0,
+          families = if (rnd.nextInt(4) == 0) Seq(pick("d", "e")) else Nil,
+          maxVersions = 1 + rnd.nextInt(3),
+          timeRange = if (rnd.nextInt(4) == 0) Some(Resolve.TimeRange(2, 4)) else None,
+          limit = if (rnd.nextInt(4) == 0) Some(1 + rnd.nextInt(5)) else None,
+          maxResultsPerCf = if (paged) Some(1 + rnd.nextInt(3)) else None,
+          rowOffsetPerCf = if (paged) rnd.nextInt(2) else 0)
+        val (name, read): (String, DataFrame => DataFrame) = rnd.nextInt(3) match {
+          case 0 => ("scan", GTable.scan(_, s))
+          case 1 =>
+            val f = tree()
+            (s"scanFiltered $f", GTable.scanFiltered(_, s, f))
+          case _ =>
+            val ks = Seq.fill(1 + rnd.nextInt(8))(key()).distinct
+            (s"multiGet $ks", GTable.multiGet(_, ks.toDF("row"), s.copy(startRow = None,
+              stopRow = None, rowPrefix = None)))
+        }
+        val got = read(ranged)
+        if (!s.reversed && physical(got).collect { case e: ShuffleExchangeExec => e }.isEmpty)
+          local += 1
+        assert(got.collect().toSeq === read(hashed).collect().toSeq, s"case $i $name scan=$s")
+      }
+      info(s"$local of 60 cases sorted locally")
+      assert(local >= 25, s"only $local cases sorted locally")
+    } finally { ranged.unpersist(); hashed.unpersist() }
+  }
+
+  private def physical(df: DataFrame): org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
 
   test("equal-ts Puts resolve to the larger value under any input partitioning") {
     // each column holds Puts that tie on ts and differ in value; the two
