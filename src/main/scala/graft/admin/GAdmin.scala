@@ -716,15 +716,7 @@ object GAdmin {
     * rollbackState deletes the new table's regions; the snapshot
     * source is never touched, so a retry is always clean). */
   def cloneSnapshot(spark: SparkSession, snapPath: String, newName: String,
-      path: String, buckets: Int = 16): Unit =
-    cloneSnapshotImpl(spark, snapPath, newName, path, buckets,
-      crashMidClone = false)
-
-  /** Injected-crash twin of [[cloneSnapshot]]: dies after the journal
-    * and a partial store artifact, before the catalog commit. */
-  private[graft] def cloneSnapshotImpl(spark: SparkSession,
-      snapPath: String, newName: String, path: String, buckets: Int,
-      crashMidClone: Boolean): Unit = {
+      path: String, buckets: Int = 16): Unit = {
     import org.apache.hadoop.fs.Path
     val q = qualified(newName)
     val loc = s"$path/$q"
@@ -735,13 +727,7 @@ object GAdmin {
     val journal = new Path(procDir, s"clone-$q.journal")
     graft.flow.ProcedureJournal.write(conf, journal,
       Seq(newName, loc), s"clone journal for $newName")
-    if (crashMidClone) {
-      fs.mkdirs(new Path(loc))
-      fs.create(new Path(loc, "part-00000-dead-attempt.parquet"), true)
-        .close()
-      throw new IllegalStateException(
-        s"injected crash: clone $newName mid-write")
-    }
+    graft.flow.Failpoints.hit("clone.afterJournal")
     BucketedStore.write(spark.read.schema(CellSchema.schema).parquet(snapPath),
       q, loc, buckets)
     graft.flow.ProcedureJournal.consume(fs, journal)
@@ -757,21 +743,11 @@ object GAdmin {
     * incomplete — the rewrite never started) or a journal + durable
     * failsafe for [[recoverInterruptedDdl]] to re-impose. */
   def restoreSnapshot(spark: SparkSession, name: String, snapPath: String,
-      failsafeDir: String): Unit =
-    restoreSnapshotImpl(spark, name, snapPath, failsafeDir,
-      crashAfterRewrite = false)
-
-  /** Injected-crash twin of [[restoreSnapshot]]: dies after the
-    * rewrite landed but before the failsafe/journal cleanup — the
-    * recovery sweep must re-impose the PRE-restore contents. */
-  private[graft] def restoreSnapshotImpl(spark: SparkSession, name: String,
-      snapPath: String, failsafeDir: String,
-      crashAfterRewrite: Boolean): Unit = {
+      failsafeDir: String): Unit = {
     require(!isEnabled(spark, name),
       s"table $name must be disabled before restore (reference semantics)")
     journaledRewrite(spark, name, failsafeDir, s"restore from $snapPath",
-      _ => spark.read.schema(CellSchema.schema).parquet(snapPath),
-      crashAfterRewrite = crashAfterRewrite)
+      _ => spark.read.schema(CellSchema.schema).parquet(snapPath))
   }
 
   /** The shared crash-safe contents rewrite — the failsafe protocol
@@ -789,8 +765,7 @@ object GAdmin {
   private def journaledRewrite(spark: SparkSession, name: String,
       failsafeDir: String, what: String,
       transform: DataFrame => DataFrame,
-      newBuckets: Int => Int = identity,
-      crashAfterRewrite: Boolean = false): Unit = {
+      newBuckets: Int => Int = identity): Unit = {
     import org.apache.hadoop.fs.Path
     val q = qualified(name)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -807,9 +782,9 @@ object GAdmin {
     spark.table(q).write.mode(SaveMode.ErrorIfExists)
       .parquet(s"$failsafeDir/failsafe-$q")
     rewriteTable(spark, name, transform, newBuckets)
-    if (crashAfterRewrite)
-      throw new IllegalStateException(
-        s"injected crash: $what of $name after rewrite")
+    // rewritten, failsafe still durable: recovery re-imposes the
+    // pre-op contents
+    graft.flow.Failpoints.hit("journaledRewrite.afterRewrite")
     fs.delete(new Path(s"$failsafeDir/failsafe-$q"), true)
     graft.flow.ProcedureJournal.consume(fs, journal)
   }
@@ -1000,15 +975,6 @@ object GAdmin {
       s"table $name must be disabled before truncate (reference semantics)")
     if (failsafeDir.isEmpty) rewriteTable(spark, name, _.limit(0))
     else journaledRewrite(spark, name, failsafeDir, "truncate", _.limit(0))
-  }
-
-  /** Injected-crash twin of the failsafe [[truncateTable]]. */
-  private[graft] def truncateTableImpl(spark: SparkSession, name: String,
-      failsafeDir: String, crashAfterRewrite: Boolean): Unit = {
-    require(!isEnabled(spark, name),
-      s"table $name must be disabled before truncate (reference semantics)")
-    journaledRewrite(spark, name, failsafeDir, "truncate", _.limit(0),
-      crashAfterRewrite = crashAfterRewrite)
   }
 
   /** Admin.modifyTable family list (ColumnFamilyDescriptor set):

@@ -63,17 +63,7 @@ object RegionRefs {
     * is mid-key degenerate (single-block stores). */
   def splitRegion(spark: SparkSession, tableDir: String,
       parentRegion: String, daughterA: String, daughterB: String)
-      : Option[Array[Byte]] =
-    splitRegionImpl(spark, tableDir, parentRegion, daughterA, daughterB,
-      crashAfterFirstDaughter = false)
-
-  /** Injected-crash twin of [[splitRegion]] for the procedure-recovery
-    * specs (the reference's TestSplitTransactionOnCluster fault points):
-    * throws after daughter A's references land, leaving exactly the
-    * half-split state [[recoverInterruptedSplits]] must clean up. */
-  private[graft] def splitRegionImpl(spark: SparkSession, tableDir: String,
-      parentRegion: String, daughterA: String, daughterB: String,
-      crashAfterFirstDaughter: Boolean): Option[Array[Byte]] = {
+      : Option[Array[Byte]] = {
     val fs = fsOf(spark, tableDir)
     val parent = new Path(tableDir, parentRegion)
     val famDirs = Option(fs.listStatus(parent)).getOrElse(Array.empty)
@@ -111,9 +101,8 @@ object RegionRefs {
             finally out.close()
           }
         }
-        if (crashAfterFirstDaughter && daughter == daughterA)
-          throw new IllegalStateException(
-            s"injected crash: $parentRegion split after daughter $daughterA")
+        // the half-split state recoverInterruptedSplits must clean up
+        if (daughter == daughterA) Failpoints.hit("split.afterFirstDaughter")
       }
       // the META split-parent row: parent is offline, awaiting GC
       fs.create(new Path(parent, ".splitparent"), true).close()
@@ -312,17 +301,7 @@ object RegionRefs {
     * "" passes the whole file either way). */
   def mergeRegions(spark: SparkSession, tableDir: String,
       parents: Seq[String], merged: String,
-      parentStartKeys: Map[String, Array[Byte]] = Map.empty): Unit =
-    mergeRegionsImpl(spark, tableDir, parents, merged, parentStartKeys,
-      crashAfterFirstParent = false)
-
-  /** Injected-crash twin of [[mergeRegions]] (the
-    * MergeTableRegionsProcedure fault point): throws after the first
-    * parent's references land. */
-  private[graft] def mergeRegionsImpl(spark: SparkSession, tableDir: String,
-      parents: Seq[String], merged: String,
-      parentStartKeys: Map[String, Array[Byte]],
-      crashAfterFirstParent: Boolean): Unit = {
+      parentStartKeys: Map[String, Array[Byte]] = Map.empty): Unit = {
     val fs = fsOf(spark, tableDir)
     // the merge's procedure journal lives in the MERGED region dir:
     // present + parents still online (no .splitparent on every parent)
@@ -359,9 +338,7 @@ object RegionRefs {
       // janitor's unreferenced check is the same for split and merge
       // parents (cleanParent / cleanMergeRegion)
       fs.create(new Path(parentDir, ".splitparent"), true).close()
-      if (crashAfterFirstParent && parent == parents.head)
-        throw new IllegalStateException(
-          s"injected crash: merge $merged after parent $parent")
+      if (parent == parents.head) Failpoints.hit("merge.afterFirstParent")
     }
     ProcedureJournal.consume(fs, journal)
   }
@@ -399,19 +376,7 @@ object RegionRefs {
     * into ONE real store file per family and drop the Reference
     * files. After this the daughter no longer pins its parent. */
   def compactRefs(spark: SparkSession, tableDir: String,
-      region: String, blockSize: Int = 65536): Unit =
-    compactRefsImpl(spark, tableDir, region, blockSize,
-      crashAfterLanding = false)
-
-  /** Injected-crash twin of [[compactRefs]]: throws after the output
-    * file lands but BEFORE the input references are dropped — the
-    * window where a naive reader sees the cells TWICE (output + refs).
-    * The reference closes it with the WAL compaction marker
-    * (HRegion.replayWALCompactionMarker replays the descriptor at open
-    * and completes the file swap); graft's journal is that descriptor. */
-  private[graft] def compactRefsImpl(spark: SparkSession, tableDir: String,
-      region: String, blockSize: Int,
-      crashAfterLanding: Boolean): Unit = {
+      region: String, blockSize: Int = 65536): Unit = {
     val fs = fsOf(spark, tableDir)
     val regionDir = new Path(tableDir, region)
     val famDirs = Option(fs.listStatus(regionDir)).getOrElse(Array.empty)
@@ -445,9 +410,11 @@ object RegionRefs {
         require(fs.rename(new Path(s"$stage/part-00000.hfile"),
           new Path(fam, outName)),
           s"could not land the materialized daughter store for $region")
-        if (crashAfterLanding)
-          throw new IllegalStateException(
-            s"injected crash: $region/${fam.getName} compaction after landing")
+        // output landed, inputs alive: the window where a naive reader
+        // sees the cells TWICE. The reference closes it with the WAL
+        // compaction marker (HRegion.replayWALCompactionMarker completes
+        // the file swap at open); the journal is that descriptor.
+        Failpoints.hit("compactRefs.afterLanding")
         refs.foreach(f => fs.delete(f.getPath, false))
         ProcedureJournal.consume(fs, journal)
       }

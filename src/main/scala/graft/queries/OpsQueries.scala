@@ -437,7 +437,7 @@ object OpsQueries {
       // must reproduce the parent's exact cell stream — the oracle.
       "q113_split_lifecycle",
       (s, dir) => {
-        import graft.flow.{HFiles, RegionRefs}
+        import graft.flow.{Failpoints, HFiles, RegionRefs}
         val root = graft.Queries.scratchDir("q113_refs")
         val table = s"$root/data/t"
         val arch = s"$root/archive"
@@ -498,9 +498,8 @@ object OpsQueries {
         // interrupted re-split of d1 (procedure-v2 crash window: da's
         // refs written, crash before db's) — the recovery sweep must
         // roll it back, leaving d1 online with its exact cell stream
-        require(scala.util.Try(RegionRefs.splitRegionImpl(s, table, "d1",
-          "da", "db", crashAfterFirstDaughter = true)).isFailure,
-          "injected crash must surface")
+        Failpoints.crashAt("split.afterFirstDaughter")(
+          RegionRefs.splitRegion(s, table, "d1", "da", "db"))
         require(RegionRefs.recoverInterruptedSplits(s, table) ==
           Seq("d1" -> "rolledback"),
           "recovery must roll back the half-split daughter refs")
@@ -1227,6 +1226,7 @@ object OpsQueries {
       "q127_ddl_recovery",
       (s, dir) => {
         import graft.admin.GAdmin
+        import graft.flow.Failpoints
         val root = graft.Queries.scratchDir("q127_ddl")
         val failsafes = s"$root/failsafes"
         // a tenth of the corpus: the lifecycle rewrites the table ~8
@@ -1247,9 +1247,8 @@ object OpsQueries {
         // crash AFTER the restore's rewrite landed → the sweep must
         // re-impose the PRE-restore (diverged) contents
         GAdmin.disableTable(s, "q127t")
-        require(scala.util.Try(GAdmin.restoreSnapshotImpl(s, "q127t",
-          s"$root/s0", failsafes, crashAfterRewrite = true)).isFailure,
-          "injected restore crash must surface")
+        Failpoints.crashAt("journaledRewrite.afterRewrite")(
+          GAdmin.restoreSnapshot(s, "q127t", s"$root/s0", failsafes))
         require(GAdmin.recoverInterruptedDdl(s, root, failsafes) ==
           Seq("graft_q127t" -> "rolledback"),
           "restore recovery must roll back to the failsafe")
@@ -1261,9 +1260,11 @@ object OpsQueries {
         GAdmin.enableTable(s, "q127t")
         val restoredN = GAdmin.table(s, "q127t").count()
         // clone crash → rollback leaves no trace; the retry lands
-        require(scala.util.Try(GAdmin.cloneSnapshotImpl(s, s"$root/s0",
-          "q127c", root, 4, crashMidClone = true)).isFailure,
-          "injected clone crash must surface")
+        Failpoints.crashAt("clone.afterJournal")(
+          GAdmin.cloneSnapshot(s, s"$root/s0", "q127c", root, buckets = 4))
+        // the partial store file a crash mid-write leaves behind
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "graft_q127c"))
+          .resolve("part-00000-dead-attempt.parquet").toFile.createNewFile()
         require(GAdmin.recoverInterruptedDdl(s, root, failsafes) ==
           Seq("graft_q127c" -> "rolledback"),
           "clone recovery must drop the half-clone")

@@ -17,9 +17,12 @@ object ScanQueries {
 
   private def co(spark: SparkSession, dir: String) = Fixtures.cellsOrders(spark, dir)
 
-  private def ordered(df: DataFrame, reversed: Boolean = false): DataFrame =
-    df.select(outCols.map(col): _*)
-      .orderBy(GTable.cellOrder(reversed): _*)
+  // GTable reads already return the scan's total cell order
+  private def projected(df: DataFrame): DataFrame = df.select(outCols.map(col): _*)
+
+  // Resolve's output order is undefined
+  private def ordered(df: DataFrame): DataFrame =
+    projected(df).orderBy(GTable.cellOrder(): _*)
 
   private def oracleScan(where: String, order: String = "row, family, qualifier, ts DESC"): String =
     Cte.withCtes(Cte.cellsOrders)(
@@ -28,36 +31,34 @@ object ScanQueries {
   val defs: Seq[QDef] = Seq(
     QDef(
       "q01_get",
-      (s, dir) => ordered(GTable.get(co(s, dir), "0000000007", GScan(raw = true))),
+      (s, dir) => projected(GTable.get(co(s, dir), "0000000007", GScan(raw = true))),
       Some(oracleScan("WHERE row = '0000000007'"))
     ),
     QDef(
       "q02_scan_range",
       (s, dir) =>
-        ordered(GTable.scan(co(s, dir),
+        projected(GTable.scan(co(s, dir),
           GScan(raw = true).withRange("0000000100", "0000000200"))),
       Some(oracleScan("WHERE row >= '0000000100' AND row < '0000000200'"))
     ),
     QDef(
       "q03_prefix_scan",
       (s, dir) =>
-        ordered(GTable.scan(co(s, dir), GScan(raw = true, rowPrefix = Some("00000003")))),
+        projected(GTable.scan(co(s, dir), GScan(raw = true, rowPrefix = Some("00000003")))),
       Some(oracleScan("WHERE row LIKE '00000003%'"))
     ),
     QDef(
       "q04_reverse_scan",
       (s, dir) =>
-        ordered(
-          GTable.scan(co(s, dir),
-            GScan(raw = true, reversed = true).withRange("0000000100", "0000000200")),
-          reversed = true),
+        projected(GTable.scan(co(s, dir),
+          GScan(raw = true, reversed = true).withRange("0000000100", "0000000200"))),
       Some(oracleScan("WHERE row >= '0000000100' AND row < '0000000200'",
                       "row DESC, family, qualifier, ts DESC"))
     ),
     QDef(
       "q05_projection",
       (s, dir) =>
-        ordered(GTable.scan(co(s, dir),
+        projected(GTable.scan(co(s, dir),
           GScan(raw = true, columns = Seq("d" -> "o_totalprice"))
             .withRange("0000000100", "0000000200"))),
       Some(oracleScan(
@@ -92,7 +93,7 @@ object ScanQueries {
       // versions even though only one qualifier is projected.
       "q58_projected_resolve",
       (s, dir) =>
-        ordered(GTable.scan(Fixtures.cellsEventsV(s, dir),
+        projected(GTable.scan(Fixtures.cellsEventsV(s, dir),
           GScan(columns = Seq("d" -> "value"), maxVersions = 2))),
       Some(Cte.withCtes(Cte.cellsEventsV, Cte.liveEventsV)(
         """SELECT row, family, qualifier, ts, value FROM (
@@ -140,7 +141,7 @@ object ScanQueries {
       // version gate, as the server's storeLimit/storeOffset do.
       "q63_cf_pagination",
       (s, dir) =>
-        ordered(GTable.scan(Fixtures.cellsEventsV(s, dir),
+        projected(GTable.scan(Fixtures.cellsEventsV(s, dir),
           GScan(maxVersions = 2, maxResultsPerCf = Some(3), rowOffsetPerCf = 1))),
       Some(Cte.withCtes(Cte.cellsEventsV, Cte.liveEventsV)(
         """SELECT row, family, qualifier, ts, value FROM (
@@ -176,7 +177,7 @@ object ScanQueries {
       (s, dir) => {
         import s.implicits._
         val keys = Seq("0000000007", "0000000123", "0000000456").toDF("row")
-        ordered(GTable.multiGet(co(s, dir), keys))
+        projected(GTable.multiGet(co(s, dir), keys))
       },
       Some(oracleScan("WHERE row IN ('0000000007', '0000000123', '0000000456')"))
     ),
@@ -496,12 +497,11 @@ object ScanQueries {
       // graft twin of that propagation point.
       "q61_reversed_while",
       (s, dir) =>
-        ordered(GTable.scanFiltered(co(s, dir),
+        projected(GTable.scanFiltered(co(s, dir),
             GScan(raw = true, reversed = true),
             graft.filter.WhileMatchFilter(graft.filter.RowFilter(
               graft.filter.CompareOp.GreaterOrEqual,
-              graft.filter.BinaryComparator("0000000950")))),
-          reversed = true),
+              graft.filter.BinaryComparator("0000000950"))))),
       Some(oracleScan("WHERE row >= '0000000950'",
         order = "row DESC, family, qualifier, ts DESC"))
     )

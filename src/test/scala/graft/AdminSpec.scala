@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.admin.GAdmin
+import graft.flow.Failpoints
 import graft.model.Fixtures
 import graft.read.Resolve
 
@@ -536,11 +537,14 @@ class AdminSpec extends SparkSpec {
     GAdmin.createTable(spark, "cs1", tmp, families = Seq("d"), buckets = 2)
     GAdmin.put(spark, "cs1", Fixtures.cellsOrders(spark, sf0001).limit(200))
     GAdmin.snapshot(spark, "cs1", "snapA", tmp)
-    // crash mid-clone: journal + a partial store artifact, no commit
-    intercept[IllegalStateException](GAdmin.cloneSnapshotImpl(
-      spark, s"$tmp/snapA", "cs2", tmp, 2, crashMidClone = true))
+    // crash mid-clone: journal + a partial store artifact (the file a
+    // dead write leaves), no commit
+    Failpoints.crashAt("clone.afterJournal")(
+      GAdmin.cloneSnapshot(spark, s"$tmp/snapA", "cs2", tmp, buckets = 2))
     val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(
+      s"$tmp/graft_cs2/part-00000-dead-attempt.parquet"), true).close()
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$tmp/.procedures/clone-graft_cs2.journal")))
     // the sweep rolls it back: catalog clean, files gone, journal consumed
@@ -567,8 +571,8 @@ class AdminSpec extends SparkSpec {
     GAdmin.disableTable(spark, "tc1")
     // crash after the truncate's rewrite landed (table now empty on
     // disk) — recovery must re-impose the 250-cell pre-truncate state
-    intercept[IllegalStateException](GAdmin.truncateTableImpl(
-      spark, "tc1", failsafes, crashAfterRewrite = true))
+    Failpoints.crashAt("journaledRewrite.afterRewrite")(
+      GAdmin.truncateTable(spark, "tc1", failsafes))
     assert(GAdmin.recoverInterruptedDdl(spark, tmp, failsafes) ==
       Seq("graft_tc1" -> "rolledback"))
     GAdmin.enableTable(spark, "tc1")
@@ -597,8 +601,8 @@ class AdminSpec extends SparkSpec {
     GAdmin.disableTable(spark, "rs1")
     // crash AFTER the rewrite landed, before cleanup: the sweep must
     // bring back the PRE-restore 400-cell state from the failsafe
-    intercept[IllegalStateException](GAdmin.restoreSnapshotImpl(
-      spark, "rs1", s"$tmp/snapB", failsafes, crashAfterRewrite = true))
+    Failpoints.crashAt("journaledRewrite.afterRewrite")(
+      GAdmin.restoreSnapshot(spark, "rs1", s"$tmp/snapB", failsafes))
     assert(GAdmin.recoverInterruptedDdl(spark, tmp, failsafes) ==
       Seq("graft_rs1" -> "rolledback"))
     GAdmin.enableTable(spark, "rs1")

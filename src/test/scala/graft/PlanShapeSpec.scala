@@ -296,6 +296,13 @@ class PlanShapeSpec extends SparkSpec {
         "multiGet" -> GTable.multiGet(store,
           Seq("0000000007", "0000000123", "0000000456").toDF("row"))))
       assertNoExchange(name, df)
+    // the declared reads take GTable's order as it comes: no second,
+    // global sort over it
+    for (name <- Seq("q01_get", "q02_scan_range", "q03_prefix_scan", "q05_projection", "q50_multi_get")) {
+      val phys = assertNoExchange(name, Queries.all.find(_.name == name).get.fn(spark, sf0001))
+      assert(phys.collect { case s: org.apache.spark.sql.execution.SortExec if s.global => s }.isEmpty,
+        s"$name: no global sort:\n$phys")
+    }
   }
 
   test("an SCVF filtered scan over the cell store decides its filter in the pass") {

@@ -56,4 +56,20 @@ class ProcedureJournalSpec extends AnyFunSuite {
       == "rolledback")
     assert(log == Vector("fwd", "back") && !fs.exists(p))
   }
+
+  test("a failpoint fires only armed, by name, on the arming thread, inside the block") {
+    import graft.flow.Failpoints
+    Failpoints.hit("p") // unarmed: a no-op
+    var other: Option[Throwable] = None
+    val crash = Failpoints.crashAt("p") {
+      Failpoints.hit("q")
+      val t = new Thread(() => other = scala.util.Try(Failpoints.hit("p")).failed.toOption)
+      t.start(); t.join()
+      Failpoints.hit("p")
+    }
+    assert(crash.point == "p")
+    assert(other.isEmpty, "a thread started inside the block must not see the armed point")
+    Failpoints.hit("p") // disarmed once the block ends
+    intercept[IllegalStateException](Failpoints.crashAt("p")(Failpoints.hit("q")))
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.flow.{HFiles, RegionRefs}
+import graft.flow.{Failpoints, HFiles, RegionRefs}
 import graft.model.Fixtures
 
 /** Reference-file split mechanics (io/Reference.java,
@@ -131,8 +131,8 @@ class RegionRefsSpec extends SparkSpec {
 
     // crash after daughter A's refs: journal present, no marker, d1
     // half-exists, d2 absent
-    intercept[IllegalStateException](RegionRefs.splitRegionImpl(
-      spark, table, "p1", "d1", "d2", crashAfterFirstDaughter = true))
+    Failpoints.crashAt("split.afterFirstDaughter")(
+      RegionRefs.splitRegion(spark, table, "p1", "d1", "d2"))
     assert(fs.exists(new Path(s"$table/p1/.split-journal")))
     assert(!fs.exists(new Path(s"$table/p1/.splitparent")))
     assert(fs.exists(new Path(s"$table/d1/d/part-00000.hfile.p1")))
@@ -172,9 +172,8 @@ class RegionRefsSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
 
     // crash after parent ra's refs + offline marker, before rb's
-    intercept[IllegalStateException](RegionRefs.mergeRegionsImpl(
-      spark, table, Seq("ra", "rb"), "m1",
-      Map("rb" -> mid.getBytes("UTF-8")), crashAfterFirstParent = true))
+    Failpoints.crashAt("merge.afterFirstParent")(RegionRefs.mergeRegions(
+      spark, table, Seq("ra", "rb"), "m1", Map("rb" -> mid.getBytes("UTF-8"))))
     assert(fs.exists(new Path(s"$table/m1/.merge-journal")))
     assert(fs.exists(new Path(s"$table/ra/.splitparent")))
     assert(!fs.exists(new Path(s"$table/rb/.splitparent")))
@@ -213,8 +212,8 @@ class RegionRefsSpec extends SparkSpec {
 
     // crash AFTER the compacted file lands, BEFORE the refs drop: the
     // window where d1 holds the cells twice (output + references)
-    intercept[IllegalStateException](RegionRefs.compactRefsImpl(
-      spark, table, "d1", 2048, crashAfterLanding = true))
+    Failpoints.crashAt("compactRefs.afterLanding")(
+      RegionRefs.compactRefs(spark, table, "d1", 2048))
     assert(fs.exists(new Path(s"$table/d1/d/.compaction-journal")))
     assert(fs.exists(new Path(s"$table/d1/d/compacted-d1.hfile")))
     assert(fs.exists(new Path(s"$table/d1/d/part-00000.hfile.p1")))
@@ -251,8 +250,8 @@ class RegionRefsSpec extends SparkSpec {
     // half-split state with a GARBAGE journal (external corruption):
     // the sweep cannot read the daughter names, but every orphan ref
     // carries `.p1` — rollback must still find and drop them
-    intercept[IllegalStateException](RegionRefs.splitRegionImpl(
-      spark, table, "p1", "d1", "d2", crashAfterFirstDaughter = true))
+    Failpoints.crashAt("split.afterFirstDaughter")(
+      RegionRefs.splitRegion(spark, table, "p1", "d1", "d2"))
     val j = fs.create(new Path(s"$table/p1/.split-journal"), true)
     try j.write(Array.fill(16)(0x7c.toByte)) finally j.close() // all '|'
     assert(RegionRefs.recoverInterruptedSplits(spark, table) ==
@@ -266,8 +265,8 @@ class RegionRefsSpec extends SparkSpec {
     // ref of the family
     assert(RegionRefs.splitRegion(spark, table, "p1", "d1", "d2").nonEmpty)
     val d1n = RegionRefs.importStore(spark, table, "d1").count()
-    intercept[IllegalStateException](RegionRefs.compactRefsImpl(
-      spark, table, "d1", 2048, crashAfterLanding = true))
+    Failpoints.crashAt("compactRefs.afterLanding")(
+      RegionRefs.compactRefs(spark, table, "d1", 2048))
     val cj = fs.create(new Path(s"$table/d1/d/.compaction-journal"), true)
     try cj.write("garbage-no-separator".getBytes("UTF-8")) finally cj.close()
     assert(RegionRefs.recoverInterruptedSplits(spark, table) ==
