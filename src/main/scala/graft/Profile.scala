@@ -47,7 +47,7 @@ object Profile {
       (1 to reps).foreach { rep =>
         println(s"===== $n rep $rep =====")
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count() // the bench's own timed action
+        Bench.run(fn(spark, sfDir)) // the bench's own timed action
         println(f"  TOTAL ${(System.nanoTime() - t0) / 1e9}%.3f s")
       }
     }

@@ -144,18 +144,20 @@ object Dedup {
   def minHashNearDups(docs: DataFrame, k: Int = 16, bands: Int = 4,
       threshold: Double = 0.8, n: Int = 3, maxBucket: Int = 0): DataFrame = {
     val rows = capTextBuckets(bandRows(docs, k, bands, n), maxBucket)
-    val a = rows.select(col("band"), col("sig"), col("doc_id").as("i"), col("shs").as("shi"))
-    val b = rows.select(col("band"), col("sig"), col("doc_id").as("j"), col("shs").as("shj"))
-    val (_, jac) = arrayJaccard(col("shi"), col("shj"))
+    val (_, jac) = arrayJaccard(col("a.shs"), col("b.shs"))
     // verify BEFORE the pair dedup (same contract as the SimHash and
     // embedding-LSH paths): a candidate appears at most `bands` times,
     // so re-verifying duplicates costs a few array_intersects, while
     // deduping first would shuffle the candidate multiset with both
     // shingle arrays still attached. Threshold compares the UNROUNDED
     // Jaccard (rounding is presentation only), matching the oracle.
-    a.join(b, Seq("band", "sig"))
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j"), jac.as("jac0"))
+    // Both sides are the same plan, so one (band, sig) exchange of the
+    // signature rows serves both and the shingle and signature work runs
+    // once. A broadcast of one side would run that work a second time,
+    // so the join is a sort-merge one (which spills, at any size).
+    rows.as("a").join(rows.as("b").hint("merge"), Seq("band", "sig"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"), jac.as("jac0"))
       .filter(col("jac0") >= threshold)
       .groupBy("i", "j").agg(round(min(col("jac0")), 4).as("jaccard"))
   }

@@ -112,16 +112,15 @@ object GTable {
     // storeLimit/storeOffset), AFTER the version gate and filters, so
     // the resolve pass counts it too.
     val paged = s.maxResultsPerCf.isDefined || s.rowOffsetPerCf != 0
-    val pruned = (rangePreds ++ projPreds).foldLeft(cells)((df, p) => df.filter(p))
     val resolved =
       if (s.raw) {
-        val timed = (Resolve.timeRangePred(s.timeRange, s.cfTimeRanges) ++ cellFilter)
-          .foldLeft(pruned)((df, p) => df.filter(p))
+        val timed = Resolve.filtered(cells, rangePreds ++ projPreds ++
+          Resolve.timeRangePred(s.timeRange, s.cfTimeRanges) ++ cellFilter)
         if (paged || program.isDefined)
           Resolve.rawPass(timed, program, s.rowOffsetPerCf, s.maxResultsPerCf)
         else timed
       } else
-        Resolve.latest(pruned, s.maxVersions, s.timeRange,
+        Resolve.latest(Resolve.filtered(cells, rangePreds ++ projPreds), s.maxVersions, s.timeRange,
           ttlCutoff = s.ttlCutoff, cellFilter = cellFilter,
           cfTimeRanges = s.cfTimeRanges, minVersions = s.minVersions,
           keepDeleted = s.keepDeleted, program = program,
@@ -130,14 +129,17 @@ object GTable {
     // clusters on row). Over a row-ranged store the cells stay in the
     // store's partitions, whose index order is key order. Either way a
     // local sort gives the total order and the read plans no range-sort
-    // exchange. A reversed scan would need the partitions in the
-    // opposite order, so it keeps the range sort.
+    // exchange; a non-raw pass already emits each partition's Puts in
+    // cell order (it walks them sorted on row, then the cell keys), so
+    // its output needs no sort at all. A reversed scan would need the
+    // partitions in the opposite order, so it keeps the range sort.
     val point = !s.raw && s.limit.isEmpty && s.startRow.isDefined &&
       s.startRow == s.stopRow && s.startInclusive && s.stopInclusive
+    val local = point || (ranged && !s.reversed)
     def sorted(df: DataFrame): DataFrame =
-      if (point || (ranged && !s.reversed)) df.sortWithinPartitions(cellOrder(s.reversed): _*)
+      if (local) df.sortWithinPartitions(cellOrder(s.reversed): _*)
       else df.orderBy(cellOrder(s.reversed): _*)
-    val ordered = sorted(resolved)
+    val ordered = if (local && !s.raw) resolved else sorted(resolved)
     // limit counts table ROWS (Scan.setLimit, Scan.java:958), not cells;
     // the broadcast semi-join keeps the streamed side's partitions
     s.limit.fold(ordered) { n =>
@@ -192,7 +194,7 @@ object GTable {
     // scan boundaries (a PageFilter counts rows within the range, not
     // the table), then the filtered set flows through the normal scan
     // (the residual range predicates there are no-ops)
-    val inRange = rangePredsOf(s).foldLeft(cells)((df, p) => df.filter(p))
+    val inRange = Resolve.filtered(cells, rangePredsOf(s))
     FilterCompiler.cellPredicate(tree) match {
       // a per-cell tree neither reads other cells nor touches markers,
       // so it commutes with delete tracking: it rides the resolve's

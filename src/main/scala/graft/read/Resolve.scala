@@ -2,12 +2,16 @@ package graft.read
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.VisKernel
 import graft.model.CellType
@@ -41,7 +45,7 @@ import graft.model.CellType
   * store's partitions, so its output is in key order by partition.
   * The pass registers no planner strategy and touches no session
   * state. Its output is the surviving Puts in the input's schema, each
-  * row's cells in one partition. The same pass also runs
+  * row's cells in one partition and in pass order. The same pass also runs
   * a row-local filter tree ([[RowProgram]]: the reference's per-row
   * Filter visitor, `filterRow` on the assembled row included) between
   * masking and the version gate, and per-family pagination after it, so
@@ -49,13 +53,14 @@ import graft.model.CellType
   *
   * The unit of work is the row: one row's cells are one group in one
   * task, as a row never spans regions in the reference, so a single
-  * very wide row is not split across tasks. Each cell crosses a Row
-  * encoder and a Scala closure instead of generated code; on
-  * unclustered parquet input (local[4] on 4 cores, 4 shuffle
-  * partitions, ~3% markers) that still costs about half of the
-  * relational mask-join form per cell at 1M to 16M cells. Larger
-  * inputs, and the regime where the spill hedge fires, are
-  * unmeasured.
+  * very wide row is not split across tasks. The tracker reads each
+  * cell's fields in place from the plan's InternalRow (no encoder
+  * builds a Row or a String per cell) in a Scala closure, not
+  * generated code; on unclustered parquet input (local[4] on 4 cores,
+  * 4 shuffle partitions, ~3% markers) the Row-encoded form of the pass
+  * cost about half of the relational mask-join form per cell at 1M to
+  * 16M cells. Larger inputs, and the regime where the spill hedge
+  * fires, are unmeasured.
   */
 object Resolve {
 
@@ -132,9 +137,13 @@ object Resolve {
   private def checked(cells: DataFrame, timeRange: Option[TimeRange], ttlCutoff: Option[Long],
       cellFilter: Option[Column], cfTimeRanges: Map[String, TimeRange], minVersions: Int,
       keepDeleted: Boolean): DataFrame =
-    (preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions) ++ cellFilter)
-      .foldLeft(markerCeiling(cells, timeRange, cfTimeRanges, keepDeleted))((df, p) =>
-        df.filter(col("type") =!= CellType.Put || p))
+    filtered(cells, markerCeiling(timeRange, cfTimeRanges, keepDeleted).toSeq ++
+      (preGatePreds(timeRange, cfTimeRanges, ttlCutoff, minVersions) ++ cellFilter)
+        .map(col("type") =!= CellType.Put || _))
+
+  /** `cells` under the conjunction of `preds`: one Dataset step. */
+  private[read] def filtered(cells: DataFrame, preds: Seq[Column]): DataFrame =
+    preds.reduceOption(_ && _).fold(cells)(cells.filter)
 
   /** The pass over `cells` under `program`, if any, in `cells`' schema. */
   private def withProgram(cells: DataFrame, program: Option[RowProgram], p: Pass): DataFrame =
@@ -152,9 +161,9 @@ object Resolve {
       timeRange: Option[TimeRange] = None): DataFrame = {
     val in = if (raw) cells else checked(cells, timeRange, None, None, Map.empty, 0, false)
     perRow(program.flagged(in, pruned = admitted, raw),
-      Pass(Int.MaxValue, None, 0, None, program = Some(program.code), raw = raw))(
-      (t, rs) => Iterator(t.row).filter(_ => t.run(rs).hasNext == admitted))(Encoders.STRING)
-      .toDF("row")
+      Pass(Int.MaxValue, None, 0, None, program = Some(program.code), raw = raw),
+      StructType(Seq(cells.schema("row"))))(
+      (t, rs) => if (t.run(rs).hasNext == admitted) Iterator(InternalRow(t.row)) else Iterator.empty)
   }
 
   /** Size-derived shuffle-partition count for the resolve exchange:
@@ -295,7 +304,7 @@ object Resolve {
   def maskedView(cells: DataFrame, timeRange: Option[TimeRange],
       cfTimeRanges: Map[String, TimeRange], keepDeleted: Boolean,
       visScope: Option[String] = None): DataFrame =
-    maskTombstones(markerCeiling(cells, timeRange, cfTimeRanges, keepDeleted),
+    maskTombstones(filtered(cells, markerCeiling(timeRange, cfTimeRanges, keepDeleted).toSeq),
       visScope = visScope)
 
   /** KEEP_DELETED_CELLS time travel: a marker at/after the as-of point
@@ -303,15 +312,15 @@ object Resolve {
     * ceiling is PER FAMILY: a family's as-of point is its own range max
     * (override) or the scan-global max; families with no range at all
     * keep full masking. */
-  private def markerCeiling(cells: DataFrame, timeRange: Option[TimeRange],
-      cfTimeRanges: Map[String, TimeRange], keepDeleted: Boolean): DataFrame =
-    if (keepDeleted && (timeRange.isDefined || cfTimeRanges.nonEmpty)) {
+  private def markerCeiling(timeRange: Option[TimeRange],
+      cfTimeRanges: Map[String, TimeRange], keepDeleted: Boolean): Option[Column] =
+    Option.when(keepDeleted && (timeRange.isDefined || cfTimeRanges.nonEmpty)) {
       val base = timeRange.map(tr => lit(tr.max)).getOrElse(lit(Long.MaxValue))
       val ceil = cfTimeRanges.foldLeft(base) {
         case (acc, (f, tr)) => when(col("family") === f, lit(tr.max)).otherwise(acc)
       }
-      cells.filter(col("type") === CellType.Put || col("ts") < ceil)
-    } else cells
+      col("type") === CellType.Put || col("ts") < ceil
+    }
 
   /** Apply the 4 tombstone kinds to the Put cells; returns live puts —
     * the resolve pass with no version gate.
@@ -363,36 +372,62 @@ object Resolve {
     * [[sizedShufflePartitions]] when the default count would spill.
     * Returns the surviving cells with `cells`' schema. */
   private def resolvePass(cells: DataFrame, p: Pass): DataFrame =
-    perRow(cells, p)((t, rs) => t.run(rs))(Encoders.row(cells.schema)).toDF()
+    perRow(cells, p, cells.schema)((t, rs) => t.run(rs))
 
-  private def perRow[U](cells: DataFrame, p: Pass)(f: (RowTracker, Iterator[Row]) => Iterator[U])(
-      enc: Encoder[U]): Dataset[U] = {
+  /** The pass over `cells` as one lazy plan node ([[shim.sortedGroups]]):
+    * `f` walks each row's cells as the input's own InternalRows and
+    * returns rows of `out`. */
+  private def perRow(cells: DataFrame, p: Pass, out: StructType)(
+      f: (RowTracker, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
     val s = cells.schema
     val ix = Ix(s.fieldIndex("family"), s.fieldIndex("qualifier"), s.fieldIndex("ts"),
       s.fieldIndex("type"), s.fieldIndex("value"), p.visScope.fold(-1)(s.fieldIndex),
-      p.program.fold(-1)(s.length - _.columns))
+      p.program.fold(-1)(s.length - _.columns), s.fields.map(_.dataType).toIndexedSeq)
     // spill hedge: at a fixed spark.sql.shuffle.partitions the row
     // exchange's per-partition share grows with input (the r16 sf10 soak
     // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
     // from shuffle/sort spill), so a large input is pre-partitioned on
     // row with a size-derived count that the grouping then reuses. A
     // row-ranged store needs no exchange, and one would lose its key
-    // order across partitions, which the scans' local sort relies on.
+    // order across partitions, which the scans' local order relies on.
     val in =
       if (rowRanged(cells)) cells
       else sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row")))
-    in.groupBy(col("row")).as[String, Row](Encoders.STRING, Encoders.row(s))
-      .flatMapSortedGroups(col("family"),
+    shim.sortedGroups(in, "row", Seq(col("family"),
         !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),
-        col("qualifier"), col("ts").desc, col("type") === CellType.Put, col("value").desc)(
-        (row: String, rs: Iterator[Row]) => f(new RowTracker(ix, p, row), rs))(enc)
+        col("qualifier"), col("ts").desc, col("type") === CellType.Put, col("value").desc), out)(
+      (row, rs) => f(new RowTracker(ix, p, row), rs))
   }
 
   /** Field positions the tracker reads; `vis` is -1 without visScope,
     * `base` (the first program column, after the input's fields) -1
-    * without a program. */
-  private final case class Ix(family: Int, qualifier: Int, ts: Int, tpe: Int, value: Int,
-      vis: Int, base: Int)
+    * without a program; `types` are the input's field types. */
+  private[read] final case class Ix(family: Int, qualifier: Int, ts: Int, tpe: Int, value: Int,
+      vis: Int, base: Int, types: IndexedSeq[DataType])
+
+  private val cellTypes = CellType.all.map(t => UTF8String.fromString(t) -> t).toMap
+
+  /** The cell type `t` reads as, with no String decoded for a known one. */
+  private[read] def cellType(t: UTF8String): String =
+    cellTypes.getOrElse(t, Option(t).map(_.toString).orNull)
+
+  /** The column of the last cell a stage of the tracker saw, copied off
+    * its row (the pass reuses a row's buffer for the next cell). */
+  private final class LastColumn {
+    private var seen = false
+    private var family, qualifier: UTF8String = _
+    private def kept(s: UTF8String) = if (s == null) null else s.copy()
+
+    /** 2 if the cell in `r` opens a family, 1 a column, else 0. */
+    def step(r: InternalRow, ix: Ix): Int = {
+      val (f, q) = (r.getUTF8String(ix.family), r.getUTF8String(ix.qualifier))
+      val moved = if (!seen || f != family) 2 else if (q != qualifier) 1 else 0
+      if (moved == 2) family = kept(f)
+      if (moved >= 1) qualifier = kept(q)
+      seen = true
+      moved
+    }
+  }
 
   /** Streaming DeleteTracker + ColumnTracker for ONE row's cells in pass
     * order. Family-scope markers arrive before their family's columns
@@ -408,53 +443,53 @@ object Resolve {
     * run on the held row. A null key never matches a marker (the
     * relational form's equi-join semantics), nor, as a row, a program's
     * row joins. */
-  private final class RowTracker(ix: Ix, p: Pass, val row: String) {
-    private var tracked: Row = _ // the last cell delete tracking saw
+  private final class RowTracker(ix: Ix, p: Pass, val row: UTF8String) {
+    private val tracked, gated = new LastColumn
     private val famDel = mutable.HashMap.empty[String, Long]
     private val famVerDel = mutable.HashSet.empty[(String, Long)]
     private val colDel = mutable.HashMap.empty[String, Long]
     private val verDel = mutable.HashSet.empty[(String, Long)]
-    private var gated: Row = _ // the last cell the gate saw
     private var versions = 0
     private var familyValues = 0L
 
-    /** The row's surviving cells. */
-    def run(rs: Iterator[Row]): Iterator[Row] = p.program match {
+    /** The row's surviving cells. A program reads the whole row, so the
+      * live cells it holds are copies. */
+    def run(rs: Iterator[InternalRow]): Iterator[InternalRow] = p.program match {
       case None => rs.filter(r => live(r) && keep(r))
       case Some(code) =>
-        new RowProgram.Eval(code, rs.filter(live).toArray, ix.family, ix.qualifier, ix.ts,
-          ix.tpe, ix.value, ix.base, row != null).admitted.filter(keep)
+        new RowProgram.Eval(code, rs.filter(live).map(_.copy()).toArray, ix, row != null)
+          .admitted.filter(keep)
     }
 
     /** Delete tracking: true for a Put no marker masks (every cell when raw). */
-    private def live(r: Row): Boolean = p.raw || {
-      val (f, q) = (r.getString(ix.family), r.getString(ix.qualifier))
-      val newFamily = tracked == null || f != tracked.getString(ix.family)
-      if (newFamily) { famDel.clear(); famVerDel.clear() }
-      if (newFamily || q != tracked.getString(ix.qualifier)) { colDel.clear(); verDel.clear() }
-      tracked = r
+    private def live(r: InternalRow): Boolean = p.raw || {
+      val moved = tracked.step(r, ix)
+      if (moved == 2) { famDel.clear(); famVerDel.clear() }
+      if (moved >= 1) { colDel.clear(); verDel.clear() }
       val tsNull = r.isNullAt(ix.ts)
       val ts = if (tsNull) 0L else r.getLong(ix.ts)
-      val vc = if (ix.vis < 0) "" else VisKernel.canonical(r.getString(ix.vis))
-      val marker = row != null && !tsNull && f != null
-      r.getString(ix.tpe) match {
+      val vc = if (ix.vis < 0) "" else VisKernel.canonical(Option(r.getUTF8String(ix.vis)).map(_.toString).orNull)
+      val marker = row != null && !tsNull && !r.isNullAt(ix.family)
+      val colMarker = marker && !r.isNullAt(ix.qualifier)
+      cellType(r.getUTF8String(ix.tpe)) match {
         case CellType.Put =>
           !(below(famDel, vc, ts, tsNull) || below(colDel, vc, ts, tsNull) ||
             (!tsNull && (famVerDel((vc, ts)) || verDel((vc, ts)))))
         case CellType.DeleteFamily if marker => raise(famDel, vc, ts); false
         case CellType.DeleteFamilyVersion if marker => famVerDel += ((vc, ts)); false
-        case CellType.DeleteColumn if marker && q != null => raise(colDel, vc, ts); false
-        case CellType.Delete if marker && q != null => verDel += ((vc, ts)); false
+        case CellType.DeleteColumn if colMarker => raise(colDel, vc, ts); false
+        case CellType.Delete if colMarker => verDel += ((vc, ts)); false
         case _ => false
       }
     }
 
     /** The version gate (not on raw passes) and the per-family page. */
-    private def keep(r: Row): Boolean = {
-      def moved(i: Int) = gated == null || r.getString(i) != gated.getString(i)
-      if (moved(ix.family)) { familyValues = 0; versions = 0 }
-      else if (moved(ix.qualifier)) versions = 0
-      gated = r
+    private def keep(r: InternalRow): Boolean = {
+      gated.step(r, ix) match {
+        case 2 => familyValues = 0; versions = 0
+        case 1 => versions = 0
+        case _ =>
+      }
       (p.raw || keepVersion(r)) && page()
     }
 
@@ -467,7 +502,7 @@ object Resolve {
         tsNull: Boolean): Boolean =
       m.get(vc).exists(d => tsNull || ts <= d)
 
-    private def keepVersion(r: Row): Boolean = {
+    private def keepVersion(r: InternalRow): Boolean = {
       versions += 1
       versions <= p.maxVersions && p.retainFrom.forall(cut =>
         (!r.isNullAt(ix.ts) && r.getLong(ix.ts) >= cut) || versions <= p.minVersions)

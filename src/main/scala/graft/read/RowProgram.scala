@@ -2,11 +2,14 @@ package graft.read
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.CellType
+import graft.read.Resolve.{cellType, Ix}
 
 /** A row-local filter tree compiled for the resolve pass: the
   * reference's per-row `Filter` visitor (filterCell, transformCell,
@@ -95,25 +98,29 @@ object RowProgram {
 
   /** One row's live cells in pass order, program columns from `base` on
     * (the input's width). A cell is its index in `cells`. */
-  private[read] final class Eval(code: Code, cells: Array[Row], fam: Int, qual: Int,
-      tsIx: Int, tpe: Int, valueIx: Int, base: Int, keyed: Boolean) {
+  private[read] final class Eval(code: Code, cells: Array[InternalRow], ix: Ix, keyed: Boolean) {
+    private val Ix(fam, qual, tsIx, tpe, valueIx, _, base, types) = ix
 
     private def flag(i: Int, c: Int): Boolean = cells(i).getBoolean(base + c)
-    private def str(i: Int, f: Int): String = cells(i).getString(f)
+    private def str(i: Int, f: Int): UTF8String = cells(i).getUTF8String(f)
     private def tsNull(i: Int): Boolean = cells(i).isNullAt(tsIx)
     private def ts(i: Int): Long = cells(i).getLong(tsIx)
 
     /** The admitted cells in pass order, with their transformed values. */
-    def admitted: Iterator[Row] = {
+    def admitted: Iterator[InternalRow] = {
       val out = eval(code.root, cells.indices.toVector).sorted
       code.value.fold(out.iterator.map(cells(_))) { v =>
         // a transformed value re-ranks, larger first, the cells tied on the
         // pass's other keys: the order of a pass over the transformed cells
-        def tie(i: Int) = { val t = str(i, tpe)
+        def tie(i: Int) = { val t = cellType(str(i, tpe))
           (str(i, fam), str(i, qual), Option.when(!tsNull(i))(ts(i)), t == CellType.Put, t.startsWith("DeleteFamily")) }
         val run = out.indices.scanLeft(0)((r, k) => if (k > 0 && tie(out(k)) == tie(out(k - 1))) r else k).tail
         out.indices.sortBy(k => (run(k), str(out(k), base + v)))(Ordering.Tuple2(Ordering.Int, strAsc.reverse))
-          .iterator.map { k => Row.fromSeq(cells(out(k)).toSeq.updated(valueIx, str(out(k), base + v))) }
+          .iterator.map { k =>
+            val fields = cells(out(k)).toSeq(types).toArray
+            fields(valueIx) = str(out(k), base + v)
+            new GenericInternalRow(fields)
+          }
       }
     }
 
@@ -138,19 +145,19 @@ object RowProgram {
       case FirstKey => if (items.isEmpty) items else Vector(items.min(first))
       case And(nodes) => nodes.foldLeft(items)((acc, m) => eval(m, acc))
       // a set union: each distinct input cell once
-      case Or(nodes) => nodes.flatMap(eval(_, items)).toVector.distinctBy(i => cells(i).toSeq.take(base))
+      case Or(nodes) => nodes.flatMap(eval(_, items)).toVector
+        .distinctBy(i => cells(i).toSeq(types).take(base))
     }
 
     // Catalyst's orders: strings by UTF-8 bytes, nulls first as in ASC
-    private val strAsc: Ordering[String] =
-      Ordering.by((s: String) => Option(s).map(UTF8String.fromString))
-    private val valueDesc: Ordering[Int] = Ordering.by[Int, String](str(_, valueIx))(strAsc.reverse)
+    private val strAsc: Ordering[UTF8String] = Ordering.by((s: UTF8String) => Option(s))
+    private val valueDesc: Ordering[Int] = Ordering.by[Int, UTF8String](str(_, valueIx))(strAsc.reverse)
     private val tsAsc: Ordering[Int] = Ordering.by(i => Option.when(!tsNull(i))(ts(i)))
     // the newest version: ts, then value, larger first (nulls oldest)
     private val newer: Ordering[Int] = tsAsc.orElse(valueDesc.reverse)
     // cell order (family, qualifier, ts DESC), markers then larger values first on ties
-    private val first: Ordering[Int] = Ordering.by[Int, String](str(_, fam))(strAsc)
-      .orElse(Ordering.by[Int, String](str(_, qual))(strAsc))
-      .orElse(tsAsc.reverse).orElseBy(str(_, tpe) == CellType.Put).orElse(valueDesc)
+    private val first: Ordering[Int] = Ordering.by[Int, UTF8String](str(_, fam))(strAsc)
+      .orElse(Ordering.by[Int, UTF8String](str(_, qual))(strAsc))
+      .orElse(tsAsc.reverse).orElseBy(i => cellType(str(i, tpe)) == CellType.Put).orElse(valueDesc)
   }
 }

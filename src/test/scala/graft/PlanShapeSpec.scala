@@ -305,6 +305,29 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("a resolved get, scan and multiGet walk the store's InternalRows: no Row encoder round trip") {
+    // the pass reads each cell where the plan holds it: no
+    // createexternalrow deserializer builds a Row per cell, no
+    // getexternalrowfield serializer reads one back
+    import org.apache.spark.sql.catalyst.expressions.objects.{CreateExternalRow, GetExternalRowField}
+    import org.apache.spark.sql.execution.MapGroupsExec
+    import graft.read.{GScan, GTable}
+    import spark.implicits._
+    val range = GScan().withRange("0000000001", "0000000500")
+    for ((name, df) <- Seq(
+        "get" -> GTable.get(store, "0000000007"),
+        "scan" -> GTable.scan(store, range),
+        "multiGet" -> GTable.multiGet(store,
+          Seq("0000000007", "0000000123", "0000000456").toDF("row")))) {
+      val phys = assertNoExchange(name, df)
+      val encoded = phys.collect { case p => p.expressions }.flatten.flatMap(_.collect {
+        case e @ (_: CreateExternalRow | _: GetExternalRowField) => e.prettyName
+      })
+      assert(encoded.isEmpty, s"$name: no Row encoder ($encoded):\n$phys")
+      assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"$name: one pass:\n$phys")
+    }
+  }
+
   test("an SCVF filtered scan over the cell store decides its filter in the pass") {
     // the row filter runs as a per-row program inside the one resolve
     // pass: one MapGroupsExec, and the store's layout spares every exchange
