@@ -3,10 +3,12 @@ package graft
 import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.col
 
 import graft.codec.{BlockEncoding, HFileV3}
 import graft.codec.HFileV3.HCell
+import graft.filter.ParseFilter
 import graft.model.Fixtures
 import graft.read.{GScan, GTable}
 
@@ -29,24 +31,31 @@ object ProfileCodec {
 
   /** Steady-state build / plan / exec medians (ms) of a Get and a
     * 100-row scan, each through GTable and as the same cells filtered
-    * and locally sorted with no pass, over one materialized store. Each
-    * round reads one drawn key (range) in all four forms, so host noise
-    * lands on every form alike; the first third of the rounds warms up
-    * and is not counted. A form whose cell count differs from its
-    * no-pass twin fails the run. */
+    * and locally sorted with no pass, and of an SCVF-filtered 100-row
+    * scan and a 50-key multi-get through GTable, over one materialized
+    * store. Each round reads one drawn key (range) in all six forms, so
+    * host noise lands on every form alike; the first third of the
+    * rounds warms up and is not counted. A form whose cell count
+    * differs from its no-pass twin fails the run. Each form's line says
+    * whether its executed plan is adaptive. */
   private def resolve(sfDir: String, rounds: Int): Unit = {
     val spark = GraftSession.local()
     val cells = Fixtures.cellsOrders(spark, sfDir)
     cells.count()
     val rows = cells.select("row").distinct().orderBy("row").collect().map(_.getString(0))
     def noPass(p: Column): DataFrame = cells.filter(p).sortWithinPartitions(GTable.cellOrder(): _*)
+    val scvf = ParseFilter.parse("SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')")
+    import spark.implicits._
     val forms: Seq[(String, Int => DataFrame)] = Seq(
       "get.gtable" -> (i => GTable.get(cells, rows(i))),
       "get.nopass" -> (i => noPass(col("row") === rows(i))),
       "scan.gtable" -> (i => GTable.scan(cells, GScan().withRange(rows(i), rows(i + 100)))),
-      "scan.nopass" -> (i => noPass(col("row") >= rows(i) && col("row") < rows(i + 100))))
+      "scan.nopass" -> (i => noPass(col("row") >= rows(i) && col("row") < rows(i + 100))),
+      "fscan.gtable" -> (i => GTable.scanFiltered(cells, GScan().withRange(rows(i), rows(i + 100)), scvf)),
+      "mget.gtable" -> (i => GTable.multiGet(cells, (i until i + 100 by 2).map(rows(_)).toDF("row"))))
     val warm = rounds / 3
     val times = forms.map(_._1 -> Array.fill(rounds - warm, 3)(0.0)).toMap
+    val adaptive = scala.collection.mutable.Map.empty[String, Boolean]
     val rng = new scala.util.Random(7)
     (0 until rounds).foreach { r =>
       val i = rng.nextInt(rows.length - 100)
@@ -54,7 +63,7 @@ object ProfileCodec {
         val t0 = System.nanoTime()
         val df = read(i)
         val t1 = System.nanoTime()
-        df.queryExecution.executedPlan
+        adaptive(name) = df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
         val t2 = System.nanoTime()
         val n = df.collect().length
         val t3 = System.nanoTime()
@@ -69,7 +78,8 @@ object ProfileCodec {
     forms.foreach { case (name, _) =>
       val t = times(name)
       val Seq(build, plan, exec) = (0 until 3).map(j => median(t.map(_(j)).toSeq))
-      println(f"  $name%-12s build $build%6.1f  plan $plan%6.1f  exec $exec%6.1f  total ${median(t.map(_.sum).toSeq)}%6.1f ms")
+      println(f"  $name%-12s build $build%6.1f  plan $plan%6.1f  exec $exec%6.1f  total ${median(t.map(_.sum).toSeq)}%6.1f ms" +
+        s"  adaptive ${adaptive(name)}")
     }
     spark.stop()
   }

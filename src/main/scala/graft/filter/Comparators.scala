@@ -1,7 +1,15 @@
 package graft.filter
 
+import java.util.Locale
+
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Compare operators of the reference's CompareFilter
   * (hbase-client/.../filter/CompareFilter.java:54). */
@@ -134,12 +142,13 @@ final case class RegexStringComparator(pattern: String) extends GComparator {
   }
 }
 
-/** Case-insensitive contains. */
+/** Case-insensitive contains, as the reference computes it: the
+  * value and the substring lower-cased in the root locale
+  * (SubstringComparator.java:46,63), whatever the JVM's default locale
+  * is (e.g. no Turkish dotless-ı for "I"). */
 final case class SubstringComparator(substr: String) extends GComparator {
   def test(subject: Column, op: CompareOp): Column = {
-    // Locale.ROOT: Spark's lower() is locale-independent; the default
-    // locale would diverge (e.g. Turkish dotless-ı for "I")
-    val c = lower(subject).contains(lit(substr.toLowerCase(java.util.Locale.ROOT)))
+    val c = shim.column(LowerContains(shim.expression(subject), substr.toLowerCase(Locale.ROOT)))
     op match {
       case CompareOp.Equal    => c
       case CompareOp.NotEqual => !c
@@ -147,4 +156,33 @@ final case class SubstringComparator(substr: String) extends GComparator {
         throw new IllegalArgumentException(s"SubstringComparator supports =/!= only, got $other")
     }
   }
+}
+
+/** Whether `child`, lower-cased in the root locale, contains `needle`
+  * (already lower-cased); null for a null `child`. An ASCII value is
+  * lowered byte by byte, any other through `String.toLowerCase`. */
+private[filter] case class LowerContains(child: Expression, needle: String)
+    extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"substring comparison of a ${child.dataType.simpleString}")
+  @transient private lazy val lowered = UTF8String.fromString(needle)
+
+  override protected def nullSafeEval(v: Any): Any =
+    LowerContains.test(v.asInstanceOf[UTF8String], lowered)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val n = ctx.addReferenceObj("needle", lowered)
+    defineCodeGen(ctx, ev, c => s"graft.filter.LowerContains.test($c, $n)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LowerContains =
+    copy(child = newChild)
+}
+
+private[filter] object LowerContains {
+  def test(s: UTF8String, needle: UTF8String): Boolean =
+    (if (s.isFullAscii) s.toLowerCaseAscii else UTF8String.fromString(s.toString.toLowerCase(Locale.ROOT)))
+      .contains(needle)
 }

@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types.StringType
 
 /** Relational table → canonical CellSet transposition.
@@ -111,16 +112,26 @@ object Tables {
   * tables in cell form (MemStore + HFiles); graft's cellified tables
   * are the same canonical layout, derived here from the driver's
   * row-oriented parquet. Deriving them is a load-time job, not a
-  * per-query one — so each (session, sf, table) is materialized once
-  * (`persist`, memory-and-disk) and every query plans against the
-  * in-memory columnar store, exactly how a deployment would write the
-  * cell store once as bucketed parquet and query that. Raw row tables
+  * per-query one — so each (session, sf, table) is materialized once:
+  * the build runs when the store is first asked for, and its result is
+  * cached (memory-and-disk, filled by the first action over it) as a
+  * plain scan that keeps the build's partitioning and ordering
+  * ([[shim.cachedRun]]). Every query plans
+  * against the in-memory columnar store, exactly how a deployment would
+  * write the cell store once as bucketed parquet and query that, and a
+  * read that needs no exchange plans no adaptive stages. Raw row tables
   * (`Tables.load`) stay uncached so parquet filter pushdown is
   * preserved where the scan IS the query.
   */
 object CellStore {
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String), (SparkSession, DataFrame)]
+  /** One store of one session, built at most once: the first caller
+    * builds it and concurrent ones wait for that build. */
+  private final class Entry(val spark: SparkSession, build: () => DataFrame) {
+    lazy val df: DataFrame =
+      shim.cachedRun(build(), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  private val cache = scala.collection.concurrent.TrieMap.empty[(Int, String, String), Entry]
 
   def materialize(spark: SparkSession, name: String, sfDir: String)(
       build: => DataFrame): DataFrame = {
@@ -128,19 +139,11 @@ object CellStore {
     // with the session; keeping them would leak map entries forever and
     // an identityHashCode reused by a new session could serve a frame
     // bound to the dead one)
-    cache.filterInPlace { case (_, (s, _)) => !s.sparkContext.isStopped }
-    val key = (System.identityHashCode(spark), name, sfDir)
-    cache.get(key) match {
-      case Some((s, df)) if s eq spark => df
-      case _ =>
-        val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // putIfAbsent, then unpersist the loser: two concurrent first
-        // calls both build+persist, and without this the losing copy's
-        // blocks leak in executor memory for the session's lifetime
-        cache.putIfAbsent(key, (spark, df)) match {
-          case Some((s, winner)) if s eq spark => df.unpersist(); winner
-          case _ => df
-        }
+    cache.filterInPlace { case (_, e) => !e.spark.sparkContext.isStopped }
+    val mine = new Entry(spark, () => build)
+    cache.putIfAbsent((System.identityHashCode(spark), name, sfDir), mine) match {
+      case Some(e) if e.spark eq spark => e.df
+      case _ => mine.df
     }
   }
 }

@@ -7,7 +7,7 @@ import graft.QDef
 import graft.filter._
 import graft.model.{CellType, Fixtures}
 import graft.oracle.Cte
-import graft.read.GTable
+import graft.read.{GTable, Resolve}
 
 /** Q08–Q22: the filter algebra (SURVEY §2.3, §2.9) over the cellified
   * fixtures. Every query = GFilter AST → FilterCompiler, with the
@@ -21,10 +21,15 @@ object FilterQueries {
   private def evPuts(s: SparkSession, dir: String) =
     Fixtures.cellsEventsV(s, dir).filter(col("type") === CellType.Put)
 
-  private def run(cells: DataFrame, f: GFilter): DataFrame =
-    FilterCompiler(cells, f)
-      .select(outCols.map(col): _*)
-      .orderBy(GTable.cellOrder(): _*)
+  // a cell predicate or a row-local tree keeps a row-ranged store's
+  // partitions, whose index order is key order, so a local sort gives
+  // the total order; any other input or tree takes the range sort
+  private def run(cells: DataFrame, f: GFilter): DataFrame = {
+    val out = FilterCompiler(cells, f).select(outCols.map(col): _*)
+    if (Resolve.rowRanged(cells) && FilterCompiler.rowLocal(f))
+      out.sortWithinPartitions(GTable.cellOrder(): _*)
+    else out.orderBy(GTable.cellOrder(): _*)
+  }
 
   private def oracleOrders(where: String): String =
     Cte.withCtes(Cte.cellsOrders)(

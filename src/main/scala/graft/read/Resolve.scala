@@ -41,9 +41,11 @@ import graft.model.CellType
   * pass plans with no exchange and no broadcast; unclustered inputs
   * (replica parquet, unions) take exactly one row exchange, which
   * [[Resolve.sizedShufflePartitions]] sizes when the input would
-  * spill. Over a row-ranged store ([[rowRanged]]) the pass keeps the
-  * store's partitions, so its output is in key order by partition.
-  * The pass registers no planner strategy and touches no session
+  * spill. Over a row-ranged store ([[rowRanged]]) each partition
+  * already holds whole rows, so the pass walks the store's partitions
+  * in place and requires no distribution at all: such a read plans no
+  * exchange and no adaptive stages, and its output is in key order by
+  * partition. The pass registers no planner strategy and touches no session
   * state. Its output is the surviving Puts in the input's schema, each
   * row's cells in one partition and in pass order. The same pass also runs
   * a row-local filter tree ([[RowProgram]]: the reference's per-row
@@ -195,14 +197,15 @@ object Resolve {
 
   /** Whether `cells` reads, through filters and projections alone, a
     * materialized store range-partitioned on `row` ascending and on
-    * nothing else. The pass keeps that layout (range partitioning meets
-    * its ClusteredDistribution(row)), so each partition holds one key
-    * range, partition index order is key order, and a local sort gives
-    * the total cell order. The layout is read off the scan node the
-    * planner puts over the cached relation: the adaptive root of the
-    * read reports no partitioning, and neither does a store whose
-    * cached plan has not run yet, nor any other input. The check finds
-    * cached data the way planning does, with no optimizer pass. */
+    * nothing else. The pass keeps that layout (it walks each partition
+    * in place), so each partition holds one key range, partition index
+    * order is key order, and a local sort gives the total cell order.
+    * The layout is read off the scan node the planner puts over the
+    * cached relation: a [[graft.model.CellStore]] store reports it as
+    * soon as it is materialized, a frame persisted any other way only
+    * once its cached plan has run, and no other input reports one. The
+    * check finds cached data the way planning does, with no optimizer
+    * pass. */
   private[graft] def rowRanged(cells: DataFrame): Boolean = {
     val plan = cells.queryExecution.withCachedData
     @scala.annotation.tailrec
@@ -374,15 +377,24 @@ object Resolve {
   private def resolvePass(cells: DataFrame, p: Pass): DataFrame =
     perRow(cells, p, cells.schema)((t, rs) => t.run(rs))
 
-  /** The pass over `cells` as one lazy plan node ([[shim.sortedGroups]]):
-    * `f` walks each row's cells as the input's own InternalRows and
-    * returns rows of `out`. */
+  /** The pass over `cells` as one lazy plan node: `f` walks each row's
+    * cells as the input's own InternalRows and returns rows of `out`.
+    * Over a row-ranged store each partition already holds whole rows,
+    * so the pass walks the store's partitions in place
+    * ([[shim.rowWalk]]) and requires no distribution; any other input
+    * is grouped on row ([[shim.sortedGroups]]), which the bucketed
+    * stores' hash layouts meet with no exchange and anything else with
+    * one row exchange. Both shapes hand each row to one tracker. */
   private def perRow(cells: DataFrame, p: Pass, out: StructType)(
       f: (RowTracker, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
     val s = cells.schema
     val ix = Ix(s.fieldIndex("family"), s.fieldIndex("qualifier"), s.fieldIndex("ts"),
       s.fieldIndex("type"), s.fieldIndex("value"), p.visScope.fold(-1)(s.fieldIndex),
       p.program.fold(-1)(s.length - _.columns), s.fields.map(_.dataType).toIndexedSeq)
+    val order = Seq(col("family"),
+      !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),
+      col("qualifier"), col("ts").desc, col("type") === CellType.Put, col("value").desc)
+    val tracked = (row: UTF8String, rs: Iterator[InternalRow]) => f(new RowTracker(ix, p, row), rs)
     // spill hedge: at a fixed spark.sql.shuffle.partitions the row
     // exchange's per-partition share grows with input (the r16 sf10 soak
     // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
@@ -390,13 +402,9 @@ object Resolve {
     // row with a size-derived count that the grouping then reuses. A
     // row-ranged store needs no exchange, and one would lose its key
     // order across partitions, which the scans' local order relies on.
-    val in =
-      if (rowRanged(cells)) cells
-      else sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row")))
-    shim.sortedGroups(in, "row", Seq(col("family"),
-        !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),
-        col("qualifier"), col("ts").desc, col("type") === CellType.Put, col("value").desc), out)(
-      (row, rs) => f(new RowTracker(ix, p, row), rs))
+    if (rowRanged(cells)) shim.rowWalk(cells, "row", order, out)(tracked)
+    else shim.sortedGroups(sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row"))),
+      "row", order, out)(tracked)
   }
 
   /** Field positions the tracker reads; `vis` is -1 without visScope,

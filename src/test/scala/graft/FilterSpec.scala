@@ -306,4 +306,35 @@ class FilterSpec extends SparkSpec {
     val bd = BigDecimalComparator(BigDecimal(7))
     assert(df.filter(bd.test(col("n"), CompareOp.GreaterOrEqual)).count() === 2)
   }
+
+  test("SubstringComparator lower-cases like the reference: ASCII, non-ASCII, null") {
+    import spark.implicits._
+    val df = Seq(Some("1-URGENT"), Some("low"), Some("ÇAĞRI İZMİR"), Some("ΣΟΦΙΑ"), None).toDF("v")
+    def kept(sub: String, op: CompareOp = CompareOp.Equal): Seq[Option[String]] =
+      df.filter(SubstringComparator(sub).test(col("v"), op)).as[Option[String]].collect().toSeq
+    assert(kept("urgent") === Seq(Some("1-URGENT")))
+    assert(kept("Gent") === Seq(Some("1-URGENT")))
+    // String.toLowerCase(Locale.ROOT): Ç→ç, Ğ→ğ, Σ→σ (final-sigma
+    // context aside), İ→i̇ (a dotted i, two chars)
+    assert(kept("çağri") === Seq(Some("ÇAĞRI İZMİR")))
+    assert(kept("i\u0307zmi\u0307r") === Seq(Some("ÇAĞRI İZMİR")))
+    assert(kept("σοφ") === Seq(Some("ΣΟΦΙΑ")))
+    // a null value is neither equal nor unequal
+    assert(kept("urgent", CompareOp.NotEqual) === Seq(Some("low"), Some("ÇAĞRI İZMİR"), Some("ΣΟΦΙΑ")))
+    assert(df.filter(col("v").isNull).select(SubstringComparator("x").test(col("v"), CompareOp.Equal))
+      .as[Option[Boolean]].collect().toSeq === Seq(None))
+  }
+
+  test("SubstringComparator compiles to no lower(): no ICU case mapping on the read path") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Lower
+    def lowers(df: DataFrame) = df.queryExecution.optimizedPlan.collect { case p => p.expressions }
+      .flatten.flatMap(_.collect { case l: Lower => l })
+    for (op <- Seq(CompareOp.Equal, CompareOp.NotEqual)) {
+      val df = co.filter(SubstringComparator("URGENT").test(col("value"), op))
+      assert(lowers(df).isEmpty, s"$op:\n${df.queryExecution.optimizedPlan}")
+    }
+    val scan = FilterCompiler(co, ValueFilter(CompareOp.Equal, SubstringComparator("URGENT")))
+    assert(lowers(scan).isEmpty, s"${scan.queryExecution.optimizedPlan}")
+  }
 }

@@ -310,7 +310,7 @@ class PlanShapeSpec extends SparkSpec {
     // createexternalrow deserializer builds a Row per cell, no
     // getexternalrowfield serializer reads one back
     import org.apache.spark.sql.catalyst.expressions.objects.{CreateExternalRow, GetExternalRowField}
-    import org.apache.spark.sql.execution.MapGroupsExec
+    import org.apache.spark.sql.execution.MapPartitionsExec
     import graft.read.{GScan, GTable}
     import spark.implicits._
     val range = GScan().withRange("0000000001", "0000000500")
@@ -324,14 +324,15 @@ class PlanShapeSpec extends SparkSpec {
         case e @ (_: CreateExternalRow | _: GetExternalRowField) => e.prettyName
       })
       assert(encoded.isEmpty, s"$name: no Row encoder ($encoded):\n$phys")
-      assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"$name: one pass:\n$phys")
+      assert(phys.collect { case m: MapPartitionsExec => m }.size === 1, s"$name: one pass:\n$phys")
     }
   }
 
   test("an SCVF filtered scan over the cell store decides its filter in the pass") {
     // the row filter runs as a per-row program inside the one resolve
-    // pass: one MapGroupsExec, and the store's layout spares every exchange
-    import org.apache.spark.sql.execution.MapGroupsExec
+    // pass: one walk over the store's partitions, and the store's layout
+    // spares every exchange
+    import org.apache.spark.sql.execution.MapPartitionsExec
     import graft.filter.ParseFilter
     import graft.read.{GScan, GTable}
     val range = GScan().withRange("0000000001", "0000000500")
@@ -342,7 +343,7 @@ class PlanShapeSpec extends SparkSpec {
         "per-cell scan" -> "ValueFilter(=, 'substring:URGENT')")) {
       val phys = assertNoExchange(name, GTable.scanFiltered(store, range, ParseFilter.parse(f)))
       if (name.startsWith("SCVF"))
-        assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"$name: one pass:\n$phys")
+        assert(phys.collect { case m: MapPartitionsExec => m }.size === 1, s"$name: one pass:\n$phys")
     }
   }
 
@@ -405,7 +406,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("a Page/WhileMatch-free filter tree of each kind is one pass over the cell store") {
-    import org.apache.spark.sql.execution.MapGroupsExec
+    import org.apache.spark.sql.execution.MapPartitionsExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
@@ -428,7 +429,7 @@ class PlanShapeSpec extends SparkSpec {
       for ((name, df) <- plans) {
         val phys = physical(df)
         val clue = s"$name $f:\n$phys"
-        assert(phys.collect { case m: MapGroupsExec => m }.size === 1, s"one pass: $clue")
+        assert(phys.collect { case m: MapPartitionsExec => m }.size === 1, s"one pass: $clue")
         assert(phys.collect { case w: WindowExec => w }.isEmpty, s"no window: $clue")
         assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"no broadcast: $clue")
         assert(phys.collect { case j: BaseJoinExec => j }.isEmpty, s"no join: $clue")
@@ -481,5 +482,36 @@ class PlanShapeSpec extends SparkSpec {
           "per-cell" -> filtered("ValueFilter(=, 'substring:URGENT')")))
         assert(jobs(op)(df.collect()) === 1, op)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("reads over the cell store plan no adaptive stages") {
+    // the store's cached plan is a plain scan and the pass walks its
+    // partitions with no required distribution, so nothing in these
+    // reads makes the planner wrap them in an AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.filter._
+    import graft.read.{GScan, GTable}
+    import spark.implicits._
+    val range = GScan().withRange("0000000001", "0000000500")
+    val scvf = SingleColumnValueFilter("d", "o_orderstatus", CompareOp.Equal, BinaryComparator("F"))
+    for ((name, df) <- Seq(
+        "get" -> GTable.get(store, "0000000007"),
+        "paged get" -> GTable.get(store, "0000000007", GScan(maxResultsPerCf = Some(2))),
+        "scan" -> GTable.scan(store, range),
+        "raw scan" -> GTable.scan(store, range.copy(raw = true)),
+        "multiGet" -> GTable.multiGet(store,
+          Seq("0000000007", "0000000123", "0000000456").toDF("row")),
+        "SCVF scan" -> GTable.scanFiltered(store, range, scvf),
+        "per-cell scan" -> GTable.scanFiltered(store, range,
+          ValueFilter(CompareOp.Equal, SubstringComparator("URGENT"))),
+        "admittedRows" -> FilterCompiler.admittedRows(store, scvf))) {
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty, s"$name: adaptive:\n$plan")
+    }
+  }
+
+  test("the declared SCVF, skip and SCVE queries sort the store locally: no exchange") {
+    for (name <- Seq("q10_scvf", "q19_skip_filter", "q53_scv_exclude"))
+      assertNoExchange(name, Queries.all.find(_.name == name).get.fn(spark, sf0001))
   }
 }

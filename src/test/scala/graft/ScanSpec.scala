@@ -218,4 +218,38 @@ class ScanSpec extends SparkSpec {
       assert(out.exists(_._2 == "a") === !exclude, clue)
     }
   }
+
+  test("reads without whole-stage codegen equal their whole-stage results") {
+    // Spark runs a stage interpreted when a generated method grows too
+    // large; the pass's serializers must evaluate there too, over the
+    // row-ranged store and over unclustered parquet alike
+    import graft.filter.ParseFilter
+    val root = java.nio.file.Files.createTempDirectory("interpreted_reads")
+    val key = "spark.sql.codegen.wholeStage"
+    val prev = spark.conf.get(key)
+    try {
+      val dir = root.resolve("cells").toString
+      co.write.parquet(dir)
+      val range = GScan().withRange("0000000001", "0000000200")
+      val scvf = ParseFilter.parse("SingleColumnValueFilter('d', 'o_orderstatus', =, 'binary:F')")
+      def reads(): Seq[(String, Seq[org.apache.spark.sql.Row])] =
+        Seq("store" -> co, "parquet" -> spark.read.parquet(dir)).flatMap { case (src, cells) =>
+          Seq(
+            s"$src get" -> GTable.get(cells, "0000000007"),
+            s"$src scan" -> GTable.scan(cells, range),
+            s"$src SCVF scan" -> GTable.scanFiltered(cells, range, scvf)
+          ).map { case (n, df) => n -> df.collect().toSeq }
+        }
+      val staged = reads()
+      spark.conf.set(key, "false")
+      val interpreted = reads()
+      for (((n, a), (_, b)) <- staged.zip(interpreted)) {
+        assert(a.nonEmpty, n)
+        assert(b === a, n)
+      }
+    } finally {
+      spark.conf.set(key, prev)
+      Queries.deleteTree(root)
+    }
+  }
 }
