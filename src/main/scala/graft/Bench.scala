@@ -185,16 +185,20 @@ object Bench {
       errJson("load", loadErrors, loads.map(_._1)),
       errJson("warmup", warmupErrors, bench.keys.toSeq),
       s""""shuffle_partitions":$shufflePartitions""").mkString(",")
-    try {
-      val sidecar = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_RAW", "dev/bench_raw_last.json"))
+    val sidecar = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_RAW", "dev/bench_raw_last.json"))
+    // a failed sidecar write is a counted, named harness error on the line
+    val sidecarError = try {
       Option(sidecar.getParent).foreach(java.nio.file.Files.createDirectories(_))
       val parJson = parMax
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       java.nio.file.Files.write(sidecar,
         s"""{"sf":"$sfDir","cpus":$cpus,"n_reps":$reps,"n_queries":${names.size},"load_sec":${f3(loadS)},$harness,"rep_totals":$repTotals,"query_min":${jmap(minQ)},"par_max":$parJson,"reps":$repsJson}"""
           .getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+      None
+    } catch { case scala.util.control.NonFatal(e) => Some(e.getClass.getSimpleName) }
+    val sidecarJson = errJson("sidecar", sidecarError.map(sidecar.toString -> _).toMap, Seq(sidecar.toString))
+    val sidecarNote = if (sidecarError.isEmpty) s"full map in $sidecar" else "sidecar write failed"
     val topN = minQ.sortBy(-_._2).take(15)
     // parallelism evidence inline for the TOP-15 the driver reads, plus
     // a census over all queries (how many ever exceeded 1 / half the
@@ -204,7 +208,7 @@ object Bench {
       .mkString("{", ",", "}")
     val halfCores = math.max(2, cpus / 2)
     val parGeHalf = names.count(n => parMax.getOrElse(n, 0) >= halfCores)
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","agg":"per_query_min","n_reps":$reps,"n_queries":${names.size},"load_sec":${f3(loadS)},$harness,"n_errors":${hardFail.size},"errors":$es,"flaky":$fl,"queries":${jmap(topN)},"queries_note":"top15_by_min_of_${names.size}; full map in dev/bench_raw_last.json","par_top":$parTop,"par_note":"max_concurrent_tasks_at_cpus=$cpus; ge_half_cores=$parGeHalf/${names.size}","rep_totals":$repTotals,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","agg":"per_query_min","n_reps":$reps,"n_queries":${names.size},"load_sec":${f3(loadS)},$harness,$sidecarJson,"n_errors":${hardFail.size},"errors":$es,"flaky":$fl,"queries":${jmap(topN)},"queries_note":"top15_by_min_of_${names.size}; $sidecarNote","par_top":$parTop,"par_note":"max_concurrent_tasks_at_cpus=$cpus; ge_half_cores=$parGeHalf/${names.size}","rep_totals":$repTotals,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -99,10 +99,10 @@ object Resolve {
     *                     (ColumnFamilyDescriptorBuilder.java:147 ff):
     *                     with a time range, tombstones at/after the
     *                     range max have not "happened yet" in the as-of
-    *                     view, so they do not mask. (The mvcc-ordered
-    *                     NEW_VERSION_BEHAVIOR tracker is out of scope —
-    *                     graft has no mvcc dimension; documented
-    *                     boundary.)
+    *                     view, so they do not mask. (A
+    *                     NEW_VERSION_BEHAVIOR family, whose masking
+    *                     follows write order, reads through
+    *                     [[latestNvb]] over a seq-bearing frame.)
     * @param program      a row-local filter decided in the pass, after
     *                     masking and the ts checks and before the version
     *                     gate ([[RowProgram]]; `cellFilter` runs ahead of it)
@@ -162,7 +162,7 @@ object Resolve {
   def rowVerdicts(cells: DataFrame, program: RowProgram, raw: Boolean, admitted: Boolean,
       timeRange: Option[TimeRange] = None): DataFrame = {
     val in = if (raw) cells else checked(cells, timeRange, None, None, Map.empty, 0, false)
-    perRow(program.flagged(in, pruned = admitted, raw),
+    tracked(program.flagged(in, pruned = admitted, raw),
       Pass(Int.MaxValue, None, 0, None, program = Some(program.code), raw = raw),
       StructType(Seq(cells.schema("row"))))(
       (t, rs) => if (t.run(rs).hasNext == admitted) Iterator(InternalRow(t.row)) else Iterator.empty)
@@ -242,20 +242,21 @@ object Resolve {
   /** NEW_VERSION_BEHAVIOR resolve (ColumnFamilyDescriptorBuilder
     * .java:197, NewVersionBehaviorTracker.java): mvcc-sensitive
     * masking over a SEQ-BEARING cell frame (`seqCol`, the per-cell
-    * write order — the WAL sequence-id analogue). A delete marker only
-    * masks cells written before it; deleted versions still consume
-    * version slots inside their mvcc segment; duplicate-(ts,type) puts
-    * mask. See [[graft.functions.NvbVisible]] for the tracker port.
+    * write order — the WAL sequence-id analogue, read as a long). A
+    * delete marker only masks cells written before it; deleted versions
+    * still consume version slots inside their mvcc segment; a Put with
+    * the ts of the column's previous Put is masked.
     *
-    * Dataflow: ONE shuffle onto the column coordinate (collect each
-    * column's cells + each family's family-scope markers into arrays),
-    * then the per-column tracker kernel runs map-side and the visible
-    * versions explode back out. The family-marker join is row+family
-    * keyed — a prefix of the column grouping, so it reuses the same
-    * partitioning (and the bucketed store layout satisfies both).
+    * The same per-row pass as [[latest]], with an [[NvbTracker]] in
+    * place of the default matcher: each row's cells are walked in
+    * (family, family-scope markers first, qualifier, ts DESC, type code
+    * DESC, seq DESC) order, the reference's CellComparator order with
+    * mvcc last, and each Put is decided on arrival. Over the cell
+    * stores' row layouts the pass plans no exchange, no aggregate and
+    * no join. Cells of an unknown type are ignored.
     *
     * Returns the canonical columns (row, family, qualifier, ts, type,
-    * value) plus `seqCol`, newest-first per column.
+    * value) plus `seqCol`, the surviving Puts newest-first per column.
     */
   def latestNvb(
       cells: DataFrame,
@@ -265,28 +266,22 @@ object Resolve {
       minVersions: Int = 0,
       seqCol: String = "seq"
   ): DataFrame = {
-    import graft.functions.{NvbFunctions, NvbKernel}
-    val tcode = CellType.all.map(t => (t, NvbKernel.typeCode(t)))
-      .foldLeft(lit(-1)) { case (acc, (t, c)) =>
-        when(col("type") === t, lit(c)).otherwise(acc)
-      }
+    require(maxVersions > 0 && resultMaxVersions > 0,
+      "latestNvb: maxVersions and resultMaxVersions must be positive")
+    val in = cells.select(col("row"), col("family"), col("qualifier"), col("ts"), col("type"),
+      col("value"), col(seqCol).cast("long").as(seqCol))
     val famScope = col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion)
-    val colCells = cells.filter(!famScope)
-      .groupBy("row", "family", "qualifier")
-      .agg(collect_list(struct(col("ts"), col(seqCol).as("seq"), tcode.as("tcode"),
-        col("value"))).as("__cs"))
-    val famCells = cells.filter(famScope)
-      .groupBy("row", "family")
-      .agg(collect_list(struct(col("ts"), col(seqCol).as("seq"), tcode.as("tcode")))
-        .as("__fs"))
-    colCells
-      .join(famCells, Seq("row", "family"), "left")
-      .select(col("row"), col("family"), col("qualifier"),
-        explode(NvbFunctions.nvb_visible(col("__cs"), col("__fs"), maxVersions,
-          resultMaxVersions, ttlCutoff.getOrElse(Long.MinValue), minVersions)).as("__v"))
-      .select(col("row"), col("family"), col("qualifier"),
-        col("__v.ts").as("ts"), lit(CellType.Put).as("type"),
-        col("__v.value").as("value"), col("__v.seq").as(seqCol))
+    val code = NvbTracker.codes.foldLeft(lit(-1)) { case (acc, (t, c)) =>
+      when(col("type") === t, lit(c)).otherwise(acc)
+    }
+    val order = Seq(col("family"), !famScope, when(!famScope, col("qualifier")),
+      col("ts").desc, code.desc, col(seqCol).desc)
+    val oldestTs = ttlCutoff.getOrElse(Long.MinValue)
+    val s = in.schema
+    val ix = NvbTracker.Ix(s.fieldIndex("family"), s.fieldIndex("qualifier"), s.fieldIndex("ts"),
+      s.fieldIndex("type"), s.fieldIndex(seqCol))
+    perRow(in, order, s)((row, rs) =>
+      new NvbTracker(ix, row != null, maxVersions, resultMaxVersions, oldestTs, minVersions).run(rs))
   }
 
   /** The matcher's pre-filter ts checks: scan/per-CF time range, and
@@ -363,29 +358,19 @@ object Resolve {
     withProgram(cells, program, Pass(Int.MaxValue, None, 0, None, cfOffset = cfOffset,
       cfLimit = cfLimit.getOrElse(Int.MaxValue), raw = true))
 
-  /** The one resolve operator: group the cells by row and walk each row
-    * in (family, family markers first, qualifier, ts DESC, markers
+  /** The default matcher's pass: group the cells by row and walk each
+    * row in (family, family markers first, qualifier, ts DESC, markers
     * first, value DESC) order through a [[RowTracker]] —
     * ScanQueryMatcher's single ordered pass. The last key makes the
     * pass deterministic: of two Puts with one (column, ts), the version
     * gate keeps the larger value, as the WAL sink's duplicate collapse
-    * and the SCVF verdict do. The grouping's ClusteredDistribution(row)
-    * is met by the cell stores' row layouts with no exchange; any
-    * other input takes exactly one row exchange, sized by
-    * [[sizedShufflePartitions]] when the default count would spill.
-    * Returns the surviving cells with `cells`' schema. */
+    * and the SCVF verdict do. Returns the surviving cells with `cells`'
+    * schema. */
   private def resolvePass(cells: DataFrame, p: Pass): DataFrame =
-    perRow(cells, p, cells.schema)((t, rs) => t.run(rs))
+    tracked(cells, p, cells.schema)((t, rs) => t.run(rs))
 
-  /** The pass over `cells` as one lazy plan node: `f` walks each row's
-    * cells as the input's own InternalRows and returns rows of `out`.
-    * Over a row-ranged store each partition already holds whole rows,
-    * so the pass walks the store's partitions in place
-    * ([[shim.rowWalk]]) and requires no distribution; any other input
-    * is grouped on row ([[shim.sortedGroups]]), which the bucketed
-    * stores' hash layouts meet with no exchange and anything else with
-    * one row exchange. Both shapes hand each row to one tracker. */
-  private def perRow(cells: DataFrame, p: Pass, out: StructType)(
+  /** [[perRow]] with a [[RowTracker]] under `p` handed each row. */
+  private def tracked(cells: DataFrame, p: Pass, out: StructType)(
       f: (RowTracker, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
     val s = cells.schema
     val ix = Ix(s.fieldIndex("family"), s.fieldIndex("qualifier"), s.fieldIndex("ts"),
@@ -394,7 +379,21 @@ object Resolve {
     val order = Seq(col("family"),
       !col("type").isin(CellType.DeleteFamily, CellType.DeleteFamilyVersion),
       col("qualifier"), col("ts").desc, col("type") === CellType.Put, col("value").desc)
-    val tracked = (row: UTF8String, rs: Iterator[InternalRow]) => f(new RowTracker(ix, p, row), rs)
+    perRow(cells, order, out)((row, rs) => f(new RowTracker(ix, p, row), rs))
+  }
+
+  /** The one resolve operator, as one lazy plan node: `f` walks each
+    * row's cells, in `order` and as the input's own InternalRows, and
+    * returns rows of `out`. Over a row-ranged store each partition
+    * already holds whole rows, so the pass walks the store's partitions
+    * in place ([[shim.rowWalk]]) and requires no distribution; any
+    * other input is grouped on row ([[shim.sortedGroups]]), which the
+    * bucketed stores' hash layouts meet with no exchange and anything
+    * else with one row exchange, sized by [[sizedShufflePartitions]]
+    * when the default count would spill. Both shapes hand each row to
+    * `f` once. */
+  private def perRow(cells: DataFrame, order: Seq[Column], out: StructType)(
+      f: (UTF8String, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame =
     // spill hedge: at a fixed spark.sql.shuffle.partitions the row
     // exchange's per-partition share grows with input (the r16 sf10 soak
     // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
@@ -402,10 +401,9 @@ object Resolve {
     // row with a size-derived count that the grouping then reuses. A
     // row-ranged store needs no exchange, and one would lose its key
     // order across partitions, which the scans' local order relies on.
-    if (rowRanged(cells)) shim.rowWalk(cells, "row", order, out)(tracked)
+    if (rowRanged(cells)) shim.rowWalk(cells, "row", order, out)(f)
     else shim.sortedGroups(sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row"))),
-      "row", order, out)(tracked)
-  }
+      "row", order, out)(f)
 
   /** Field positions the tracker reads; `vis` is -1 without visScope,
     * `base` (the first program column, after the input's fields) -1
@@ -421,14 +419,15 @@ object Resolve {
 
   /** The column of the last cell a stage of the tracker saw, copied off
     * its row (the pass reuses a row's buffer for the next cell). */
-  private final class LastColumn {
+  private[read] final class LastColumn {
     private var seen = false
     private var family, qualifier: UTF8String = _
     private def kept(s: UTF8String) = if (s == null) null else s.copy()
 
-    /** 2 if the cell in `r` opens a family, 1 a column, else 0. */
-    def step(r: InternalRow, ix: Ix): Int = {
-      val (f, q) = (r.getUTF8String(ix.family), r.getUTF8String(ix.qualifier))
+    /** 2 if the cell in `r` opens a family, 1 a column, else 0; the
+      * family and qualifier are `r`'s fields at `familyAt`, `qualifierAt`. */
+    def step(r: InternalRow, familyAt: Int, qualifierAt: Int): Int = {
+      val (f, q) = (r.getUTF8String(familyAt), r.getUTF8String(qualifierAt))
       val moved = if (!seen || f != family) 2 else if (q != qualifier) 1 else 0
       if (moved == 2) family = kept(f)
       if (moved >= 1) qualifier = kept(q)
@@ -471,7 +470,7 @@ object Resolve {
 
     /** Delete tracking: true for a Put no marker masks (every cell when raw). */
     private def live(r: InternalRow): Boolean = p.raw || {
-      val moved = tracked.step(r, ix)
+      val moved = tracked.step(r, ix.family, ix.qualifier)
       if (moved == 2) { famDel.clear(); famVerDel.clear() }
       if (moved >= 1) { colDel.clear(); verDel.clear() }
       val tsNull = r.isNullAt(ix.ts)
@@ -493,7 +492,7 @@ object Resolve {
 
     /** The version gate (not on raw passes) and the per-family page. */
     private def keep(r: InternalRow): Boolean = {
-      gated.step(r, ix) match {
+      gated.step(r, ix.family, ix.qualifier) match {
         case 2 => familyValues = 0; versions = 0
         case 1 => versions = 0
         case _ =>

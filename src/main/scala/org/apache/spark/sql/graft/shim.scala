@@ -24,7 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[ofRows]] hands a bounded stream's result from the session it ran
   * in back to the caller's; [[cachedRun]] caches a store as a plain
   * scan of its built data; [[sortedGroups]] and [[rowWalk]] are the
-  * resolve pass's two plan shapes.
+  * resolve pass's two plan shapes, under either of its trackers: the
+  * default matcher's `RowTracker` and NEW_VERSION_BEHAVIOR's
+  * `NvbTracker`.
   */
 object shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)

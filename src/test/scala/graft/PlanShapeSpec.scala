@@ -514,4 +514,28 @@ class PlanShapeSpec extends SparkSpec {
     for (name <- Seq("q10_scvf", "q19_skip_filter", "q53_scv_exclude"))
       assertNoExchange(name, Queries.all.find(_.name == name).get.fn(spark, sf0001))
   }
+
+  test("latestNvb over cells_events_v is one pass: no generate, aggregate, join or exchange") {
+    // the NEW_VERSION_BEHAVIOR tracker walks each row inside the resolve
+    // pass, whose grouping the store's row hash layout meets: no
+    // per-column collect, family-marker join or explode
+    import org.apache.spark.sql.execution.{GenerateExec, MapGroupsExec, MapPartitionsExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.read.Resolve
+    val events = graft.model.Fixtures.cellsEventsV(spark, sf0001)
+    events.count()
+    // q65's seq: puts at ts*10, markers interleaved
+    val seq = when(col("type") === "Put", col("ts") * 10)
+      .when(col("type") === "DeleteColumn", lit(25L))
+      .when(col("type") === "DeleteFamily", lit(15L))
+      .otherwise(lit(35L))
+    val phys = assertNoExchange("latestNvb",
+      Resolve.latestNvb(events.withColumn("seq", seq), maxVersions = 2))
+    val passes = phys.collect { case m @ (_: MapGroupsExec | _: MapPartitionsExec) => m }
+    assert(passes.size === 1, s"one pass:\n$phys")
+    assert(phys.collect { case g: GenerateExec => g }.isEmpty, s"no generate:\n$phys")
+    assert(phys.collect { case a: BaseAggregateExec => a }.isEmpty, s"no aggregate:\n$phys")
+    assert(phys.collect { case j: BaseJoinExec => j }.isEmpty, s"no join:\n$phys")
+  }
 }

@@ -431,7 +431,7 @@ class ResolvePropertySpec extends SparkSpec {
       GCell(r, f, q, ts, t, if (rnd.nextInt(12) == 0) null else s"v${rnd.nextInt(4)}")
     }).filter(c => c.qualifier != "" || rnd.nextInt(8) == 0).toDF()
     val order = GTable.cellOrder()
-    val ranged = cells.repartitionByRange(4, col("row")).sortWithinPartitions(order: _*).persist()
+    val ranged = rangedStore(cells)
     val hashed = cells.repartition(4, col("row")).sortWithinPartitions(order: _*).persist()
     try {
       ranged.count(); hashed.count()
