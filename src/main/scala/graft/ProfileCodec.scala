@@ -141,7 +141,7 @@ object ProfileCodec {
       }
       time("write GZ bs=65536") {
         val bos = new ByteArrayOutputStream(64 << 20)
-        HFileV3.write(bos, cells.iterator, blockSize = 65536, gz = true)
+        HFileV3.write(bos, cells.iterator, blockSize = 65536, compression = HFileV3.CompressionGz)
         bos.size().toLong
       }
     }

@@ -1203,22 +1203,14 @@ object GAdmin {
         var tsMin = Long.MaxValue
         var tsMax = Long.MinValue
         files.foreach { f =>
-          val in = tfs.open(f.getPath)
-          try {
-            val tail = new Array[Byte](graft.codec.HFileV3.TrailerSize)
-            in.readFully(f.getLen - tail.length, tail)
-            val trailer = graft.codec.HFileV3.readTrailer(tail)
-            val pread: graft.codec.HFileV3.PRead = (off, n) => {
-              val buf = new Array[Byte](n); in.readFully(off, buf); buf
-            }
-            val info = graft.codec.HFileV3.readFileInfo(pread, trailer)
-            cells += trailer.entryCount
-            bytes += f.getLen
-            graft.codec.HFileV3.parseTimeRange(info).foreach { case (mn, mx) =>
-              if (mn < tsMin) tsMin = mn
-              if (mx > tsMax) tsMax = mx
-            }
-          } finally in.close()
+          val (trailer, info) =
+            graft.flow.HFiles.readMeta(tfs, f.getPath, f.getLen)
+          cells += trailer.entryCount
+          bytes += f.getLen
+          graft.codec.HFileV3.parseTimeRange(info).foreach { case (mn, mx) =>
+            if (mn < tsMin) tsMin = mn
+            if (mx > tsMax) tsMax = mx
+          }
         }
         val n = files.length
         val pressure =

@@ -76,7 +76,7 @@ object RegionSplit {
     val width = math.max(a.length, b.length)
     val ap = java.util.Arrays.copyOf(a, width)
     val bp = java.util.Arrays.copyOf(b, width)
-    require(compareBytes(ap, bp) < 0, "b <= a")
+    require(java.util.Arrays.compareUnsigned(ap, bp) < 0, "b <= a")
     val header = Array[Byte](1, 0)
     val start = new BigInteger(header ++ ap)
     val stop = new BigInteger(header ++ bp)
@@ -112,16 +112,6 @@ object RegionSplit {
     bytesSplit(a, b, inclusive = false, num = 1)(1)
 
   def hex(b: Array[Byte]): String = b.map(x => f"$x%02x").mkString
-
-  private def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    while (i < a.length && i < b.length) {
-      val c = (a(i) & 0xFF) - (b(i) & 0xFF)
-      if (c != 0) return c
-      i += 1
-    }
-    a.length - b.length
-  }
 
   private[graft] def utf8(s: String): Array[Byte] = s.getBytes(UTF_8)
 }

@@ -3,6 +3,7 @@ package graft.codec
 import java.io.{ByteArrayOutputStream, DataOutputStream, EOFException, InputStream, OutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
+import java.util.Arrays.compareUnsigned
 import java.util.zip.{CRC32, CRC32C}
 
 /** HFile version-3 byte format — the reference's on-disk store-file
@@ -137,26 +138,15 @@ object HFileV3 {
     * timestamp DESC, type code DESC (deletes sort before puts at the
     * same ts). Returns <0 if a before b. */
   def compareCells(a: HCell, b: HCell): Int = {
-    val r = compareBytes(a.row, b.row)
+    val r = compareUnsigned(a.row, b.row)
     if (r != 0) return r
-    val f = compareBytes(a.family, b.family)
+    val f = compareUnsigned(a.family, b.family)
     if (f != 0) return f
-    val q = compareBytes(a.qualifier, b.qualifier)
+    val q = compareUnsigned(a.qualifier, b.qualifier)
     if (q != 0) return q
     val t = java.lang.Long.compare(b.ts, a.ts)
     if (t != 0) return t
     java.lang.Integer.compare(b.typ & 0xff, a.typ & 0xff)
-  }
-
-  private def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
   }
 
   // ------------------------------------------------------------------
@@ -571,7 +561,7 @@ object HFileV3 {
 
   def write(out: OutputStream, cells: Iterator[HCell],
       blockSize: Int = 65536, bytesPerChecksum: Int = 16384,
-      rowBloom: Boolean = true, gz: Boolean = false,
+      rowBloom: Boolean = true,
       encoding: Int = BlockEncoding.IdNone,
       compression: Int = CompressionNone,
       indexMaxChunk: Int = 128 * 1024,
@@ -586,13 +576,10 @@ object HFileV3 {
       "ROWCOL and ROWPREFIX_FIXED_LENGTH blooms are mutually exclusive")
     rowPrefixBloom.foreach(n =>
       require(n > 0, s"rowprefix bloom length must be positive: $n"))
-    require(!(gz && compression != CompressionNone && compression != CompressionGz),
-      "pass either gz=true or a compression ordinal, not both")
     // TAGS_COMPRESSED is only effective with an encoding
     // (HFileWriterImpl.java:873: encoding != NONE && compressTags)
     require(!compressTags || (withTags && encoding != BlockEncoding.IdNone),
       "compressTags requires withTags and a data block encoding")
-    val codec = if (gz) CompressionGz else compression
     // per-file random starting IV, advancing per block (the reference
     // draws Bytes.secureRandom once at encoding-context init)
     val crypto: Option[(Array[Byte], Array[Byte])] = encryption.map { e =>
@@ -635,7 +622,7 @@ object HFileV3 {
       bloomChunk.compact()
       val offset = co.pos
       val onDisk = writeBlock(co, MagicBloom, bloomChunk.bits,
-        prevBloomOffset, bytesPerChecksum, codec, crypto)
+        prevBloomOffset, bytesPerChecksum, compression, crypto)
       prevBloomOffset = offset
       totalUncompressed += HeaderSize + bloomChunk.bits.length
       bloomChunks += ((offset, onDisk, bloomFirstRow, bloomChunk))
@@ -659,7 +646,7 @@ object HFileV3 {
       val payload = nonRootIndexPayload(curLeaf.toSeq)
       val offset = co.pos
       val onDisk = writeBlock(co, MagicLeafIdx, payload,
-        prevLeafOffset, bytesPerChecksum, codec, crypto)
+        prevLeafOffset, bytesPerChecksum, compression, crypto)
       prevLeafOffset = offset
       totalUncompressed += HeaderSize + payload.length
       leafBlocks += BlockRecord(offset, onDisk, curLeaf.head.firstKey)
@@ -675,7 +662,7 @@ object HFileV3 {
         else buf.toByteArray
       val offset = co.pos
       val onDisk = writeBlock(co, if (encoded) MagicDataEncoded else MagicData,
-        payload, prevDataOffset, bytesPerChecksum, codec, crypto)
+        payload, prevDataOffset, bytesPerChecksum, compression, crypto)
       dataBlocks += BlockRecord(offset, onDisk, firstKeyOfBlock)
       curLeaf += BlockRecord(offset, onDisk, firstKeyOfBlock)
       curLeafSize += 4 + 12 + firstKeyOfBlock.length // secondary-index int + entry
@@ -703,12 +690,12 @@ object HFileV3 {
       val isNewBloomKey =
         if (!rowBloom) false
         else if (rowColBloom)
-          lastCell == null || compareBytes(lastCell.row, c.row) != 0 ||
-            compareBytes(lastCell.qualifier, c.qualifier) != 0
+          lastCell == null || compareUnsigned(lastCell.row, c.row) != 0 ||
+            compareUnsigned(lastCell.qualifier, c.qualifier) != 0
         else if (rowPrefixBloom.isDefined)
           lastCell == null ||
-            compareBytes(prefixKey(lastCell.row), prefixKey(c.row)) != 0
-        else lastCell == null || compareBytes(lastCell.row, c.row) != 0
+            compareUnsigned(prefixKey(lastCell.row), prefixKey(c.row)) != 0
+        else lastCell == null || compareUnsigned(lastCell.row, c.row) != 0
       if (isNewBloomKey) {
         val bloomKey =
           if (rowColBloom) rowColBloomKey(c.row, c.qualifier)
@@ -813,7 +800,7 @@ object HFileV3 {
           val payload = nonRootIndexPayload(chunk.toSeq)
           val offset = co.pos
           val onDisk = writeBlock(co, MagicInterIdx, payload,
-            prevInterOffset, bytesPerChecksum, codec, crypto)
+            prevInterOffset, bytesPerChecksum, compression, crypto)
           prevInterOffset = offset
           totalUncompressed += HeaderSize + payload.length
           parent += BlockRecord(offset, onDisk, chunk.head.firstKey)
@@ -841,11 +828,11 @@ object HFileV3 {
     }
     if (midKeyMeta != null) idxDos.write(midKeyMeta)
     val rootPayload = idxBuf.toByteArray
-    writeBlock(co, MagicRootIdx, rootPayload, -1L, bytesPerChecksum, codec, crypto)
+    writeBlock(co, MagicRootIdx, rootPayload, -1L, bytesPerChecksum, compression, crypto)
     totalUncompressed += HeaderSize + rootPayload.length
 
     // --- meta index (empty single-level root) ---
-    writeBlock(co, MagicRootIdx, Array.emptyByteArray, rootIndexOffset, bytesPerChecksum, codec, crypto)
+    writeBlock(co, MagicRootIdx, Array.emptyByteArray, rootIndexOffset, bytesPerChecksum, compression, crypto)
     totalUncompressed += HeaderSize
 
     // --- file info ---
@@ -904,7 +891,7 @@ object HFileV3 {
     // FileInfoProto { repeated BytesBytesPair map_entry = 1 }; pairs
     // sorted by key bytes (HFileInfo is a sorted map)
     val fiBody = new ByteArrayOutputStream()
-    for ((k, v) <- fiEntries.sortWith((a, b) => compareBytes(a._1, b._1) < 0)) {
+    for ((k, v) <- fiEntries.sortWith((a, b) => compareUnsigned(a._1, b._1) < 0)) {
       val pair = new ByteArrayOutputStream()
       pbBytesField(pair, 1, k)
       pbBytesField(pair, 2, v)
@@ -915,7 +902,7 @@ object HFileV3 {
     writeVarint(fiPayload, fiBody.size().toLong) // writeDelimitedTo framing
     fiBody.writeTo(fiPayload)
     val fiBytes = fiPayload.toByteArray
-    writeBlock(co, MagicFileInfo, fiBytes, -1L, bytesPerChecksum, codec, crypto)
+    writeBlock(co, MagicFileInfo, fiBytes, -1L, bytesPerChecksum, compression, crypto)
     totalUncompressed += HeaderSize + fiBytes.length
 
     // --- general bloom meta (load-on-open, after file info — the
@@ -946,7 +933,7 @@ object HFileV3 {
         bmd.write(firstRow)
       }
       val bmBytes = bm.toByteArray
-      writeBlock(co, MagicBloomMeta, bmBytes, -1L, bytesPerChecksum, codec, crypto)
+      writeBlock(co, MagicBloomMeta, bmBytes, -1L, bytesPerChecksum, compression, crypto)
       totalUncompressed += HeaderSize + bmBytes.length
     }
 
@@ -963,7 +950,7 @@ object HFileV3 {
     pbVarintField(pb, 9, firstDataOffset)
     pbVarintField(pb, 10, lastDataOffset)
     pbBytesField(pb, 11, ComparatorName.getBytes(StandardCharsets.UTF_8))
-    pbVarintField(pb, 12, codec.toLong)
+    pbVarintField(pb, 12, compression.toLong)
     // encryption_key (field 13): the per-file data key wrapped under
     // the subject master key (HFileWriterImpl.finishClose)
     for (e <- encryption)
@@ -1000,6 +987,10 @@ object HFileV3 {
       comparatorClassName: String, compressionCodec: Int,
       majorVersion: Int, minorVersion: Int,
       encryptionKey: Option[Array[Byte]] = None)
+
+  /** The fixed trailer of the `fileLen`-byte file behind `pread`. */
+  def readTrailer(pread: PRead, fileLen: Long): Trailer =
+    readTrailer(pread(fileLen - TrailerSize, TrailerSize))
 
   /** Parse the fixed trailer from the last [[TrailerSize]] bytes. */
   def readTrailer(tail: Array[Byte]): Trailer = {
@@ -1214,22 +1205,10 @@ object HFileV3 {
     * would leave one daughter empty → None. */
   def midKeyRow(pread: PRead, fileLen: Long,
       subject: String = HCrypto.DefaultSubject): Option[Array[Byte]] = {
-    val trailer = readTrailer(pread(fileLen - TrailerSize, TrailerSize))
+    val trailer = readTrailer(pread, fileLen)
     if (trailer.dataIndexCount == 0) return None
     val key = dataKeyOf(trailer, subject)
-    val (blk, _) = readBlockAt(pread, trailer.loadOnOpenOffset,
-      trailer.compressionCodec, key)
-    require(blk.magic == "IDXROOT2", s"expected IDXROOT2, got ${blk.magic}")
-    val in = new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(blk.payload))
-    val entries = (0 until trailer.dataIndexCount).map { _ =>
-      val off = in.readLong()
-      in.readInt()
-      val klen = readVLong(in).toInt
-      val k = new Array[Byte](klen)
-      in.readFully(k)
-      (off, k)
-    }
+    val (entries, in) = rootIndex(pread, trailer, key)
     val midKey: Array[Byte] =
       if (trailer.numDataIndexLevels > 1) {
         // the 16-byte mid-key metadata after the root entries:
@@ -1241,45 +1220,44 @@ object HFileV3 {
         val (leaf, _) = readBlockAt(pread, leafOff, trailer.compressionCodec, key)
         require(leaf.magic == "IDXLEAF2", s"expected IDXLEAF2, got ${leaf.magic}")
         parseNonRootIndex(leaf.payload)(midIdx)._3
-      } else entries(trailer.dataIndexCount / 2)._2
-    val midRow = decodeKey(midKey)._1
-    val firstRow = decodeKey(entries.head._2)._1
+      } else entries(trailer.dataIndexCount / 2)._3
+    val midRow = rowOfKey(midKey)
+    val firstRow = rowOfKey(entries.head._3)
     val lastRow = readFileInfo(pread, trailer, subject).get("hfile.LASTKEY")
-      .map(decodeKey(_)._1)
+      .map(rowOfKey)
     if (java.util.Arrays.equals(midRow, firstRow) ||
         lastRow.exists(java.util.Arrays.equals(midRow, _))) None
     else Some(midRow)
   }
 
   def readRootIndex(pread: PRead, trailer: Trailer,
-      subject: String = HCrypto.DefaultSubject): Seq[(Long, Int, Array[Byte])] = {
+      subject: String = HCrypto.DefaultSubject): Seq[(Long, Int, Array[Byte])] =
+    rootIndex(pread, trailer, dataKeyOf(trailer, subject))._1
+
+  /** Root index entries, plus the block stream positioned after them
+    * (where a multi-level index keeps its mid-key metadata). */
+  private def rootIndex(pread: PRead, trailer: Trailer, key: Option[Array[Byte]])
+      : (IndexedSeq[(Long, Int, Array[Byte])], java.io.DataInputStream) = {
     val (blk, _) = readBlockAt(pread, trailer.loadOnOpenOffset,
-      trailer.compressionCodec, dataKeyOf(trailer, subject))
+      trailer.compressionCodec, key)
     require(blk.magic == "IDXROOT2", s"expected IDXROOT2, got ${blk.magic}")
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(blk.payload))
-    (0 until trailer.dataIndexCount).map { _ =>
+    val entries = (0 until trailer.dataIndexCount).map { _ =>
       val off = in.readLong()
       val sz = in.readInt()
       val klen = readVLong(in).toInt
-      val key = new Array[Byte](klen)
-      in.readFully(key)
-      (off, sz, key)
+      val k = new Array[Byte](klen)
+      in.readFully(k)
+      (off, sz, k)
     }
+    (entries, in)
   }
 
-  private def decodeKey(key: Array[Byte]): (Array[Byte], Array[Byte], Array[Byte], Long, Byte) = {
-    val kb = ByteBuffer.wrap(key)
-    val rowLen = kb.getShort & 0xffff
-    val row = new Array[Byte](rowLen)
-    kb.get(row)
-    val famLen = kb.get() & 0xff
-    val fam = new Array[Byte](famLen)
-    kb.get(fam)
-    val qual = new Array[Byte](key.length - 2 - rowLen - 1 - famLen - 8 - 1)
-    kb.get(qual)
-    val ts = kb.getLong
-    val typ = kb.get()
-    (row, fam, qual, ts, typ)
+  /** Row of a serialized cell key (KeyValue key layout: 2-byte
+    * big-endian row length, then the row). */
+  def rowOfKey(key: Array[Byte]): Array[Byte] = {
+    val rl = ((key(0) & 0xff) << 8) | (key(1) & 0xff)
+    java.util.Arrays.copyOfRange(key, 2, 2 + rl)
   }
 
   /** Per-file cell-decode settings, derived from FILE_INFO
@@ -1320,7 +1298,7 @@ object HFileV3 {
     // small-block files (4 KiB store blocks) cost one underlying read
     // per megabyte instead of two per block
     val bp = bufferedPRead(pread, fileLen)
-    val trailer = readTrailer(bp(fileLen - TrailerSize, TrailerSize))
+    val trailer = readTrailer(bp, fileLen)
     if (trailer.firstDataBlockOffset < 0) return Iterator.empty
     val key = dataKeyOf(trailer, subject)
     val ctx = decodeCtxOf(readFileInfo(bp, trailer, subject))
@@ -1401,7 +1379,7 @@ object HFileV3 {
     * and span blocks — the writer splits at cell boundaries). */
   final class HFileHandle(pread: PRead, fileLen: Long,
       subject: String = HCrypto.DefaultSubject) {
-    val trailer: Trailer = readTrailer(pread(fileLen - TrailerSize, TrailerSize))
+    val trailer: Trailer = readTrailer(pread, fileLen)
     private val dataKey = dataKeyOf(trailer, subject)
     private val fi = readFileInfo(pread, trailer, subject)
     private val ctx = decodeCtxOf(fi)
@@ -1461,9 +1439,8 @@ object HFileV3 {
 
     /** (row, qualifier) of a serialized rowcol bloom key (famLen=0). */
     private def rowQualOfBloomKey(k: Array[Byte]): (Array[Byte], Array[Byte]) = {
-      val rl = ((k(0) & 0xff) << 8) | (k(1) & 0xff)
-      (java.util.Arrays.copyOfRange(k, 2, 2 + rl),
-        java.util.Arrays.copyOfRange(k, 2 + rl + 1, k.length - 9))
+      val row = rowOfKey(k)
+      (row, java.util.Arrays.copyOfRange(k, 2 + row.length + 1, k.length - 9))
     }
 
     /** Probe the compound bloom with `key`, locating the chunk by the
@@ -1490,13 +1467,13 @@ object HFileV3 {
     }
 
     private def bloomSaysPresent(row: Array[Byte]): Boolean = bloomType match {
-      case Some("ROW") => bloomProbe(row, compareBytes)
+      case Some("ROW") => bloomProbe(row, compareUnsigned)
       case Some("ROWPREFIX_FIXED_LENGTH") =>
         // Get probe: key = the row's first min(n, rowLen) bytes
         // (StoreFileReader.passesGeneralRowPrefixBloomFilter:342-343)
         bloomPrefixLen.forall(n => bloomProbe(
           if (row.length <= n) row else java.util.Arrays.copyOf(row, n),
-          compareBytes))
+          compareUnsigned))
       case _ => true // ROWCOL can't serve a row-only probe
     }
 
@@ -1512,7 +1489,7 @@ object HFileV3 {
           if (prefix.length < n) true // common prefix shorter than n
           else bloomProbe(
             if (prefix.length == n) prefix
-            else java.util.Arrays.copyOf(prefix, n), compareBytes)
+            else java.util.Arrays.copyOf(prefix, n), compareUnsigned)
         case _ => true
       }
 
@@ -1527,16 +1504,10 @@ object HFileV3 {
         bloomProbe(rowColBloomKey(row, qualifier), (a, b) => {
           val (ra, qa) = rowQualOfBloomKey(a)
           val (rb, qb) = rowQualOfBloomKey(b)
-          val r = compareBytes(ra, rb)
-          if (r != 0) r else compareBytes(qa, qb)
+          val r = compareUnsigned(ra, rb)
+          if (r != 0) r else compareUnsigned(qa, qb)
         })
       case _ => true
-    }
-
-    private def rowOfKey(k: Array[Byte]): Array[Byte] = {
-      val bb = ByteBuffer.wrap(k)
-      val rl = bb.getShort & 0xffff
-      java.util.Arrays.copyOfRange(k, 2, 2 + rl)
     }
 
     /** Seek-before within one index level: the entry BEFORE the first
@@ -1547,7 +1518,7 @@ object HFileV3 {
       var lo = 0; var hi = entries.size
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (compareBytes(rowOfKey(entries(mid)._3), row) < 0) lo = mid + 1
+        if (compareUnsigned(rowOfKey(entries(mid)._3), row) < 0) lo = mid + 1
         else hi = mid
       }
       math.max(0, lo - 1)
@@ -1599,9 +1570,9 @@ object HFileV3 {
           val it = cellsOfDataBlock(blk, ctx)
           while (it.hasNext && !done) {
             val c = it.next()
-            val cmp = compareBytes(c.row, row)
+            val cmp = compareUnsigned(c.row, row)
             if (cmp == 0) {
-              if (qualifier.forall(q => compareBytes(c.qualifier, q) == 0))
+              if (qualifier.forall(q => compareUnsigned(c.qualifier, q) == 0))
                 out += c
             } else if (cmp > 0) done = true
           }

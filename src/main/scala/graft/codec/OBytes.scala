@@ -283,14 +283,6 @@ object OBytes extends OrderedCodec {
 
   /** Unsigned lexicographic compare — the order every encoding sorts by
     * (= Spark BinaryType ordering = HBase `Bytes.compareTo`). */
-  def compare(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
+  def compare(a: Array[Byte], b: Array[Byte]): Int =
+    java.util.Arrays.compareUnsigned(a, b)
 }

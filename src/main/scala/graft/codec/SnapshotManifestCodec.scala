@@ -295,11 +295,6 @@ object SnapshotManifestCodec {
     bb.array()
   }
 
-  private def rowOfSplitKey(k: Array[Byte]): Array[Byte] = {
-    val rl = ((k(0) & 0xff) << 8) | (k(1) & 0xff)
-    java.util.Arrays.copyOfRange(k, 2, 2 + rl)
-  }
-
   /** Raw Reference proto bytes: splitkey=1, range=2 (TOP=0, BOTTOM=1). */
   private def referenceProto(r: RefHalf): Array[Byte] = {
     val out = new ByteArrayOutputStream()
@@ -318,7 +313,7 @@ object SnapshotManifestCodec {
         case (1, 2) =>
           val l = readVarint(bb).toInt
           val b = new Array[Byte](l); bb.get(b)
-          splitRow = rowOfSplitKey(b)
+          splitRow = HFileV3.rowOfKey(b)
         case (2, 0) => top = readVarint(bb) == 0L
         case (_, w) => skipField(bb, w)
       }

@@ -90,11 +90,7 @@ object BackupRegistry {
     val fs = fsOf(spark, root)
     val p = registryPath(root)
     if (!fs.exists(p)) return Nil
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, "UTF-8").split("\n").toSeq
+    new String(HFiles.readAll(fs, p), "UTF-8").split("\n").toSeq
       .filter(_.nonEmpty).flatMap(decode)
   }
 
@@ -173,11 +169,7 @@ object BackupRegistry {
     val fs = fsOf(spark, root)
     val p = setsPath(root)
     if (!fs.exists(p)) return Map.empty
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+    new String(HFiles.readAll(fs, p), "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
       .flatMap { line =>
         line.split("\\|", -1) match {
           case Array(name, tabs) =>

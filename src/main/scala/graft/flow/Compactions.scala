@@ -374,8 +374,6 @@ object Compactions {
       dt: DtKnobs = DtKnobs(), now: Long,
       blockSize: Int = 65536): Seq[Long] = {
     import org.apache.spark.sql.functions.{col, lit, when}
-    import org.apache.spark.sql.Row
-    import graft.codec.HFileV3.HCell
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     healStore(fs, dir)
     val files = Option(fs.globStatus(new Path(dir, "part-*.hfile")))
@@ -383,7 +381,7 @@ object Compactions {
       .map(s => (s.getPath, s.getLen)).toSeq.sortBy(_._1.getName)
     if (files.isEmpty) return Nil
     val minTs = files.map { case (p, l) =>
-      HFileV3.parseTimeRange(readFileInfoOf(fs, p, l)).map(_._1)
+      HFileV3.parseTimeRange(HFiles.readMeta(fs, p, l)._2).map(_._1)
         .getOrElse(Long.MaxValue)
     }.min
     val boundaries = dateTieredBoundariesForMajor(minTs, now, dt)
@@ -400,9 +398,6 @@ object Compactions {
       .foldLeft(lit(0)) { case (acc, (b, k)) =>
         when(col("ts") >= lit(b), lit(k)).otherwise(acc)
       }
-    val bconf = ShippedConf.broadcast(spark)
-    val tmpDirB = tmpDir
-    val blockB = blockSize
     // per-window storage policy recorded on each output's FILE_INFO
     // (the HDFS setStoragePolicy attribute has no local twin; a
     // deployment maps the string to its tiers) — tiny map, rides the
@@ -412,41 +407,20 @@ object Compactions {
         .map { case (b, pol) =>
           boundaries.indexOf(b) -> pol.getBytes("UTF-8")
         }
-    cells.withColumn("wix", wixCol)
-      .repartition(boundaries.size, col("wix"))
-      .sortWithinPartitions(col("wix"), col("row"), col("family"),
-        col("qualifier"), col("ts").desc, HFiles.typeRank.desc)
-      .select("row", "family", "qualifier", "ts", "type", "value", "wix")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val fs = new Path(tmpDirB).getFileSystem(bconf.value.conf)
-          val bufIt = it.buffered
-          while (bufIt.hasNext) {
-            val wix = bufIt.head.getInt(6)
-            val run = new Iterator[HCell] {
-              def hasNext: Boolean = bufIt.hasNext && bufIt.head.getInt(6) == wix
-              def next(): HCell = {
-                val r = bufIt.next()
-                HCell(r.getString(0).getBytes("UTF-8"),
-                  r.getString(1).getBytes("UTF-8"),
-                  r.getString(2).getBytes("UTF-8"),
-                  r.getLong(3), HFiles.typeToCode(r.getString(4)),
-                  Option(r.getString(5)).getOrElse("").getBytes("UTF-8"))
-              }
-            }
-            val path = new Path(f"$tmpDirB%s/w$wix%05d.hfile")
-            val out = fs.create(path, true)
-            try {
-              // every window output is a MAJOR result (the DT timed
-              // major reads the flag back to skip re-windowed stores)
-              HFileV3.write(out, run, blockB, extraFileInfo =
-                Seq("MAJOR_COMPACTION_KEY" -> Array[Byte](-1)) ++
-                polByWix.get(wix).map("STORAGE_POLICY" -> _))
-              ()
-            } finally out.close()
-          }
-        }
-      }
+    HFiles.writeRuns(
+      cells.withColumn("wix", wixCol)
+        .repartition(boundaries.size, col("wix"))
+        .sortWithinPartitions(col("wix"), col("row"), col("family"),
+          col("qualifier"), col("ts").desc, HFiles.typeRank.desc)
+        .select("row", "family", "qualifier", "ts", "type", "value", "wix"),
+      tmpDir, _.getInt(6), (_, wix: Int) => f"w$wix%05d.hfile") {
+      (wix, out, run) =>
+        // every window output is a MAJOR result (the DT timed
+        // major reads the flag back to skip re-windowed stores)
+        HFileV3.write(out, run, blockSize, extraFileInfo =
+          Seq("MAJOR_COMPACTION_KEY" -> Array[Byte](-1)) ++
+          polByWix.get(wix).map("STORAGE_POLICY" -> _))
+    }
     // commit crash-safely: renumber staged outputs oldest window
     // first (within tmp), then stage → marker → retire → land
     val written = Option(fs.globStatus(new Path(tmpDir, "w*.hfile")))
@@ -477,7 +451,7 @@ object Compactions {
       .getOrElse(Array.empty)
       .map(s => (s.getPath, s.getLen)).toSeq.sortBy(_._1.getName)
     val expired = files.filter { case (p, l) =>
-      val (info, trailer) = readInfoAndTrailerOf(fs, p, l)
+      val (trailer, info) = HFiles.readMeta(fs, p, l)
       fifoExpired(info, trailer.entryCount, ttlMillis, now)
     }
     expired.foreach { case (p, _) => fs.delete(p, false) }
@@ -552,7 +526,7 @@ object Compactions {
     if (files.isEmpty) return None
     val (soleInfo, soleMajor) =
       if (files.size == 1) {
-        val info = readFileInfoOf(fs, files.head.getPath, files.head.getLen)
+        val info = HFiles.readMeta(fs, files.head.getPath, files.head.getLen)._2
         (HFileV3.parseTimeRange(info).map(_._1), isMajorResult(info))
       } else (None, false)
     val due = shouldPerformMajorCompaction(
@@ -659,7 +633,7 @@ object Compactions {
       .getOrElse(Array.empty).toSeq.sortBy(_.getPath.getName)
     if (files.isEmpty) return None
     val metas = files.map { st =>
-      val info = readFileInfoOf(fs, st.getPath, st.getLen)
+      val info = HFiles.readMeta(fs, st.getPath, st.getLen)._2
       val (mn, mx) = HFileV3.parseTimeRange(info)
         .getOrElse((Long.MaxValue, Long.MinValue))
       DtFile(st.getModificationTime, mn, mx, isMajorResult(info))
@@ -866,26 +840,9 @@ object Compactions {
     fs.delete(tmp, true)
   }
 
-  private def readFileInfoOf(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path, len: Long): Map[String, Array[Byte]] =
-    readInfoAndTrailerOf(fs, p, len)._1
-
-  private def readInfoAndTrailerOf(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path, len: Long): (Map[String, Array[Byte]], HFileV3.Trailer) = {
-    val in = fs.open(p)
-    try {
-      val pread: HFileV3.PRead = (off, n) => {
-        val buf = new Array[Byte](n); in.readFully(off, buf); buf
-      }
-      val trailer = HFileV3.readTrailer(
-        pread(len - HFileV3.TrailerSize, HFileV3.TrailerSize))
-      (HFileV3.readFileInfo(pread, trailer), trailer)
-    } finally in.close()
-  }
-
   private def fileMaxTimestamp(fs: org.apache.hadoop.fs.FileSystem,
       p: Path, len: Long): Long =
-    HFileV3.parseTimeRange(readFileInfoOf(fs, p, len))
+    HFileV3.parseTimeRange(HFiles.readMeta(fs, p, len)._2)
       .map(_._2).getOrElse(Long.MinValue)
 
   /** Merge an explicit set of store files into one (the normalizer's

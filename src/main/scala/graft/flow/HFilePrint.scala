@@ -25,15 +25,6 @@ object HFilePrint {
       first_row: String, last_row: String, ts_min: Long, ts_max: Long,
       avg_key_len: Long, avg_value_len: Long, file_bytes: Long)
 
-  /** Row key of an HBase key blob: 2B big-endian row length + row
-    * (cellKeyBytes layout / KeyValue.java key format). */
-  private def rowOfKey(key: Array[Byte]): String = {
-    if (key == null || key.length < 2) return ""
-    val bb = ByteBuffer.wrap(key)
-    val rl = bb.getShort & 0xFFFF
-    new String(key, 2, rl, UTF_8)
-  }
-
   private def beInt(b: Array[Byte]): Int =
     ByteBuffer.wrap(b).getInt
 
@@ -64,20 +55,8 @@ object HFilePrint {
       checked += 1
       val ok =
         try {
-          val len = fs.getFileStatus(p).getLen
-          if (len < HFileV3.TrailerSize) throw new IllegalArgumentException(
-            "file shorter than a fixed trailer")
-          val in = fs.open(p)
-          try {
-            val tail = new Array[Byte](HFileV3.TrailerSize)
-            in.readFully(len - tail.length, tail)
-            val trailer = HFileV3.readTrailer(tail)
-            val pread: HFileV3.PRead = (off, n) => {
-              val buf = new Array[Byte](n); in.readFully(off, buf); buf
-            }
-            HFileV3.readFileInfo(pread, trailer)
-            true
-          } finally in.close()
+          HFiles.readMeta(fs, p, fs.getFileStatus(p).getLen)
+          true
         } catch {
           case _: java.io.FileNotFoundException =>
             missing += p.toString; true // not corrupt — compacted away
@@ -114,21 +93,13 @@ object HFilePrint {
     spark.sparkContext.parallelize(files, math.max(files.size, 1))
       .map { case (pathStr, len) =>
         val p = new Path(pathStr)
-        val tfs = p.getFileSystem(bconf.value.conf)
-        val in = tfs.open(p)
-        try {
-          val tail = new Array[Byte](HFileV3.TrailerSize)
-          in.readFully(len - tail.length, tail)
-          val trailer = HFileV3.readTrailer(tail)
-          val pread: HFileV3.PRead = (off, n) => {
-            val buf = new Array[Byte](n); in.readFully(off, buf); buf
-          }
+        HFiles.withStoreFile(p.getFileSystem(bconf.value.conf), p, len) { pread =>
+          val trailer = HFileV3.readTrailer(pread, len)
           val info = HFileV3.readFileInfo(pread, trailer)
-          val root = HFileV3.readRootIndex(pread, trailer)
-          val firstRow =
-            root.headOption.map(e => rowOfKey(e._3)).getOrElse("")
-          val lastRow =
-            info.get("hfile.LASTKEY").map(rowOfKey).getOrElse("")
+          def rowOf(key: Array[Byte]) = new String(HFileV3.rowOfKey(key), UTF_8)
+          val firstRow = HFileV3.readRootIndex(pread, trailer).headOption
+            .map(e => rowOf(e._3)).getOrElse("")
+          val lastRow = info.get("hfile.LASTKEY").map(rowOf).getOrElse("")
           val (tsMin, tsMax) =
             HFileV3.parseTimeRange(info).getOrElse((0L, 0L))
           FileReport(p.getName, trailer.entryCount,
@@ -138,7 +109,7 @@ object HFilePrint {
             info.get("hfile.AVG_KEY_LEN").map(beInt(_).toLong).getOrElse(0L),
             info.get("hfile.AVG_VALUE_LEN").map(beInt(_).toLong).getOrElse(0L),
             len)
-        } finally in.close()
+        }
       }
       .toDS().toDF()
   }

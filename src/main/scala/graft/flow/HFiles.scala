@@ -1,6 +1,11 @@
 package graft.flow
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.OutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays.compareUnsigned
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,18 +15,28 @@ import graft.codec.HFileV3
 import graft.codec.HFileV3.HCell
 import graft.model.CellType
 
-/** Distributed HFile-v3 export / import — the byte-format twin of
-  * Jobs.bulkLoadLayout (reference: HFileOutputFormat2 writes one HFile
-  * per region per family, `hbase-mapreduce/.../HFileOutputFormat2.java`;
-  * LoadIncrementalHFiles / Import read them back).
+/** The one place graft opens and writes HFile-v3 store files — the
+  * `HFile.createReader` / `StoreFileWriter` twin every flush,
+  * compaction, bulk load and split goes through — plus the distributed
+  * export / import built on them (reference: HFileOutputFormat2 writes
+  * one HFile per region per family,
+  * `hbase-mapreduce/.../HFileOutputFormat2.java`; LoadIncrementalHFiles
+  * / Import read them back).
   *
-  * Scale shape: export range-partitions the cell stream on the row key
-  * (total order across files = the region split layout), each task
-  * streams its partition through [[HFileV3.write]] straight onto a
-  * Hadoop FileSystem — no driver involvement, no whole-file buffering.
-  * Import parallelizes one task per file and streams block-by-block via
-  * positional reads (one 64 KB block resident per task), so a 10 GB
-  * reference store file never materializes as one array.
+  * Writing: [[writeRuns]] streams a sorted frame through
+  * [[HFileV3.write]] straight onto a Hadoop FileSystem, one task per
+  * partition, cutting a new file wherever the caller's run key changes —
+  * no driver involvement, no whole-file buffering. [[export]] range-
+  * partitions the cell stream on the row key first (total order across
+  * files = the region split layout).
+  *
+  * Opening: [[withStoreFile]] (open, use, close) and [[openInTask]]
+  * (closed when the running task ends, for lazily consumed cell
+  * iterators) hand out a file's positional reader ([[HFileV3.PRead]])
+  * and reject a file shorter than its fixed trailer with an error
+  * naming it. Import parallelizes one task per file and streams
+  * block-by-block, so a 10 GB reference store file never materializes
+  * as one array.
   */
 object HFiles {
 
@@ -56,6 +71,111 @@ object HFiles {
     StructField("type", StringType, nullable = false),
     StructField("value", StringType, nullable = true)))
 
+  /** The cell of a row whose first six columns are [[cellSchema]]'s (a
+    * null value writes as empty). */
+  def cellOf(r: Row): HCell = HCell(
+    r.getString(0).getBytes(UTF_8),
+    r.getString(1).getBytes(UTF_8),
+    r.getString(2).getBytes(UTF_8),
+    r.getLong(3), typeToCode(r.getString(4)),
+    Option(r.getString(5)).getOrElse("").getBytes(UTF_8))
+
+  /** [[cellOf]]'s inverse: the [[cellSchema]] row of a cell. */
+  def rowOf(c: HCell): Row = Row(
+    new String(c.row, UTF_8), new String(c.family, UTF_8),
+    new String(c.qualifier, UTF_8), c.ts, codeToType(c.typ),
+    new String(c.value, UTF_8))
+
+  /** The one store-file writer. Each task streams its partition of
+    * `sorted` (already in the order the files need) into files under
+    * `dir`, cutting a new file whenever `runKey` of the next row
+    * differs. A run's file is `dir/fileName(partitionId, key)`; `write`
+    * gets the run's key, the open file and the run's cells (made by
+    * `toCell`) and calls [[HFileV3.write]] with that file's arguments.
+    * Empty partitions write nothing. */
+  def writeRuns[K](sorted: DataFrame, dir: String, runKey: Row => K,
+      fileName: (Int, K) => String, toCell: Row => HCell = cellOf)(
+      write: (K, OutputStream, Iterator[HCell]) => Unit): Unit = {
+    val bconf = ShippedConf.broadcast(sorted.sparkSession)
+    sorted.foreachPartition { (it: Iterator[Row]) =>
+      if (it.hasNext) {
+        val pid = TaskContext.getPartitionId()
+        val fs = new Path(dir).getFileSystem(bconf.value.conf)
+        val rows = it.buffered
+        while (rows.hasNext) {
+          val key = runKey(rows.head)
+          val run = new Iterator[HCell] {
+            def hasNext: Boolean = rows.hasNext && runKey(rows.head) == key
+            def next(): HCell = toCell(rows.next())
+          }
+          val out = fs.create(new Path(s"$dir/${fileName(pid, key)}"), true)
+          try write(key, out, run) finally out.close()
+        }
+      }
+    }
+  }
+
+  /** Run `f` over the positional reader of the `len`-byte store file
+    * at `path`, closing it after. */
+  def withStoreFile[A](fs: FileSystem, path: Path, len: Long)(
+      f: HFileV3.PRead => A): A = {
+    val in = openChecked(fs, path, len)
+    try f(preadOf(in)) finally in.close()
+  }
+
+  /** The trailer and FILE_INFO map of the `len`-byte store file at
+    * `path`: the metadata a reader loads when it opens the file. */
+  def readMeta(fs: FileSystem, path: Path,
+      len: Long): (HFileV3.Trailer, Map[String, Array[Byte]]) =
+    withStoreFile(fs, path, len) { pread =>
+      val trailer = HFileV3.readTrailer(pread, len)
+      (trailer, HFileV3.readFileInfo(pread, trailer))
+    }
+
+  /** The positional reader of the `len`-byte store file at `path`, for
+    * a task that consumes it lazily: the stream closes when the task
+    * ends. */
+  def openInTask(conf: Configuration, path: String, len: Long): HFileV3.PRead = {
+    val p = new Path(path)
+    val in = openChecked(p.getFileSystem(conf), p, len)
+    Option(TaskContext.get()).foreach(
+      _.addTaskCompletionListener[Unit](_ => in.close()))
+    preadOf(in)
+  }
+
+  /** A whole small file (a manifest, Reference file or journal) as
+    * bytes. */
+  def readAll(fs: FileSystem, path: Path): Array[Byte] = {
+    val len = fs.getFileStatus(path).getLen.toInt
+    val in = fs.open(path)
+    try preadOf(in)(0L, len) finally in.close()
+  }
+
+  /** Every store file is at least its fixed trailer long: a shorter one
+    * (truncated copy, partial write) fails here, by name, instead of
+    * as a negative-offset read. */
+  private def openChecked(fs: FileSystem, path: Path,
+      len: Long): FSDataInputStream = {
+    if (len < HFileV3.TrailerSize)
+      throw new java.io.IOException(s"store file $path is $len bytes, " +
+        s"shorter than the ${HFileV3.TrailerSize}-byte HFile trailer")
+    fs.open(path)
+  }
+
+  private def preadOf(in: FSDataInputStream): HFileV3.PRead = (off, n) => {
+    val buf = new Array[Byte](n)
+    in.readFully(off, buf)
+    buf
+  }
+
+  /** (path, length) of every `glob` file under `dir`, in path order. */
+  private def listFiles(spark: SparkSession, dir: String,
+      glob: String): Seq[(String, Long)] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new Path(dir, glob))).getOrElse(Array.empty)
+      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
+  }
+
   /** Write `cells` (canonical CellSet columns) as `numRegions` HFiles
     * under `outPath` (`part-NNNNN.hfile`, row-range-disjoint and sorted
     * — exactly the layout a reference bulk-load expects). `encoding`
@@ -65,7 +185,7 @@ object HFiles {
     * require a single column family per export, like the reference's
     * one-store-file-per-family layout. */
   def export(cells: DataFrame, numRegions: Int, outPath: String,
-      blockSize: Int = 65536, gz: Boolean = false, encoding: Int = 0,
+      blockSize: Int = 65536, encoding: Int = 0,
       compression: Int = HFileV3.CompressionNone,
       rowColBloom: Boolean = false, perFamily: Boolean = false,
       encryptSubject: Option[String] = None,
@@ -98,69 +218,26 @@ object HFiles {
       .sortWithinPartitions(sortCols: _*)
       .select((Seq("row", "family", "qualifier", "ts", "type", "value") ++
         visColumn.toSeq).map(col): _*)
-    val bconf = ShippedConf.broadcast(cells.sparkSession)
-    val r_visDefined = visColumn.isDefined
-    val compressTagsB = compressTags
-    val indexMaxChunkB = indexMaxChunk
-    val extraFileInfoB = extraFileInfo
-    ordered.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val pid = TaskContext.getPartitionId()
-        val fs = new Path(outPath).getFileSystem(bconf.value.conf)
-        def toCell(r: Row): HCell = HCell(
-          r.getString(0).getBytes("UTF-8"),
-          r.getString(1).getBytes("UTF-8"),
-          r.getString(2).getBytes("UTF-8"),
-          r.getLong(3),
-          typeToCode(r.getString(4)),
-          Option(r.getString(5)).getOrElse("").getBytes("UTF-8"),
-          tags =
-            if (r.length > 6 && r.getString(6) != null && r.getString(6).nonEmpty)
-              HFileV3.tagBytes(Seq((StringVisTagType,
-                r.getString(6).getBytes("UTF-8"))))
-            else Array.emptyByteArray)
-        val tagged = r_visDefined
-        if (!perFamily) {
-          val path = new Path(f"$outPath%s/part-$pid%05d.hfile")
-          val out = fs.create(path, true)
-          try {
-            HFileV3.write(out, it.map(toCell), blockSize, gz = gz,
-              encoding = encoding, compression = compression,
-              rowColBloom = rowColBloom, rowPrefixBloom = rowPrefixBloom,
-              withTags = tagged, compressTags = compressTagsB,
-              indexMaxChunk = indexMaxChunkB,
-              encryption = encryptSubject.map(graft.codec.HCrypto.randomCtx),
-              extraFileInfo = extraFileInfoB)
-            ()
-          } finally out.close()
-        } else {
-          // consume one family run at a time; each run is sorted and
-          // streams straight through its own file writer
-          val bufIt = it.buffered
-          while (bufIt.hasNext) {
-            val fam = bufIt.head.getString(1)
-            val path = new Path(f"$outPath%s/part-$pid%05d-$fam%s.hfile")
-            val out = fs.create(path, true)
-            try {
-              // (named bufIt: `buffered` inside the anonymous Iterator
-              // would resolve to ITS OWN inherited .buffered method)
-              val run = new Iterator[HCell] {
-                def hasNext: Boolean =
-                  bufIt.hasNext && bufIt.head.getString(1) == fam
-                def next(): HCell = toCell(bufIt.next())
-              }
-              HFileV3.write(out, run, blockSize, gz = gz,
-                encoding = encoding, compression = compression,
-                rowColBloom = rowColBloom, rowPrefixBloom = rowPrefixBloom,
-                withTags = tagged, compressTags = compressTagsB,
-                indexMaxChunk = indexMaxChunkB,
-                encryption = encryptSubject.map(graft.codec.HCrypto.randomCtx),
-                extraFileInfo = extraFileInfoB)
-              ()
-            } finally out.close()
-          }
-        }
-      }
+    val tagged = visColumn.isDefined
+    val toCell: Row => HCell = r => {
+      val c = cellOf(r)
+      if (tagged && r.getString(6) != null && r.getString(6).nonEmpty)
+        c.copy(tags = HFileV3.tagBytes(Seq((StringVisTagType,
+          r.getString(6).getBytes(UTF_8)))))
+      else c
+    }
+    writeRuns(ordered, outPath,
+      runKey = r => if (perFamily) r.getString(1) else "",
+      fileName = (pid, fam: String) =>
+        if (perFamily) f"part-$pid%05d-$fam%s.hfile" else f"part-$pid%05d.hfile",
+      toCell = toCell) { (_, out, run) =>
+      HFileV3.write(out, run, blockSize,
+        encoding = encoding, compression = compression,
+        rowColBloom = rowColBloom, rowPrefixBloom = rowPrefixBloom,
+        withTags = tagged, compressTags = compressTags,
+        indexMaxChunk = indexMaxChunk,
+        encryption = encryptSubject.map(graft.codec.HCrypto.randomCtx),
+        extraFileInfo = extraFileInfo)
     }
   }
 
@@ -181,37 +258,10 @@ object HFiles {
       .repartition(col(regionCol))
       .sortWithinPartitions(col(regionCol), col("row"), col("family"),
         col("qualifier"), col("ts").desc, typeRank.desc)
-      .select(col(regionCol).cast("int").as("__region"),
-        col("row"), col("family"), col("qualifier"), col("ts"),
-        col("type"), col("value"))
-    val bconf = ShippedConf.broadcast(cells.sparkSession)
-    val nameB = name
-    ordered.foreachPartition { (it: Iterator[Row]) =>
-      val fs = new Path(outPath).getFileSystem(bconf.value.conf)
-      def toCell(r: Row): HCell = HCell(
-        r.getString(1).getBytes("UTF-8"),
-        r.getString(2).getBytes("UTF-8"),
-        r.getString(3).getBytes("UTF-8"),
-        r.getLong(4),
-        typeToCode(r.getString(5)),
-        Option(r.getString(6)).getOrElse("").getBytes("UTF-8"))
-      val rows = it.buffered
-      while (rows.hasNext) {
-        val region = rows.head.getInt(0)
-        val run = new Iterator[HCell] {
-          def hasNext: Boolean =
-            rows.hasNext && rows.head.getInt(0) == region
-          def next(): HCell = toCell(rows.next())
-        }
-        val path = new Path(s"$outPath/${nameB(region)}")
-        fs.mkdirs(path.getParent)
-        val out = fs.create(path, true)
-        try {
-          HFileV3.write(out, run, blockSize,
-            indexMaxChunk = indexMaxChunk)
-          ()
-        } finally out.close()
-      }
+      .select(col("row"), col("family"), col("qualifier"), col("ts"),
+        col("type"), col("value"), col(regionCol).cast("int"))
+    writeRuns(ordered, outPath, _.getInt(6), (_, region: Int) => name(region)) {
+      (_, out, run) => HFileV3.write(out, run, blockSize, indexMaxChunk = indexMaxChunk)
     }
   }
 
@@ -226,69 +276,37 @@ object HFiles {
   def pointGet(spark: SparkSession, dir: String, rows: Seq[String],
       qualifier: Option[String] = None): DataFrame = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, "part-*.hfile")))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
-    def cmp(a: Array[Byte], b: Array[Byte]): Int = {
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val d = (a(i) & 0xff) - (b(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      a.length - b.length
-    }
-    val ranges = files.flatMap { case (pathStr, len) =>
-      val in = fs.open(new Path(pathStr))
-      try {
-        val pread: HFileV3.PRead = (off, n) => {
-          val b = new Array[Byte](n); in.readFully(off, b); b
-        }
-        val trailer = HFileV3.readTrailer(pread(len - 4096, 4096))
+    val ranges = listFiles(spark, dir, "part-*.hfile").flatMap { case (pathStr, len) =>
+      withStoreFile(fs, new Path(pathStr), len) { pread =>
+        val trailer = HFileV3.readTrailer(pread, len)
         if (trailer.dataIndexCount == 0) None
         else {
-          val idx = HFileV3.readRootIndex(pread, trailer)
-          val firstKey = idx.head._3
-          val bb = java.nio.ByteBuffer.wrap(firstKey)
-          val rl = bb.getShort & 0xffff
-          val firstRow = java.util.Arrays.copyOfRange(firstKey, 2, 2 + rl)
-          val lastKey = HFileV3.readFileInfo(pread, trailer)("hfile.LASTKEY")
-          val lb = java.nio.ByteBuffer.wrap(lastKey)
-          val lrl = lb.getShort & 0xffff
-          val lastRow = java.util.Arrays.copyOfRange(lastKey, 2, 2 + lrl)
+          val firstRow = HFileV3.rowOfKey(HFileV3.readRootIndex(pread, trailer).head._3)
+          val lastRow = HFileV3.rowOfKey(
+            HFileV3.readFileInfo(pread, trailer)("hfile.LASTKEY"))
           Some((pathStr, len, firstRow, lastRow))
         }
-      } finally in.close()
+      }
     }
-    val targets = rows.distinct.map(_.getBytes("UTF-8"))
+    val targets = rows.distinct.map(_.getBytes(UTF_8))
     val assignments = ranges.flatMap { case (p, len, lo, hi) =>
-      val mine = targets.filter(r => cmp(r, lo) >= 0 && cmp(r, hi) <= 0)
-      if (mine.isEmpty) None else Some((p, len, mine.map(new String(_, "UTF-8"))))
+      val mine = targets.filter(r =>
+        compareUnsigned(r, lo) >= 0 && compareUnsigned(r, hi) <= 0)
+      if (mine.isEmpty) None else Some((p, len, mine.map(new String(_, UTF_8))))
     }
     val bconf = ShippedConf.broadcast(spark)
     val rdd = spark.sparkContext
       .parallelize(assignments, math.max(assignments.size, 1))
       .flatMap { case (pathStr, len, targetRows) =>
-        val path = new Path(pathStr)
-        val in = path.getFileSystem(bconf.value.conf).open(path)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        val pread: HFileV3.PRead = (off, n) => {
-          val b = new Array[Byte](n); in.readFully(off, b); b
-        }
         // open once per file: index/bloom loads amortize across gets
-        val handle = new HFileV3.HFileHandle(pread, len)
+        val handle = new HFileV3.HFileHandle(
+          openInTask(bconf.value.conf, pathStr, len), len)
         targetRows.sorted.iterator.flatMap { r =>
           val cells = qualifier match {
-            case Some(q) => handle.get(r.getBytes("UTF-8"), q.getBytes("UTF-8"))
-            case None => handle.get(r.getBytes("UTF-8"))
+            case Some(q) => handle.get(r.getBytes(UTF_8), q.getBytes(UTF_8))
+            case None => handle.get(r.getBytes(UTF_8))
           }
-          cells.map { c =>
-            Row(new String(c.row, "UTF-8"), new String(c.family, "UTF-8"),
-              new String(c.qualifier, "UTF-8"), c.ts, codeToType(c.typ),
-              new String(c.value, "UTF-8"))
-          }
+          cells.map(rowOf)
         }
       }
     spark.createDataFrame(rdd, cellSchema)
@@ -300,14 +318,8 @@ object HFiles {
     * `"epoch=?" + "/part-?.hfile"` (with `?` = `*`) reads a
     * streaming-backup directory tree. */
   def importCells(spark: SparkSession, dir: String,
-      glob: String = "part-*.hfile"): DataFrame = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, glob)))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
-    importFiles(spark, files)
-  }
+      glob: String = "part-*.hfile"): DataFrame =
+    importFiles(spark, listFiles(spark, dir, glob))
 
   /** [[importCells]] over an explicit (path, length) list — the
     * manifest-driven path (SnapshotShip reads the file list from
@@ -323,45 +335,19 @@ object HFiles {
     * parent files. */
   def importFilesFiltered(spark: SparkSession,
       files: Seq[(String, Long, Option[(Array[Byte], Boolean)])]): DataFrame = {
-    def cmpB(a: Array[Byte], b: Array[Byte]): Int = {
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val d = (a(i) & 0xff) - (b(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      a.length - b.length
-    }
     val bconf = ShippedConf.broadcast(spark)
     val rdd = spark.sparkContext
       .parallelize(files, math.max(files.size, 1))
       .flatMap { case (pathStr, len, half) =>
-        val path = new Path(pathStr)
-        val in = path.getFileSystem(bconf.value.conf).open(path)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        val pread: HFileV3.PRead = (off, n) => {
-          val buf = new Array[Byte](n)
-          in.readFully(off, buf)
-          buf
-        }
-        val cells = HFileV3.readCellsFrom(pread, len)
+        val cells = HFileV3.readCellsFrom(
+          openInTask(bconf.value.conf, pathStr, len), len)
         val scoped = half match {
           case Some((splitRow, top)) =>
-            if (top) cells.filter(c => cmpB(c.row, splitRow) >= 0)
-            else cells.filter(c => cmpB(c.row, splitRow) < 0)
+            if (top) cells.filter(c => compareUnsigned(c.row, splitRow) >= 0)
+            else cells.filter(c => compareUnsigned(c.row, splitRow) < 0)
           case None => cells
         }
-        scoped.map { c =>
-          Row(
-            new String(c.row, "UTF-8"),
-            new String(c.family, "UTF-8"),
-            new String(c.qualifier, "UTF-8"),
-            c.ts,
-            codeToType(c.typ),
-            new String(c.value, "UTF-8"))
-        }
+        scoped.map(rowOf)
       }
     spark.createDataFrame(rdd, cellSchema)
   }
@@ -373,38 +359,19 @@ object HFiles {
     * declares COMPRESS_TAGS). */
   def importCellsTagged(spark: SparkSession, dir: String,
       glob: String = "part-*.hfile"): DataFrame = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, glob)))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
+    val files = listFiles(spark, dir, glob)
     val bconf = ShippedConf.broadcast(spark)
     val rdd = spark.sparkContext
       .parallelize(files, math.max(files.size, 1))
       .flatMap { case (pathStr, len) =>
-        val path = new Path(pathStr)
-        val in = path.getFileSystem(bconf.value.conf).open(path)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        val pread: HFileV3.PRead = (off, n) => {
-          val buf = new Array[Byte](n)
-          in.readFully(off, buf)
-          buf
-        }
-        HFileV3.readCellsFrom(pread, len).map { c =>
-          val vis = HFileV3.parseTags(c.tags)
-            .collectFirst { case (StringVisTagType, data) =>
-              new String(data, "UTF-8") }
-            .getOrElse("")
-          Row(
-            new String(c.row, "UTF-8"),
-            new String(c.family, "UTF-8"),
-            new String(c.qualifier, "UTF-8"),
-            c.ts,
-            codeToType(c.typ),
-            new String(c.value, "UTF-8"),
-            vis)
-        }
+        HFileV3.readCellsFrom(openInTask(bconf.value.conf, pathStr, len), len)
+          .map { c =>
+            val vis = HFileV3.parseTags(c.tags)
+              .collectFirst { case (StringVisTagType, data) =>
+                new String(data, UTF_8) }
+              .getOrElse("")
+            Row.fromSeq(rowOf(c).toSeq :+ vis)
+          }
       }
     spark.createDataFrame(rdd,
       StructType(cellSchema.fields :+

@@ -1,10 +1,10 @@
 package graft.flow
 
+import java.io.OutputStream
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -67,18 +67,14 @@ object MobFiles {
   def mobRegionName(table: String): String = md5hex(s"$table.mob")
 
   def mobFamilyDir(outPath: String, table: String, family: String): String =
-    s"$outPath/mobdir/data/default/$table/${mobRegionName(table)}/$family"
+    s"$outPath/${mobFamilyRel(table, family)}"
+
+  private def mobFamilyRel(table: String, family: String): String =
+    s"mobdir/data/default/$table/${mobRegionName(table)}/$family"
 
   /** yyyymmdd of the cell timestamp (the reference partitions mob
     * files by day — MobFileName's date is the flush day). */
   private val DtFormat = "yyyyMMdd"
-
-  private def typeRank = {
-    val pairs = HFiles.typeToCode.toSeq
-    pairs.foldLeft(lit(0)) { case (acc, (name, code)) =>
-      when(col("type") === name, lit(code.toInt)).otherwise(acc)
-    }
-  }
 
   private def withMobCols(cells: DataFrame, threshold: Int, numMobBuckets: Int): DataFrame =
     cells
@@ -99,96 +95,67 @@ object MobFiles {
     val tagged = withMobCols(cells, threshold, numMobBuckets)
 
     // --- mob files: one HFile per (family, day, bucket) run ---
-    val tableB = table
-    val bconf = ShippedConf.broadcast(cells.sparkSession)
-    tagged.filter(col("is_mob"))
-      .repartition(math.max(numRegions, 1), col("family"), col("dt"), col("bucket"))
-      .sortWithinPartitions(col("family"), col("dt"), col("bucket"),
-        col("row"), col("qualifier"), col("ts").desc, typeRank.desc)
-      .select("row", "family", "qualifier", "ts", "type", "value", "dt", "bucket")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val fs = new Path(outPath).getFileSystem(bconf.value.conf)
-          val bufIt = it.buffered
-          while (bufIt.hasNext) {
-            val fam = bufIt.head.getString(1)
-            val dt = bufIt.head.getString(6)
-            val bucket = bufIt.head.getLong(7)
-            val fname = mobFileName(tableB, fam, dt, bucket)
-            var nWritten = 0L
-            val run = new Iterator[HCell] {
-              def hasNext: Boolean = bufIt.hasNext &&
-                bufIt.head.getString(1) == fam &&
-                bufIt.head.getString(6) == dt &&
-                bufIt.head.getLong(7) == bucket
-              def next(): HCell = {
-                val r = bufIt.next()
-                nWritten += 1
-                HCell(r.getString(0).getBytes("UTF-8"),
-                  r.getString(1).getBytes("UTF-8"),
-                  r.getString(2).getBytes("UTF-8"),
-                  r.getLong(3), HFiles.typeToCode(r.getString(4)),
-                  Option(r.getString(5)).getOrElse("").getBytes("UTF-8"))
-              }
-            }
-            val path = new Path(s"${mobFamilyDir(outPath, tableB, fam)}/$fname")
-            val out = fs.create(path, true)
-            try {
-              // extraFileInfo is by-name: FILE_INFO serializes after
-              // the data stream is consumed, so `count` is final by
-              // then (StoreFileWriter.appendMobMetadata at close) —
-              // the run streams, never buffers
-              HFileV3.write(out, run, blockSize,
-                extraFileInfo = Seq("MOB_CELLS_COUNT" ->
-                  ByteBuffer.allocate(8).putLong(nWritten).array()))
-              ()
-            } finally out.close()
-          }
-        }
-      }
+    HFiles.writeRuns(
+      tagged.filter(col("is_mob"))
+        .repartition(math.max(numRegions, 1), col("family"), col("dt"), col("bucket"))
+        .sortWithinPartitions(col("family"), col("dt"), col("bucket"),
+          col("row"), col("qualifier"), col("ts").desc, HFiles.typeRank.desc)
+        .select("row", "family", "qualifier", "ts", "type", "value", "dt", "bucket"),
+      outPath, r => (r.getString(1), r.getString(6), r.getLong(7)),
+      (_, k: (String, String, Long)) =>
+        s"${mobFamilyRel(table, k._1)}/${mobFileName(table, k._1, k._2, k._3)}") {
+      (_, out, run) => writeMobFile(out, run, blockSize)
+    }
 
     // --- main store files: ref cells in place of big values ---
-    tagged
-      .repartitionByRange(numRegions, col("row"))
-      .sortWithinPartitions(col("row"), col("family"), col("qualifier"),
-        col("ts").desc, typeRank.desc)
-      .select("row", "family", "qualifier", "ts", "type", "value", "dt",
-        "bucket", "is_mob")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val pid = TaskContext.getPartitionId()
-          val fs = new Path(outPath).getFileSystem(bconf.value.conf)
-          val refTags = HFileV3.tagBytes(Seq(
-            (MobRefTagType, Array.emptyByteArray),
-            (MobTableNameTagType, tableB.getBytes("UTF-8"))))
-          def toCell(r: Row): HCell = {
-            val value = Option(r.getString(5)).getOrElse("").getBytes("UTF-8")
-            if (r.getBoolean(8)) {
-              val fname =
-                mobFileName(tableB, r.getString(1), r.getString(6), r.getLong(7))
-                  .getBytes("UTF-8")
-              val ref = ByteBuffer.allocate(4 + fname.length)
-              ref.putInt(value.length)
-              ref.put(fname)
-              HCell(r.getString(0).getBytes("UTF-8"),
-                r.getString(1).getBytes("UTF-8"),
-                r.getString(2).getBytes("UTF-8"),
-                r.getLong(3), HFiles.typeToCode(r.getString(4)),
-                ref.array(), tags = refTags)
-            } else
-              HCell(r.getString(0).getBytes("UTF-8"),
-                r.getString(1).getBytes("UTF-8"),
-                r.getString(2).getBytes("UTF-8"),
-                r.getLong(3), HFiles.typeToCode(r.getString(4)), value)
-          }
-          val path = new Path(f"$outPath%s/main/part-$pid%05d.hfile")
-          val out = fs.create(path, true)
-          try {
-            HFileV3.write(out, it.map(toCell), blockSize, withTags = true)
-            ()
-          } finally out.close()
-        }
-      }
+    val tags = refTags(table)
+    val toCell: Row => HCell = r => {
+      val c = HFiles.cellOf(r)
+      if (r.getBoolean(8)) refCell(c, c.value.length,
+        mobFileName(table, r.getString(1), r.getString(6), r.getLong(7)), tags)
+      else c
+    }
+    writeMainStore(tagged.select("row", "family", "qualifier", "ts", "type",
+      "value", "dt", "bucket", "is_mob"), numRegions, outPath, "main", blockSize)(toCell)
+  }
+
+  /** Main store files `outPath/dir/part-NNNNN.hfile`: `cells` (the
+    * canonical columns first) range-partitioned into `numRegions`
+    * row-sorted files, each cell, plain or ref, made by `toCell`. */
+  private def writeMainStore(cells: DataFrame, numRegions: Int, outPath: String,
+      dir: String, blockSize: Int)(toCell: Row => HCell): Unit =
+    HFiles.writeRuns(
+      cells.repartitionByRange(numRegions, col("row"))
+        .sortWithinPartitions(col("row"), col("family"), col("qualifier"),
+          col("ts").desc, HFiles.typeRank.desc),
+      outPath, _ => "", (pid, _: String) => f"$dir/part-$pid%05d.hfile", toCell) {
+      (_, out, run) => HFileV3.write(out, run, blockSize, withTags = true)
+    }
+
+  /** One mob file: the run's cells plus MOB_CELLS_COUNT.
+    * `extraFileInfo` is by-name: FILE_INFO serializes after the data
+    * stream is consumed, so the count is final by then
+    * (StoreFileWriter.appendMobMetadata at close) — the run streams,
+    * never buffers. */
+  private def writeMobFile(out: OutputStream, run: Iterator[HCell],
+      blockSize: Int): Unit = {
+    var n = 0L
+    HFileV3.write(out, run.map { c => n += 1; c }, blockSize,
+      extraFileInfo = Seq("MOB_CELLS_COUNT" -> ByteBuffer.allocate(8).putLong(n).array()))
+  }
+
+  /** MOB_REFERENCE + MOB_TABLE_NAME tags of every ref cell. */
+  private def refTags(table: String): Array[Byte] = HFileV3.tagBytes(Seq(
+    (MobRefTagType, Array.emptyByteArray),
+    (MobTableNameTagType, table.getBytes("UTF-8"))))
+
+  /** `c` as a ref cell naming `mobFile`: value = 4-byte value length +
+    * file name. */
+  private def refCell(c: HCell, valueLen: Int, mobFile: String,
+      tags: Array[Byte]): HCell = {
+    val fname = mobFile.getBytes("UTF-8")
+    c.copy(value = ByteBuffer.allocate(4 + fname.length).putInt(valueLen)
+      .put(fname).array(), tags = tags)
   }
 
   private val refSchema = StructType(Seq(
@@ -253,26 +220,16 @@ object MobFiles {
     val mobFiles = list(s"$outPath/mobdir/data/default/$table/*/*/*")
 
     val bconf = ShippedConf.broadcast(spark)
-    def openCells(pathStr: String, len: Long): Iterator[HCell] = {
-      val path = new Path(pathStr)
-      val in = path.getFileSystem(bconf.value.conf).open(path)
-      Option(TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => in.close()))
-      HFileV3.readCellsFrom((off, n) => {
-        val buf = new Array[Byte](n); in.readFully(off, buf); buf
-      }, len)
-    }
+    def openCells(pathStr: String, len: Long): Iterator[HCell] =
+      HFileV3.readCellsFrom(HFiles.openInTask(bconf.value.conf, pathStr, len), len)
 
     val mainRdd = spark.sparkContext
       .parallelize(mainFiles, math.max(mainFiles.size, 1))
       .flatMap { case (p, l) => openCells(p, l).map(c => (c, isRef(c))) }
 
     val plain = spark.createDataFrame(
-      mainRdd.filter(!_._2).map { case (c, _) =>
-        Row(new String(c.row, "UTF-8"), new String(c.family, "UTF-8"),
-          new String(c.qualifier, "UTF-8"), c.ts,
-          HFiles.codeToType(c.typ), new String(c.value, "UTF-8"))
-      }, HFiles.cellSchema)
+      mainRdd.filter(!_._2).map { case (c, _) => HFiles.rowOf(c) },
+      HFiles.cellSchema)
 
     val refs = spark.createDataFrame(
       mainRdd.filter(_._2).map { case (c, _) =>
@@ -354,7 +311,6 @@ object MobFiles {
       blockSize: Int = 65536): Seq[String] = {
     val (plain, refs, mobCells) = layoutFrames(spark, outPath, table)
     val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bconf = ShippedConf.broadcast(spark)
     def list(glob: String): Seq[String] =
       Option(fs.globStatus(new Path(glob))).getOrElse(Array.empty)
         .map(_.getPath.toString).toSeq
@@ -383,9 +339,6 @@ object MobFiles {
     require(dangling == 0L,
       s"$dangling dangling/mismatched mob refs — compaction aborted")
 
-    val tableB = table
-    val blockB = blockSize
-
     // new generation's names, resolved BEFORE any write: every frame
     // here lazily re-reads the ORIGINAL main files, which the swap
     // below retires. The name's date = the partition's LATEST
@@ -398,48 +351,21 @@ object MobFiles {
       .collect()
       .map(r => ((r.getString(0), r.getString(1)), r.getString(2))).toMap
     val newNames = latestByPart.toSeq
-      .map { case ((fam, g), ld) => genMobFileName(tableB, fam, g, ld) }
+      .map { case ((fam, g), ld) => genMobFileName(table, fam, g, ld) }
       .sorted
 
     // --- new consolidated mob files: one per (family, gdt) run ---
-    joined
-      .repartition(nOldMob, col("family"), col("gdt"))
-      .sortWithinPartitions(col("family"), col("gdt"),
-        col("row"), col("qualifier"), col("ts").desc, typeRank.desc)
-      .select("row", "family", "qualifier", "ts", "type", "value", "gdt")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val fs = new Path(outPath).getFileSystem(bconf.value.conf)
-          val bufIt = it.buffered
-          while (bufIt.hasNext) {
-            val fam = bufIt.head.getString(1)
-            val dt = bufIt.head.getString(6)
-            val fname = genMobFileName(tableB, fam, dt, latestByPart((fam, dt)))
-            var nWritten = 0L
-            val run = new Iterator[HCell] {
-              def hasNext: Boolean = bufIt.hasNext &&
-                bufIt.head.getString(1) == fam && bufIt.head.getString(6) == dt
-              def next(): HCell = {
-                val r = bufIt.next()
-                nWritten += 1
-                HCell(r.getString(0).getBytes("UTF-8"),
-                  r.getString(1).getBytes("UTF-8"),
-                  r.getString(2).getBytes("UTF-8"),
-                  r.getLong(3), HFiles.typeToCode(r.getString(4)),
-                  Option(r.getString(5)).getOrElse("").getBytes("UTF-8"))
-              }
-            }
-            val path = new Path(s"${mobFamilyDir(outPath, tableB, fam)}/$fname")
-            val out = fs.create(path, true)
-            try {
-              HFileV3.write(out, run, blockB,
-                extraFileInfo = Seq("MOB_CELLS_COUNT" ->
-                  ByteBuffer.allocate(8).putLong(nWritten).array()))
-              ()
-            } finally out.close()
-          }
-        }
-      }
+    HFiles.writeRuns(
+      joined
+        .repartition(nOldMob, col("family"), col("gdt"))
+        .sortWithinPartitions(col("family"), col("gdt"),
+          col("row"), col("qualifier"), col("ts").desc, HFiles.typeRank.desc)
+        .select("row", "family", "qualifier", "ts", "type", "value", "gdt"),
+      outPath, r => (r.getString(1), r.getString(6)),
+      (_, k: (String, String)) =>
+        s"${mobFamilyRel(table, k._1)}/${genMobFileName(table, k._1, k._2, latestByPart(k))}") {
+      (_, out, run) => writeMobFile(out, run, blockSize)
+    }
 
     // --- rewritten main store: refs repointed at the new generation ---
     val mainAll = plain
@@ -454,46 +380,15 @@ object MobFiles {
           col("is_ref"), col("mob_len"), col("gdt")))
     val nextDir = new Path(s"$outPath/main.next")
     if (fs.exists(nextDir)) fs.delete(nextDir, true)
-    mainAll
-      .repartitionByRange(nRegions, col("row"))
-      .sortWithinPartitions(col("row"), col("family"), col("qualifier"),
-        col("ts").desc, typeRank.desc)
-      .select("row", "family", "qualifier", "ts", "type", "value",
-        "is_ref", "mob_len", "gdt")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val pid = TaskContext.getPartitionId()
-          val fs = new Path(outPath).getFileSystem(bconf.value.conf)
-          val refTags = HFileV3.tagBytes(Seq(
-            (MobRefTagType, Array.emptyByteArray),
-            (MobTableNameTagType, tableB.getBytes("UTF-8"))))
-          def toCell(r: Row): HCell =
-            if (r.getBoolean(6)) {
-              val fname = genMobFileName(tableB, r.getString(1), r.getString(8),
-                  latestByPart((r.getString(1), r.getString(8))))
-                .getBytes("UTF-8")
-              val ref = ByteBuffer.allocate(4 + fname.length)
-              ref.putInt(r.getInt(7))
-              ref.put(fname)
-              HCell(r.getString(0).getBytes("UTF-8"),
-                r.getString(1).getBytes("UTF-8"),
-                r.getString(2).getBytes("UTF-8"),
-                r.getLong(3), HFiles.typeToCode(r.getString(4)),
-                ref.array(), tags = refTags)
-            } else
-              HCell(r.getString(0).getBytes("UTF-8"),
-                r.getString(1).getBytes("UTF-8"),
-                r.getString(2).getBytes("UTF-8"),
-                r.getLong(3), HFiles.typeToCode(r.getString(4)),
-                Option(r.getString(5)).getOrElse("").getBytes("UTF-8"))
-          val path = new Path(f"$outPath%s/main.next/part-$pid%05d.hfile")
-          val out = fs.create(path, true)
-          try {
-            HFileV3.write(out, it.map(toCell), blockB, withTags = true)
-            ()
-          } finally out.close()
-        }
-      }
+    val tags = refTags(table)
+    val toCell: Row => HCell = r => {
+      val c = HFiles.cellOf(r)
+      if (r.getBoolean(6)) refCell(c, r.getInt(7), genMobFileName(table,
+        r.getString(1), r.getString(8), latestByPart((r.getString(1), r.getString(8)))), tags)
+      else c
+    }
+    writeMainStore(mainAll.select("row", "family", "qualifier", "ts", "type",
+      "value", "is_ref", "mob_len", "gdt"), nRegions, outPath, "main.next", blockSize)(toCell)
 
     // commit-by-rename: readers see either the previous generation or
     // the new one. The window between the two renames has no `main/`;
@@ -598,12 +493,8 @@ object MobFiles {
     val referenced = spark.sparkContext
       .parallelize(mainFiles, math.max(mainFiles.size, 1))
       .flatMap { case (p, l) =>
-        val path = new Path(p)
-        val in = path.getFileSystem(bconf.value.conf).open(path)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        openCellsOf(in, l).filter(isRef).map(c =>
-          new String(c.value, 4, c.value.length - 4, "UTF-8"))
+        HFileV3.readCellsFrom(HFiles.openInTask(bconf.value.conf, p, l), l)
+          .filter(isRef).map(c => new String(c.value, 4, c.value.length - 4, "UTF-8"))
       }
       .distinct().collect().toSet
     val unreferenced = Option(
@@ -613,12 +504,6 @@ object MobFiles {
     unreferenced.foreach(fs.delete(_, false))
     unreferenced.map(_.getName).sorted
   }
-
-  private def openCellsOf(in: org.apache.hadoop.fs.FSDataInputStream,
-      len: Long): Iterator[HCell] =
-    HFileV3.readCellsFrom((off, n) => {
-      val buf = new Array[Byte](n); in.readFully(off, buf); buf
-    }, len)
 
   /** Ref-side audit frame: one row per mob file with its ref count and
     * declared MOB_CELLS_COUNT — the consistency check hbck's mob
@@ -634,19 +519,10 @@ object MobFiles {
     // only) — uses the driver's own Hadoop conf directly
     val rows = mobFiles.map { case (p, l) =>
       val path = new Path(p)
-      val in = path.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).open(path)
-      try {
-        val pread: HFileV3.PRead = (off, n) => {
-          val buf = new Array[Byte](n); in.readFully(off, buf); buf
-        }
-        val trailer = HFileV3.readTrailer(
-          pread(l - HFileV3.TrailerSize, HFileV3.TrailerSize))
-        val fi = HFileV3.readFileInfo(pread, trailer)
-        val declared = fi.get("MOB_CELLS_COUNT")
-          .map(b => ByteBuffer.wrap(b).getLong).getOrElse(-1L)
-        Row(path.getName, trailer.entryCount, declared)
-      } finally in.close()
+      val (trailer, fi) = HFiles.readMeta(fs, path, l)
+      val declared = fi.get("MOB_CELLS_COUNT")
+        .map(b => ByteBuffer.wrap(b).getLong).getOrElse(-1L)
+      Row(path.getName, trailer.entryCount, declared)
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, math.max(rows.size, 1)),

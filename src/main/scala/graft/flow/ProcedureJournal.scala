@@ -53,11 +53,7 @@ object ProcedureJournal {
     * the whole sweep forever. */
   def readTolerant(fs: FileSystem, journal: Path,
       nParts: Int): Option[Array[String]] = {
-    val len = fs.getFileStatus(journal).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(journal)
-    try in.readFully(0, buf) finally in.close()
-    val parts = new String(buf, "UTF-8").split("\\|", -1)
+    val parts = new String(HFiles.readAll(fs, journal), "UTF-8").split("\\|", -1)
     if ((nParts <= 0 && parts.forall(_.nonEmpty)) ||
         (parts.length == nParts && parts.forall(_.nonEmpty)))
       Some(parts)

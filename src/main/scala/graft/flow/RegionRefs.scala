@@ -359,10 +359,7 @@ object RegionRefs {
         .map { f =>
           val p = f.getPath
           if (isReference(p.getName)) {
-            val bytes = new Array[Byte](f.getLen.toInt)
-            val in = fs.open(p)
-            try in.readFully(0, bytes) finally in.close()
-            val half = SM.decodeReferenceFile(bytes)
+            val half = SM.decodeReferenceFile(HFiles.readAll(fs, p))
             val target = referredToFile(p)
             val len = fs.getFileStatus(target).getLen
             (target.toString, len, Some((half.splitRow, half.top)))
@@ -386,10 +383,7 @@ object RegionRefs {
         .filter(f => isReference(f.getPath.getName))
       if (refs.nonEmpty) {
         val resolved = HFiles.importFilesFiltered(spark, refs.map { f =>
-          val bytes = new Array[Byte](f.getLen.toInt)
-          val in = fs.open(f.getPath)
-          try in.readFully(0, bytes) finally in.close()
-          val half = SM.decodeReferenceFile(bytes)
+          val half = SM.decodeReferenceFile(HFiles.readAll(fs, f.getPath))
           val target = referredToFile(f.getPath)
           (target.toString, fs.getFileStatus(target).getLen,
             Some((half.splitRow, half.top)))

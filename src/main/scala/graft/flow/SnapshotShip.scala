@@ -56,22 +56,11 @@ object SnapshotShip {
     // families come from the table's cells — a bounded set (schema-like)
     val families = cells.select("family").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    def firstRowOf(st: org.apache.hadoop.fs.FileStatus): Array[Byte] = {
-      val in = fs.open(st.getPath)
-      try {
-        val pread: HFileV3.PRead = (off, n) => {
-          val b = new Array[Byte](n); in.readFully(off, b); b
-        }
-        val trailer = HFileV3.readTrailer(pread(st.getLen - 4096, 4096))
-        val idx = HFileV3.readRootIndex(pread, trailer)
-        if (idx.isEmpty) Array.emptyByteArray
-        else {
-          val k = idx.head._3
-          val rl = ((k(0) & 0xff) << 8) | (k(1) & 0xff)
-          java.util.Arrays.copyOfRange(k, 2, 2 + rl)
-        }
-      } finally in.close()
-    }
+    def firstRowOf(st: org.apache.hadoop.fs.FileStatus): Array[Byte] =
+      HFiles.withStoreFile(fs, st.getPath, st.getLen) { pread =>
+        HFileV3.readRootIndex(pread, HFileV3.readTrailer(pread, st.getLen))
+          .headOption.fold(Array.emptyByteArray)(e => HFileV3.rowOfKey(e._3))
+      }
     // part-PPPPP[.hfile] or part-PPPPP-FAM.hfile → (pid, familyOpt)
     val PartName = "part-(\\d{5})(?:-(.+))?\\.hfile".r
     val byRegion = parts.map { st =>
@@ -144,19 +133,12 @@ object SnapshotShip {
       snapshotName: String): DataFrame = {
     val fs = new Path(destRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snapDir = new Path(s"$destRoot/.hbase-snapshot/$snapshotName")
-    def readAll(p: Path): Array[Byte] = {
-      val st = fs.getFileStatus(p)
-      val b = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, b) finally in.close()
-      b
-    }
     val (name, table, _, _) =
-      SM.decodeDescription(readAll(new Path(snapDir, ".snapshotinfo")))
+      SM.decodeDescription(HFiles.readAll(fs, new Path(snapDir, ".snapshotinfo")))
     require(name == snapshotName,
       s"manifest names snapshot '$name', expected '$snapshotName'")
     val (_, regions) =
-      SM.decodeDataManifest(readAll(new Path(snapDir, "data.manifest")))
+      SM.decodeDataManifest(HFiles.readAll(fs, new Path(snapDir, "data.manifest")))
     val (ns, qual) = split(table)
     // each region's physical files: first family dir holds them (the
     // export layout above); dedupe shared names across families.
@@ -202,17 +184,10 @@ object SnapshotShip {
       srcName: String, newName: String): Unit = {
     val fs = new Path(destRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snapDir = new Path(s"$destRoot/.hbase-snapshot/$srcName")
-    def readAll(p: Path): Array[Byte] = {
-      val st = fs.getFileStatus(p)
-      val b = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, b) finally in.close()
-      b
-    }
     val (_, table, ct, ver) =
-      SM.decodeDescription(readAll(new Path(snapDir, ".snapshotinfo")))
+      SM.decodeDescription(HFiles.readAll(fs, new Path(snapDir, ".snapshotinfo")))
     val (families, regions) =
-      SM.decodeDataManifest(readAll(new Path(snapDir, "data.manifest")))
+      SM.decodeDataManifest(HFiles.readAll(fs, new Path(snapDir, "data.manifest")))
     val (ns, qual) = split(table)
     val daughters = regions.zipWithIndex.flatMap { case (r, i) =>
       val parentRegion = regionNameOf(i)
@@ -223,18 +198,11 @@ object SnapshotShip {
       // split row = the parent's largest-store middle block first-row
       // (the reference splits a region at ONE point for all stores —
       // the biggest store's midkey, HFileBlockIndex mid-key metadata)
-      val in = fs.open(path)
-      val midRow = try {
-        val len = fs.getFileStatus(path).getLen
-        val pread: HFileV3.PRead = (off, n) => {
-          val b = new Array[Byte](n); in.readFully(off, b); b
-        }
-        val trailer = HFileV3.readTrailer(pread(len - 4096, 4096))
-        val idx = HFileV3.readRootIndex(pread, trailer)
-        val k = idx(idx.size / 2)._3
-        val rl = ((k(0) & 0xff) << 8) | (k(1) & 0xff)
-        java.util.Arrays.copyOfRange(k, 2, 2 + rl)
-      } finally in.close()
+      val len = fs.getFileStatus(path).getLen
+      val midRow = HFiles.withStoreFile(fs, path, len) { pread =>
+        val idx = HFileV3.readRootIndex(pread, HFileV3.readTrailer(pread, len))
+        HFileV3.rowOfKey(idx(idx.size / 2)._3)
+      }
       Seq(false, true).zipWithIndex.map { case (top, d) =>
         SM.RegionManifest(
           regionId = ct + i * 2 + d,
@@ -280,19 +248,12 @@ object SnapshotShip {
       extraRefs: Set[String] = Set.empty): Seq[String] = {
     val fs = new Path(destRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readAll(p: Path): Array[Byte] = {
-      val st = fs.getFileStatus(p)
-      val b = new Array[Byte](st.getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, b) finally in.close()
-      b
-    }
     val snapRoot = new Path(s"$destRoot/.hbase-snapshot")
     val referenced: Set[String] =
       if (!fs.exists(snapRoot)) Set.empty
       else fs.listStatus(snapRoot).filter(_.isDirectory).flatMap { d =>
         val (_, regions) = SM.decodeDataManifest(
-          readAll(new Path(d.getPath, "data.manifest")))
+          HFiles.readAll(fs, new Path(d.getPath, "data.manifest")))
         regions.flatMap(_.families.flatMap(_.files.map { sf =>
           // protect the UNDERLYING file: a link name guards its parent
           SM.parseLinkName(sf.name).map(_._4).getOrElse(sf.name)

@@ -160,13 +160,7 @@ object SplitPolicies {
       .map(s => (s.getPath, s.getLen)).toSeq
     if (files.isEmpty) return None
     val (largest, len) = files.maxBy(_._2)
-    val in = fs.open(largest)
-    try {
-      val pread: HFileV3.PRead = (off, n) => {
-        val buf = new Array[Byte](n); in.readFully(off, buf); buf
-      }
-      HFileV3.midKeyRow(pread, len)
-    } finally in.close()
+    HFiles.withStoreFile(fs, largest, len)(HFileV3.midKeyRow(_, len))
   }
 
   /** Execute a SplitNormalizationPlan over ONE store file inside a
@@ -180,14 +174,8 @@ object SplitPolicies {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     Compactions.healStore(fs, dir)
     val st = fs.getFileStatus(new Path(dir, name))
-    val in = fs.open(st.getPath)
-    val mid =
-      try {
-        val pread: HFileV3.PRead = (off, n) => {
-          val buf = new Array[Byte](n); in.readFully(off, buf); buf
-        }
-        HFileV3.midKeyRow(pread, st.getLen)
-      } finally in.close()
+    val mid = HFiles.withStoreFile(fs, st.getPath, st.getLen)(
+      HFileV3.midKeyRow(_, st.getLen))
     mid.map { splitRow =>
       val base = name.stripSuffix(".hfile")
       val bot = s"$base-bot.hfile"

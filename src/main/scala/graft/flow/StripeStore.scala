@@ -347,16 +347,7 @@ object StripeStore {
     if (ao && bo) 0
     else if (ao) { if (openLow) -1 else 1 }
     else if (bo) { if (openLow) 1 else -1 }
-    else {
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val c = (a(i) & 0xff) - (b(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      a.length - b.length
-    }
+    else java.util.Arrays.compareUnsigned(a, b)
   }
 
   /** Reconstruct the stripe layout from file metadata alone, like
@@ -367,7 +358,7 @@ object StripeStore {
   def loadLayout(spark: SparkSession, dir: String): Layout = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def meta(p: Path, len: Long): FileMeta = {
-      val (trailer, fi) = trailerAndInfo(fs, p, len)
+      val (trailer, fi) = HFiles.readMeta(fs, p, len)
       FileMeta(p, len, trailer.entryCount,
         HFileV3.parseTimeRange(fi).map(_._2).getOrElse(Long.MinValue),
         fi.getOrElse(StripeStartKey, null),
@@ -401,19 +392,6 @@ object StripeStore {
       // unclassified handling, conservatively applied to the store)
       Layout((l0 ++ groups.flatten).toIndexedSeq, IndexedSeq.empty)
     }
-  }
-
-  private def trailerAndInfo(fs: FileSystem, p: Path,
-      len: Long): (HFileV3.Trailer, Map[String, Array[Byte]]) = {
-    val in = fs.open(p)
-    try {
-      val pread: HFileV3.PRead = (off, n) => {
-        val buf = new Array[Byte](n); in.readFully(off, buf); buf
-      }
-      val trailer = HFileV3.readTrailer(
-        pread(len - HFileV3.TrailerSize, HFileV3.TrailerSize))
-      (trailer, HFileV3.readFileInfo(pread, trailer))
-    } finally in.close()
   }
 
   /** Flush a cell frame as ONE new L0 file (the flush-to-L0 layout). */
@@ -494,33 +472,19 @@ object StripeStore {
           (i, new String(starts(i), UTF_8),
             new String(bounds(i + 1), UTF_8))
         }.map(t => t._1 -> ((t._2, t._3))).toMap
-        cells0.withColumn("wix", wixCol)
-          .repartition(starts.size, col("wix"))
-          .sortWithinPartitions(col("wix"), col("row"), col("family"),
-            col("qualifier"), col("ts").desc, HFiles.typeRank.desc)
-          .select("row", "family", "qualifier", "ts", "type", "value", "wix")
-          .foreachPartition { (it: Iterator[Row]) =>
-            if (it.hasNext) {
-              val fsx = new Path(tmpB).getFileSystem(bconf.value.conf)
-              val bufIt = it.buffered
-              while (bufIt.hasNext) {
-                val wix = bufIt.head.getInt(6)
-                val (s, e) = metaByWix(wix)
-                val run = new Iterator[HCell] {
-                  def hasNext: Boolean =
-                    bufIt.hasNext && bufIt.head.getInt(6) == wix
-                  def next(): HCell = rowToCell(bufIt.next())
-                }
-                val out = fsx.create(new Path(f"$tmpB%s/w$wix%05d.hfile"), true)
-                try {
-                  HFileV3.write(out, run, blockB, extraFileInfo = Seq(
-                    StripeStartKey -> s.getBytes(UTF_8),
-                    StripeEndKey -> e.getBytes(UTF_8)))
-                  ()
-                } finally out.close()
-              }
-            }
-          }
+        HFiles.writeRuns(
+          cells0.withColumn("wix", wixCol)
+            .repartition(starts.size, col("wix"))
+            .sortWithinPartitions(col("wix"), col("row"), col("family"),
+              col("qualifier"), col("ts").desc, HFiles.typeRank.desc)
+            .select("row", "family", "qualifier", "ts", "type", "value", "wix"),
+          tmpDir, _.getInt(6), (_, wix: Int) => f"w$wix%05d.hfile") {
+          (wix, out, run) =>
+            val (start, end) = metaByWix(wix)
+            HFileV3.write(out, run, blockSize, extraFileInfo = Seq(
+              StripeStartKey -> start.getBytes(UTF_8),
+              StripeEndKey -> end.getBytes(UTF_8)))
+        }
 
       case SplitReq(_, fromStripe, toStripe, targetCount, targetKvs, majorRange) =>
         val left =
@@ -567,7 +531,7 @@ object StripeStore {
                   if (markedRow == null && fileIdx < targetCount - 1 &&
                       kvWritten >= targetKvs)
                     markedRow = r.getString(0)
-                  rowToCell(r)
+                  HFiles.cellOf(r)
                 }
               }
               val sKey = boundary
@@ -645,11 +609,4 @@ object StripeStore {
     }
     Compactions.commitRewrite(fs, dir, outNames.toSeq, inputs.map(_.path))
   }
-
-  private def rowToCell(r: Row): HCell = HCell(
-    r.getString(0).getBytes(UTF_8),
-    r.getString(1).getBytes(UTF_8),
-    r.getString(2).getBytes(UTF_8),
-    r.getLong(3), HFiles.typeToCode(r.getString(4)),
-    Option(r.getString(5)).getOrElse("").getBytes(UTF_8))
 }

@@ -91,7 +91,8 @@ class BlockEncodingSpec extends AnyFunSuite {
     val cells = adversarialCells(800)
     for (id <- allIds; gz <- Seq(false, true)) {
       val bos = new ByteArrayOutputStream()
-      HFileV3.write(bos, cells.iterator, blockSize = 700, gz = gz, encoding = id)
+      HFileV3.write(bos, cells.iterator, blockSize = 700, encoding = id,
+        compression = if (gz) HFileV3.CompressionGz else HFileV3.CompressionNone)
       val bytes = bos.toByteArray
       // blocks carry the ENCODED_DATA magic; FILE_INFO names the encoding
       val blocks = HFileV3.readAllBlocks(bytes)
@@ -232,7 +233,8 @@ class BlockEncodingSpec extends AnyFunSuite {
     for (id <- Seq(BlockEncoding.IdFastDiff, BlockEncoding.IdPrefix, BlockEncoding.IdRowIndexV1);
          gz <- Seq(false, true)) {
       val bos = new ByteArrayOutputStream()
-      HFileV3.write(bos, cells.iterator, blockSize = 700, gz = gz, encoding = id,
+      HFileV3.write(bos, cells.iterator, blockSize = 700, encoding = id,
+        compression = if (gz) HFileV3.CompressionGz else HFileV3.CompressionNone,
         withTags = true, compressTags = true)
       val bytes = bos.toByteArray
       val trailer = HFileV3.readTrailer(bytes.takeRight(4096))

@@ -336,33 +336,6 @@ class CodecSpec extends AnyFunSuite {
     ranks[JBigDecimal](numerics, c => c.encodeNumeric)
   }
 
-  test("GBytes (Raw* family): big-endian roundtrip + layout goldens") {
-    import graft.codec.GBytes
-    def hex(b: Array[Byte]) = b.map(x => f"$x%02x").mkString(" ")
-    for (v <- longs) assert(GBytes.toLong(GBytes.toBytes(v)) == v)
-    for (v <- Seq(Int.MinValue, -1, 0, 1, 42, Int.MaxValue) ++ Seq.fill(20)(rnd.nextInt()))
-      assert(GBytes.toInt(GBytes.toBytes(v)) == v)
-    for (v <- Seq(Short.MinValue, -1, 0, 1, Short.MaxValue).map(_.toShort))
-      assert(GBytes.toShort(GBytes.toBytes(v)) == v)
-    for (v <- doubles :+ Double.NaN)
-      assert(java.lang.Double.doubleToRawLongBits(GBytes.toDouble(GBytes.toBytes(v))) ==
-        java.lang.Double.doubleToRawLongBits(v))
-    for (v <- Seq(-1.5f, 0.0f, 1.5f, Float.MaxValue))
-      assert(GBytes.toFloat(GBytes.toBytes(v)) == v)
-    for (s <- strings) assert(GBytes.toStringBin(GBytes.toBytes(s)) == s)
-    for (v <- numerics)
-      assert(GBytes.toBigDecimal(GBytes.toBytes(v)).compareTo(v) == 0)
-    // layout goldens: plain big-endian two's complement, raw IEEE bits
-    assert(hex(GBytes.toBytes(1L)) === "00 00 00 00 00 00 00 01")
-    assert(hex(GBytes.toBytes(-1L)) === "ff ff ff ff ff ff ff ff")
-    assert(hex(GBytes.toBytes(256)) === "00 00 01 00")
-    assert(hex(GBytes.toBytes(1.0)) === "3f f0 00 00 00 00 00 00")
-    assert(hex(GBytes.toBytes(new JBigDecimal("1.5"))) === "00 00 00 01 0f")
-    // the documented non-ordering: -1L sorts ABOVE 1L in raw layout
-    // (that is why the Ordered* family exists)
-    assert(OBytes.compare(GBytes.toBytes(-1L), GBytes.toBytes(1L)) > 0)
-  }
-
   test("composite keys: concat orders like the tuple (prefix-free)") {
     val tuples = for {
       s <- Seq("a", "ab", "b", "")

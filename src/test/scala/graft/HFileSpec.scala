@@ -212,7 +212,7 @@ class HFileSpec extends AnyFunSuite {
   test("GZ-compressed blocks roundtrip; trailer records the codec") {
     val cells = randomCells(400)
     val bos = new ByteArrayOutputStream()
-    HFileV3.write(bos, cells.iterator, blockSize = 512, gz = true)
+    HFileV3.write(bos, cells.iterator, blockSize = 512, compression = HFileV3.CompressionGz)
     val bytes = bos.toByteArray
     val plain = HFileV3.writeBytes(cells.iterator, blockSize = 512)
     assert(bytes.length < plain.length, "gz file should be smaller")
@@ -346,7 +346,7 @@ class HFileSpec extends AnyFunSuite {
     val cells = (0 until 1500).map(i => cell(f"k$i%05d", "q", s"value-$i"))
     val bos = new ByteArrayOutputStream()
     HFileV3.write(bos, cells.iterator, blockSize = 256, indexMaxChunk = 250,
-      gz = true, encoding = graft.codec.BlockEncoding.IdFastDiff)
+      compression = HFileV3.CompressionGz, encoding = graft.codec.BlockEncoding.IdFastDiff)
     val bytes = bos.toByteArray
     assert(HFileV3.readTrailer(bytes).numDataIndexLevels >= 2)
     assert(HFileV3.readCells(bytes).size == cells.size)
@@ -550,7 +550,7 @@ class HFileSpec extends AnyFunSuite {
     val cells = graft.model.Fixtures.cellsOrders(spark, "/root/testdata/sf0.001")
     val out = Queries.scratchDir("hfile_get_spec")
     // gz on: gets and imports must work through compressed region files
-    graft.flow.HFiles.export(cells, 4, s"$out/hf", gz = true)
+    graft.flow.HFiles.export(cells, 4, s"$out/hf", compression = HFileV3.CompressionGz)
     val some = cells.select("row").distinct().orderBy("row").limit(7)
       .collect().map(_.getString(0)).toSeq
     val probe = some ++ Seq("zzzz-absent")
