@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session definition: every harness (Verify, Bench, Profile,
-  * PlanDump, the Scale mains) and the test suites build their session
-  * here, so they all plan under the same config. */
+  * PlanDump, the `graft.Scale` families) and the test suites build their
+  * session here, so they all plan under the same config and see the same
+  * SQL functions ([[GraftExtensions]]). */
 object GraftSession {
 
   /** `SPARK_GRAFT_CPUS`, else the JVM's available processors. */
@@ -12,11 +13,13 @@ object GraftSession {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** A local session on `cpus` cores with one shuffle partition per core
-    * (the existing session if one is already active). */
+    * and graft's SQL functions installed (the existing session if one is
+    * already active). */
   def local(cpus: Int = defaultCpus): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       // the cell stores are partitioned on row (a subset of every
       // cell-coordinate join key); allow subset co-partitioning so the

@@ -1,11 +1,9 @@
 package graft.codec
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.functions.concat
 import org.apache.spark.sql.graft.{shim => colshim}
 import org.apache.spark.sql.types._
@@ -380,16 +378,4 @@ object CodecFunctions {
       }
       .otherwise(raise_error(lit("ordered_union: all alternatives NULL")))
   }
-
-  /** SQL surface: `ordered_encode(x[, desc])`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("ordered_encode"),
-      new ExpressionInfo(classOf[OrderedEncode].getName, null, "ordered_encode"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c)    => OrderedEncode(c, desc = false)
-        case Seq(c, d) => OrderedEncode(c, d.eval() == true)
-        case _ => throw new IllegalArgumentException(
-          "ordered_encode expects (col) or (col, desc)")
-      })
 }

@@ -62,26 +62,14 @@ object BackupRegistry {
       case _ => None
     }
 
+  /** Atomic overwrite ([[FsAtomic.writeAtomic]]): a reader always sees
+    * either the old or the new registry, never none, so a crash cannot
+    * make a later register() silently rebuild from empty. */
   private def writeAll(spark: SparkSession, root: String,
-      images: Seq[BackupImage]): Unit = {
-    val fs = fsOf(spark, root)
-    val fin = registryPath(root)
-    val tmp = new Path(root, ".backup-registry.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(images.map(encode).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    commitOverwrite(spark, tmp, fin, "backup registry")
-  }
-
-  /** Atomic overwrite-commit ([[FsAtomic.renameOverwrite]]): a reader
-    * always sees either the old or the new file — the previous
-    * delete-then-rename left a window where a crash orphaned NO
-    * registry at all and a later register() silently rebuilt from
-    * empty, despite the write-then-rename doc contract. */
-  private def commitOverwrite(spark: SparkSession, tmp: Path, fin: Path,
-      what: String): Unit =
-    FsAtomic.renameOverwrite(spark.sparkContext.hadoopConfiguration,
-      tmp, fin, what)
+      images: Seq[BackupImage]): Unit =
+    FsAtomic.writeAtomic(spark.sparkContext.hadoopConfiguration,
+      registryPath(root), images.map(encode).mkString("\n").getBytes("UTF-8"),
+      "backup registry")
 
   /** Every registered image, registration order. Unparseable lines are
     * skipped (the .snapshotinfo degradation contract — one corrupt row
@@ -180,17 +168,11 @@ object BackupRegistry {
   }
 
   private def writeSets(spark: SparkSession, root: String,
-      sets: Map[String, Seq[String]]): Unit = {
-    val fs = fsOf(spark, root)
-    val fin = setsPath(root)
-    val tmp = new Path(root, ".backup-sets.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(sets.toSeq.sortBy(_._1)
-      .map { case (n, ts) => s"$n|${ts.mkString(",")}" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    commitOverwrite(spark, tmp, fin, "backup sets")
-  }
+      sets: Map[String, Seq[String]]): Unit =
+    FsAtomic.writeAtomic(spark.sparkContext.hadoopConfiguration,
+      setsPath(root), sets.toSeq.sortBy(_._1)
+        .map { case (n, ts) => s"$n|${ts.mkString(",")}" }
+        .mkString("\n").getBytes("UTF-8"), "backup sets")
 
   /** BackupSystemTable.addToBackupSet: union with the existing
     * membership (":876-899" — a fresh name creates the set). */

@@ -340,9 +340,7 @@ object Compactions {
       blockSize: Int = 65536): Seq[String] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     healStore(fs, dir)
-    val files = Option(fs.globStatus(new Path(dir, "part-*.hfile")))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath, s.getLen)).toSeq.sortBy(_._1.getName)
+    val files = storeFiles(fs, dir)
     val sizes = files.map { case (p, l) =>
       logicalSizes.fold(l)(_(p.getName))
     }.toIndexedSeq
@@ -376,9 +374,7 @@ object Compactions {
     import org.apache.spark.sql.functions.{col, lit, when}
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     healStore(fs, dir)
-    val files = Option(fs.globStatus(new Path(dir, "part-*.hfile")))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath, s.getLen)).toSeq.sortBy(_._1.getName)
+    val files = storeFiles(fs, dir)
     if (files.isEmpty) return Nil
     val minTs = files.map { case (p, l) =>
       HFileV3.parseTimeRange(HFiles.readMeta(fs, p, l)._2).map(_._1)
@@ -423,8 +419,7 @@ object Compactions {
     }
     // commit crash-safely: renumber staged outputs oldest window
     // first (within tmp), then stage → marker → retire → land
-    val written = Option(fs.globStatus(new Path(tmpDir, "w*.hfile")))
-      .getOrElse(Array.empty).map(_.getPath).sortBy(_.getName)
+    val written = HFiles.listFiles(fs, tmpDir, "w*.hfile").map(f => new Path(f._1))
     val outNames = written.zipWithIndex.map { case (p, i) =>
       val n = f"part-$i%05d.hfile"
       require(fs.rename(p, new Path(tmpDir, n)), s"could not stage $n")
@@ -447,9 +442,7 @@ object Compactions {
       now: Long): Seq[String] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     healStore(fs, dir)
-    val files = Option(fs.globStatus(new Path(dir, "part-*.hfile")))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath, s.getLen)).toSeq.sortBy(_._1.getName)
+    val files = storeFiles(fs, dir)
     val expired = files.filter { case (p, l) =>
       val (trailer, info) = HFiles.readMeta(fs, p, l)
       fifoExpired(info, trailer.entryCount, ttlMillis, now)
@@ -840,6 +833,12 @@ object Compactions {
     fs.delete(tmp, true)
   }
 
+  /** A flat store's `part-*.hfile` files with their lengths, in name
+    * (= age) order. */
+  private def storeFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Seq[(Path, Long)] =
+    HFiles.listFiles(fs, dir, "part-*.hfile").map { case (p, l) => (new Path(p), l) }
+
   private def fileMaxTimestamp(fs: org.apache.hadoop.fs.FileSystem,
       p: Path, len: Long): Long =
     HFileV3.parseTimeRange(HFiles.readMeta(fs, p, len)._2)
@@ -910,9 +909,7 @@ object Compactions {
       blockSize: Int = 65536, now: Long = -1L): Seq[String] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     healStore(fs, dir)
-    val files = Option(fs.globStatus(new Path(dir, "part-*.hfile")))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath, s.getLen)).toSeq.sortBy(_._1.getName)
+    val files = storeFiles(fs, dir)
     val sizes = files.map { case (p, l) =>
       logicalSizes.fold(l)(_(p.getName))
     }.toIndexedSeq

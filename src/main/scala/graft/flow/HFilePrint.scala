@@ -49,13 +49,12 @@ object HFilePrint {
     val missing = collection.mutable.ArrayBuffer.empty[String]
     val failures = collection.mutable.ArrayBuffer.empty[String]
     var checked = 0L
-    val files = Option(fs.globStatus(new Path(root, "*/*/*/*.hfile")))
-      .getOrElse(Array.empty).filter(_.isFile).map(_.getPath).sortBy(_.toString)
-    files.foreach { p =>
+    HFiles.listFiles(fs, rootDir, "*/*/*/*.hfile").foreach { case (ps, len) =>
+      val p = new Path(ps)
       checked += 1
       val ok =
         try {
-          HFiles.readMeta(fs, p, fs.getFileStatus(p).getLen)
+          HFiles.readMeta(fs, p, len)
           true
         } catch {
           case _: java.io.FileNotFoundException =>
@@ -86,9 +85,7 @@ object HFilePrint {
       glob: String = "*.hfile"): DataFrame = {
     import spark.implicits._
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, glob)))
-      .getOrElse(Array.empty).filter(_.isFile)
-      .map(f => (f.getPath.toString, f.getLen)).toSeq.sorted
+    val files = HFiles.listFiles(fs, dir, glob)
     val bconf = ShippedConf.broadcast(spark)
     spark.sparkContext.parallelize(files, math.max(files.size, 1))
       .map { case (pathStr, len) =>

@@ -168,13 +168,11 @@ object HFiles {
     buf
   }
 
-  /** (path, length) of every `glob` file under `dir`, in path order. */
-  private def listFiles(spark: SparkSession, dir: String,
-      glob: String): Seq[(String, Long)] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** (path, length) of every file matching `glob` under `dir`, in path
+    * order, from one `globStatus` call (none when nothing matches). */
+  def listFiles(fs: FileSystem, dir: String, glob: String): Seq[(String, Long)] =
     Option(fs.globStatus(new Path(dir, glob))).getOrElse(Array.empty)
-      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
-  }
+      .filter(_.isFile).map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
 
   /** Write `cells` (canonical CellSet columns) as `numRegions` HFiles
     * under `outPath` (`part-NNNNN.hfile`, row-range-disjoint and sorted
@@ -276,7 +274,7 @@ object HFiles {
   def pointGet(spark: SparkSession, dir: String, rows: Seq[String],
       qualifier: Option[String] = None): DataFrame = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ranges = listFiles(spark, dir, "part-*.hfile").flatMap { case (pathStr, len) =>
+    val ranges = listFiles(fs, dir, "part-*.hfile").flatMap { case (pathStr, len) =>
       withStoreFile(fs, new Path(pathStr), len) { pread =>
         val trailer = HFileV3.readTrailer(pread, len)
         if (trailer.dataIndexCount == 0) None
@@ -319,7 +317,8 @@ object HFiles {
     * streaming-backup directory tree. */
   def importCells(spark: SparkSession, dir: String,
       glob: String = "part-*.hfile"): DataFrame =
-    importFiles(spark, listFiles(spark, dir, glob))
+    importFiles(spark, listFiles(
+      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration), dir, glob))
 
   /** [[importCells]] over an explicit (path, length) list — the
     * manifest-driven path (SnapshotShip reads the file list from
@@ -359,7 +358,8 @@ object HFiles {
     * declares COMPRESS_TAGS). */
   def importCellsTagged(spark: SparkSession, dir: String,
       glob: String = "part-*.hfile"): DataFrame = {
-    val files = listFiles(spark, dir, glob)
+    val files = listFiles(
+      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration), dir, glob)
     val bconf = ShippedConf.broadcast(spark)
     val rdd = spark.sparkContext
       .parallelize(files, math.max(files.size, 1))

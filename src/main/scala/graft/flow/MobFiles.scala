@@ -4,7 +4,7 @@ import java.io.OutputStream
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -205,6 +205,15 @@ object MobFiles {
       .unionByName(plain.withColumn("mob", lit(false)))
   }
 
+  /** (path, length) of the main store's files and of `table`'s mob
+    * files, in path order. */
+  private def mainStoreFiles(fs: FileSystem, outPath: String): Seq[(String, Long)] =
+    HFiles.listFiles(fs, s"$outPath/main", "part-*.hfile")
+
+  private def mobStoreFiles(fs: FileSystem, outPath: String,
+      table: String): Seq[(String, Long)] =
+    HFiles.listFiles(fs, s"$outPath/mobdir/data/default/$table", "*/*/*")
+
   /** Load a MOB table layout as its three constituent frames:
     * (plain main cells, ref cells with their named mob file + declared
     * length, mob cells keyed by file) — shared by [[importResolved]]
@@ -213,11 +222,8 @@ object MobFiles {
       table: String): (DataFrame, DataFrame, DataFrame) = {
     val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverMainDir(fs, outPath)
-    def list(glob: String): Seq[(String, Long)] =
-      Option(fs.globStatus(new Path(glob))).getOrElse(Array.empty)
-        .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
-    val mainFiles = list(s"$outPath/main/part-*.hfile")
-    val mobFiles = list(s"$outPath/mobdir/data/default/$table/*/*/*")
+    val mainFiles = mainStoreFiles(fs, outPath)
+    val mobFiles = mobStoreFiles(fs, outPath, table)
 
     val bconf = ShippedConf.broadcast(spark)
     def openCells(pathStr: String, len: Long): Iterator[HCell] =
@@ -311,12 +317,8 @@ object MobFiles {
       blockSize: Int = 65536): Seq[String] = {
     val (plain, refs, mobCells) = layoutFrames(spark, outPath, table)
     val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def list(glob: String): Seq[String] =
-      Option(fs.globStatus(new Path(glob))).getOrElse(Array.empty)
-        .map(_.getPath.toString).toSeq
-    val nRegions = math.max(list(s"$outPath/main/part-*.hfile").size, 1)
-    val nOldMob =
-      math.max(list(s"$outPath/mobdir/data/default/$table/*/*/*").size, 1)
+    val nRegions = math.max(mainStoreFiles(fs, outPath).size, 1)
+    val nOldMob = math.max(mobStoreFiles(fs, outPath, table).size, 1)
 
     val day = substring(col("mob_file"), 33, 8)
     val gdt = policy.toUpperCase match {
@@ -450,9 +452,7 @@ object MobFiles {
       table: String, cutoffDay: String): Seq[String] = {
     require(cutoffDay.matches("\\d{8}"), s"cutoffDay must be yyyyMMdd: $cutoffDay")
     val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      Option(fs.globStatus(new Path(s"$outPath/mobdir/data/default/$table/*/*/*")))
-        .getOrElse(Array.empty).map(_.getPath).toSeq
+    val files = mobStoreFiles(fs, outPath, table).map(f => new Path(f._1))
     // MobFileName layout: md5hex(startKey)[32] + yyyymmdd[8] + uuid —
     // validate the FULL shape (32 hex chars then 8 digits) before
     // treating a file as expirable, so a stray non-mob file in the
@@ -478,10 +478,7 @@ object MobFiles {
   def sweepUnreferencedMobFiles(spark: SparkSession, outPath: String,
       table: String = "graft"): Seq[String] = {
     val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def list(glob: String): Seq[(String, Long)] =
-      Option(fs.globStatus(new Path(glob))).getOrElse(Array.empty)
-        .map(s => (s.getPath.toString, s.getLen)).toSeq
-    val mainFiles = list(s"$outPath/main/part-*.hfile")
+    val mainFiles = mainStoreFiles(fs, outPath)
     // Ship the DRIVER's Hadoop settings to the executor-side opens
     // ([[ShippedConf]] — a fresh Configuration() would silently drop
     // credentials/endpoints on non-default filesystems). Any read
@@ -497,9 +494,7 @@ object MobFiles {
           .filter(isRef).map(c => new String(c.value, 4, c.value.length - 4, "UTF-8"))
       }
       .distinct().collect().toSet
-    val unreferenced = Option(
-        fs.globStatus(new Path(s"$outPath/mobdir/data/default/$table/*/*/*")))
-      .getOrElse(Array.empty).map(_.getPath).toSeq
+    val unreferenced = mobStoreFiles(fs, outPath, table).map(f => new Path(f._1))
       .filterNot(p => referenced(p.getName))
     unreferenced.foreach(fs.delete(_, false))
     unreferenced.map(_.getName).sorted
@@ -511,10 +506,7 @@ object MobFiles {
   def mobFileAudit(spark: SparkSession, outPath: String,
       table: String = "graft"): DataFrame = {
     val fs = new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mobFiles =
-      Option(fs.globStatus(new Path(s"$outPath/mobdir/data/default/$table/*/*/*")))
-        .getOrElse(Array.empty)
-        .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
+    val mobFiles = mobStoreFiles(fs, outPath, table)
     // driver-side loop (file-count bounded, trailer+FILE_INFO reads
     // only) — uses the driver's own Hadoop conf directly
     val rows = mobFiles.map { case (p, l) =>

@@ -164,67 +164,44 @@ object PWalFiles {
     * incrementalBackup exactly like the parquet WAL. */
   def importEntries(spark: SparkSession, dir: String,
       glob: String = "wal-*.pwal",
-      subject: String = graft.codec.HCrypto.DefaultSubject): DataFrame = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, glob)))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
-    val bconf = ShippedConf.broadcast(spark)
-    val rdd = spark.sparkContext
-      .parallelize(files, math.max(files.size, 1))
-      .flatMap { case (pathStr, len) =>
-        val path = new Path(pathStr)
-        val in = path.getFileSystem(bconf.value.conf).open(path)
-        // segments are single-digit MB by roll policy; a one-way parse
-        // over a streamed copy keeps the access pattern sequential
-        val bytes = new Array[Byte](len.toInt)
-        try in.readFully(0, bytes) finally in.close()
-        PWal.readBytes(bytes, subject).flatMap { e =>
-          e.cells.map { c =>
-            Row(new String(e.region, "UTF-8"), new String(e.table, "UTF-8"),
-              e.seq, e.writeTime,
-              new String(c.row, "UTF-8"), new String(c.family, "UTF-8"),
-              new String(c.qualifier, "UTF-8"), c.ts,
-              HFiles.codeToType(c.typ), new String(c.value, "UTF-8"))
-          }
-        }
-      }
-    spark.createDataFrame(rdd, entrySchema)
-  }
+      subject: String = graft.codec.HCrypto.DefaultSubject): DataFrame =
+    spark.createDataFrame(readSegments(spark, dir, glob, subject, tagged = false),
+      entrySchema)
 
   /** [[importEntries]] plus each cell's visibility expression,
     * extracted from its STRING_VIS wire tag ('' when untagged) — the
     * read half of the replication-WAL string-tag convention. */
   def importEntriesTagged(spark: SparkSession, dir: String,
-      glob: String = "wal-*.pwal"): DataFrame = {
+      glob: String = "wal-*.pwal"): DataFrame =
+    spark.createDataFrame(
+      readSegments(spark, dir, glob, graft.codec.HCrypto.DefaultSubject, tagged = true),
+      StructType(entrySchema.fields :+ StructField("vis", StringType, nullable = false)))
+
+  /** One task per `glob` segment under `dir`, each read whole
+    * ([[HFiles.readAll]]: segments are single-digit MB by roll policy)
+    * into one row per cell, plus its STRING_VIS tag when `tagged`. */
+  private def readSegments(spark: SparkSession, dir: String, glob: String,
+      subject: String, tagged: Boolean): org.apache.spark.rdd.RDD[Row] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, glob)))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
+    val files = HFiles.listFiles(fs, dir, glob).map(_._1)
     val bconf = ShippedConf.broadcast(spark)
-    val rdd = spark.sparkContext
-      .parallelize(files, math.max(files.size, 1))
-      .flatMap { case (pathStr, len) =>
-        val path = new Path(pathStr)
-        val in = path.getFileSystem(bconf.value.conf).open(path)
-        val bytes = new Array[Byte](len.toInt)
-        try in.readFully(0, bytes) finally in.close()
-        PWal.readBytes(bytes).flatMap { e =>
-          e.cells.map { c =>
-            val vis = HFileV3.parseTags(c.tags)
-              .collectFirst { case (StringVisTagType, data) =>
-                new String(data, "UTF-8") }
-              .getOrElse("")
-            Row(new String(e.region, "UTF-8"), new String(e.table, "UTF-8"),
-              e.seq, e.writeTime,
-              new String(c.row, "UTF-8"), new String(c.family, "UTF-8"),
-              new String(c.qualifier, "UTF-8"), c.ts,
-              HFiles.codeToType(c.typ), new String(c.value, "UTF-8"), vis)
-          }
+    spark.sparkContext.parallelize(files, math.max(files.size, 1)).flatMap { pathStr =>
+      val path = new Path(pathStr)
+      val bytes = HFiles.readAll(path.getFileSystem(bconf.value.conf), path)
+      PWal.readBytes(bytes, subject).flatMap { e =>
+        e.cells.map { c =>
+          val key = Seq(new String(e.region, "UTF-8"), new String(e.table, "UTF-8"),
+            e.seq, e.writeTime,
+            new String(c.row, "UTF-8"), new String(c.family, "UTF-8"),
+            new String(c.qualifier, "UTF-8"), c.ts,
+            HFiles.codeToType(c.typ), new String(c.value, "UTF-8"))
+          if (!tagged) Row.fromSeq(key)
+          else Row.fromSeq(key :+ HFileV3.parseTags(c.tags)
+            .collectFirst { case (StringVisTagType, data) => new String(data, "UTF-8") }
+            .getOrElse(""))
         }
       }
-    spark.createDataFrame(rdd,
-      StructType(entrySchema.fields :+ StructField("vis", StringType, nullable = false)))
+    }
   }
 
   /** The WAL log-cleaner chain over a segment directory — LogCleaner

@@ -71,10 +71,8 @@ object RegionRefs {
     require(famDirs.nonEmpty, s"no stores under $parent")
     // one split row for the whole region: the LARGEST store's mid key
     // (RegionSplitPolicy.getSplitPoint)
-    val largestFam = famDirs.maxBy { d =>
-      Option(fs.globStatus(new Path(d, "*.hfile")))
-        .getOrElse(Array.empty).map(_.getLen).sum
-    }
+    val largestFam = famDirs.maxBy(d =>
+      HFiles.listFiles(fs, d.toString, "*.hfile").map(_._2).sum)
     val splitRow = SplitPolicies.storeSplitPoint(
       spark, largestFam.toString, glob = "*.hfile")
     splitRow.foreach { row =>
@@ -92,10 +90,8 @@ object RegionRefs {
         for (fam <- famDirs) {
           val outDir = new Path(new Path(tableDir, daughter), fam.getName)
           fs.mkdirs(outDir)
-          val files = Option(fs.globStatus(new Path(fam, "*.hfile")))
-            .getOrElse(Array.empty)
-          for (f <- files) {
-            val refName = s"${f.getPath.getName}.$parentRegion"
+          for ((f, _) <- HFiles.listFiles(fs, fam.toString, "*.hfile")) {
+            val refName = s"${new Path(f).getName}.$parentRegion"
             val out = fs.create(new Path(outDir, refName), true)
             try out.write(SM.encodeReferenceFile(SM.RefHalf(row, top)))
             finally out.close()
@@ -325,11 +321,9 @@ object RegionRefs {
           s"merging $parent with reference files still present — " +
             "compact the parent first (the reference merges only " +
             "ONLINE regions whose stores are materialized)")
-        val files = Option(fs.globStatus(new Path(fam, "*.hfile")))
-          .getOrElse(Array.empty)
-        for (f <- files) {
+        for ((f, _) <- HFiles.listFiles(fs, fam.toString, "*.hfile")) {
           val out = fs.create(
-            new Path(outDir, s"${f.getPath.getName}.$parent"), true)
+            new Path(outDir, s"${new Path(f).getName}.$parent"), true)
           try out.write(SM.encodeReferenceFile(SM.RefHalf(startKey, top = true)))
           finally out.close()
         }

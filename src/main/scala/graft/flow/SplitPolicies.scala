@@ -155,12 +155,10 @@ object SplitPolicies {
   def storeSplitPoint(spark: SparkSession, dir: String,
       glob: String = "part-*.hfile"): Option[Array[Byte]] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, glob)))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath, s.getLen)).toSeq
+    val files = HFiles.listFiles(fs, dir, glob)
     if (files.isEmpty) return None
     val (largest, len) = files.maxBy(_._2)
-    HFiles.withStoreFile(fs, largest, len)(HFileV3.midKeyRow(_, len))
+    HFiles.withStoreFile(fs, new Path(largest), len)(HFileV3.midKeyRow(_, len))
   }
 
   /** Execute a SplitNormalizationPlan over ONE store file inside a
@@ -205,9 +203,7 @@ object SplitPolicies {
   def daughters(spark: SparkSession, dir: String, splitRow: Array[Byte],
       glob: String = "part-*.hfile"): (DataFrame, DataFrame) = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(new Path(dir, glob)))
-      .getOrElse(Array.empty)
-      .map(s => (s.getPath.toString, s.getLen)).toSeq.sortBy(_._1)
+    val files = HFiles.listFiles(fs, dir, glob)
     val bottom = HFiles.importFilesFiltered(spark,
       files.map { case (p, l) => (p, l, Some((splitRow, false))) })
     val top = HFiles.importFilesFiltered(spark,

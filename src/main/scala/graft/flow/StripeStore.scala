@@ -365,9 +365,7 @@ object StripeStore {
         fi.getOrElse(StripeEndKey, null))
     }
     def list(glob: String): Seq[FileMeta] =
-      Option(fs.globStatus(new Path(dir, glob))).getOrElse(Array.empty)
-        .map(s => meta(s.getPath, s.getLen)).toSeq
-        .sortBy(_.path.getName)
+      HFiles.listFiles(fs, dir, glob).map { case (p, l) => meta(new Path(p), l) }
     val l0 = scala.collection.mutable.ArrayBuffer.empty[FileMeta]
     l0 ++= list("l0-*.hfile")
     val (classified, unclassified) = list("stripe-*.hfile")
@@ -598,8 +596,7 @@ object StripeStore {
     // commit crash-safely through the shared protocol: rename staged
     // outputs to their fresh stripe names within tmp, then
     // stage -> intent marker -> retire inputs -> land -> clean
-    val written = Option(fs.globStatus(new Path(tmpDir, "w*.hfile")))
-      .getOrElse(Array.empty).map(_.getPath).sortBy(_.getName)
+    val written = HFiles.listFiles(fs, tmpDir, "w*.hfile").map(f => new Path(f._1))
     var next = nextStripeIndex(fs, dir)
     val outNames = written.map { p =>
       val n = f"stripe-$next%05d.hfile"

@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.{shim => colshim}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** `dot_fold(a, b)`: the sequential-double-fold dot product of two
   * numeric array columns — `((0.0 + a0*b0) + a1*b1) + …` with every
@@ -287,14 +285,4 @@ object VectorFunctions {
       nprobe: Int): Column =
     colshim.column(NearestCentroids(colshim.expression(v), cents, nprobe,
       assignMode = false))
-
-  /** Register `dot_fold` in a session's FunctionRegistry (SQL surface). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_fold"),
-      new ExpressionInfo(classOf[DotFold].getName, null, "dot_fold"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "dot_fold expects (array, array)")
-        DotFold(children.head, children(1))
-      })
 }

@@ -411,7 +411,6 @@ class CodecExprSpec extends SparkSpec {
   }
 
   test("SQL registration: ordered_encode usable from spark.sql") {
-    graft.codec.CodecFunctions.register(spark)
     val n = spark.sql(
       "SELECT ordered_encode(CAST(7 AS BIGINT)) AS k").collect()(0).getAs[Array[Byte]](0)
     assert(n.length == 8)

@@ -38,7 +38,6 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("dot_fold is null-safe and SQL-registered") {
-    graft.functions.VectorFunctions.register(spark)
     val df = Seq((1L, Array(1.0f, 2.0f)), (2L, null.asInstanceOf[Array[Float]]))
       .toDF("id", "v")
     val got = df.selectExpr("dot_fold(v, v) AS d").orderBy(lit(1)).collect()
