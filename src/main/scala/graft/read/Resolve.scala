@@ -35,19 +35,19 @@ import graft.model.CellType
   * (family, qualifier, ts DESC, value DESC) order, the order the
   * reference's StoreScanner feeds ScanQueryMatcher, so state is bounded
   * by one family's markers (and, under a filter program, by the row's
-  * live cells it holds back), never by the table. The grouping needs
-  * only ClusteredDistribution(row): the materialized cell stores are
-  * already partitioned on row (by range or by hash), so over them the
-  * pass plans with no exchange and no broadcast; unclustered inputs
-  * (replica parquet, unions) take exactly one row exchange, which
-  * [[Resolve.sizedShufflePartitions]] sizes when the input would
-  * spill. Over a row-ranged store ([[rowRanged]]) each partition
-  * already holds whole rows, so the pass walks the store's partitions
-  * in place and requires no distribution at all: such a read plans no
-  * exchange and no adaptive stages, and its output is in key order by
-  * partition. The pass registers no planner strategy and touches no session
-  * state. Its output is the surviving Puts in the input's schema, each
-  * row's cells in one partition and in pass order. The same pass also runs
+  * live cells it holds back), never by the table. The pass is one
+  * `RowWalk` plan node: it needs only rows clustered on row, which the
+  * materialized cell stores already are (by range or by hash), so over
+  * them it walks the store's partitions in place with no exchange, no
+  * broadcast and no adaptive stages, and over a row-ranged store
+  * ([[rowRanged]]) its output is in key order by partition; unclustered
+  * inputs (replica parquet, unions) take exactly one row exchange, which
+  * [[Resolve.sizedShufflePartitions]] sizes when the input would spill.
+  * Building a read registers the node's planner strategy, once, among
+  * its session's extra strategies (`shim.ofRows` does the same for a
+  * session a read is rebound to); the pass sets no conf. Its output is
+  * the surviving Puts in the input's schema, each row's cells in one
+  * partition and in pass order. The same pass also runs
   * a row-local filter tree ([[RowProgram]]: the reference's per-row
   * Filter visitor, `filterRow` on the assembled row included) between
   * masking and the version gate, and per-family pagination after it, so
@@ -168,32 +168,10 @@ object Resolve {
       (t, rs) => if (t.run(rs).hasNext == admitted) Iterator(InternalRow(t.row)) else Iterator.empty)
   }
 
-  /** Size-derived shuffle-partition count for the resolve exchange:
-    * Catalyst's size estimate of the INPUT frame (file-backed scans and
-    * materialized caches report real bytes) divided by the session's
-    * files.maxPartitionBytes scan target. Returns None — plan
-    * unchanged — when the estimate is at or under what the session's
-    * default shuffle partitioning already handles, or when the
-    * estimate is unusable (the no-stats default is effectively
-    * infinite; join-inflated estimates hit the same guard). Capped at
-    * 4096: past that the bottleneck is executor count, not partition
-    * size. */
-  private[graft] def sizedShufflePartitions(cells: DataFrame): Option[Int] = {
-    val conf = cells.sparkSession.sessionState.conf
-    val size = cells.queryExecution.optimizedPlan.stats.sizeInBytes
-    // half the scan target: shuffled ROW data plus its sort buffer is
-    // wider than the columnar/compressed source the estimate measures
-    val target = BigInt(conf.filesMaxPartitionBytes) / 2
-    if (size <= 0 || target <= 0 || size >= BigInt(Long.MaxValue) / 4) None
-    else {
-      // clamp in BigInt BEFORE toInt: a huge-but-plausible estimate
-      // (~1e17 bytes clears the guard above) would otherwise overflow
-      // Int and silently disable the hedge on exactly the inputs that
-      // need it
-      val n = ((size + target - 1) / target).min(4096).toInt
-      if (n > conf.numShufflePartitions) Some(n) else None
-    }
-  }
+  /** [[shim.sizedShufflePartitions]] of `cells`' size estimate. */
+  private[graft] def sizedShufflePartitions(cells: DataFrame): Option[Int] =
+    shim.sizedShufflePartitions(cells.queryExecution.optimizedPlan.stats.sizeInBytes,
+      cells.sparkSession.sessionState.conf)
 
   /** Whether `cells` reads, through filters and projections alone, a
     * materialized store range-partitioned on `row` ascending and on
@@ -382,28 +360,14 @@ object Resolve {
     perRow(cells, order, out)((row, rs) => f(new RowTracker(ix, p, row), rs))
   }
 
-  /** The one resolve operator, as one lazy plan node: `f` walks each
-    * row's cells, in `order` and as the input's own InternalRows, and
-    * returns rows of `out`. Over a row-ranged store each partition
-    * already holds whole rows, so the pass walks the store's partitions
-    * in place ([[shim.rowWalk]]) and requires no distribution; any
-    * other input is grouped on row ([[shim.sortedGroups]]), which the
-    * bucketed stores' hash layouts meet with no exchange and anything
-    * else with one row exchange, sized by [[sizedShufflePartitions]]
-    * when the default count would spill. Both shapes hand each row to
-    * `f` once. */
-  private def perRow(cells: DataFrame, order: Seq[Column], out: StructType)(
-      f: (UTF8String, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame =
-    // spill hedge: at a fixed spark.sql.shuffle.partitions the row
-    // exchange's per-partition share grows with input (the r16 sf10 soak
-    // measured per-cell cost rising 0.57→0.99 s/1M at 75M cells purely
-    // from shuffle/sort spill), so a large input is pre-partitioned on
-    // row with a size-derived count that the grouping then reuses. A
-    // row-ranged store needs no exchange, and one would lose its key
-    // order across partitions, which the scans' local order relies on.
-    if (rowRanged(cells)) shim.rowWalk(cells, "row", order, out)(f)
-    else shim.sortedGroups(sizedShufflePartitions(cells).fold(cells)(n => cells.repartition(n, col("row"))),
-      "row", order, out)(f)
+  /** The one resolve operator ([[shim.walk]]): `f` walks each row's
+    * cells once, in `order` and as the input's own InternalRows, and
+    * returns rows of `out`. An input not already clustered on row takes
+    * one row exchange, sized by [[sizedShufflePartitions]] when the
+    * default count would spill (the r16 sf10 soak measured per-cell
+    * cost rising 0.57→0.99 s/1M at 75M cells from shuffle/sort spill). */
+  private def perRow(cells: DataFrame, order: Seq[Column], out: StructType)(f: shim.Walk): DataFrame =
+    shim.walk(cells, "row", order, out)(f)
 
   /** Field positions the tracker reads; `vis` is -1 without visScope,
     * `base` (the first program column, after the input's fields) -1

@@ -310,7 +310,7 @@ class PlanShapeSpec extends SparkSpec {
     // createexternalrow deserializer builds a Row per cell, no
     // getexternalrowfield serializer reads one back
     import org.apache.spark.sql.catalyst.expressions.objects.{CreateExternalRow, GetExternalRowField}
-    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.graft.RowWalkExec
     import graft.read.{GScan, GTable}
     import spark.implicits._
     val range = GScan().withRange("0000000001", "0000000500")
@@ -324,7 +324,7 @@ class PlanShapeSpec extends SparkSpec {
         case e @ (_: CreateExternalRow | _: GetExternalRowField) => e.prettyName
       })
       assert(encoded.isEmpty, s"$name: no Row encoder ($encoded):\n$phys")
-      assert(phys.collect { case m: MapPartitionsExec => m }.size === 1, s"$name: one pass:\n$phys")
+      assert(phys.collect { case m: RowWalkExec => m }.size === 1, s"$name: one pass:\n$phys")
     }
   }
 
@@ -332,7 +332,7 @@ class PlanShapeSpec extends SparkSpec {
     // the row filter runs as a per-row program inside the one resolve
     // pass: one walk over the store's partitions, and the store's layout
     // spares every exchange
-    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.graft.RowWalkExec
     import graft.filter.ParseFilter
     import graft.read.{GScan, GTable}
     val range = GScan().withRange("0000000001", "0000000500")
@@ -343,7 +343,7 @@ class PlanShapeSpec extends SparkSpec {
         "per-cell scan" -> "ValueFilter(=, 'substring:URGENT')")) {
       val phys = assertNoExchange(name, GTable.scanFiltered(store, range, ParseFilter.parse(f)))
       if (name.startsWith("SCVF"))
-        assert(phys.collect { case m: MapPartitionsExec => m }.size === 1, s"$name: one pass:\n$phys")
+        assert(phys.collect { case m: RowWalkExec => m }.size === 1, s"$name: one pass:\n$phys")
     }
   }
 
@@ -389,6 +389,35 @@ class PlanShapeSpec extends SparkSpec {
     assert(rowExchanges(Jobs.syncDiffCounts(store, mut)) === 2)
   }
 
+  test("reads over the hash-laid stores keep their layout, with the spill hedge too") {
+    // cells_orders_mut and cells_events_v are hash-laid on row, which
+    // already clusters the pass's rows: no exchange and so no adaptive
+    // plan, also when the input is large enough for the hedge to size
+    // a row exchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.read.{GTable, Resolve}
+    val mut = graft.model.Fixtures.cellsOrdersMut(spark, sf0001)
+    val events = graft.model.Fixtures.cellsEventsV(spark, sf0001)
+    mut.count()
+    events.count()
+    def reads() = Seq(
+      "get" -> GTable.get(mut, "0000000007"),
+      "latestNvb" -> Resolve.latestNvb(events.withColumn("seq", col("ts"))))
+    def assertKept(hedge: String) = for ((name, df) <- reads()) {
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty, s"$name$hedge: adaptive:\n$plan")
+      assert(plan.collect { case e: Exchange => e }.isEmpty, s"$name$hedge: exchange:\n$plan")
+    }
+    assertKept("")
+    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+      assert(Resolve.sizedShufflePartitions(mut).isDefined && Resolve.sizedShufflePartitions(events).isDefined)
+      assertKept(" (hedged)")
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  }
+
   test("a Get over unclustered parquet plans exactly one row exchange") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -406,10 +435,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("a Page/WhileMatch-free filter tree of each kind is one pass over the cell store") {
-    import org.apache.spark.sql.execution.MapPartitionsExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.graft.RowWalkExec
     import graft.filter._
     import graft.read.{GScan, GTable}
     val scvf = SingleColumnValueFilter("d", "o_orderstatus", CompareOp.Equal, BinaryComparator("F"))
@@ -429,7 +458,7 @@ class PlanShapeSpec extends SparkSpec {
       for ((name, df) <- plans) {
         val phys = physical(df)
         val clue = s"$name $f:\n$phys"
-        assert(phys.collect { case m: MapPartitionsExec => m }.size === 1, s"one pass: $clue")
+        assert(phys.collect { case m: RowWalkExec => m }.size === 1, s"one pass: $clue")
         assert(phys.collect { case w: WindowExec => w }.isEmpty, s"no window: $clue")
         assert(phys.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"no broadcast: $clue")
         assert(phys.collect { case j: BaseJoinExec => j }.isEmpty, s"no join: $clue")
@@ -519,9 +548,10 @@ class PlanShapeSpec extends SparkSpec {
     // the NEW_VERSION_BEHAVIOR tracker walks each row inside the resolve
     // pass, whose grouping the store's row hash layout meets: no
     // per-column collect, family-marker join or explode
-    import org.apache.spark.sql.execution.{GenerateExec, MapGroupsExec, MapPartitionsExec}
+    import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.graft.RowWalkExec
     import graft.read.Resolve
     val events = graft.model.Fixtures.cellsEventsV(spark, sf0001)
     events.count()
@@ -532,7 +562,7 @@ class PlanShapeSpec extends SparkSpec {
       .otherwise(lit(35L))
     val phys = assertNoExchange("latestNvb",
       Resolve.latestNvb(events.withColumn("seq", seq), maxVersions = 2))
-    val passes = phys.collect { case m @ (_: MapGroupsExec | _: MapPartitionsExec) => m }
+    val passes = phys.collect { case m: RowWalkExec => m }
     assert(passes.size === 1, s"one pass:\n$phys")
     assert(phys.collect { case g: GenerateExec => g }.isEmpty, s"no generate:\n$phys")
     assert(phys.collect { case a: BaseAggregateExec => a }.isEmpty, s"no aggregate:\n$phys")

@@ -121,9 +121,8 @@ class ResolveSpec extends SparkSpec {
     assert(Resolve.sizedShufflePartitions(tiny).isEmpty)
     // shrink the scan target so a modest cached frame trips the hedge,
     // then pin: parts sized off the estimate AND the physical plan of
-    // the resolve pass still carries EXACTLY one shuffle (the explicit
-    // repartition satisfies the pass's row clustering — the hedge must
-    // never add a second exchange)
+    // the resolve pass still carries EXACTLY one shuffle (the walk's
+    // sized row exchange — the hedge must never add a second exchange)
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
@@ -136,17 +135,17 @@ class ResolveSpec extends SparkSpec {
           .get("spark.sql.shuffle.partitions").toInt),
         s"hedge must fire past the threshold, got $parts")
       val plan = Resolve.latest(big).queryExecution.executedPlan.toString
-      // the resolve pass must consume the SIZED repartition directly:
-      // exactly one REPARTITION_BY_NUM exchange carrying the sized
-      // count, and no planner-inserted (ENSURE_REQUIREMENTS) exchange
-      // between the pass and it — the hedge resizes the operator's one
-      // exchange, never adds a second
-      assert(plan.contains(s", ${parts.get}), REPARTITION_BY_NUM"),
-        s"sized repartition missing:\n$plan")
-      val widx = plan.indexOf("MapGroups ")
-      val ridx = plan.indexOf("REPARTITION_BY_NUM")
+      // the resolve pass must consume the SIZED row exchange directly:
+      // exactly one exchange, a hashpartitioning(row) carrying the sized
+      // count, and no second exchange between the pass and it — the
+      // hedge resizes the operator's one exchange, never adds a second
+      val sized = s"Exchange hashpartitioning\\(row#\\d+, ${parts.get}\\)".r
+      assert(sized.findAllIn(plan).size == 1 && "Exchange ".r.findAllIn(plan).size == 1,
+        s"sized row exchange missing:\n$plan")
+      val widx = plan.indexOf("RowWalk ")
+      val ridx = sized.findFirstMatchIn(plan).get.start
       assert(widx >= 0 && ridx > widx &&
-        !plan.substring(widx, ridx).contains("ENSURE_REQUIREMENTS"),
+        !plan.substring(widx, ridx).contains("Exchange"),
         s"the resolve pass re-exchanged instead of reusing the hedge:\n$plan")
       big.unpersist()
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
